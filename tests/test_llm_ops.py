@@ -403,6 +403,24 @@ def test_connected_components_local_and_loop_paths_agree(spark, monkeypatch):
     assert got == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
 
 
+def test_connected_components_local_path_releases_edge_checkpoint(spark):
+    # the local path checkpoints the one-direction edge set, collects
+    # it and returns a LocalRelation of labels: the edge blocks must be
+    # released before it returns, or a long-lived session pins one
+    # checkpoint per call
+    from conftest import wait_for_background_sweeps
+
+    wait_for_background_sweeps()  # sweeps checkpoint concurrently
+    jsc = spark.sparkContext._jsc
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (10, 11)], ["id1", "id2"])
+    before = jsc.getPersistentRDDs().size()
+    labels = dd.connected_components(pairs)
+    assert jsc.getPersistentRDDs().size() == before
+    assert sorted(map(tuple, labels.collect())) == [
+        (1, 1), (2, 1), (3, 1), (10, 10), (11, 10),
+    ]
+
+
 def test_dedup_survivors_keep_flags(spark):
     docs = spark.createDataFrame([(i,) for i in (1, 2, 3, 10, 11, 99)], ["doc_id"])
     pairs = spark.createDataFrame([(1, 2), (2, 3), (10, 11)], ["id1", "id2"])
@@ -1362,6 +1380,83 @@ def test_joint_dedup_bridges_modalities(spark):
     assert out[1] == (0, False)
     assert out[2] == (0, False)  # reachable only through B
     assert out[3] == (3, True)
+
+
+def _joint_input(spark):
+    rows = [
+        (0, "the quick brown fox jumps over the lazy dog", [1.0, 0.0]),
+        (1, "the quick brown fox jumps over the lazy dog too", [0.0, 1.0]),
+    ]
+    return spark.createDataFrame(
+        rows, "doc_id long, text string, embedding array<double>"
+    )
+
+
+def _joint(df):
+    return dd.joint_near_dup_survivors(
+        df, "doc_id", "text", "embedding", dim=2, jaccard_threshold=0.3,
+        cosine_threshold=0.9, shingle_n=2, num_hashes=8, bands=8, num_bits=2,
+    )
+
+
+def test_joint_dedup_builders_inherit_caller_job_group(spark, monkeypatch):
+    # both candidate builders run on driver threads; the caller's job
+    # group (and so its cancellation and tagging) must reach the eager
+    # jobs each builder runs
+    sc = spark.sparkContext
+    seen = {}
+
+    def recording(name, fn):
+        def wrapped(*a, **k):
+            seen[name] = sc.getLocalProperty("spark.jobGroup.id")
+            return fn(*a, **k)
+        return wrapped
+
+    monkeypatch.setattr(dd, "near_dup_frames", recording("text", dd.near_dup_frames))
+    monkeypatch.setattr(
+        sim, "srp_near_dup_frames", recording("sem", sim.srp_near_dup_frames)
+    )
+    df = _joint_input(spark)
+    sc.setJobGroup("joint-dedup-caller", "joint dedup test")
+    try:
+        out = {r.doc_id: r.keep for r in _joint(df).collect()}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert seen == {"text": "joint-dedup-caller", "sem": "joint-dedup-caller"}
+    assert out == {0: True, 1: False}
+
+
+def test_joint_dedup_builder_failure_cancels_sibling(spark, monkeypatch):
+    # one builder raises while the other sits in a long Spark job: the
+    # sibling's job is cancelled and the builder's own error surfaces,
+    # instead of the caller waiting for the sibling to finish
+    import threading
+    import time
+
+    started = threading.Event()
+
+    def slow(it):
+        for batch in it:
+            time.sleep(120)
+            yield batch
+
+    def sem_builder(df, *a, **k):
+        started.set()
+        df.sparkSession.range(1).mapInPandas(slow, "id long").collect()
+        raise AssertionError("sibling job was not cancelled")
+
+    def text_builder(*a, **k):
+        started.wait(60)
+        time.sleep(1)  # let the sibling's job start
+        raise ValueError("text builder failed")
+
+    monkeypatch.setattr(dd, "near_dup_frames", text_builder)
+    monkeypatch.setattr(sim, "srp_near_dup_frames", sem_builder)
+    t0 = time.time()
+    with pytest.raises(ValueError, match="text builder failed"):
+        _joint(_joint_input(spark))
+    assert time.time() - t0 < 60
 
 
 def test_repeated_substring_spans_planted(spark):

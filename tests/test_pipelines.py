@@ -314,3 +314,91 @@ def test_update_embedding_increment_stages(spark):
     assert st.after_cross_dedup == 3        # 1 dropped (ref near-dup)
     assert st.after_within_dedup == 2       # {3,5} collapse to 3
     assert {r.vec_id for r in final.collect()} == {3, 7}
+
+
+_CORPUS_COLUMNS = [
+    "doc_id", "chunk_idx", "chunk_start_token", "chunk_text", "n_tokens",
+    "predicted_lang", "quality_score", "split",
+]
+
+
+def test_corpus_stage_counts_and_columns_pinned(spark, sf_dir):
+    """The q186/q200 parameters on the smoke documents: every stage
+    count of the build and of the increment, and the returned frames'
+    column order, pinned to the values the join-based pipeline (id
+    self-joins for the per-row features, a chunks ⋈ metadata join, one
+    global aggregate per stage) produced."""
+    from dataclasses import asdict
+
+    from us_immigration_data_lake_spark.pipelines.corpus import (
+        build_training_corpus,
+        update_corpus_increment,
+    )
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").filter(
+        F.col("doc_id") < 100
+    )
+    lsh = dict(shingle_n=2, num_hashes=8, bands=8, max_bucket_size=5, portable=True)
+    corpus, st = build_training_corpus(
+        docs, min_quality=0.46, jaccard_threshold=0.055, chunk_tokens=50,
+        overlap=10, scrub=False, **lsh,
+    )
+    assert asdict(st) == {
+        "input_docs": 100, "after_quality": 76, "after_decontamination": 76,
+        "after_exact_dedup": 76, "after_near_dedup": 21, "chunks": 27,
+        "oversized_lsh_buckets": 13,
+    }
+    assert corpus.columns == _CORPUS_COLUMNS
+    assert corpus.count() == 27
+
+    final, ist = update_corpus_increment(
+        docs.filter(F.col("doc_id") % 2 == 1),
+        docs.filter(F.col("doc_id") % 2 == 0),
+        "doc_id", "text", min_quality=0.46, threshold=0.055, **lsh,
+    )
+    assert asdict(ist) == {
+        "new_docs": 50, "after_quality": 39, "after_cross_dedup": 10,
+        "after_within_dedup": 9,
+    }
+    assert final.columns == docs.columns
+
+
+def test_corpus_stage_counts_pinned_with_benchmark(spark):
+    """With a benchmark the quality stage is counted separately from
+    decontamination; an empty stage reads 0, not a missing key."""
+    from dataclasses import asdict
+
+    from us_immigration_data_lake_spark.pipelines.corpus import (
+        _stage_counts,
+        build_training_corpus,
+    )
+
+    base = "the quick brown fox jumps over the lazy dog again and again "
+    docs = spark.createDataFrame(
+        [
+            (1, base * 3),
+            (2, "leaked benchmark question about spark shuffles " * 4),
+            (3, "contact me at alice@example.com please send the "
+                "quarterly report totals when the numbers settle " * 3),
+        ],
+        ["doc_id", "text"],
+    )
+    benchmark = spark.createDataFrame(
+        [(100, "leaked benchmark question about spark shuffles")],
+        ["doc_id", "text"],
+    )
+    corpus, st = build_training_corpus(docs, min_quality=0.0, benchmark=benchmark)
+    assert asdict(st) == {
+        "input_docs": 3, "after_quality": 3, "after_decontamination": 2,
+        "after_exact_dedup": 2, "after_near_dedup": 2, "chunks": 2,
+        "oversized_lsh_buckets": 0,
+    }
+    assert corpus.columns == _CORPUS_COLUMNS
+    assert [(r.doc_id, r.predicted_lang, r.quality_score, r.split)
+            for r in corpus.orderBy("doc_id").collect()] == [
+        (1, "en", 0.483111, "train"), (3, "en", 0.497095, "train"),
+    ]
+
+    assert _stage_counts({"all": docs, "none": docs.filter("doc_id < 0")}) == {
+        "all": 3, "none": 0,
+    }

@@ -49,9 +49,9 @@ def recode_via_broadcast_map(
     inlining into every task's codegen."""
     spark = spark or df.sparkSession
     out_col = out_col or col
-    map_df = spark.createDataFrame(
-        [(k, v) for k, v in mapping.items()], schema=["__rk", "__rv"]
-    )
+    from us_immigration_data_lake_spark.operators.storage import local_frame
+
+    map_df = local_frame(spark, list(mapping.items()), ["__rk", "__rv"])
     joined = df.join(F.broadcast(map_df), df[col] == map_df["__rk"], "left")
     return joined.withColumn(out_col, F.coalesce("__rv", col)).drop("__rk", "__rv")
 

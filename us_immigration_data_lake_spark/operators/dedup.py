@@ -30,6 +30,10 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from us_immigration_data_lake_spark.functions.text import normalized_text, tokens
+from us_immigration_data_lake_spark.operators.storage import (
+    local_frame,
+    release_local_checkpoint,
+)
 
 
 def spread_by_id(df: DataFrame, id_col: str) -> DataFrame:
@@ -390,9 +394,8 @@ def _counted_key_plan(
     head = over.limit(COLLECT_KEY_LIMIT + 1).collect()
     n_over = len(head)
     if 0 < n_over <= COLLECT_KEY_LIMIT:
-        spark = band_df.sparkSession
         over = F.broadcast(
-            spark.createDataFrame(head, schema=over.schema)
+            local_frame(band_df.sparkSession, head, over.schema)
         )
     elif n_over > COLLECT_KEY_LIMIT:
         n_over = over.count()
@@ -446,14 +449,9 @@ def _counted_census_plan(
     # non-empty census, which q182/q186/q187/q188 all have at sf0.1.
     head = census.limit(COLLECT_KEY_LIMIT + 1).collect()
     n_over = len(head)
-    spark = band_df.sparkSession
-    if n_over == 0:
+    if n_over <= COLLECT_KEY_LIMIT:
         census = F.broadcast(
-            spark.createDataFrame([], schema=census.schema)
-        )
-    elif n_over <= COLLECT_KEY_LIMIT:
-        census = F.broadcast(
-            spark.createDataFrame(head, schema=census.schema)
+            local_frame(band_df.sparkSession, head, census.schema)
         )
     else:
         n_over = census.count()
@@ -1152,24 +1150,27 @@ def dedup_exact_by_content(
     return df.join(survivors, on=id_col, how="left_semi")
 
 
-# Symmetric edge sets up to this many rows are collected to the driver
-# and labeled with a single union-find pass instead of the distributed
-# label-propagation loop — the COLLECT_KEY_LIMIT rationale applied to
-# the CC graph (guide §1.2: the dominant cost of the loop at any graph
-# size below this is DRIVER round-trips, ~2 actions + rounds×(1 action
-# + broadcast jobs); r16 probes measured q181 at 72 jobs / 5.1 s
-# driver-only and q188 at 105 jobs / 8.9 s driver-only, about half of
-# each query's wall). 100k (src, dst) longs is ~3 MB on the driver —
-# two orders below spark.driver.maxResultSize — and near-dup graphs
-# are SPARSE by construction (pairs survive a similarity threshold),
-# so at 100 TB the loop path below remains the scale fallback.
-CC_LOCAL_EDGE_LIMIT = 100_000
+# Graphs of up to this many UNDIRECTED edges (rows of the pair frame,
+# one per pair) are collected to the driver and labeled with a single
+# union-find pass instead of the distributed label-propagation loop —
+# the COLLECT_KEY_LIMIT rationale applied to the CC graph (guide §1.2:
+# the dominant cost of the loop at any graph size below this is DRIVER
+# round-trips, ~2 actions + rounds×(1 action + broadcast jobs); r16
+# probes measured q181 at 72 jobs / 5.1 s driver-only and q188 at 105
+# jobs / 8.9 s driver-only, about half of each query's wall). The
+# driver holds the edges as collected PySpark ``Row`` objects — a
+# tuple, its field-name dict and two boxed ints, about 340 bytes each
+# (tracemalloc: 16 MB for 50k edges of 64-bit ids), not 16 bytes per
+# edge — plus the union-find dict; near-dup graphs are SPARSE by
+# construction (pairs survive a similarity threshold), so at 100 TB
+# the loop path below remains the scale fallback. 0 forces the loop.
+CC_LOCAL_EDGE_LIMIT = 50_000
 
 _CC_INTEGRAL_TYPES = ("long", "integer", "int", "short", "byte", "bigint")
 
 
 def _cc_local_labels(rows) -> list[tuple]:
-    """Union-find over collected symmetric edges; labels every node
+    """Union-find over collected (one-direction) edges; labels every node
     with the smallest id reachable — bit-identical to the fixpoint the
     distributed loop converges to (tests pin parity). Union-by-min
     keeps each tree's root = the component's minimum, so the final
@@ -1208,9 +1209,9 @@ def connected_components(
     pair graph. Returns (id, cluster) where cluster = smallest id
     reachable.
 
-    Scale ladder (r16): the symmetric edge set is materialized once
-    (eager localCheckpoint — pairs compute exactly once on every
-    path); if it holds ≤ CC_LOCAL_EDGE_LIMIT rows of integral ids, the
+    Scale ladder (r16): the one-direction edge set is materialized
+    once (eager localCheckpoint — pairs compute exactly once on every
+    path); if it holds ≤ CC_LOCAL_EDGE_LIMIT edges of integral ids, the
     labels are computed on the DRIVER by one union-find pass — same
     fixpoint, zero loop actions (a small graph's loop cost is ~all
     driver round-trips: 2 + rounds actions plus per-round broadcast
@@ -1260,11 +1261,16 @@ def connected_components(
       hints fix in the DuckDB oracles.
     """
     a, b = id_cols
-    edges = pairs.select(F.col(a).alias("src"), F.col(b).alias("dst"))
+    # the ONE-direction edge set is what materializes: checkpointing
+    # the symmetric union would evaluate the pairs plan once per
+    # branch. The union below is lazy (its schema carries the widened
+    # id type) and only the loop path ever reads it.
+    edges = pairs.select(
+        F.col(a).alias("src"), F.col(b).alias("dst")
+    ).localCheckpoint(eager=True)
     sym = edges.union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    sym = sym.localCheckpoint(eager=True)
 
     # SCALE-ADAPTIVE ladder (r16; the _counted_key_plan pattern): the
     # checkpoint above already materialized the edge set (pairs compute
@@ -1274,35 +1280,27 @@ def connected_components(
     # loop below, untouched. Type-gated to integral ids so Python's
     # min() ordering can never diverge from Spark's (non-integral ids
     # always take the loop).
-    if (
-        sym.schema["src"].dataType.typeName() in _CC_INTEGRAL_TYPES
-        and sym.schema["dst"].dataType.typeName() in _CC_INTEGRAL_TYPES
-    ):
-        head = sym.limit(CC_LOCAL_EDGE_LIMIT + 1).collect()
+    id_type = sym.schema["src"].dataType
+    if id_type.typeName() in _CC_INTEGRAL_TYPES:
+        head = edges.limit(CC_LOCAL_EDGE_LIMIT + 1).collect()
         if len(head) <= CC_LOCAL_EDGE_LIMIT:
-            from us_immigration_data_lake_spark.operators.storage import (
-                release_local_checkpoint,
-            )
-
-            spark = pairs.sparkSession
             out_schema = T.StructType([
-                T.StructField("id", sym.schema["src"].dataType),
-                T.StructField("cluster", sym.schema["src"].dataType),
+                T.StructField("id", id_type),
+                T.StructField("cluster", id_type),
             ])
             # broadcast-hinted: the frame is DRIVER-sized by the limit
             # above (≤ 2·CC_LOCAL_EDGE_LIMIT nodes), so every survivor
             # join against the corpus becomes a broadcast hash join
             # instead of shuffling the corpus side into a sort-merge
-            # (guide §3.1 — the labels ExistingRDD has no stats, so
-            # the planner would never pick the broadcast itself)
+            # (guide §3.1)
             labeled = F.broadcast(
-                spark.createDataFrame(
-                    _cc_local_labels(head), schema=out_schema
+                local_frame(
+                    pairs.sparkSession, _cc_local_labels(head), out_schema
                 )
             )
             # nobody reads the edge blocks again — release them now
             # (the storage.py contract) instead of leaking per call
-            release_local_checkpoint(sym)
+            release_local_checkpoint(edges)
             return labeled
 
     labels = (
@@ -1729,6 +1727,44 @@ def prefix_jaccard_pairs(
     )
 
 
+def _build_concurrently(sc, builders: list) -> list:
+    """Run zero-argument plan builders on parallel driver threads and
+    return their results in order.
+
+    The threads are ``pyspark.InheritableThread``s, so the caller's
+    local properties (job group, job tags, scheduler pool) reach every
+    eager job a builder runs. Each builder also tags its own jobs; when
+    one builder raises, the siblings' jobs are cancelled by that tag
+    until they have stopped, and the first error is re-raised."""
+    import uuid
+
+    from pyspark import InheritableThread
+
+    run_id = uuid.uuid4().hex
+    tags = [f"dedup.build-{run_id}-{i}" for i in range(len(builders))]
+    results: list = [None] * len(builders)
+    errors: list = []  # in the order they were raised
+
+    def run(i: int) -> None:
+        sc.addJobTag(tags[i])
+        try:
+            results[i] = builders[i]()
+        except BaseException as e:  # re-raised on the caller's thread
+            errors.append(e)
+
+    threads = [InheritableThread(run, args=(i,)) for i in range(len(builders))]
+    for t in threads:
+        t.start()
+    while any(t.is_alive() for t in threads):
+        for t, tag in zip(threads, tags):
+            if errors and t.is_alive():
+                sc.cancelJobsWithTag(tag)
+            t.join(timeout=0.2)
+    if errors:
+        raise errors[0]
+    return results
+
+
 def joint_near_dup_survivors(
     df: DataFrame,
     id_col: str,
@@ -1764,8 +1800,6 @@ def joint_near_dup_survivors(
     all-pairs blowup. Returns (id, cluster, keep) for every input row
     (dedup_survivors convention: smallest id per cluster survives).
     """
-    from concurrent.futures import ThreadPoolExecutor
-
     from us_immigration_data_lake_spark.operators.similarity import (
         srp_near_dup_frames,
     )
@@ -1796,10 +1830,9 @@ def joint_near_dup_survivors(
             max_bucket_size=max_bucket_size, recover_oversized=True,
         )["pairs"].select("id1", "id2")
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        t_fut = pool.submit(_text_pairs)
-        s_fut = pool.submit(_sem_pairs)
-        text_pairs, sem_pairs = t_fut.result(), s_fut.result()
+    text_pairs, sem_pairs = _build_concurrently(
+        df.sparkSession.sparkContext, [_text_pairs, _sem_pairs]
+    )
     pairs = text_pairs.unionByName(sem_pairs).dropDuplicates()
     return dedup_survivors(df, pairs, id_col)
 

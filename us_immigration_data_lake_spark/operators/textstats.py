@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from us_immigration_data_lake_spark.functions.text import normalized_text, tokens
 from us_immigration_data_lake_spark.operators.dedup import spread_by_id
+from us_immigration_data_lake_spark.operators.storage import local_frame
 
 # public, conventional stopword markers per language (tiny profiles —
 # the heuristic is a count-argmax over these; real pipelines would use
@@ -35,35 +36,44 @@ def _count_in(tok: Column, words: tuple[str, ...]) -> Column:
     return F.size(F.filter(tok, lambda t: F.array_contains(arr, t))).cast("long")
 
 
-def text_features(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Per-document feature bundle: char/token counts, distinct-token
-    count, stopword count, punctuation count — all exact integers."""
-    tok = tokens(F.col(text_col))
-    return df.select(
-        F.col(id_col),
-        F.length(text_col).cast("long").alias("n_chars_obs"),
-        F.size(tok).cast("long").alias("n_tokens"),
-        F.size(F.array_distinct(tok)).cast("long").alias("n_distinct_tokens"),
-        _count_in(tok, _STOPWORDS).alias("n_stopwords"),
-        F.length(F.regexp_replace(text_col, r"[^\.\,\!\?\;\:]", "")).cast("long")
-        .alias("n_punct"),
-        F.aggregate(
+def _token_counts(tok: Column) -> dict[str, Column]:
+    """The exact-integer token counts the quality score reads."""
+    return {
+        "n_tokens": F.size(tok).cast("long"),
+        "n_distinct_tokens": F.size(F.array_distinct(tok)).cast("long"),
+        "n_stopwords": _count_in(tok, _STOPWORDS),
+        "sum_token_len": F.aggregate(
             F.transform(tok, lambda t: F.length(t).cast("long")),
             F.lit(0).cast("long"),
             lambda acc, x: acc + x,
-        ).alias("sum_token_len"),
+        ),
+    }
+
+
+def text_features(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Per-document feature bundle: char/token counts, distinct-token
+    count, stopword count, punctuation count — all exact integers."""
+    counts = _token_counts(tokens(F.col(text_col)))
+    return df.select(
+        F.col(id_col),
+        F.length(text_col).cast("long").alias("n_chars_obs"),
+        counts["n_tokens"].alias("n_tokens"),
+        counts["n_distinct_tokens"].alias("n_distinct_tokens"),
+        counts["n_stopwords"].alias("n_stopwords"),
+        F.length(F.regexp_replace(text_col, r"[^\.\,\!\?\;\:]", "")).cast("long")
+        .alias("n_punct"),
+        counts["sum_token_len"].alias("sum_token_len"),
     )
 
 
-def quality_score(features: DataFrame) -> DataFrame:
-    """Composite quality score from exact-integer features — the
-    length/stopword/uniqueness heuristic family used to filter LLM
-    training corpora. One double expression at the end (deterministic:
-    same operands, same op order on both engines)."""
-    nt = F.col("n_tokens").cast("double")
-    uniq = F.col("n_distinct_tokens") / nt
-    stop = F.col("n_stopwords") / nt
-    meanlen = F.col("sum_token_len") / nt
+def _score(
+    n_tokens: Column, n_distinct_tokens: Column, n_stopwords: Column,
+    sum_token_len: Column,
+) -> Column:
+    nt = n_tokens.cast("double")
+    uniq = n_distinct_tokens / nt
+    stop = n_stopwords / nt
+    meanlen = sum_token_len / nt
     length_score = F.least(nt / F.lit(100.0), F.lit(1.0))
     score = (
         F.lit(0.4) * uniq
@@ -72,8 +82,39 @@ def quality_score(features: DataFrame) -> DataFrame:
         + F.lit(0.2) * F.least(meanlen / 8.0, F.lit(1.0))
     )
     # empty documents (n_tokens=0) score 0, not null/NaN from 0/0
-    score = F.when(F.col("n_tokens") == 0, F.lit(0.0)).otherwise(score)
-    return features.withColumn("quality_score", F.round(score, 6))
+    score = F.when(n_tokens == 0, F.lit(0.0)).otherwise(score)
+    return F.round(score, 6)
+
+
+def quality_score(features: DataFrame) -> DataFrame:
+    """Composite quality score from exact-integer features — the
+    length/stopword/uniqueness heuristic family used to filter LLM
+    training corpora. One double expression at the end (deterministic:
+    same operands, same op order on both engines)."""
+    return features.withColumn(
+        "quality_score",
+        _score(*(F.col(c) for c in (
+            "n_tokens", "n_distinct_tokens", "n_stopwords", "sum_token_len",
+        ))),
+    )
+
+
+def with_quality_score(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """``df`` (id first, then its other columns) plus ``quality_score``
+    — the value ``quality_score(text_features(df))`` gives, appended as
+    projections instead of an id self-join back onto ``df``."""
+    counts = _token_counts(tokens(F.col(text_col)))
+    tmp = [f"__q_{n}" for n in counts]
+    staged = df.select(
+        F.col(id_col),
+        *[c for c in df.columns if c != id_col],
+        *[c.alias(t) for c, t in zip(counts.values(), tmp)],
+    )
+    # two projections: the score reads each count several times, so
+    # the optimizer keeps the counts in their own (once-per-row) project
+    return staged.withColumn(
+        "quality_score", _score(*(F.col(t) for t in tmp))
+    ).drop(*tmp)
 
 
 def lang_id(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -100,6 +141,14 @@ def lang_id(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         else:
             pred = pred.otherwise(branch)
     return out.withColumn("predicted_lang", pred)
+
+
+def with_predicted_lang(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """``df`` (id first, then its other columns) plus ``predicted_lang``
+    — ``lang_id`` without its per-language score columns."""
+    return lang_id(df, id_col, text_col).drop(
+        *[f"score_{lang}" for lang in LANG_PROFILES]
+    )
 
 
 def winnow_fingerprints(
@@ -185,11 +234,15 @@ def chunk_documents(
     text_col: str,
     chunk_tokens: int = 50,
     overlap: int = 10,
+    carry: tuple = (),
 ) -> DataFrame:
     """Split documents into overlapping token-window chunks — the
     context-window preparation step of a training/RAG corpus build.
 
-    Output: (id, chunk_idx, chunk_start_token, chunk_text, n_tokens).
+    Output: (id, chunk_idx, chunk_start_token, chunk_text, n_tokens,
+    *carry) — ``carry`` (column names or aliased Columns over ``df``)
+    is copied onto every chunk of its document, so per-document
+    metadata needs no join back by id.
     Stride = chunk_tokens - overlap; the final chunk may be short but
     is never empty; single-short-doc → one chunk. Pure expression
     arithmetic (sequence + slice inside ONE transform level — flat,
@@ -198,7 +251,8 @@ def chunk_documents(
     if stride <= 0:
         raise ValueError("overlap must be smaller than chunk_tokens")
     tok = tokens(normalized_text(F.col(text_col)))
-    staged = df.select(F.col(id_col), tok.alias("__tok"))
+    staged = df.select(F.col(id_col), tok.alias("__tok"), *carry)
+    carried = staged.columns[2:]
     n = F.size("__tok")
     n_chunks = F.greatest(
         F.ceil((n - F.lit(overlap)).cast("double") / stride).cast("int"), F.lit(1)
@@ -215,13 +269,14 @@ def chunk_documents(
         ),
     )
     return (
-        staged.select(F.col(id_col), F.explode(chunks).alias("c"))
+        staged.select(F.col(id_col), F.explode(chunks).alias("c"), *carried)
         .select(
             id_col,
             "c.chunk_idx",
             "c.chunk_start_token",
             "c.chunk_text",
             "c.n_tokens",
+            *carried,
         )
     )
 
@@ -847,8 +902,10 @@ def bpe_merges(
         if rank % checkpoint_every == 0 and rank < n_merges:
             state = state.localCheckpoint(eager=True)
 
-    return df.sparkSession.createDataFrame(
-        out, "rank bigint, left string, right string, merged string, pair_count bigint"
+    return local_frame(
+        df.sparkSession,
+        out,
+        "rank bigint, left string, right string, merged string, pair_count bigint",
     )
 
 

@@ -53,6 +53,7 @@ _WS = r"[ \t\n\x0B\f\r]+"
 # single-sourced with the similarity frames contracts (r15): see
 # operators/storage.py
 from us_immigration_data_lake_spark.operators.storage import (  # noqa: E402
+    local_frame,
     release_local_checkpoint as _release_local_checkpoint,
 )
 
@@ -173,7 +174,7 @@ def train_logreg_hashed(
     try:
         n = labels.count()
         if n == 0:
-            return spark.createDataFrame([], "bucket long, w_pm long")
+            return local_frame(spark, [], "bucket long, w_pm long")
         w: dict[int, int] = {}
         for r in range(rounds):
             m = lr_den * 4 * n * ((r + 1) if decay else 1)
@@ -193,9 +194,7 @@ def train_logreg_hashed(
                     ).alias("__e"),
                 )
             else:
-                wdf = spark.createDataFrame(
-                    list(w.items()), "bucket long, __w long"
-                )
+                wdf = local_frame(spark, list(w.items()), "bucket long, __w long")
                 z = (
                     feats.join(F.broadcast(wdf), "bucket", "left")
                     .groupBy(id_col)
@@ -226,9 +225,7 @@ def train_logreg_hashed(
             for row in grad:
                 # python // is floor division == the SQL pmod formula
                 w[row["bucket"]] = w.get(row["bucket"], 0) + row["__g"] // m
-        return spark.createDataFrame(
-            sorted(w.items()), "bucket long, w_pm long"
-        )
+        return local_frame(spark, sorted(w.items()), "bucket long, w_pm long")
     finally:
         # the model is driver-sized data by now; the feature blocks
         # are dead weight — release them deterministically
@@ -298,9 +295,7 @@ def train_multinomial_logreg_hashed(
     try:
         n = labels.count()
         if n == 0:
-            return spark.createDataFrame(
-                [], "class long, bucket long, w_pm long"
-            )
+            return local_frame(spark, [], "class long, bucket long, w_pm long")
         w: dict[tuple[int, int], int] = {}
         for r in range(rounds):
             m = lr_den * 4 * n * ((r + 1) if decay else 1)
@@ -319,7 +314,8 @@ def train_multinomial_logreg_hashed(
                     ).alias("__e"),
                 )
             else:
-                wdf = spark.createDataFrame(
+                wdf = local_frame(
+                    spark,
                     [(k, b, v) for (k, b), v in w.items()],
                     "__k long, bucket long, __w long",
                 )
@@ -356,7 +352,8 @@ def train_multinomial_logreg_hashed(
             for row in grad:
                 key = (row["__k"], row["bucket"])
                 w[key] = w.get(key, 0) + row["__g"] // m
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(k, b, v) for (k, b), v in sorted(w.items())],
             "class long, bucket long, w_pm long",
         )
@@ -495,9 +492,8 @@ def naive_bayes_scores(
         for r in model["classes"].collect()  # model-sized: K rows
     )
     if not cls_rows:
-        spark = df.sparkSession
-        return spark.createDataFrame(
-            [], f"{id_col} long, class long, score_micro long"
+        return local_frame(
+            df.sparkSession, [], f"{id_col} long, class long, score_micro long"
         )
     # the feature frame feeds TWO subtrees of one plan (the obs join
     # and the per-doc total grid) — cache so the tokenize+md5 pass
@@ -625,8 +621,8 @@ def naive_bayes_classify_rowwise(
         for r in model["classes"].collect()  # model-sized
     )
     if not cls_rows:
-        return df.sparkSession.createDataFrame(
-            [], f"{id_col} long, pred_class long, score_micro long"
+        return local_frame(
+            df.sparkSession, [], f"{id_col} long, pred_class long, score_micro long"
         )
     w = {
         (r["class"], r["bucket"]): r["w_micro"]

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from us_immigration_data_lake_spark.operators.storage import local_frame
+
 
 def ranked(
     df: DataFrame,
@@ -264,7 +266,8 @@ def global_row_number(
     for row in sorted(counts, key=lambda r: r["__pid"]):
         offsets[row["__pid"]] = acc
         acc += row["__n"]
-    off_df = df.sparkSession.createDataFrame(
+    off_df = local_frame(
+        df.sparkSession,
         [(p, o) for p, o in offsets.items()] or [(0, 0)],
         "__pid int, __off long",
     )
@@ -324,7 +327,8 @@ def global_cumsum(
     for row in sorted(totals, key=lambda r: r["__pid"]):
         offsets[row["__pid"]] = list(acc)
         acc = [a + (row[c] or 0) for a, c in zip(acc, value_cols)]
-    off_df = df.sparkSession.createDataFrame(
+    off_df = local_frame(
+        df.sparkSession,
         [(p, *o) for p, o in offsets.items()] or [(0, *[0] * len(value_cols))],
         ", ".join(["__pid int"] + [f"__off_{c} long" for c in value_cols]),
     )

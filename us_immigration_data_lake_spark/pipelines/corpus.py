@@ -39,6 +39,20 @@ from us_immigration_data_lake_spark.operators import textstats as ts
 from us_immigration_data_lake_spark.sources.writers import write_parquet
 
 
+def _stage_counts(stages: dict[str, DataFrame]) -> dict[str, int]:
+    """Row count of every stage frame in ONE action and ONE shuffle: a
+    ``groupBy("k").count()`` over the union of the frames, each row
+    tagged with its stage name (one exchange, where a union of global
+    aggregates pays one single-partition exchange per stage). A stage
+    with no rows has no group, so it reads 0."""
+    tagged = [df.select(F.lit(k).alias("k")) for k, df in stages.items()]
+    union = tagged[0]
+    for t in tagged[1:]:
+        union = union.union(t)
+    got = {r["k"]: r["count"] for r in union.groupBy("k").count().collect()}
+    return {k: got.get(k, 0) for k in stages}
+
+
 @dataclass
 class CorpusStats:
     input_docs: int
@@ -75,29 +89,21 @@ def build_training_corpus(
 ) -> tuple[DataFrame, CorpusStats]:
     """Run the full corpus build; returns (chunked corpus, stage stats).
 
-    Output columns: doc_id, predicted_lang, quality_score, split,
-    chunk_idx, chunk_start_token, chunk_text, n_tokens.
+    Output columns: doc_id, chunk_idx, chunk_start_token, chunk_text,
+    n_tokens, predicted_lang, quality_score, split.
     """
     # cache() pins a PLAN: every cached frame is appended here and
     # released at the end — rebinding a name after cache() would
     # otherwise leak the pinned blocks in a long-lived session.
     cached = []
 
-    # 1-2: score and gate; 3: PII scrub — in place, BEFORE anything
-    # caches or fingerprints, so downstream stages only ever see
-    # scrubbed text. Map-side regexes, no shuffle, no row change.
-    gated = (
-        docs.join(
-            ts.quality_score(ts.text_features(docs, id_col, text_col))
-            .select(id_col, "quality_score"),
-            id_col,
-        )
-        .join(
-            ts.lang_id(docs, id_col, text_col).select(id_col, "predicted_lang"),
-            id_col,
-        )
-        .filter(F.col("quality_score") >= min_quality)
-    )
+    # 1-2: score and gate — per-row projections on docs, not id
+    # self-joins of frames derived from docs; 3: PII scrub — in place,
+    # BEFORE anything caches or fingerprints, so downstream stages only
+    # ever see scrubbed text. Map-side regexes, no shuffle, no row change.
+    gated = ts.with_predicted_lang(
+        ts.with_quality_score(docs, id_col, text_col), id_col, text_col
+    ).filter(F.col("quality_score") >= min_quality)
     if scrub:
         gated = pii.scrub_pii(gated, text_col, out_col=text_col)
 
@@ -140,58 +146,35 @@ def build_training_corpus(
     deduped.cache()
     cached.append(deduped)
 
-    # 7: chunk
-    chunks = ts.chunk_documents(deduped, id_col, text_col, chunk_tokens, overlap)
-
+    # 7: chunk, carrying the per-document metadata onto every chunk;
     # 8: deterministic split — shared helper so the pipeline can never
     # diverge from the gate-checked q48 definition
-    meta = deduped.select(
-        id_col, "predicted_lang", "quality_score",
-        split_label(F.col(id_col), train_pct).alias("split"),
+    corpus = ts.chunk_documents(
+        deduped, id_col, text_col, chunk_tokens, overlap,
+        carry=(
+            "predicted_lang", "quality_score",
+            split_label(F.col(id_col), train_pct).alias("split"),
+        ),
     )
-    corpus = chunks.join(meta, id_col)
     corpus.cache()  # one execution serves the stats pass AND the write
     cached.append(corpus)
 
     # EVERY stage count in ONE action (r16, guide §2.6/§5; the r15
-    # form paid one count() round-trip per stage — ~6 driver actions
-    # whose turnaround, not compute, was half the pipeline's wall at
-    # bench scale). None of these counts gates a plan decision (the
-    # near-dup census above does, and stays eager inside
-    # near_dup_frames), so they are pure observations: a union of
-    # single-row aggregates over the MATERIALIZED stage caches —
-    # multi-referenced InMemoryRelations, not observe() on lazy frames,
-    # which is exactly the double-count hazard the r15 analysis
-    # rejected. The collect is the action that materializes the
-    # deduped/corpus caches; scored/exact are already warm from the
-    # census + components passes.
-    stage_frames = [
-        docs.agg(F.count(F.lit(1)).alias("n")).select(
-            F.lit("input").alias("k"), "n"
-        ),
-        scored.agg(F.count(F.lit(1)).alias("n")).select(
-            F.lit("decontam").alias("k"), "n"
-        ),
-        exact.agg(F.count(F.lit(1)).alias("n")).select(
-            F.lit("exact").alias("k"), "n"
-        ),
-        deduped.agg(F.count(F.lit(1)).alias("n")).select(
-            F.lit("near").alias("k"), "n"
-        ),
-        corpus.agg(F.count(F.lit(1)).alias("n")).select(
-            F.lit("chunks").alias("k"), "n"
-        ),
-    ]
+    # form paid one count() round-trip per stage). None of these counts
+    # gates a plan decision (the near-dup census above does, and stays
+    # eager inside near_dup_frames), so they are pure observations over
+    # the MATERIALIZED stage caches — multi-referenced
+    # InMemoryRelations, not observe() on lazy frames, which is exactly
+    # the double-count hazard the r15 analysis rejected. The collect is
+    # the action that materializes the deduped/corpus caches;
+    # scored/exact are already warm from the census + components passes.
+    stages = {
+        "input": docs, "decontam": scored, "exact": exact,
+        "near": deduped, "chunks": corpus,
+    }
     if benchmark is not None:
-        stage_frames.append(
-            gated.agg(F.count(F.lit(1)).alias("n")).select(
-                F.lit("quality").alias("k"), "n"
-            )
-        )
-    stats_df = stage_frames[0]
-    for sf_ in stage_frames[1:]:
-        stats_df = stats_df.unionByName(sf_)
-    counts = {r["k"]: r["n"] for r in stats_df.collect()}
+        stages["quality"] = gated
+    counts = _stage_counts(stages)
     n_in = counts["input"]
     n_decontam = counts["decontam"]
     n_quality = counts["quality"] if benchmark is not None else n_decontam
@@ -255,11 +238,11 @@ def update_corpus_increment(
     """
     cached: list[DataFrame] = []
     try:
-        gated = new_docs.join(
-            ts.quality_score(ts.text_features(new_docs, id_col, text_col))
-            .select(id_col, "quality_score"),
-            id_col,
-        ).filter(F.col("quality_score") >= min_quality).drop("quality_score")
+        gated = (
+            ts.with_quality_score(new_docs, id_col, text_col)
+            .filter(F.col("quality_score") >= min_quality)
+            .drop("quality_score")
+        )
         gated.cache()
         cached.append(gated)
 
@@ -300,25 +283,12 @@ def update_corpus_increment(
         cached.append(final)
 
         # every stage count in ONE action over the materialized stage
-        # caches (r16 — the build_training_corpus consolidation; the
-        # counts are pure observations, nothing gates on them)
-        stats_df = (
-            new_docs.agg(F.count(F.lit(1)).alias("n"))
-            .select(F.lit("new").alias("k"), "n")
-            .unionByName(
-                gated.agg(F.count(F.lit(1)).alias("n"))
-                .select(F.lit("quality").alias("k"), "n")
-            )
-            .unionByName(
-                surv_cross.agg(F.count(F.lit(1)).alias("n"))
-                .select(F.lit("cross").alias("k"), "n")
-            )
-            .unionByName(
-                final.agg(F.count(F.lit(1)).alias("n"))
-                .select(F.lit("within").alias("k"), "n")
-            )
-        )
-        counts = {r["k"]: r["n"] for r in stats_df.collect()}
+        # caches (the build_training_corpus consolidation; the counts
+        # are pure observations, nothing gates on them)
+        counts = _stage_counts({
+            "new": new_docs, "quality": gated, "cross": surv_cross,
+            "within": final,
+        })
 
         return final, IncrementStats(
             new_docs=counts["new"],
@@ -402,24 +372,11 @@ def update_embedding_increment(
         cached.append(final)
 
         # every stage count in ONE action over the materialized stage
-        # caches (r16 — the build_training_corpus consolidation)
-        stats_df = (
-            new_emb.agg(F.count(F.lit(1)).alias("n"))
-            .select(F.lit("new").alias("k"), "n")
-            .unionByName(
-                gated.agg(F.count(F.lit(1)).alias("n"))
-                .select(F.lit("gate").alias("k"), "n")
-            )
-            .unionByName(
-                surv_cross.agg(F.count(F.lit(1)).alias("n"))
-                .select(F.lit("cross").alias("k"), "n")
-            )
-            .unionByName(
-                final.agg(F.count(F.lit(1)).alias("n"))
-                .select(F.lit("within").alias("k"), "n")
-            )
-        )
-        counts = {r["k"]: r["n"] for r in stats_df.collect()}
+        # caches (the build_training_corpus consolidation)
+        counts = _stage_counts({
+            "new": new_emb, "gate": gated, "cross": surv_cross,
+            "within": final,
+        })
 
         return final, EmbeddingIncrementStats(
             new_vectors=counts["new"],

@@ -29,6 +29,7 @@ from us_immigration_data_lake_spark.functions.dates import (
     sas_to_iso_string,
 )
 from us_immigration_data_lake_spark.functions.text import title_case
+from us_immigration_data_lake_spark.operators.storage import local_frame
 
 RACES = {
     "American Indian and Alaska Native": "AmericanIndianAndAlaskaNative",
@@ -239,7 +240,7 @@ def build_label_dims(spark, labels_path: str) -> dict[str, DataFrame]:
         "port": port,
         "mode": read_sas_labels(spark, labels_path, "i94model"),
         "state": read_sas_labels(spark, labels_path, "i94addrl"),
-        "visa": spark.createDataFrame(
-            sorted(I94_VISA_CATEGORIES.items()), "code bigint, label string"
+        "visa": local_frame(
+            spark, sorted(I94_VISA_CATEGORIES.items()), "code bigint, label string"
         ),
     }

@@ -20,7 +20,8 @@ The file is format METADATA (KBs — a dim source, not data), so it is
 read driver-side through the Hadoop FileSystem API (works on local,
 HDFS, and s3a paths alike, the same route the streaming sink manifest
 reader uses) and parsed with one regex pass; the result is a
-createDataFrame dim frame sized to broadcast into any join.
+``local_frame`` dim frame (a JVM LocalRelation) sized to broadcast into
+any join.
 """
 
 from __future__ import annotations
@@ -28,6 +29,8 @@ from __future__ import annotations
 import re
 
 from pyspark.sql import DataFrame, SparkSession
+
+from us_immigration_data_lake_spark.operators.storage import local_frame
 
 # I94_SAS_Labels_Descriptions.SAS:1046-1051 — comment-only, no value
 # block to parse; the reference hardcodes the same three categories.
@@ -117,7 +120,7 @@ def read_sas_labels(
         for k, _ in rows
     )
     if numeric:
-        return spark.createDataFrame(
-            [(int(k), v) for k, v in rows], "code bigint, label string"
+        return local_frame(
+            spark, [(int(k), v) for k, v in rows], "code bigint, label string"
         )
-    return spark.createDataFrame(rows, "code string, label string")
+    return local_frame(spark, rows, "code string, label string")
