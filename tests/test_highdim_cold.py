@@ -37,6 +37,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from us_immigration_data_lake_spark.operators import similarity as sim
+from us_immigration_data_lake_spark.operators import storage
 from us_immigration_data_lake_spark.operators.dedup import dedup_survivors
 
 spark = (
@@ -78,12 +79,11 @@ for dim in (512, 768):
     checks.append(("srp_lsh_knn", dim, n)); assert n >= 4, checks[-1]
 
     # q181/q187 path: within-corpus SRP semantic dedup (capped frames)
-    frames = sim.srp_near_dup_frames(df, "vec_id", "embedding",
-                                     threshold=0.5, dim=dim, num_bits=2)
-    n = frames["pairs"].count()
+    with storage.scope():
+        frames = sim.srp_near_dup_frames(df, "vec_id", "embedding",
+                                         threshold=0.5, dim=dim, num_bits=2)
+        n = frames["pairs"].count()
     checks.append(("srp_near_dup_frames", dim, n)); assert n > 0, checks[-1]
-    for c in frames["cached"]:
-        c.unpersist()
 
     # q192 path: cross-corpus SRP pairs against a prebuilt ref index
     # (split at 16 so both halves cover all four clusters — an

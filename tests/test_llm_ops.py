@@ -5,12 +5,15 @@ plumbing must round-trip bytes through Arrow batches."""
 
 from __future__ import annotations
 
+import time
+
 import pytest
 from pyspark.sql import functions as F
 
 from us_immigration_data_lake_spark.operators import dedup as dd
 from us_immigration_data_lake_spark.operators import multimodal as mm
 from us_immigration_data_lake_spark.operators import similarity as sim
+from us_immigration_data_lake_spark.operators import storage
 from us_immigration_data_lake_spark.operators import textstats as ts
 
 
@@ -1898,9 +1901,8 @@ def test_cross_near_dup_frames_exposes_caches_for_release(cross_corpora, spark):
     """The cross plan caches three frames — the two hashed-shingle
     frames (each feeds banding AND the verify join) plus the ref band
     frame (the two-phase cap + oversized census scan it repeatedly);
-    the dict must hand all of them to the caller so a pipeline can
-    unpersist them after materializing — and unpersisting must
-    actually clear the entries."""
+    all three belong to the caller's storage scope, which must
+    actually clear the entries on exit."""
     new_df, ref_df = cross_corpora
     from conftest import wait_for_background_sweeps
 
@@ -1908,17 +1910,17 @@ def test_cross_near_dup_frames_exposes_caches_for_release(cross_corpora, spark):
     # sweep (it registers cache entries concurrently) — join first
     wait_for_background_sweeps()
     spark.catalog.clearCache()
-    frames = dd.cross_near_dup_frames(
-        new_df, ref_df, "doc_id", "text", shingle_n=3, num_hashes=32,
-        bands=16, threshold=0.5,
-    )
-    assert len(frames["cached"]) == 3
-    frames["pairs"].count()
-    for f in frames["cached"]:
-        assert f.storageLevel.useMemory or f.storageLevel.useDisk
-        f.unpersist(blocking=True)
+    with storage.scope() as s:
+        frames = dd.cross_near_dup_frames(
+            new_df, ref_df, "doc_id", "text", shingle_n=3, num_hashes=32,
+            bands=16, threshold=0.5,
+        )
+        assert len(s.caches) == 3
+        frames["pairs"].count()
+        for f in s.caches:
+            assert f.storageLevel.useMemory or f.storageLevel.useDisk
     jcm = spark._jsparkSession.sharedState().cacheManager()
-    assert jcm.isEmpty(), "cached frames not released after unpersist"
+    assert jcm.isEmpty(), "cached frames not released by the scope"
 
 
 def test_sorted_neighborhood_finds_prefix_local_dups(spark):
@@ -2434,11 +2436,10 @@ def test_srp_ref_index_frames_cap_and_oversized(spark):
 
 def test_within_dedup_frames_expose_caches_for_release(spark):
     """r10 advisor: near_dup_frames / srp_near_dup_frames pin internal
-    caches (hashed-shingle + band frame / SRP bucket frame); both must
-    hand them to the caller via the "cached" entry — the
-    cross_near_dup_frames contract — so loop callers
-    (update_corpus_increment per batch) can release instead of relying
-    on LRU eviction."""
+    caches (hashed-shingle + band frame / SRP bucket frame) into the
+    caller's storage scope — the cross_near_dup_frames contract — so
+    loop callers (update_corpus_increment per batch) release them
+    instead of relying on LRU eviction."""
     import numpy as np
 
     from conftest import wait_for_background_sweeps
@@ -2453,46 +2454,48 @@ def test_within_dedup_frames_expose_caches_for_release(spark):
          (3, "totally different text about something else")],
         ["doc_id", "text"],
     )
-    frames = dd.near_dup_frames(
-        docs, "doc_id", "text", shingle_n=3, num_hashes=16, bands=4,
-        threshold=0.3,
-    )
-    assert len(frames["cached"]) == 2
-    frames["pairs"].count()
-    for f in frames["cached"]:
-        assert f.storageLevel.useMemory or f.storageLevel.useDisk
-        f.unpersist(blocking=True)
+    with storage.scope() as s:
+        frames = dd.near_dup_frames(
+            docs, "doc_id", "text", shingle_n=3, num_hashes=16, bands=4,
+            threshold=0.3,
+        )
+        assert len(s.caches) == 2
+        frames["pairs"].count()
+        for f in s.caches:
+            assert f.storageLevel.useMemory or f.storageLevel.useDisk
     jcm = spark._jsparkSession.sharedState().cacheManager()
     assert jcm.isEmpty(), "near_dup_frames caches not released"
 
     rng = np.random.RandomState(3)
     vecs = [(i, rng.randn(8).tolist()) for i in range(6)]
     emb = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
-    sframes = sim.srp_near_dup_frames(
-        emb, "vec_id", "embedding", threshold=0.9, dim=8, num_bits=2,
-    )
-    assert len(sframes["cached"]) == 1
-    sframes["pairs"].count()
-    for f in sframes["cached"]:
-        f.unpersist(blocking=True)
+    with storage.scope() as s:
+        sframes = sim.srp_near_dup_frames(
+            emb, "vec_id", "embedding", threshold=0.9, dim=8, num_bits=2,
+        )
+        assert len(s.caches) == 1
+        sframes["pairs"].count()
+        assert s.caches[0].storageLevel.useMemory
     assert jcm.isEmpty(), "srp_near_dup_frames cache not released"
 
-    # semantic_dedup threads the same frames into a caller registry
-    reg: list = []
-    sim.semantic_dedup(
-        emb, "vec_id", "embedding", threshold=0.9, dim=8, num_bits=2,
-        cache_registry=reg,
-    ).count()
-    assert len(reg) == 1
-    for f in reg:
-        f.unpersist(blocking=True)
-    assert jcm.isEmpty(), "semantic_dedup registry cache not released"
+    # semantic_dedup pins the same frames into the caller's scope
+    with storage.scope() as s:
+        sim.semantic_dedup(
+            emb, "vec_id", "embedding", threshold=0.9, dim=8, num_bits=2,
+        ).count()
+        assert len(s.caches) == 1
+        assert s.caches[0].storageLevel.useMemory
+    assert jcm.isEmpty(), "semantic_dedup cache not released"
 
 
-def test_cross_dedup_survivors_cache_registry(spark):
-    # ADVICE r8 #2: a caller-provided registry receives the cached
-    # frames (two hashed-shingle frames + the ref band frame) so
-    # long-lived sessions can release them.
+def test_cross_dedup_survivors_pins_into_callers_scope(spark):
+    # ADVICE r8 #2: the cached frames (two hashed-shingle frames + the
+    # ref band frame) belong to the caller's scope, so long-lived
+    # sessions release them.
+    from conftest import wait_for_background_sweeps
+
+    wait_for_background_sweeps()
+    spark.catalog.clearCache()
     new_df = spark.createDataFrame(
         [(1, "shared words in both corpora exactly the same sentence"),
          (2, "fresh new content never seen in the reference corpus")],
@@ -2502,16 +2505,17 @@ def test_cross_dedup_survivors_cache_registry(spark):
         [(10, "shared words in both corpora exactly the same sentence")],
         ["doc_id", "text"],
     )
-    reg = []
-    surv = dd.cross_dedup_survivors(
-        new_df, ref_df, "doc_id", "text", shingle_n=3, num_hashes=16,
-        bands=4, threshold=0.5, cache_registry=reg,
-    )
-    assert [r.doc_id for r in surv.collect()] == [2]
-    assert len(reg) == 3
-    for fr in reg:
-        assert fr.storageLevel.useMemory  # actually cached
-        fr.unpersist()
+    with storage.scope() as s:
+        surv = dd.cross_dedup_survivors(
+            new_df, ref_df, "doc_id", "text", shingle_n=3, num_hashes=16,
+            bands=4, threshold=0.5,
+        )
+        assert [r.doc_id for r in surv.collect()] == [2]
+        assert len(s.caches) == 3
+        for fr in s.caches:
+            assert fr.storageLevel.useMemory  # actually cached
+    jcm = spark._jsparkSession.sharedState().cacheManager()
+    assert jcm.isEmpty(), "cross_dedup_survivors caches not released"
 
 
 # ---------------------------------------------------------------------------
@@ -3415,28 +3419,27 @@ def test_srp_multi_table_compat_and_recall_dominance(spark):
     assert mt1 <= mt3  # superset theorem
     assert len(mt3) > len(mt1)  # tables buy recall on clusters
 
-    frames = sim.srp_multi_table_frames(
-        df, "vec_id", "embedding", num_tables=3, max_bucket_size=10,
-        **kw,
-    )
-    over = frames["oversized"].collect()
-    assert over and all(r.bucket_n > 10 for r in over)
-    assert frames["pairs"].count() <= len(mt3)  # cap only removes
-    for f in frames["cached"]:
-        f.unpersist()
-    # r14 advisor: the eager signature checkpoint is part of the
-    # contract — releasing it must actually drop its storage blocks
-    from us_immigration_data_lake_spark.operators.storage import (
-        release_local_checkpoint,
-    )
-
-    assert frames["checkpointed"]
-    jsc = spark.sparkContext._jsc.sc()
-    ck_ids = {f._jdf.queryExecution().analyzed().rdd().id()
-              for f in frames["checkpointed"]}
-    assert ck_ids <= {i.id() for i in jsc.getRDDStorageInfo()}
-    for f in frames["checkpointed"]:
-        release_local_checkpoint(f)
+    with storage.scope() as s:
+        frames = sim.srp_multi_table_frames(
+            df, "vec_id", "embedding", num_tables=3, max_bucket_size=10,
+            **kw,
+        )
+        over = frames["oversized"].collect()
+        assert over and all(r.bucket_n > 10 for r in over)
+        assert frames["pairs"].count() <= len(mt3)  # cap only removes
+        assert len(s.caches) == 1
+        # r14 advisor: the eager signature checkpoint is owned by the
+        # scope — its exit must actually drop the storage blocks
+        assert len(s.checkpoints) == 1
+        jsc = spark.sparkContext._jsc.sc()
+        ck_ids = {f._jdf.queryExecution().analyzed().rdd().id()
+                  for f in s.checkpoints}
+        assert ck_ids <= {i.id() for i in jsc.getRDDStorageInfo()}
+    # the release does not block: wait for the block manager
+    deadline = time.monotonic() + 30
+    while (ck_ids & {i.id() for i in jsc.getRDDStorageInfo()}
+           and time.monotonic() < deadline):
+        time.sleep(0.1)
     assert not (ck_ids & {i.id() for i in jsc.getRDDStorageInfo()})
 
     with pytest.raises(ValueError, match="num_tables"):
@@ -3793,12 +3796,14 @@ def test_line_repetition_stats_planted_and_shuffle_free(spark):
     assert "Exchange" not in plan
 
 
-def test_cache_registry_release_returns_storage_to_baseline(spark):
+def test_scope_release_returns_storage_to_baseline(spark):
     # r16 (r15 advisor / verdict ask #3): dsir_logratio, the NB
     # model/scorer and temperature_mixture_weights pin cached frames
-    # their returned DataFrames depend on; long-lived sessions pass
-    # cache_registry=[] and unpersist after materialization. Probe:
-    # three consecutive calls, storage returns to baseline each time.
+    # their returned DataFrames depend on; long-lived sessions run
+    # each call in a storage scope. Probe: three consecutive scopes,
+    # storage returns to baseline after each.
+    from conftest import wait_for_background_sweeps
+
     from us_immigration_data_lake_spark.operators import sampling as sp
     from us_immigration_data_lake_spark.operators import training as tr
 
@@ -3807,6 +3812,7 @@ def test_cache_registry_release_returns_storage_to_baseline(spark):
     def stored_ids() -> set:
         return {i.id() for i in sc._jsc.sc().getRDDStorageInfo()}
 
+    wait_for_background_sweeps()  # sweeps pin storage concurrently
     spark.catalog.clearCache()
     base = stored_ids()
     docs = spark.createDataFrame(
@@ -3820,29 +3826,29 @@ def test_cache_registry_release_returns_storage_to_baseline(spark):
     )
 
     for _ in range(3):
-        reg: list = []
-        sp.dsir_logratio(
-            docs, tgt, "doc_id", "text", num_buckets=64,
-            cache_registry=reg,
-        ).write.format("noop").mode("overwrite").save()
-        model = tr.naive_bayes_model(
-            docs, "doc_id", "text", "label", num_buckets=64,
-            cache_registry=reg,
-        )
-        tr.naive_bayes_classify(
-            docs, model, "doc_id", "text", num_buckets=64,
-            cache_registry=reg,
-        ).write.format("noop").mode("overwrite").save()
-        sp.temperature_mixture_weights(
-            docs.select("label", F.length("text").alias("sz")),
-            "label", "sz", cache_registry=reg,
-        ).write.format("noop").mode("overwrite").save()
-        assert len(reg) == 6  # 3 dsir + kb + all_feats + per
-        for frame in reg:
-            frame.unpersist(blocking=True)
-        # no storage entry NEW since the baseline survives the release
+        with storage.scope() as s:
+            sp.dsir_logratio(
+                docs, tgt, "doc_id", "text", num_buckets=64,
+            ).write.format("noop").mode("overwrite").save()
+            model = tr.naive_bayes_model(
+                docs, "doc_id", "text", "label", num_buckets=64,
+            )
+            tr.naive_bayes_classify(
+                docs, model, "doc_id", "text", num_buckets=64,
+            ).write.format("noop").mode("overwrite").save()
+            sp.temperature_mixture_weights(
+                docs.select("label", F.length("text").alias("sz")),
+                "label", "sz",
+            ).write.format("noop").mode("overwrite").save()
+            assert len(s.caches) == 6  # 3 dsir + kb + all_feats + per
+            assert stored_ids() - base  # the pins are live in the scope
+        # no storage entry NEW since the baseline survives the scope
         # (id-set, not count: the ContextCleaner may asynchronously
-        # reap other tests' dead blocks mid-test in suite context)
+        # reap other tests' dead blocks mid-test in suite context;
+        # polled: the release does not block)
+        deadline = time.monotonic() + 30
+        while stored_ids() - base and time.monotonic() < deadline:
+            time.sleep(0.1)
         assert stored_ids() - base == set()
 
 

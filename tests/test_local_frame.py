@@ -2,7 +2,9 @@
 LocalRelation. Pins parity with ``createDataFrame`` for the schema of
 every engine call site that builds a frame from Python rows, the plan
 shape (no LogicalRDD, hence no Python workers per action), and a
-source scan that keeps list-fed ``createDataFrame`` out of the engine."""
+source scan that keeps list-fed ``createDataFrame`` and raw storage
+pins (``storage.cache``/``storage.checkpoint`` own every one) out of
+the engine."""
 
 from __future__ import annotations
 
@@ -171,15 +173,60 @@ def _list_fed_calls(path: str, rel: str) -> list[str]:
     return sorted(found)
 
 
-def test_no_list_fed_create_dataframe_in_engine():
+_PIN_METHODS = {"cache", "persist", "localCheckpoint", "unpersist"}
+
+
+def _raw_pin_calls(path: str, rel: str) -> list[str]:
+    """``.cache()``/``.persist(``/``.localCheckpoint(``/``.unpersist(``
+    calls, except the ``storage.cache(...)`` primitive itself."""
+    return sorted(
+        f"{rel}:{node.lineno}: .{node.func.attr}(...)"
+        for node in ast.walk(ast.parse(open(path).read()))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in _PIN_METHODS
+        and not (isinstance(node.func.value, ast.Name)
+                 and node.func.value.id == "storage")
+    )
+
+
+def _scan_engine(scan) -> list[str]:
     found = []
-    for sub in ("operators", "pipelines", "functions", "sources"):
+    for sub in ("operators", "pipelines", "streaming", "functions", "sources"):
         base = os.path.join(PKG, sub)
         for name in sorted(os.listdir(base)):
             if name.endswith(".py"):
                 rel = f"{sub}/{name}"
-                found += _list_fed_calls(os.path.join(base, name), rel)
+                found += scan(os.path.join(base, name), rel)
+    return found
+
+
+def test_no_list_fed_create_dataframe_in_engine():
+    found = _scan_engine(_list_fed_calls)
     assert not found, "build driver-held frames with local_frame:\n" + "\n".join(found)
+
+
+def test_no_raw_pins_outside_storage():
+    found = [f for f in _scan_engine(_raw_pin_calls)
+             if not f.startswith("operators/storage.py:")]
+    assert not found, (
+        "pin through storage.cache / storage.checkpoint:\n" + "\n".join(found)
+    )
+
+
+def test_raw_pin_scan_flags_cache_and_passes_storage(tmp_path):
+    src = tmp_path / "mod.py"
+    src.write_text(
+        "def bad(df):\n"
+        "    return df.cache()\n"
+        "def bad_checkpoint(df):\n"
+        "    df.unpersist()\n"
+        "    return df.localCheckpoint(eager=True).persist()\n"
+        "def ok(df):\n"
+        "    return storage.cache(storage.checkpoint(df))\n"
+    )
+    found = _raw_pin_calls(str(src), "operators/mod.py")
+    assert [f.split(":")[1] for f in found] == ["2", "4", "5", "5"]
 
 
 def test_list_fed_scan_flags_lists_and_passes_arrow(tmp_path):

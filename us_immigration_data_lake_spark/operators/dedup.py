@@ -30,10 +30,8 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from us_immigration_data_lake_spark.functions.text import normalized_text, tokens
-from us_immigration_data_lake_spark.operators.storage import (
-    local_frame,
-    release_local_checkpoint,
-)
+from us_immigration_data_lake_spark.operators import storage
+from us_immigration_data_lake_spark.operators.storage import local_frame
 
 
 def spread_by_id(df: DataFrame, id_col: str) -> DataFrame:
@@ -636,12 +634,9 @@ def near_dup_frames(
     - ``n_oversized``: that frame's row count as a plain int — the
       census already counted it, so stats consumers (CorpusStats)
       never pay a count() action on the report frame
-    - ``cached``: the frames this plan caches (the hashed-shingle
-      frame and the band frame) — the caller's to release once
-      ``pairs``/``oversized`` are fully materialized, the same
-      contract as cross_near_dup_frames (r10 advisor: loop callers
-      like update_corpus_increment otherwise pin a new pair of
-      CacheManager entries per invocation, relying on LRU eviction)
+
+    The hashed-shingle and band caches belong to the caller's
+    ``storage.scope()``.
 
     With ``recover_oversized=True``, each mega-bucket additionally
     contributes anchor-star candidates (member ↔ bucket-min, linear in
@@ -672,19 +667,15 @@ def near_dup_frames(
     hs_arr = hashed_shingle_sets(sh, id_col, portable)
     # cached: consumed by the signature/banding chain AND the verify
     # join. ~|docs| rows of long arrays — orders of magnitude smaller
-    # than r1's exploded (doc, shingle-hash) cache. Cannot be
-    # unpersisted here (the returned frames are lazy) — handed to the
-    # caller via the "cached" entry; un-released entries fall back to
-    # the cache manager's LRU eviction.
-    hs_arr.cache()
+    # than r1's exploded (doc, shingle-hash) cache.
+    storage.cache(hs_arr)
     sig = _signatures_from_sets(hs_arr, id_col, num_hashes, portable)
     band_df = lsh_bands(sig, id_col, bands, rows, portable)
     # The two-phase cap scans the band frame twice (key counts, then
     # the anti-join collect); cache it so the num_hashes-per-doc
     # signature stage runs once. Tiny rows — (id, band_idx int,
-    # band_hash long) × bands per doc; released by the caller via the
-    # "cached" entry, same contract as hs_arr above.
-    band_df.cache()
+    # band_hash long) × bands per doc.
+    storage.cache(band_df)
     # ONE bucket census (key count + strategy pick + anchor-star seeds
     # + the oversized report all derive from it) — the r11 form paid
     # three-plus same-key aggregations of this cached frame for the
@@ -704,7 +695,6 @@ def near_dup_frames(
         # that only need the NUMBER (CorpusStats) read this instead of
         # paying a count() action on the report frame (r16)
         "n_oversized": n_over,
-        "cached": [hs_arr, band_df],
     }
 
 
@@ -778,16 +768,12 @@ def cross_near_dup_frames(
       (the within-frame verify_jaccard_hashed can't be reused as-is —
       its two sides index one frame), same int/int ratio semantics.
 
-    Returns ``pairs`` (id_new, id_ref, jaccard), ``oversized`` (ref
-    band buckets over the cap), and ``cached`` — the frames this plan
-    caches: the two hashed-shingle frames (each side feeds BOTH the
-    signature stage and the verify join) and the ref band frame (the
-    two-phase cap and the oversized census scan it four times). The
-    caches are the caller's to release:
-    unpersist each frame in ``cached`` once ``pairs``/``oversized``
-    are fully materialized (update_corpus_increment's finally-block
-    pattern) — otherwise repeated invocations accumulate pinned
-    CacheManager entries. ``portable=True`` selects md5-based hashing
+    Returns ``pairs`` (id_new, id_ref, jaccard) and ``oversized`` (ref
+    band buckets over the cap). The plan caches the two hashed-shingle
+    frames (each side feeds BOTH the signature stage and the verify
+    join) and the ref band frame (the two-phase cap and the oversized
+    census scan it four times); those caches belong to the caller's
+    ``storage.scope()``. ``portable=True`` selects md5-based hashing
     throughout so an external engine replays every bucket and
     signature (functions/hashing.py); xxhash64 remains the perf path.
     """
@@ -796,7 +782,7 @@ def cross_near_dup_frames(
     def _side(df: DataFrame) -> tuple[DataFrame, DataFrame]:
         sh = shingles(spread_by_id(df, id_col), id_col, text_col, shingle_n)
         hs = hashed_shingle_sets(sh, id_col, portable)
-        hs.cache()  # consumed by banding AND the verify join
+        storage.cache(hs)  # consumed by banding AND the verify join
         sig = _signatures_from_sets(hs, id_col, num_hashes, portable)
         return hs, lsh_bands(sig, id_col, bands, rows, portable)
 
@@ -806,7 +792,7 @@ def cross_near_dup_frames(
     # counts, common anti-join, rare semi-join) and ``oversized`` a
     # fourth — cache it so the 64-hash signature stage runs once.
     # Tiny rows: (id, band_idx int, band_hash long) × bands per doc.
-    bands_ref.cache()
+    storage.cache(bands_ref)
 
     # Cap-smallest-ids via the two-phase capped_bucket_members (count
     # first, window-sort only the rare oversized keys) — the r9 form's
@@ -845,11 +831,7 @@ def cross_near_dup_frames(
         )
         .filter(F.col("jaccard") >= threshold)
     )
-    return {
-        "pairs": pairs,
-        "oversized": oversized,
-        "cached": [hs_new, hs_ref, bands_ref],
-    }
+    return {"pairs": pairs, "oversized": oversized}
 
 
 def cross_dedup_survivors(
@@ -863,30 +845,18 @@ def cross_dedup_survivors(
     threshold: float = 0.5,
     max_bucket_size: int = 1000,
     portable: bool = False,
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """The NEW rows that are NOT near-dups of the reference corpus —
     ``cross_near_dup_frames`` pairs fed into one left-anti join. The
     reference passes through unchanged (it is the kept set by
     definition); within-new duplicates are out of scope here — run
     near_dup_pairs/dedup_survivors on the survivors if the new batch
-    needs its own dedup (the corpus pipeline does both).
-
-    The returned plan reads the two hashed-shingle caches the inner
-    cross plan creates; since this wrapper returns lazily it cannot
-    release them itself. Long-lived sessions that call it repeatedly
-    should pass ``cache_registry=[]``: the inner plan's cached frames
-    are appended to it, and the caller unpersists them once the
-    returned plan is fully materialized (update_corpus_increment's
-    finally-block pattern). Without a registry the caches stay pinned
-    for the session — fine for one-shot jobs, a leak in a loop."""
+    needs its own dedup (the corpus pipeline does both)."""
     frames = cross_near_dup_frames(
         new_df, ref_df, id_col, text_col, shingle_n=shingle_n,
         num_hashes=num_hashes, bands=bands, threshold=threshold,
         max_bucket_size=max_bucket_size, portable=portable,
     )
-    if cache_registry is not None:
-        cache_registry.extend(frames["cached"])
     matched = (
         frames["pairs"]
         .select(F.col("id_new").alias(id_col))
@@ -914,8 +884,8 @@ def cross_ref_index(
 
     This is the piece of the cross-dedup plan whose cost is linear in
     the REFERENCE corpus — at 100 TB the axis that dwarfs every weekly
-    batch. Build it ONCE per reference (``.cache()``/``.persist()`` or
-    write it as a parquet table) and amortize across every batch and
+    batch. Build it ONCE per reference (``storage.cache`` or write it
+    as a parquet table) and amortize across every batch and
     micro-batch: feed it to ``cross_near_dup_pairs_indexed`` for batch
     ingests and ``streaming.dedup.stream_cross_near_dup_pairs`` for
     streams (both consume this exact shape; the streaming module
@@ -1260,14 +1230,24 @@ def connected_components(
       caps that, the same multi-reference blowup the MATERIALIZED
       hints fix in the DuckDB oracles.
     """
+    # one scope: the edge checkpoint and every superseded round's
+    # labels are released on return; the labels returned move to the
+    # caller's scope
+    with storage.scope() as s:
+        return s.hand_off(_components(pairs, id_cols, max_iter, strict))
+
+
+def _components(
+    pairs: DataFrame, id_cols: tuple[str, str], max_iter: int, strict: bool
+) -> DataFrame:
     a, b = id_cols
     # the ONE-direction edge set is what materializes: checkpointing
     # the symmetric union would evaluate the pairs plan once per
     # branch. The union below is lazy (its schema carries the widened
     # id type) and only the loop path ever reads it.
-    edges = pairs.select(
-        F.col(a).alias("src"), F.col(b).alias("dst")
-    ).localCheckpoint(eager=True)
+    edges = storage.checkpoint(
+        pairs.select(F.col(a).alias("src"), F.col(b).alias("dst"))
+    )
     sym = edges.union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
@@ -1293,21 +1273,16 @@ def connected_components(
             # join against the corpus becomes a broadcast hash join
             # instead of shuffling the corpus side into a sort-merge
             # (guide §3.1)
-            labeled = F.broadcast(
+            return F.broadcast(
                 local_frame(
                     pairs.sparkSession, _cc_local_labels(head), out_schema
                 )
             )
-            # nobody reads the edge blocks again — release them now
-            # (the storage.py contract) instead of leaking per call
-            release_local_checkpoint(edges)
-            return labeled
 
-    labels = (
+    labels = storage.checkpoint(
         sym.groupBy(F.col("src").alias("id"))
         .agg(F.min("dst").alias("__m"))
         .select("id", F.least(F.col("id"), F.col("__m")).alias("cluster"))
-        .localCheckpoint(eager=True)
     )
 
     converged = False
@@ -1333,7 +1308,7 @@ def connected_components(
             F.col("cluster"), F.coalesce("n_cluster", F.col("cluster"))
         )
         obs = Observation()
-        labels = (
+        labels = storage.checkpoint(
             labels.join(neighbor_min, on="id", how="left")
             .select(
                 "id",
@@ -1342,7 +1317,6 @@ def connected_components(
             )
             .observe(obs, F.sum("__chg").alias("changed"))
             .drop("__chg")
-            .localCheckpoint(eager=True)
         )
         # obs.get blocks until the QueryExecution success event for the
         # eager localCheckpoint above is delivered; there is no timeout
@@ -1733,9 +1707,12 @@ def _build_concurrently(sc, builders: list) -> list:
 
     The threads are ``pyspark.InheritableThread``s, so the caller's
     local properties (job group, job tags, scheduler pool) reach every
-    eager job a builder runs. Each builder also tags its own jobs; when
+    eager job a builder runs, and each builder runs in a copy of the
+    caller's ``contextvars`` context, so its pins land in the caller's
+    ``storage.scope()``. Each builder also tags its own jobs; when
     one builder raises, the siblings' jobs are cancelled by that tag
     until they have stopped, and the first error is re-raised."""
+    import contextvars
     import uuid
 
     from pyspark import InheritableThread
@@ -1745,14 +1722,17 @@ def _build_concurrently(sc, builders: list) -> list:
     results: list = [None] * len(builders)
     errors: list = []  # in the order they were raised
 
-    def run(i: int) -> None:
+    def run(i: int, ctx: contextvars.Context) -> None:
         sc.addJobTag(tags[i])
         try:
-            results[i] = builders[i]()
+            results[i] = ctx.run(builders[i])
         except BaseException as e:  # re-raised on the caller's thread
             errors.append(e)
 
-    threads = [InheritableThread(run, args=(i,)) for i in range(len(builders))]
+    threads = [
+        InheritableThread(run, args=(i, contextvars.copy_context()))
+        for i in range(len(builders))
+    ]
     for t in threads:
         t.start()
     while any(t.is_alive() for t in threads):
@@ -2486,9 +2466,10 @@ def minhash_estimate_calibration(
     # cached: the signature chain (the md5-heavy stage in portable
     # mode) is scanned by the band side, BOTH pair-join sides, and the
     # counted-cap rescan — without the cache it recomputes 4× (a
-    # measured 2.3× slowdown of the whole calibration). One-shot
-    # offline run; released to LRU like the other calibration ops.
-    sig = _signatures_from_sets(hs, id_col, num_hashes, portable).cache()
+    # measured 2.3× slowdown of the whole calibration).
+    sig = storage.cache(
+        _signatures_from_sets(hs, id_col, num_hashes, portable)
+    )
     band_df = lsh_bands(
         sig.select(id_col, "signature"), id_col, bands,
         num_hashes // bands, portable,

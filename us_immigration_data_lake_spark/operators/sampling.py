@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from us_immigration_data_lake_spark.functions.splits import hash_split_bucket
+from us_immigration_data_lake_spark.operators import storage
 
 
 def sample_bucket(id_col: Column | str, buckets: int = 100) -> Column:
@@ -233,7 +234,6 @@ def dsir_logratio(
     num_buckets: int = 10_000,
     bigrams: bool = True,
     portable: bool = False,
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """Per-document DSIR importance log-weight of every ``df`` row
     against the ``target`` corpus: (id, n_feats, logratio_micro) with
@@ -257,14 +257,9 @@ def dsir_logratio(
     evidence and are omitted — select them explicitly if a pipeline
     wants them.
 
-    Cache lifecycle (r16, r15 advisor): the plan pins three cached
-    frames — ``doc_counts`` is CORPUS-sized (id × bucket rows), the
-    two censuses are ≤ num_buckets rows. Long-lived sessions calling
-    this repeatedly should pass ``cache_registry=[]``: the pinned
-    frames are appended for the caller to ``unpersist()`` once the
-    returned frame (or anything derived) has materialized — the
-    semantic_dedup / near_dup_frames contract. Without a registry the
-    pins fall back to LRU eviction (the pre-r16 behavior).
+    The plan pins three caches — ``doc_counts`` is CORPUS-sized
+    (id × bucket rows), the two censuses are ≤ num_buckets rows — and
+    they belong to the caller's ``storage.scope()``.
     """
     b = int(num_buckets)
     # doc_counts feeds THREE subtrees of one plan (the raw-census
@@ -275,26 +270,23 @@ def dsir_logratio(
     # 3.4 MB-exchange single-task stages, ~3.4 s of the 2.9 s query).
     # cache(), not localCheckpoint: the lineage is shuffle-correct
     # (no union-partitioning hazard — see hashed_token_features), so
-    # an eviction merely recomputes, and the builder returns a plain
-    # DataFrame with no frames contract to hand a checkpoint release
-    # through. The training feature-frame precedent (training.py)
-    # applies at 100 TB: one tokenize scan, then census + spine read
+    # an eviction merely recomputes, and the returned frame stays
+    # readable after the caller's scope releases the pins. The
+    # training feature-frame precedent (training.py) applies at
+    # 100 TB: one tokenize scan, then census + spine read
     # the materialized rows. The tiny censuses get the same treatment
     # (each feeds its broadcast AND its total-count broadcast).
-    doc_counts = _hashed_gram_buckets(
-        df, id_col, text_col, b, bigrams, portable
-    ).cache()
-    raw_census = doc_counts.groupBy("bucket").agg(
+    doc_counts = storage.cache(
+        _hashed_gram_buckets(df, id_col, text_col, b, bigrams, portable)
+    )
+    raw_census = storage.cache(doc_counts.groupBy("bucket").agg(
         F.sum("c_db").cast("long").alias("cr")
-    ).cache()
-    tgt_census = (
+    ))
+    tgt_census = storage.cache(
         _hashed_gram_buckets(target, id_col, text_col, b, bigrams, portable)
         .groupBy("bucket")
         .agg(F.sum("c_db").cast("long").alias("ct"))
-        .cache()
     )
-    if cache_registry is not None:
-        cache_registry.extend([doc_counts, raw_census, tgt_census])
     n_raw = raw_census.select(F.sum("cr").cast("long").alias("n_r"))
     n_tgt = tgt_census.select(F.sum("ct").cast("long").alias("n_t"))
 
@@ -335,7 +327,6 @@ def dsir_select(
     bigrams: bool = True,
     temperature_milli: int = 1000,
     portable: bool = False,
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """DSIR selection: the ``k`` documents of ``df`` drawn WITHOUT
     replacement with probability ∝ w(d)^(1/T) — the Gumbel-top-k trick
@@ -355,7 +346,7 @@ def dsir_select(
         raise ValueError(f"temperature_milli must be > 0, got {t}")
     lw = dsir_logratio(
         df, target, id_col, text_col, num_buckets=num_buckets,
-        bigrams=bigrams, portable=portable, cache_registry=cache_registry,
+        bigrams=bigrams, portable=portable,
     )
     gumbel_micro = F.round(
         -F.log(-F.log(hash_uniform(F.col(id_col), digit_offset=21))) * 1e6
@@ -377,7 +368,6 @@ def temperature_mixture_weights(
     size_col: str,
     alpha: float = 0.3,
     budget: int | None = None,
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """Temperature-based mixture sampling weights over data sources —
     the multilingual/multi-source balancing rule (mT5 / XLM-R: sample
@@ -409,18 +399,12 @@ def temperature_mixture_weights(
     # broadcast subqueries execute independently under AQE, so without
     # a materialization point the corpus pass repeats (the dsir
     # doc_counts finding, r15). K-row cache, corpus-pass once.
-    per = (
+    per = storage.cache(
         df.filter(F.col(size_col).isNotNull())
         .groupBy(F.col(group_col).alias("group"))
         .agg(F.sum(F.col(size_col).cast("long")).alias("n"))
         .filter(F.col("n") > 0)
-        .cache()
     )
-    # K-row pin, but a long-lived caller still deserves a release path
-    # (the dsir_logratio contract, r16): registry when provided, LRU
-    # fallback otherwise
-    if cache_registry is not None:
-        cache_registry.append(per)
     total = per.agg(F.sum("n").cast("long").alias("__N"))
     w = F.round(
         F.lit(1_000_000.0)
@@ -811,9 +795,13 @@ def training_order_pipeline(
 
     Returns (id, group, quality_bin, pos, v_time, global_pos) —
     resume = filter global_pos > checkpoint, identical to q228."""
+    capped = per_group_cap(
+        df.select(id_col, group_col, score_col, size_col),
+        group_col, id_col, cap=cap,
+    )
     weights, binned = _training_order_stages(
-        df, id_col, group_col, score_col, size_col,
-        cap=cap, alpha=alpha, n_bins=n_bins, lo=lo, hi=hi,
+        capped, id_col, group_col, score_col, size_col,
+        alpha=alpha, n_bins=n_bins, lo=lo, hi=hi,
     )
     return mixture_interleave_order(
         binned, id_col, group_col, weights,
@@ -822,42 +810,21 @@ def training_order_pipeline(
 
 
 def _training_order_stages(
-    df: DataFrame,
+    capped: DataFrame,
     id_col: str,
     group_col: str,
     score_col: str,
     size_col: str,
     *,
-    cap: int,
     alpha: float,
     n_bins: int,
     lo: float,
     hi: float,
-    materialize: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """The EPOCH-INVARIANT prefix of the training-order pipeline
-    (cap → policy-on-capped → quality bins), shared by the one-epoch
-    and multi-epoch forms so E epochs never recompute it. Returns
-    (weights, binned).
-
-    ``materialize``: the MULTI-EPOCH caller passes True — capped
-    feeds BOTH the policy subtree (via the K-row `per` census) and
-    the binned spine, and across the epochs path's MULTIPLE actions
-    (the eager binned checkpoint, then the first epoch's broadcast)
-    the caller's upstream feature pass would otherwise run twice
-    (r16 stage probe: two 8-11 s-CPU tokenize stages per q237 run;
-    solo A/B with the cache: 4.66 → 3.33 s median). The ONE-ACTION
-    pipeline form keeps False: inside a single job the two subtrees
-    overlap for free, and the cache write + block-lock serialization
-    measured a LOSS there (q234 1.94 → 2.41 s; reverted to
-    per-call-site, the sig-spread lesson). LRU-released."""
-    capped = per_group_cap(
-        df.select(F.col(id_col), F.col(group_col), F.col(score_col),
-                  F.col(size_col)),
-        group_col, id_col, cap=cap,
-    )
-    if materialize:
-        capped = capped.cache()
+    after the cap (policy-on-capped → quality bins), shared by the
+    one-epoch and multi-epoch forms so E epochs never recompute it.
+    Returns (weights, binned)."""
     weights = temperature_mixture_weights(
         capped.select(F.col(group_col), F.col(size_col)),
         group_col, size_col, alpha=alpha, budget=1_000_000,
@@ -914,12 +881,26 @@ def training_order_epochs(
     # a clear error here (r13 advisor).
     if epochs < 1:
         raise ValueError(f"epochs must be >= 1, got {epochs}")
+    # capped feeds BOTH the policy subtree (via the K-row `per` census)
+    # and the binned spine, and across this path's MULTIPLE actions
+    # (the eager binned checkpoint, then the first epoch's broadcast)
+    # the caller's upstream feature pass would otherwise run twice
+    # (r16 stage probe: two 8-11 s-CPU tokenize stages per q237 run;
+    # solo A/B with the cache: 4.66 → 3.33 s median). The ONE-ACTION
+    # pipeline form does not cache: inside a single job the two
+    # subtrees overlap for free, and the cache write + block-lock
+    # serialization measured a LOSS there (q234 1.94 → 2.41 s). The
+    # cache still serves the caller's first action, so it belongs to
+    # the caller's scope.
+    capped = storage.cache(per_group_cap(
+        df.select(id_col, group_col, score_col, size_col),
+        group_col, id_col, cap=cap,
+    ))
     weights, binned = _training_order_stages(
-        df, id_col, group_col, score_col, size_col,
-        cap=cap, alpha=alpha, n_bins=n_bins, lo=lo, hi=hi,
-        materialize=True,  # multi-action path: see the stages helper
+        capped, id_col, group_col, score_col, size_col,
+        alpha=alpha, n_bins=n_bins, lo=lo, hi=hi,
     )
-    binned = binned.localCheckpoint(eager=True)
+    binned = storage.checkpoint(binned)
     out = None
     for e in range(start_epoch, start_epoch + epochs):
         part = mixture_interleave_order(

@@ -24,6 +24,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from us_immigration_data_lake_spark.operators import storage
+
 
 def _as_double(col) -> Column:
     c = F.col(col) if isinstance(col, str) else col
@@ -698,7 +700,7 @@ def _srp_sig_frame(
         )
     else:
         sig = sig.withColumn("__n", l2_norm(F.col("__v")))
-    return sig.localCheckpoint(eager=True)
+    return storage.checkpoint(sig)
 
 
 def _pair_cosine(dim: int) -> F.Column:
@@ -736,10 +738,8 @@ def srp_near_dup_frames(
     key rides the band_hash slot with a constant band_idx), so cap
     semantics can never drift between the two pipelines. Returns
     ``{"pairs": (id1, id2, cosine_sim), "oversized": one row per
-    capped bucket, "cached": [the cached SRP bucket frame]}`` —
-    ``cached`` is the caller's to release once the other frames are
-    materialized (the near_dup_frames / cross_near_dup_frames
-    contract; un-released entries fall back to LRU eviction).
+    capped bucket}``; the signature checkpoint and the bucket-frame
+    cache belong to the caller's ``storage.scope()``.
     """
     from us_immigration_data_lake_spark.operators.dedup import (
         _census_report,
@@ -754,9 +754,8 @@ def srp_near_dup_frames(
     )
     # two-phase candidate_pairs scans the bucket frame twice (key
     # counts, then the anti-join collect); cache the three tiny
-    # columns so the SRP signature arithmetic runs once — released by
-    # the caller via the "cached" entry (the text path's contract).
-    band_df.cache()
+    # columns so the SRP signature arithmetic runs once.
+    storage.cache(band_df)
     # ONE bucket census shared by the key count, the anchor-star seeds
     # and the oversized report — the text path's r12 consolidation
     # (dedup.near_dup_frames), applied identically here so cap-site
@@ -790,7 +789,6 @@ def srp_near_dup_frames(
         "oversized": _census_report(census),
         # counted by the census already — the near_dup_frames contract
         "n_oversized": n_over,
-        "cached": [band_df],
     }
 
 
@@ -831,17 +829,10 @@ def srp_multi_table_frames(
     hold per-table occupancy.
 
     Returns the near_dup_frames contract: ``{"pairs": (id1, id2,
-    cosine_sim), "oversized": one row per capped (table, bucket),
-    "cached": [band frame], "checkpointed": [signature frame]}`` —
-    ``cached`` is the caller's to ``unpersist()`` after materializing,
-    and ``checkpointed`` the caller's to pass to
-    ``release_local_checkpoint`` (an eager localCheckpoint's
-    MEMORY_AND_DISK blocks are only reaped when driver GC happens to
-    collect the RDD handle, so a long-lived session calling this
-    per batch would otherwise accumulate storage — the r14 advisor's
-    leak class, the same one training.py releases in ``finally``).
-    A pair colliding in several tables is emitted once
-    (candidate_pairs dedups inside the bucket expand).
+    cosine_sim), "oversized": one row per capped (table, bucket)}``;
+    the signature checkpoint and the band-frame cache belong to the
+    caller's ``storage.scope()``. A pair colliding in several tables
+    is emitted once (candidate_pairs dedups inside the bucket expand).
     """
     from us_immigration_data_lake_spark.operators.dedup import (
         _census_report,
@@ -852,15 +843,14 @@ def srp_multi_table_frames(
     # one barrier for the L·bits·dim-term signature stage (the
     # srp_bucket_near_dup_pairs rationale: it feeds the band frame
     # AND the verify join's vector/norm lookups)
-    sig = _srp_multi_sig_base(
+    sig = storage.checkpoint(_srp_multi_sig_base(
         df, id_col, vec_col, dim, num_bits, num_tables, seed
-    ).localCheckpoint(eager=True)
+    ))
 
-    band_df = sig.select(
+    band_df = storage.cache(sig.select(
         "__id",
         F.posexplode("__buckets").alias("band_idx", "band_hash"),
-    ).select("__id", "band_idx", "band_hash")
-    band_df.cache()
+    ).select("__id", "band_idx", "band_hash"))
     n_over, census = _counted_census_plan(band_df, "__id", max_bucket_size)
     cand = candidate_pairs(band_df, "__id", max_bucket_size,
                            _census=(n_over, census))
@@ -881,12 +871,7 @@ def srp_multi_table_frames(
         )
         .filter(F.col("cosine_sim") >= threshold)
     )
-    return {
-        "pairs": pairs,
-        "oversized": _census_report(census),
-        "cached": [band_df],
-        "checkpointed": [sig],
-    }
+    return {"pairs": pairs, "oversized": _census_report(census)}
 
 
 def srp_multi_table_pairs(
@@ -900,9 +885,7 @@ def srp_multi_table_pairs(
     seed: int = 42,
     max_bucket_size: int = 1000,
 ) -> DataFrame:
-    """``srp_multi_table_frames``'s pairs frame alone (the band cache
-    is left to LRU — loop callers should use the frames form and
-    release ``cached`` explicitly)."""
+    """``srp_multi_table_frames``'s pairs frame alone."""
     return srp_multi_table_frames(
         df, id_col, vec_col, threshold, dim, num_bits, num_tables,
         seed=seed, max_bucket_size=max_bucket_size,
@@ -983,19 +966,17 @@ def srp_multi_table_ref_index_frames(
     every batch/micro-batch; the cap is per (table, bucket) via the
     SAME capped_bucket_members machinery the banded text index uses
     (key_cols), so truncation semantics are shared, observable, and
-    already oracle-gated on the text path. ``checkpointed`` holds the
-    eagerly-checkpointed reference signature frame — an index that is
-    rebuilt per reference-corpus refresh in a long-lived session
-    should hand it to ``operators.storage.release_local_checkpoint``
-    once the (cached/persisted) index frame is materialized, or the
-    superseded blocks accumulate until driver GC (r14 advisor)."""
+    already oracle-gated on the text path. The reference signature
+    checkpoint belongs to the caller's ``storage.scope()``."""
     from us_immigration_data_lake_spark.operators.dedup import (
         capped_bucket_members,
     )
 
-    base = _srp_multi_sig_base(
-        ref_df, id_col, vec_col, dim, num_bits, num_tables, seed
-    ).localCheckpoint(eager=True)  # ref side is batch; computed once
+    base = storage.checkpoint(  # ref side is batch; computed once
+        _srp_multi_sig_base(
+            ref_df, id_col, vec_col, dim, num_bits, num_tables, seed
+        )
+    )
     band = base.select(
         "__id", F.posexplode("__buckets").alias("band_idx", "bucket")
     )
@@ -1016,8 +997,7 @@ def srp_multi_table_ref_index_frames(
         .filter(F.col("bucket_n") > max_bucket_size)
     )
     return {"index": index, "oversized": oversized,
-            "num_bits": num_bits, "num_tables": num_tables,
-            "checkpointed": [base]}
+            "num_bits": num_bits, "num_tables": num_tables}
 
 
 def cross_srp_multi_table_pairs_indexed(
@@ -1307,7 +1287,6 @@ def semantic_dedup(
     max_iter: int = 20,
     max_bucket_size: int | None = 1000,
     recover_oversized: bool = True,
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication decision over an
     embedding column: SRP-bucketed near-dup pairs →
@@ -1325,12 +1304,7 @@ def semantic_dedup(
     31× wall-clock for 10× rows, the capped one at 1.4×. Pass
     ``max_bucket_size=None`` explicitly for the uncapped
     exact-within-bucket SemDeDup gate semantics (small corpora /
-    oracle replay only — never the 100 TB configuration).
-
-    Loop callers should pass ``cache_registry=[]``: the capped path's
-    internal cached bucket frame is appended to it for release after
-    the returned frame materializes (the cross_dedup_survivors
-    contract); without a registry it falls back to LRU eviction."""
+    oracle replay only — never the 100 TB configuration)."""
     from us_immigration_data_lake_spark.operators.dedup import (
         dedup_survivors,
     )
@@ -1340,14 +1314,11 @@ def semantic_dedup(
             df, id_col, vec_col, threshold, dim, num_bits=num_bits, seed=seed
         )
     else:
-        frames = srp_near_dup_frames(
+        pairs = srp_near_dup_frames(
             df, id_col, vec_col, threshold, dim, num_bits=num_bits,
             seed=seed, max_bucket_size=max_bucket_size,
             recover_oversized=recover_oversized,
-        )
-        if cache_registry is not None:
-            cache_registry.extend(frames["cached"])
-        pairs = frames["pairs"]
+        )["pairs"]
     return dedup_survivors(
         df, pairs.select("id1", "id2"), id_col, max_iter=max_iter
     )
@@ -1997,12 +1968,11 @@ def hard_negative_recall(
     exact = hard_negatives(
         df, id_col, vec_col, k=k, dim=dim, dup_threshold=dup_threshold
     )
-    e = exact.select("query_id", "neighbor_id").localCheckpoint(eager=True)
+    e = storage.checkpoint(exact.select("query_id", "neighbor_id"))
     pairs = cosine_near_dup_pairs(df, id_col, vec_col, dup_threshold)
-    clusters = (
+    clusters = storage.checkpoint(
         dedup_survivors(df, pairs.select("id1", "id2"), id_col)
         .select(F.col(id_col), F.col("cluster"))
-        .localCheckpoint(eager=True)
     )
     out = None
     for bits, mp in configs:

@@ -13,6 +13,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from us_immigration_data_lake_spark.functions.text import normalized_text, tokens
+from us_immigration_data_lake_spark.operators import storage
 from us_immigration_data_lake_spark.operators.dedup import spread_by_id
 from us_immigration_data_lake_spark.operators.storage import local_frame
 
@@ -388,9 +389,9 @@ def _bm25_scored_frame(
     # cached: three subplans consume base (corpus stats, per-term doc
     # frequencies, the hits scoring branch) and Spark re-runs the
     # tokenize Project per branch otherwise — same treatment as
-    # dedup.near_dup_frames' shared hashed-shingle frame. LRU-evicted
-    # under pressure; ~|docs| rows of token arrays.
-    base.cache()
+    # dedup.near_dup_frames' shared hashed-shingle frame. ~|docs| rows
+    # of token arrays.
+    storage.cache(base)
     stats = base.agg(
         F.count("*").cast("long").alias("n_docs"),
         F.sum("dl").cast("long").alias("sum_dl"),
@@ -876,31 +877,33 @@ def bpe_merges(
         .groupBy("w")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     )
-    # char split: substring(w, i, 1) per position (F.split(w, '')
-    # yields a trailing empty string on some Spark versions — avoid)
-    state = words.select(
-        F.expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))")
-        .alias("symbols"),
-        "cnt",
-    ).localCheckpoint(eager=True)
-
     out: list[tuple[int, str, str, str, int]] = []
-    for rank in range(1, n_merges + 1):
-        top = (
-            _bpe_pair_counts(state)
-            .orderBy(F.desc("pair_count"), F.asc("l"), F.asc("r"))
-            .limit(1)
-            .collect()
-        )
-        if not top:  # no pair left anywhere (all words fused to one symbol)
-            break
-        l, r, c = top[0].l, top[0].r, top[0].pair_count
-        out.append((rank, l, r, l + r, c))
-        state = state.select(
-            _bpe_apply_merge(F.col("symbols"), l, r).alias("symbols"), "cnt"
-        )
-        if rank % checkpoint_every == 0 and rank < n_merges:
-            state = state.localCheckpoint(eager=True)
+    # the round checkpoints are released on return: the merge table is
+    # driver-held rows by then
+    with storage.scope():
+        # char split: substring(w, i, 1) per position (F.split(w, '')
+        # yields a trailing empty string on some Spark versions — avoid)
+        state = storage.checkpoint(words.select(
+            F.expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))")
+            .alias("symbols"),
+            "cnt",
+        ))
+        for rank in range(1, n_merges + 1):
+            top = (
+                _bpe_pair_counts(state)
+                .orderBy(F.desc("pair_count"), F.asc("l"), F.asc("r"))
+                .limit(1)
+                .collect()
+            )
+            if not top:  # no pair left anywhere (all words fused to one symbol)
+                break
+            l, r, c = top[0].l, top[0].r, top[0].pair_count
+            out.append((rank, l, r, l + r, c))
+            state = state.select(
+                _bpe_apply_merge(F.col("symbols"), l, r).alias("symbols"), "cnt"
+            )
+            if rank % checkpoint_every == 0 and rank < n_merges:
+                state = storage.checkpoint(state)
 
     return local_frame(
         df.sparkSession,
@@ -1046,7 +1049,7 @@ def bpe_token_counts(
             "w", _bpe_apply_merge(F.col("symbols"), l, r).alias("symbols")
         )
         if (i + 1) % checkpoint_every == 0 and i + 1 < len(merges):
-            state = state.localCheckpoint(eager=True)
+            state = storage.checkpoint(state)
     word_tok = state.select("w", F.size("symbols").cast("long").alias("__n"))
 
     occ = df.filter(F.col(text_col).isNotNull()).select(

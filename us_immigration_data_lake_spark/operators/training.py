@@ -43,19 +43,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from us_immigration_data_lake_spark.functions.hashing import md5_long
+from us_immigration_data_lake_spark.operators import storage
 from us_immigration_data_lake_spark.operators.dedup import spread_by_id
+from us_immigration_data_lake_spark.operators.storage import local_frame
 
 # Java's \s includes \x0B; RE2's (DuckDB) does not — explicit class
 # keeps both engines tokenizing byte-for-byte alike (textstats note).
 _WS = r"[ \t\n\x0B\f\r]+"
-
-
-# single-sourced with the similarity frames contracts (r15): see
-# operators/storage.py
-from us_immigration_data_lake_spark.operators.storage import (  # noqa: E402
-    local_frame,
-    release_local_checkpoint as _release_local_checkpoint,
-)
 
 
 def hashed_token_features(
@@ -168,10 +162,11 @@ def train_logreg_hashed(
     # reproduced locally with a concurrent clearCache()). The
     # checkpoint truncates lineage to a LogicalRDD: the iteration reads
     # materialized rows, cannot be silently re-derived mid-train, and
-    # every downstream aggregate plans its own exchange.
-    labels = labels.localCheckpoint(eager=True)
-    feats = feats.localCheckpoint(eager=True)
-    try:
+    # every downstream aggregate plans its own exchange. The scope
+    # releases both once the model is driver-held rows.
+    with storage.scope():
+        labels = storage.checkpoint(labels)
+        feats = storage.checkpoint(feats)
         n = labels.count()
         if n == 0:
             return local_frame(spark, [], "bucket long, w_pm long")
@@ -226,11 +221,6 @@ def train_logreg_hashed(
                 # python // is floor division == the SQL pmod formula
                 w[row["bucket"]] = w.get(row["bucket"], 0) + row["__g"] // m
         return local_frame(spark, sorted(w.items()), "bucket long, w_pm long")
-    finally:
-        # the model is driver-sized data by now; the feature blocks
-        # are dead weight — release them deterministically
-        _release_local_checkpoint(feats)
-        _release_local_checkpoint(labels)
 
 
 
@@ -290,9 +280,9 @@ def train_multinomial_logreg_hashed(
 
     # eager localCheckpoint, not cache() — same wrong-results
     # root-cause as train_logreg_hashed above
-    labels = labels.localCheckpoint(eager=True)
-    feats = feats.localCheckpoint(eager=True)
-    try:
+    with storage.scope():
+        labels = storage.checkpoint(labels)
+        feats = storage.checkpoint(feats)
         n = labels.count()
         if n == 0:
             return local_frame(spark, [], "class long, bucket long, w_pm long")
@@ -357,9 +347,6 @@ def train_multinomial_logreg_hashed(
             [(k, b, v) for (k, b), v in sorted(w.items())],
             "class long, bucket long, w_pm long",
         )
-    finally:
-        _release_local_checkpoint(feats)
-        _release_local_checkpoint(labels)
 
 
 
@@ -369,7 +356,6 @@ def naive_bayes_model(
     text_col: str,
     label_col: str,
     num_buckets: int = 512,
-    cache_registry: list | None = None,
 ) -> dict[str, DataFrame]:
     """CLOSED-FORM multinomial Naive Bayes over hashed token features —
     the counting complement of the GD trainers (one aggregation pass
@@ -408,18 +394,11 @@ def naive_bayes_model(
     # classes/deltas broadcasts), each executing independently without
     # a materialization point. cache() cuts the corpus passes to one
     # (r15; measured on q206: the tokenize+hash CPU ran ~5× per run).
-    kb = (
+    kb = storage.cache(
         feats.join(labels, id_col)
         .groupBy("class", "bucket")
         .agg(F.sum("cnt").alias("c_kb"))
-        .cache()
     )
-    # model-sized pin with corpus lineage; repeated trainings in one
-    # session should pass cache_registry=[] and unpersist after the
-    # model frames materialize (the dsir_logratio contract, r16) —
-    # without a registry the pin falls back to LRU eviction
-    if cache_registry is not None:
-        cache_registry.append(kb)
     ktot = kb.groupBy("class").agg(F.sum("c_kb").alias("tot_k"))
     nk = labels.groupBy("class").agg(F.count(F.lit(1)).alias("n_k"))
     n_total = labels.agg(F.count(F.lit(1)).alias("n_all"))
@@ -466,7 +445,6 @@ def naive_bayes_scores(
     id_col: str,
     text_col: str,
     num_buckets: int = 512,
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """Per-(doc, class) scores under a ``naive_bayes_model`` — the
     dense scoring frame ``(id, class, score_micro)`` that
@@ -498,11 +476,9 @@ def naive_bayes_scores(
     # the feature frame feeds TWO subtrees of one plan (the obs join
     # and the per-doc total grid) — cache so the tokenize+md5 pass
     # runs once (r15; the dsir doc_counts precedent)
-    all_feats = hashed_token_features(df, id_col, text_col, num_buckets).cache()
-    # corpus-sized pin — registry release when provided (r16; see
-    # naive_bayes_model), LRU fallback otherwise
-    if cache_registry is not None:
-        cache_registry.append(all_feats)
+    all_feats = storage.cache(
+        hashed_token_features(df, id_col, text_col, num_buckets)
+    )
     # bias rows (bucket -1) don't score, but they keep TOKENLESS docs in
     # the grid: an empty text still gets a prediction (= argmax prior,
     # since T_d = 0 and nothing joins in s_obs)
@@ -565,16 +541,12 @@ def naive_bayes_classify(
     id_col: str,
     text_col: str,
     num_buckets: int = 512,
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """Classify documents with a ``naive_bayes_model``: argmax over
     ``naive_bayes_scores`` (ties to the smallest class index);
     returns (id, pred_class, score_micro). Plan notes in
     naive_bayes_scores."""
-    scored = naive_bayes_scores(
-        df, model, id_col, text_col, num_buckets,
-        cache_registry=cache_registry,
-    )
+    scored = naive_bayes_scores(df, model, id_col, text_col, num_buckets)
     # an empty model yields an empty scores frame; the argmax below
     # flows it through to an empty (id, pred_class, score_micro)
     best = scored.groupBy(id_col).agg(

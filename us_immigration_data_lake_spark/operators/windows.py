@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from us_immigration_data_lake_spark.operators import storage
 from us_immigration_data_lake_spark.operators.storage import local_frame
 
 
@@ -235,16 +236,14 @@ def global_row_number(
         "__lrank",
         F.row_number().over(Window.partitionBy("__pid").orderBy(*cols)),
     )
-    # localCheckpoint (NOT .cache()): the counts collect below executes
-    # the ranked frame and the returned plan consumes it again, so the
-    # sort must not run twice — but a CacheManager entry is pinned until
-    # an explicit unpersist, which this function cannot issue (the
-    # returned plan still reads it), so repeated calls (e.g. multi-pass
-    # sorted-neighborhood) would permanently leak executor storage.
-    # localCheckpoint blocks are registered with the ContextCleaner and
-    # are reclaimed when the frame is garbage-collected. (Re-execution
-    # would also be CORRECT — range boundaries sample deterministically
-    # for the same input — this only avoids paying the sort twice.)
+    # checkpoint (NOT cache): the counts collect below executes the
+    # ranked frame and the returned plan consumes it again, so the sort
+    # must not run twice; the returned plan reads the checkpoint, so it
+    # belongs to the caller's storage scope, and with none open the
+    # ContextCleaner reclaims it when the frame is garbage-collected.
+    # (Re-execution would also be CORRECT — range boundaries sample
+    # deterministically for the same input — this only avoids paying
+    # the sort twice.)
     #
     # TRADEOFF (r8 advisor): localCheckpoint blocks are unreplicated
     # executor-local storage — losing an executor (failure or
@@ -256,7 +255,7 @@ def global_row_number(
     # unreplicated blocks, survives executor loss. local-mode/bench
     # default stays on the checkpoint fast path.
     if not fault_tolerant:
-        local = local.localCheckpoint(eager=True)
+        local = storage.checkpoint(local)
     counts = (
         local.groupBy("__pid").agg(F.count(F.lit(1)).alias("__n")).collect()
     )
@@ -313,7 +312,7 @@ def global_cumsum(
     for c in value_cols:
         local = local.withColumn(f"{c}_cum", F.sum(F.col(c)).over(w))
     if not fault_tolerant:
-        local = local.localCheckpoint(eager=True)
+        local = storage.checkpoint(local)
     # partition totals from the RAW columns (sum), not max(cum):
     # max(cum) only equals the partition total when values are
     # non-negative — sums are sign-agnostic

@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 
 from us_immigration_data_lake_spark.functions.splits import split_label
 from us_immigration_data_lake_spark.operators import dedup as dd
-from us_immigration_data_lake_spark.operators import pii
+from us_immigration_data_lake_spark.operators import pii, storage
 from us_immigration_data_lake_spark.operators import textstats as ts
 from us_immigration_data_lake_spark.sources.writers import write_parquet
 
@@ -92,109 +92,95 @@ def build_training_corpus(
     Output columns: doc_id, chunk_idx, chunk_start_token, chunk_text,
     n_tokens, predicted_lang, quality_score, split.
     """
-    # cache() pins a PLAN: every cached frame is appended here and
-    # released at the end — rebinding a name after cache() would
-    # otherwise leak the pinned blocks in a long-lived session.
-    cached = []
+    # the scope releases every stage cache on exit, also when a stage
+    # raises: the returned frame recomputes if re-executed, and a
+    # long-lived session does not accumulate pinned blocks per call
+    with storage.scope() as s:
+        # 1-2: score and gate — per-row projections on docs, not id
+        # self-joins of frames derived from docs; 3: PII scrub — in place,
+        # BEFORE anything caches or fingerprints, so downstream stages only
+        # ever see scrubbed text. Map-side regexes, no shuffle, no row change.
+        gated = ts.with_predicted_lang(
+            ts.with_quality_score(docs, id_col, text_col), id_col, text_col
+        ).filter(F.col("quality_score") >= min_quality)
+        if scrub:
+            gated = pii.scrub_pii(gated, text_col, out_col=text_col)
 
-    # 1-2: score and gate — per-row projections on docs, not id
-    # self-joins of frames derived from docs; 3: PII scrub — in place,
-    # BEFORE anything caches or fingerprints, so downstream stages only
-    # ever see scrubbed text. Map-side regexes, no shuffle, no row change.
-    gated = ts.with_predicted_lang(
-        ts.with_quality_score(docs, id_col, text_col), id_col, text_col
-    ).filter(F.col("quality_score") >= min_quality)
-    if scrub:
-        gated = pii.scrub_pii(gated, text_col, out_col=text_col)
+        # 4: benchmark decontamination — anti-join away documents sharing
+        # any 5-gram with the (broadcast) benchmark set. Without a
+        # benchmark the stage is the identity and n_quality == n_decontam
+        # (one aggregate serves both — no extra pass).
+        if benchmark is not None:
+            storage.cache(gated)
+            flagged = dd.contaminated_docs(gated, benchmark, id_col, text_col)
+            scored = gated.join(flagged.select(id_col), id_col, "left_anti")
+        else:
+            scored = gated
+        storage.cache(scored)
 
-    # 4: benchmark decontamination — anti-join away documents sharing
-    # any 5-gram with the (broadcast) benchmark set. Without a
-    # benchmark the stage is the identity and n_quality == n_decontam
-    # (one aggregate serves both — no extra pass).
-    if benchmark is not None:
-        gated.cache()
-        cached.append(gated)
-        flagged = dd.contaminated_docs(gated, benchmark, id_col, text_col)
-        scored = gated.join(flagged.select(id_col), id_col, "left_anti")
-    else:
-        scored = gated
-    scored.cache()
-    cached.append(scored)
+        # 5: exact dedup — smallest doc id survives per normalized content
+        exact = storage.cache(
+            dd.dedup_exact_by_content(scored, id_col, text_col)
+        )
 
-    # 5: exact dedup — smallest doc id survives per normalized content
-    exact = dd.dedup_exact_by_content(scored, id_col, text_col)
-    exact.cache()
-    cached.append(exact)
+        # 6: near-dup clustering — keep one survivor per cluster.
+        # recover_oversized: mega-buckets (boilerplate clusters) contribute
+        # anchor-star candidates instead of being dropped, so they still
+        # collapse to one survivor; the bucket count lands in CorpusStats.
+        frames = dd.near_dup_frames(
+            exact, id_col, text_col, shingle_n=shingle_n,
+            num_hashes=num_hashes, bands=bands,
+            threshold=jaccard_threshold, max_bucket_size=max_bucket_size,
+            recover_oversized=True, portable=portable,
+        )
+        pairs = frames["pairs"]
+        n_oversized = frames["n_oversized"]  # counted by the bucket census
+        survivors = dd.dedup_survivors(exact, pairs, id_col).filter(F.col("keep"))
+        deduped = storage.cache(exact.join(survivors.select(id_col), id_col))
 
-    # 6: near-dup clustering — keep one survivor per cluster.
-    # recover_oversized: mega-buckets (boilerplate clusters) contribute
-    # anchor-star candidates instead of being dropped, so they still
-    # collapse to one survivor; the bucket count lands in CorpusStats.
-    frames = dd.near_dup_frames(
-        exact, id_col, text_col, shingle_n=shingle_n,
-        num_hashes=num_hashes, bands=bands,
-        threshold=jaccard_threshold, max_bucket_size=max_bucket_size,
-        recover_oversized=True, portable=portable,
-    )
-    # the near-dup plan's internal caches (hashed-shingle + band
-    # frames) are ours to release with the stage caches below
-    cached.extend(frames["cached"])
-    pairs = frames["pairs"]
-    n_oversized = frames["n_oversized"]  # counted by the bucket census
-    survivors = dd.dedup_survivors(exact, pairs, id_col).filter(F.col("keep"))
-    deduped = exact.join(survivors.select(id_col), id_col)
-    deduped.cache()
-    cached.append(deduped)
+        # 7: chunk, carrying the per-document metadata onto every chunk;
+        # 8: deterministic split — shared helper so the pipeline can never
+        # diverge from the gate-checked q48 definition
+        corpus = ts.chunk_documents(
+            deduped, id_col, text_col, chunk_tokens, overlap,
+            carry=(
+                "predicted_lang", "quality_score",
+                split_label(F.col(id_col), train_pct).alias("split"),
+            ),
+        )
+        # one execution serves the stats pass AND the write
+        storage.cache(corpus)
 
-    # 7: chunk, carrying the per-document metadata onto every chunk;
-    # 8: deterministic split — shared helper so the pipeline can never
-    # diverge from the gate-checked q48 definition
-    corpus = ts.chunk_documents(
-        deduped, id_col, text_col, chunk_tokens, overlap,
-        carry=(
-            "predicted_lang", "quality_score",
-            split_label(F.col(id_col), train_pct).alias("split"),
-        ),
-    )
-    corpus.cache()  # one execution serves the stats pass AND the write
-    cached.append(corpus)
+        # EVERY stage count in ONE action (r16, guide §2.6/§5; the r15
+        # form paid one count() round-trip per stage). None of these counts
+        # gates a plan decision (the near-dup census above does, and stays
+        # eager inside near_dup_frames), so they are pure observations over
+        # the MATERIALIZED stage caches — multi-referenced
+        # InMemoryRelations, not observe() on lazy frames, which is exactly
+        # the double-count hazard the r15 analysis rejected. The collect is
+        # the action that materializes the deduped/corpus caches;
+        # scored/exact are already warm from the census + components passes.
+        stages = {
+            "input": docs, "decontam": scored, "exact": exact,
+            "near": deduped, "chunks": corpus,
+        }
+        if benchmark is not None:
+            stages["quality"] = gated
+        counts = _stage_counts(stages)
+        n_in = counts["input"]
+        n_decontam = counts["decontam"]
+        n_quality = counts["quality"] if benchmark is not None else n_decontam
+        n_exact = counts["exact"]
+        n_near = counts["near"]
+        n_chunks = counts["chunks"]
 
-    # EVERY stage count in ONE action (r16, guide §2.6/§5; the r15
-    # form paid one count() round-trip per stage). None of these counts
-    # gates a plan decision (the near-dup census above does, and stays
-    # eager inside near_dup_frames), so they are pure observations over
-    # the MATERIALIZED stage caches — multi-referenced
-    # InMemoryRelations, not observe() on lazy frames, which is exactly
-    # the double-count hazard the r15 analysis rejected. The collect is
-    # the action that materializes the deduped/corpus caches;
-    # scored/exact are already warm from the census + components passes.
-    stages = {
-        "input": docs, "decontam": scored, "exact": exact,
-        "near": deduped, "chunks": corpus,
-    }
-    if benchmark is not None:
-        stages["quality"] = gated
-    counts = _stage_counts(stages)
-    n_in = counts["input"]
-    n_decontam = counts["decontam"]
-    n_quality = counts["quality"] if benchmark is not None else n_decontam
-    n_exact = counts["exact"]
-    n_near = counts["near"]
-    n_chunks = counts["chunks"]
+        # 9: partitioned write
+        if out_dir is not None:
+            write_parquet(corpus, out_dir, "corpus", partition_by=["split", "predicted_lang"])
 
-    # 9: partitioned write
-    if out_dir is not None:
-        write_parquet(corpus, out_dir, "corpus", partition_by=["split", "predicted_lang"])
-
-    # release the stage caches: the returned frame recomputes if
-    # re-executed, but a long-lived session (driver loops, repeated
-    # builds) doesn't accumulate pinned storage blocks per call
-    for frame in cached:
-        frame.unpersist()
-
-    return corpus, CorpusStats(
-        n_in, n_quality, n_decontam, n_exact, n_near, n_chunks, n_oversized
-    )
+        return s.hand_off(corpus), CorpusStats(
+            n_in, n_quality, n_decontam, n_exact, n_near, n_chunks, n_oversized
+        )
 
 
 @dataclass
@@ -236,32 +222,24 @@ def update_corpus_increment(
     count is one action on a cached frame (the build_training_corpus
     discipline); caches release before return.
     """
-    cached: list[DataFrame] = []
-    try:
-        gated = (
+    with storage.scope() as s:
+        gated = storage.cache(
             ts.with_quality_score(new_docs, id_col, text_col)
             .filter(F.col("quality_score") >= min_quality)
             .drop("quality_score")
         )
-        gated.cache()
-        cached.append(gated)
 
         cross = dd.cross_near_dup_frames(
             gated, ref_docs, id_col, text_col, shingle_n=shingle_n,
             num_hashes=num_hashes, bands=bands, threshold=threshold,
             max_bucket_size=max_bucket_size, portable=portable,
         )
-        # the cross plan caches its two hashed-shingle frames; their
-        # lifecycle is ours now (released in the finally block)
-        cached.extend(cross["cached"])
         cross_pairs = cross["pairs"]
-        surv_cross = gated.join(
+        surv_cross = storage.cache(gated.join(
             cross_pairs.select(F.col("id_new").alias(id_col)).dropDuplicates(),
             on=id_col,
             how="left_anti",
-        )
-        surv_cross.cache()
-        cached.append(surv_cross)
+        ))
 
         within_frames = dd.near_dup_frames(
             surv_cross, id_col, text_col, shingle_n=shingle_n,
@@ -269,18 +247,15 @@ def update_corpus_increment(
             max_bucket_size=max_bucket_size, recover_oversized=True,
             portable=portable,
         )
-        # per-batch internal caches released in the finally block —
-        # a weekly-ingest loop must not pin two new entries per batch
-        cached.extend(within_frames["cached"])
         within = within_frames["pairs"].select("id1", "id2")
         keep = (
             dd.dedup_survivors(surv_cross, within, id_col)
             .filter(F.col("keep"))
             .select(id_col)
         )
-        final = surv_cross.join(keep, on=id_col, how="left_semi")
-        final.cache()
-        cached.append(final)
+        final = storage.cache(
+            surv_cross.join(keep, on=id_col, how="left_semi")
+        )
 
         # every stage count in ONE action over the materialized stage
         # caches (the build_training_corpus consolidation; the counts
@@ -290,15 +265,12 @@ def update_corpus_increment(
             "within": final,
         })
 
-        return final, IncrementStats(
+        return s.hand_off(final), IncrementStats(
             new_docs=counts["new"],
             after_quality=counts["quality"],
             after_cross_dedup=counts["cross"],
             after_within_dedup=counts["within"],
         )
-    finally:
-        for frame in cached:
-            frame.unpersist()
 
 
 @dataclass(frozen=True)
@@ -340,36 +312,31 @@ def update_embedding_increment(
     is one action on a cached frame; caches release before return)."""
     from us_immigration_data_lake_spark.operators import similarity as sim
 
-    cached: list[DataFrame] = []
-    try:
-        gated = new_emb.filter(F.size(F.col(vec_col)) == dim)
-        gated.cache()
-        cached.append(gated)
+    with storage.scope() as s:
+        gated = storage.cache(new_emb.filter(F.size(F.col(vec_col)) == dim))
 
         cross_pairs = sim.cross_srp_near_dup_frames(
             gated, ref_emb, id_col, vec_col, threshold=threshold, dim=dim,
             num_bits=num_bits, max_bucket_size=cross_bucket_cap,
         )["pairs"]
-        surv_cross = gated.join(
+        surv_cross = storage.cache(gated.join(
             cross_pairs.select(F.col("id_new").alias(id_col)).dropDuplicates(),
             on=id_col,
             how="left_anti",
-        )
-        surv_cross.cache()
-        cached.append(surv_cross)
+        ))
 
         keep = (
             sim.semantic_dedup(
                 surv_cross, id_col, vec_col, threshold=threshold, dim=dim,
                 num_bits=num_bits, max_bucket_size=within_bucket_cap,
-                recover_oversized=True, cache_registry=cached,
+                recover_oversized=True,
             )
             .filter(F.col("keep"))
             .select(id_col)
         )
-        final = surv_cross.join(keep, on=id_col, how="left_semi")
-        final.cache()
-        cached.append(final)
+        final = storage.cache(
+            surv_cross.join(keep, on=id_col, how="left_semi")
+        )
 
         # every stage count in ONE action over the materialized stage
         # caches (the build_training_corpus consolidation)
@@ -378,12 +345,9 @@ def update_embedding_increment(
             "within": final,
         })
 
-        return final, EmbeddingIncrementStats(
+        return s.hand_off(final), EmbeddingIncrementStats(
             new_vectors=counts["new"],
             after_dim_gate=counts["gate"],
             after_cross_dedup=counts["cross"],
             after_within_dedup=counts["within"],
         )
-    finally:
-        for frame in cached:
-            frame.unpersist()

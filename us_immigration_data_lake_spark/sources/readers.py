@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from us_immigration_data_lake_spark.operators import storage
+
 
 def read_csv(
     spark: SparkSession,
@@ -76,12 +78,11 @@ def read_csv_with_quarantine(
         df0 = spark.read.options(header=header, sep=sep).schema(schema).csv(path)
         base = df0.schema
     full = ST([*base.fields, StructField(corrupt_col, StringType(), True)])
-    df = (
+    df = storage.cache(  # one scan serves both filters
         spark.read.options(header=header, sep=sep, mode="PERMISSIVE",
                            columnNameOfCorruptRecord=corrupt_col, **options)
         .schema(full)
         .csv(path)
-        .cache()  # one scan serves both filters
     )
     clean = df.filter(F.col(corrupt_col).isNull()).drop(corrupt_col)
     quarantined = df.filter(F.col(corrupt_col).isNotNull()).select(corrupt_col)

@@ -112,7 +112,7 @@ def read_pruned(
     it, re-running the stats scan unless the caller persisted it. A
     caller that already ran ``prune_files`` should pass that result as
     ``files`` (skipping the recompute); a caller pruning many
-    predicates against one table should ``stats.cache()`` — in
+    predicates against one table should ``storage.cache(stats)`` — in
     production the stats live as a written table (the manifest role),
     where neither applies."""
     if files is None:

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from us_immigration_data_lake_spark.operators import storage
 from us_immigration_data_lake_spark.operators.dedup import (
     cross_near_dup_pairs_indexed,
     cross_ref_index,
@@ -76,11 +77,12 @@ def stream_cross_near_dup_pairs(
     over the stream frame; the streaming twin differs from an indexed
     batch ingest only in what the new side is bound to.
     """
-    capped_ref = cross_ref_index(
+    # static side: materialize once, reused every micro-batch
+    capped_ref = storage.cache(cross_ref_index(
         ref_df, id_col, text_col, shingle_n=shingle_n,
         num_hashes=num_hashes, bands=bands,
         max_bucket_size=max_bucket_size, portable=portable,
-    ).cache()  # static side: materialize once, reused every micro-batch
+    ))
     return cross_near_dup_pairs_indexed(
         new_stream, capped_ref, id_col, text_col, shingle_n=shingle_n,
         num_hashes=num_hashes, bands=bands, threshold=threshold,
@@ -122,10 +124,11 @@ def stream_cross_srp_near_dup_pairs(
         srp_ref_index,
     )
 
-    idx = srp_ref_index(
+    # static side: materialize once, reused every micro-batch
+    idx = storage.cache(srp_ref_index(
         ref_df, id_col, vec_col, dim, num_bits=num_bits, seed=seed,
         max_bucket_size=max_bucket_size,
-    ).cache()  # static side: materialize once, reused every micro-batch
+    ))
     return cross_srp_pairs_indexed(
         new_stream, idx, id_col, vec_col, threshold, dim,
         num_bits=num_bits, seed=seed,
