@@ -207,10 +207,10 @@ def main() -> int:
         grid = {}
         for bits in (6, 8, 10):
             for tables in (1, 2, 3):
-                got = sim.srp_multi_table_pairs(
+                got = sim.srp_near_dup_frames(
                     df, "vec_id", "embedding", threshold=0.5, dim=64,
                     num_bits=bits, num_tables=tables, seed=42,
-                )
+                )["pairs"]
                 hits = sum(
                     (r.id1, r.id2) in truth for r in got.collect()
                 )

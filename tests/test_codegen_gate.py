@@ -12,10 +12,12 @@ JVM at WARN log level, executes the registry's heaviest expression
 stages (the SRP/dot family with the widest generated methods: the two
 multi-table queries that regressed, the widest single-table SRP
 consumers, and the brute-force cosine path) plus direct over-budget
-multi-table calls (srp_lsh_knn L=3 and srp_multi_table_pairs L=2·b=6,
-both past SIG_UNROLL_MAX_TERMS), and asserts the stderr carries ZERO
-compile-failure signatures ("Failed to compile the generated Java
-code" / "Code grows beyond 64 KB" / "Whole-stage codegen disabled").
+SRP calls past SIG_UNROLL_MAX_TERMS — multi-table (srp_lsh_knn L=3·b=6,
+srp_near_dup_frames L=2·b=6) and single-table (srp_lsh_knn and
+srp_near_dup_frames at b=12, dim 64: the budget holds at every L) —
+and asserts the stderr carries ZERO compile-failure signatures
+("Failed to compile the generated Java code" / "Code grows beyond
+64 KB" / "Whole-stage codegen disabled").
 
 Mechanism is single-sourced with the judge's standalone reproducer:
 scripts/r15_codegen_probe.py (same child script, same signature
@@ -61,12 +63,19 @@ emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
 qs = emb.filter(F.col("vec_id") < 16)
 n1 = sim.srp_lsh_knn(emb, qs, "vec_id", "embedding", k=3, dim=64,
                      num_bits=6, num_tables=3).count()
-n2 = sim.srp_multi_table_pairs(emb, "vec_id", "embedding",
-                               threshold=0.9, dim=64, num_bits=6,
-                               num_tables=2, seed=42,
-                               max_bucket_size=1_000_000).count()
+n2 = sim.srp_near_dup_frames(emb, "vec_id", "embedding",
+                             threshold=0.9, dim=64, num_bits=6,
+                             num_tables=2, seed=42,
+                             max_bucket_size=1_000_000)["pairs"].count()
+n3 = sim.srp_lsh_knn(emb, qs, "vec_id", "embedding", k=3, dim=64,
+                     num_bits=12).count()
+n4 = sim.srp_near_dup_frames(emb, "vec_id", "embedding",
+                             threshold=0.9, dim=64,
+                             num_bits=12)["pairs"].count()
 print(f"PROBE_ROWS extra_multi_knn {n1}", flush=True)
 print(f"PROBE_ROWS extra_multi_pairs {n2}", flush=True)
+print(f"PROBE_ROWS extra_wide_knn {n3}", flush=True)
+print(f"PROBE_ROWS extra_wide_pairs {n4}", flush=True)
 """
 
 
@@ -77,7 +86,8 @@ def test_registry_heavy_stages_compile_clean():
     assert set(GATE_QUERIES) <= set(rows), rows
     assert all(rows[q] >= 0 for q in GATE_QUERIES)
     # the direct over-budget calls executed too
-    assert "extra_multi_knn" in rows and "extra_multi_pairs" in rows
+    assert {"extra_multi_knn", "extra_multi_pairs", "extra_wide_knn",
+            "extra_wide_pairs"} <= set(rows)
     assert hits == [], (
         "whole-stage codegen compile fallback(s) detected:\n"
         + "\n".join(hits[:20])

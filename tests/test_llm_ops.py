@@ -3341,17 +3341,18 @@ def test_training_order_epochs_rejects_nonpositive_epochs(spark):
 
 
 def test_srp_multi_sig_term_budget_dispatch(spark):
-    """The multi-table codegen term budget (r14 verdict What's wrong
-    #2): above SIG_UNROLL_MAX_TERMS the combined signature projection
+    """The codegen term budget (r14 verdict What's wrong #2), at every
+    table count: above SIG_UNROLL_MAX_TERMS the signature projection
     renders its per-plane dots as HOF strings (CodegenFallback leaves
     — the stage compiles; below, janino's 64 KB method limit fails
     the whole stage into interpreted mode). Pins (a) the dispatch
     boundary on the PLAN (at-budget plan carries no HOF dot, the
-    first over-budget config does), and (b) bucket VALUES bitwise
-    equal across the two forms — each over-budget table signature
-    matches the explicitly-unrolled single-table rendering of the
-    same planes (the UNROLL_MAX_DIM guarantee, now exercised at the
-    term-budget boundary too). The executed no-fallback side is
+    first over-budget config does) for L=2/3 tables and for one
+    table of 8 vs 12 bits, and (b) bucket VALUES bitwise equal across
+    the two forms — each over-budget table signature matches the
+    explicitly-unrolled single-table rendering of the same planes
+    (the UNROLL_MAX_DIM guarantee, now exercised at the term-budget
+    boundary too). The executed no-fallback side is
     tests/test_codegen_gate.py's fresh-JVM sweep."""
     import numpy as np
 
@@ -3364,8 +3365,8 @@ def test_srp_multi_sig_term_budget_dispatch(spark):
 
     # dim 64: L=2·b=4 → 512 terms (at budget, unrolled);
     #         L=3·b=4 → 768 terms (over, HOF dots)
-    at = sim._srp_multi_sig_base(df, "vec_id", "embedding", 64, 4, 2, 42)
-    over = sim._srp_multi_sig_base(df, "vec_id", "embedding", 64, 4, 3, 42)
+    at = sim._srp_sig(df, "vec_id", "embedding", 64, 4, 42, 2)
+    over = sim._srp_sig(df, "vec_id", "embedding", 64, 4, 42, 3)
     at_plan = at._jdf.queryExecution().analyzed().toString()
     over_plan = over._jdf.queryExecution().analyzed().toString()
     assert "zip_with" not in at_plan
@@ -3383,12 +3384,28 @@ def test_srp_multi_sig_term_budget_dispatch(spark):
         ).collect()}
         assert {k: v[t] for k, v in got.items()} == want
 
+    # one table: b=8 → 512 terms (at budget, unrolled); b=12 → 768
+    # terms (over, HOF dots) — the budget is not a multi-table rule
+    at1 = sim._srp_sig(df, "vec_id", "embedding", 64, 8, 42)
+    over1 = sim._srp_sig(df, "vec_id", "embedding", 64, 12, 42)
+    assert "zip_with" not in at1._jdf.queryExecution().analyzed().toString()
+    assert "zip_with" in over1._jdf.queryExecution().analyzed().toString()
+    got1 = {r["__id"]: r["bucket"] for r in
+            over1.select("__id", "bucket").collect()}
+    want1 = {r.vec_id: r.b for r in df.select(
+        "vec_id",
+        sim.srp_signature("embedding", sim.srp_planes(64, 12, 42),
+                          hof=False).alias("b"),
+    ).collect()}
+    assert got1 == want1
+
 
 def test_srp_multi_table_compat_and_recall_dominance(spark):
-    """q239's operator: (a) ONE table reproduces
-    srp_bucket_near_dup_pairs exactly (table 0's planes are the
-    single-table planes — seed+0), so the multi-table composition
-    provably reuses the single-table semantics; (b) more tables can
+    """q239's operator (srp_near_dup_frames at num_tables=L): (a) ONE
+    table reproduces the uncapped srp_bucket_near_dup_pairs exactly
+    (table 0's planes are the single-table planes — seed+0), so the
+    multi-table composition provably reuses the single-table
+    semantics; (b) more tables can
     only ADD verified pairs (candidate sets are unions over tables —
     a superset theorem), and on planted-cluster geometry they
     strictly do; (c) the frames contract (oversized report + released
@@ -3410,17 +3427,17 @@ def test_srp_multi_table_compat_and_recall_dominance(spark):
            sim.srp_bucket_near_dup_pairs(df, "vec_id", "embedding",
                                          **kw).collect()}
     mt1 = {(r.id1, r.id2, r.cosine_sim) for r in
-           sim.srp_multi_table_pairs(df, "vec_id", "embedding",
-                                     num_tables=1, **kw).collect()}
+           sim.srp_near_dup_frames(df, "vec_id", "embedding",
+                                   num_tables=1, **kw)["pairs"].collect()}
     mt3 = {(r.id1, r.id2, r.cosine_sim) for r in
-           sim.srp_multi_table_pairs(df, "vec_id", "embedding",
-                                     num_tables=3, **kw).collect()}
+           sim.srp_near_dup_frames(df, "vec_id", "embedding",
+                                   num_tables=3, **kw)["pairs"].collect()}
     assert mt1 == one  # table-0 compat
     assert mt1 <= mt3  # superset theorem
     assert len(mt3) > len(mt1)  # tables buy recall on clusters
 
     with storage.scope() as s:
-        frames = sim.srp_multi_table_frames(
+        frames = sim.srp_near_dup_frames(
             df, "vec_id", "embedding", num_tables=3, max_bucket_size=10,
             **kw,
         )
@@ -3443,39 +3460,39 @@ def test_srp_multi_table_compat_and_recall_dominance(spark):
     assert not (ck_ids & {i.id() for i in jsc.getRDDStorageInfo()})
 
     with pytest.raises(ValueError, match="num_tables"):
-        sim.srp_multi_table_pairs(df, "vec_id", "embedding",
-                                  num_tables=0, **kw)
+        sim.srp_near_dup_frames(df, "vec_id", "embedding",
+                                num_tables=0, **kw)
 
-    # CROSS-corpus twin (q240): L=1 against the multi-table ref index
-    # reproduces the single-table cross path exactly; L=3 only adds;
-    # the index frames expose the bit/table counts the query side
-    # must sign with (the srp_ref_index_frames num_bits contract)
+    # CROSS-corpus form (q240): the L=1 ref index + probe reproduces
+    # the separately implemented batch cross path
+    # (cross_srp_near_dup_frames) exactly; L=3 only adds; the index
+    # frames expose the bit/table counts the query side must sign
+    # with (the srp_ref_index_frames num_bits contract)
     new_df = df.filter(F.col("vec_id") % 2 == 1)
     ref_df = df.filter(F.col("vec_id") % 2 == 0)
     s1 = {(r.id_new, r.id_ref, r.cosine_sim) for r in
-          sim.cross_srp_pairs_indexed(
-              new_df,
-              sim.srp_ref_index_frames(ref_df, "vec_id", "embedding",
-                                       dim=16, num_bits=4)["index"],
-              "vec_id", "embedding", 0.5, dim=16, num_bits=4,
-          ).collect()}
+          sim.cross_srp_near_dup_frames(
+              new_df, ref_df, "vec_id", "embedding", 0.5, dim=16,
+              num_bits=4,
+          )["pairs"].collect()}
     frames = {
-        L: sim.srp_multi_table_ref_index_frames(
+        L: sim.srp_ref_index_frames(
             ref_df, "vec_id", "embedding", dim=16, num_bits=4,
             num_tables=L,
         )
         for L in (1, 3)
     }
+    assert frames[1]["num_tables"] == 1
     assert frames[3]["num_bits"] == 4 and frames[3]["num_tables"] == 3
     cross = {
         L: {(r.id_new, r.id_ref, r.cosine_sim) for r in
-            sim.cross_srp_multi_table_pairs_indexed(
+            sim.cross_srp_pairs_indexed(
                 new_df, frames[L]["index"], "vec_id", "embedding",
                 0.5, dim=16, num_bits=4, num_tables=L,
             ).collect()}
         for L in (1, 3)
     }
-    assert cross[1] == s1  # L=1 compat with the single-table path
+    assert cross[1] == s1  # L=1 compat with the batch cross path
     assert cross[1] <= cross[3]  # tables only add
     # multi-collision pairs are emitted once
     assert len(cross[3]) == len({(a, b) for a, b, _ in cross[3]})

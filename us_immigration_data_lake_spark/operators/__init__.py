@@ -324,22 +324,9 @@ from us_immigration_data_lake_spark.operators.similarity import (
     hard_negative_recall,
     hard_negatives_indexed,
     recommended_num_bits,
-    srp_multi_table_frames,
-    srp_multi_table_pairs,
 )
 
 __all__ += [
     "choose_srp_config", "hard_negative_recall",
     "hard_negatives_indexed", "recommended_num_bits",
-    "srp_multi_table_frames", "srp_multi_table_pairs",
-]
-
-from us_immigration_data_lake_spark.operators.similarity import (
-    cross_srp_multi_table_pairs_indexed,
-    srp_multi_table_ref_index_frames,
-)
-
-__all__ += [
-    "cross_srp_multi_table_pairs_indexed",
-    "srp_multi_table_ref_index_frames",
 ]

@@ -59,22 +59,22 @@ def cosine(a: Column, b: Column) -> Column:
 # whose fold order is identical, so values stay bitwise-equal.
 UNROLL_MAX_DIM = 256
 
-# Widest COMBINED signature projection (num_tables · num_bits · dim
-# multiply-add terms) that may render unrolled — the multi-table
-# analog of UNROLL_MAX_DIM, but the limit it guards is janino's 64 KB
-# per-method bytecode cap, not analyzer stack depth: one projection
-# computing L table signatures inlines into a single generated method
-# (and, on the cross-corpus query side, into the join stage's consume
-# method), and when that method fails to compile Spark silently
-# interprets the ENTIRE stage — the r6 q181 4.7×-cost class, found
-# again on q239/q240 by the r14 judge. Measured r15
-# (scripts/r15_codegen_probe.py, both the checkpoint context and the
-# join-inlined cross context): 512 terms compile, 768 fail — in both
-# contexts and regardless of the (L, bits) split. 512 is therefore
-# the measured ceiling, kept exactly (not halved like UNROLL_MAX_DIM:
-# that boundary drifts with JIT state, this one is a deterministic
-# bytecode count) so that every ≤512-term plan — including every
-# existing L=1 plan — stays byte-identical; the suite gate
+# Widest signature projection (num_tables · num_bits · dim multiply-
+# add terms) that may render unrolled, at EVERY table count L,
+# L=1 included. The limit it guards is janino's 64 KB per-method
+# bytecode cap, not analyzer stack depth (UNROLL_MAX_DIM): the
+# projection computing a row's L signatures inlines into a single
+# generated method (and, on the cross-corpus query side, into the
+# join stage's consume method), and when that method fails to compile
+# Spark silently interprets the ENTIRE stage — the r6 q181 4.7×-cost
+# class. One table of 12 bits at dim 64 (768 terms) hits it exactly
+# like three tables of 4. Measured r15 (scripts/r15_codegen_probe.py,
+# both the checkpoint context and the join-inlined cross context):
+# 512 terms compile, 768 fail — in both contexts and regardless of
+# the (L, bits) split. 512 is therefore the measured ceiling, kept
+# exactly (not halved like UNROLL_MAX_DIM: that boundary drifts with
+# JIT state, this one is a deterministic bytecode count) so that
+# every ≤512-term plan stays byte-identical; the suite gate
 # (tests/test_codegen_gate.py) fails the build if a new composition
 # ever pushes a stage past the limit anyway.
 SIG_UNROLL_MAX_TERMS = 512
@@ -289,13 +289,14 @@ def srp_signature(
     forms (tested).
 
     ``hof=True`` forces the HOF dot form BELOW UNROLL_MAX_DIM too —
-    the multi-table dispatch (see SIG_UNROLL_MAX_TERMS): when several
-    signatures land in one projection their combined unrolled code
-    exceeds janino's 64 KB method limit and the WHOLE stage falls
-    back to interpreted evaluation, which costs more than
-    interpreting just the dots (each HOF dot is a CodegenFallback
-    leaf; the stage around it still compiles). hof=None keeps the
-    per-plane width rule."""
+    the term-budget dispatch (see SIG_UNROLL_MAX_TERMS), which every
+    SRP operator applies through one builder at any table count:
+    once a projection's unrolled signatures (L tables · bits · dim
+    terms) pass the budget, the generated method exceeds janino's
+    64 KB limit and the WHOLE stage falls back to interpreted
+    evaluation, which costs more than interpreting just the dots
+    (each HOF dot is a CodegenFallback leaf; the stage around it
+    still compiles). hof=None keeps the per-plane width rule."""
     parts = []
     dim = planes.shape[1] if hasattr(planes, "shape") else len(planes[0])
     for i, plane in enumerate(planes):
@@ -492,6 +493,104 @@ def ivf_knn(
     )
 
 
+def _srp_sig(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    dim: int,
+    num_bits: int,
+    seed: int,
+    num_tables: int = 1,
+    names: tuple[str, str] = ("__id", "__v"),
+) -> DataFrame:
+    """The one SRP signature projection every SRP operator builds on:
+    ``(__id, __v, bucket, __n)`` at one table, ``(__id, __v,
+    __buckets array<long>, __n)`` at ``num_tables`` L > 1 — table t's
+    planes are seeded ``seed + t``, so table 0 is the single-table
+    bucketing exactly. ``__n`` is the L2 norm the 1-dot pair cosine
+    (_pair_cosine) divides by; a consumer that never reads it prunes
+    it from the plan. ``names`` renames the id and vector columns for
+    a caller whose plan reads them under its own names.
+
+    Pure per-row expressions, so a streaming frame flows through
+    unchanged. A caller that reads the frame more than once
+    checkpoints it — see srp_bucket_near_dup_pairs for why that
+    barrier is load-bearing (double execution + codegen 64 KB
+    collapse).
+
+    All L signatures render into this ONE projection: above
+    SIG_UNROLL_MAX_TERMS combined terms (L·num_bits·dim) every
+    per-plane dot renders as a HOF string, at any L — so the stage
+    still compiles, only the dots are interpreted, and bucket values
+    stay bitwise-identical (the UNROLL_MAX_DIM guarantee). At or
+    below the budget the unrolled form is kept."""
+    if num_tables < 1:
+        raise ValueError(f"num_tables must be >= 1, got {num_tables}")
+    id_name, v = names
+    hof = num_tables * num_bits * dim > SIG_UNROLL_MAX_TERMS
+    sigs = [
+        srp_signature(v, srp_planes(dim, num_bits, seed + t), hof=hof)
+        for t in range(num_tables)
+    ]
+    sig = df.select(
+        F.col(id_col).alias(id_name), _as_double(vec_col).alias(v)
+    )
+    if num_tables == 1:
+        sig = sig.withColumn("bucket", sigs[0])
+    else:
+        sig = sig.withColumn("__buckets", F.array(*sigs))
+    return sig.withColumn(
+        "__n", F.expr(f"sqrt({_dot_fixed_sql(v, v, dim)})")
+    )
+
+
+def _srp_tables(
+    sig: DataFrame, num_tables: int, *cols, band: bool = False
+) -> tuple[DataFrame, list[str]]:
+    """Rows of an ``_srp_sig`` frame keyed for a bucket join, and the
+    join keys:
+
+    - L=1: one row per vector, keyed on the scalar ``bucket``. A pair
+      meets in at most one bucket, so a join emits it at most once and
+      needs no duplicate drop (the zero-state streaming probe of
+      streaming.dedup relies on this).
+    - L>1: ``__buckets`` posexplodes into one (band_idx, bucket) row
+      per table. A pair colliding in several tables joins once per
+      table, so every caller that emits pairs drops the repeats.
+
+    ``band=True`` names the bucket ``band_hash`` and always carries
+    ``band_idx`` (0 at L=1): the band-frame shape the text path's
+    bucket machinery (dedup.candidate_pairs) reads."""
+    key = "band_hash" if band else "bucket"
+    if num_tables > 1:
+        return (
+            sig.select(*cols,
+                       F.posexplode("__buckets").alias("band_idx", key)),
+            ["band_idx", key],
+        )
+    if band:
+        return (
+            sig.select(*cols, F.lit(0).alias("band_idx"),
+                       F.col("bucket").alias(key)),
+            ["band_idx", key],
+        )
+    return sig.select(*cols, "bucket"), ["bucket"]
+
+
+def _probe_hamming1(q: DataFrame, num_bits: int) -> DataFrame:
+    """``q`` with each row's ``bucket`` replaced by itself and its
+    ``num_bits`` Hamming-1 neighbours, one row each — the multiprobe
+    query side (1 + num_bits probes per query)."""
+    probes = F.array(
+        F.col("bucket"),
+        *[
+            F.col("bucket").bitwiseXOR(F.lit(1 << i).cast("long"))
+            for i in range(num_bits)
+        ],
+    )
+    return q.withColumn("bucket", F.explode(probes))
+
+
 def srp_lsh_knn(
     corpus: DataFrame,
     queries: DataFrame,
@@ -529,43 +628,17 @@ def srp_lsh_knn(
     displaced by an exact-better one) — the multiprobe dominance
     theorem, inherited; and the two levers compose (multiprobe then
     probes Hamming-1 within every table)."""
-    if num_tables < 1:
-        raise ValueError(f"num_tables must be >= 1, got {num_tables}")
-    if num_tables == 1:
-        planes = srp_planes(dim, num_bits, seed)
-        c = corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            _as_double(vec_col).alias("cv"),
-        ).withColumn("bucket", srp_signature("cv", planes))
-        q = queries.select(
-            F.col(id_col).alias("query_id"),
-            _as_double(vec_col).alias("qv"),
-        ).withColumn("bucket", srp_signature("qv", planes))
-        join_keys = ["bucket"]
-    else:
-        c = _srp_multi_sig_base(
-            corpus, id_col, vec_col, dim, num_bits, num_tables, seed
-        ).select(
-            F.col("__id").alias("neighbor_id"), F.col("__v").alias("cv"),
-            F.posexplode("__buckets").alias("band_idx", "bucket"),
-        )
-        q = _srp_multi_sig_base(
-            queries, id_col, vec_col, dim, num_bits, num_tables, seed
-        ).select(
-            F.col("__id").alias("query_id"), F.col("__v").alias("qv"),
-            F.posexplode("__buckets").alias("band_idx", "bucket"),
-        )
-        join_keys = ["band_idx", "bucket"]
+
+    def side(df: DataFrame, id_name: str, v_name: str):
+        sig = _srp_sig(df, id_col, vec_col, dim, num_bits, seed,
+                       num_tables, names=(id_name, v_name))
+        return _srp_tables(sig, num_tables, id_name, v_name)
+
+    c, keys = side(corpus, "neighbor_id", "cv")
+    q, _ = side(queries, "query_id", "qv")
     if multiprobe:
-        probes = F.array(
-            F.col("bucket"),
-            *[
-                F.col("bucket").bitwiseXOR(F.lit(1 << i).cast("long"))
-                for i in range(num_bits)
-            ],
-        )
-        q = q.withColumn("bucket", F.explode(probes))
-    cand = c.join(q, on=join_keys).filter(
+        q = _probe_hamming1(q, num_bits)
+    cand = c.join(q, on=keys).filter(
         F.col("neighbor_id") != F.col("query_id")
     )
     if num_tables > 1:
@@ -637,10 +710,25 @@ def srp_bucket_near_dup_pairs(
     ``num_bits=None`` → ``recommended_num_bits(df.count())`` (the
     dedup-occupancy rule; one eager count job at plan-build time).
     """
+    from us_immigration_data_lake_spark.operators.dedup import (
+        maybe_spread_by_id,
+    )
+
     if num_bits is None:
         num_bits = recommended_num_bits(df.count())
-    sig = _srp_sig_frame(df, id_col, vec_col, dim, num_bits, seed,
-                         spread=True)
+    # Spread the input first (r16 re-adjudication, per call site): the
+    # checkpoint's only consumers here are the two self-join map
+    # sides, and the guarded spread of a serial scan won solo A/B
+    # (q181 3.34 → 2.82 s median). The CAPPED path
+    # (srp_near_dup_frames → q187/q188/q233) does not: its census/
+    # candidate/verify fan-out measured a consistent LOSS with
+    # 32-partition signatures (q188 6.85 → 9.0-9.4 s solo medians).
+    # At cluster scale the input arrives parallel and the guard makes
+    # the spread a no-op.
+    sig = storage.checkpoint(_srp_sig(
+        maybe_spread_by_id(df, id_col), id_col, vec_col, dim, num_bits,
+        seed,
+    ))
     a = sig.select(
         F.col("__id").alias("id1"), F.col("__v").alias("v1"),
         F.col("__n").alias("n1"), "bucket",
@@ -660,54 +748,9 @@ def srp_bucket_near_dup_pairs(
     )
 
 
-def _srp_sig_frame(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    dim: int,
-    num_bits: int,
-    seed: int,
-    spread: bool = False,
-) -> DataFrame:
-    """The shared SRP signature frame (__id, __v, __n, bucket),
-    materialized once (eager localCheckpoint) — see
-    srp_bucket_near_dup_pairs's docstring for why the barrier is
-    load-bearing (double execution + codegen 64 KB collapse).
-
-    ``spread`` (r16 re-adjudication of the r15 revert, per-call-site):
-    the UNCAPPED self-join path (srp_bucket_near_dup_pairs → q181)
-    passes True — its only checkpoint consumers are the two self-join
-    map sides, and the guarded spread of a serial scan won solo A/B
-    (q181 3.34 → 2.82 s median). The CAPPED path (srp_near_dup_frames
-    → q187/q188/q233) keeps False: its census/candidate/verify fan-out
-    re-measured a consistent LOSS with 32-partition signatures (q188
-    6.85 → 9.0-9.4 s solo medians — the r15 revert reconfirmed with
-    the r16 local-CC code). At cluster scale the source is many files,
-    the input arrives parallel, and the guard makes the spread a
-    no-op."""
-    from us_immigration_data_lake_spark.operators.dedup import (
-        maybe_spread_by_id,
-    )
-
-    planes = srp_planes(dim, num_bits, seed)
-    base = maybe_spread_by_id(df, id_col) if spread else df
-    sig = base.select(
-        F.col(id_col).alias("__id"), _as_double(vec_col).alias("__v")
-    ).withColumn("bucket", srp_signature("__v", planes))
-    if dim:
-        sig = sig.withColumn(
-            "__n", F.expr(f"sqrt({_dot_fixed_sql('__v', '__v', dim)})")
-        )
-    else:
-        sig = sig.withColumn("__n", l2_norm(F.col("__v")))
-    return storage.checkpoint(sig)
-
-
 def _pair_cosine(dim: int) -> F.Column:
     """Cosine of (v1, v2) from precomputed norms (n1, n2)."""
-    if dim:
-        return F.expr(f"{_dot_fixed_sql('v1', 'v2', dim)} / (n1 * n2)")
-    return dot(F.col("v1"), F.col("v2")) / (F.col("n1") * F.col("n2"))
+    return F.expr(f"{_dot_fixed_sql('v1', 'v2', dim)} / (n1 * n2)")
 
 
 def srp_near_dup_frames(
@@ -720,6 +763,7 @@ def srp_near_dup_frames(
     seed: int = 42,
     max_bucket_size: int = 1000,
     recover_oversized: bool = False,
+    num_tables: int = 1,
 ) -> dict[str, DataFrame]:
     """srp_bucket_near_dup_pairs with the SAME mega-bucket skew guard
     the MinHash text path has (operators/dedup.py:near_dup_frames):
@@ -734,12 +778,29 @@ def srp_near_dup_frames(
     dense semantic cluster still collapses to one survivor in
     connected-components dedup rather than exploding one reducer.
 
-    Reuses the text path's bucket machinery verbatim (the SRP bucket
-    key rides the band_hash slot with a constant band_idx), so cap
-    semantics can never drift between the two pipelines. Returns
-    ``{"pairs": (id1, id2, cosine_sim), "oversized": one row per
-    capped bucket}``; the signature checkpoint and the bucket-frame
-    cache belong to the caller's ``storage.scope()``.
+    ``num_tables`` = L > 1 is the MinHash-BANDING analog for
+    embeddings (q239): L INDEPENDENT hyperplane tables (table t's
+    planes seeded ``seed + t``, so table 0 is the single-table
+    bucketing exactly), a candidate pair needs to share a bucket in
+    ANY table, exact cosine verifies. Per-pair recall rises from p^b
+    (one table) to 1 − (1−p^b)^L with p = 1 − θ/π — the OTHER recall
+    lever next to multiprobe: probes recover Hamming-1 neighbors of
+    one partition, independent tables resample the partition itself.
+    Cost is Σ over (table, bucket) of |bucket|², L× the single-table
+    candidate volume at equal bits: spend it to BUY recall at the
+    same bucket granularity, with num_bits still growing
+    ~log(corpus) (recommended_num_bits) to hold per-table occupancy.
+
+    The text path's bucket machinery is reused verbatim: the SRP
+    bucket rides the band_hash slot and the table index the band_idx
+    slot (0 at L=1), so the counted census, the cap, oversized
+    observability and OOM-safe strategy selection can never drift
+    between MinHash banding and SRP at any L. A pair colliding in
+    several tables is emitted once (candidate_pairs dedups inside
+    the bucket expand). Returns ``{"pairs": (id1, id2, cosine_sim),
+    "oversized": one row per capped (band_idx, bucket),
+    "n_oversized": int}``; the signature checkpoint and the
+    band-frame cache belong to the caller's ``storage.scope()``.
     """
     from us_immigration_data_lake_spark.operators.dedup import (
         _census_report,
@@ -748,14 +809,16 @@ def srp_near_dup_frames(
         candidate_pairs,
     )
 
-    sig = _srp_sig_frame(df, id_col, vec_col, dim, num_bits, seed)
-    band_df = sig.select(
-        "__id", F.lit(0).alias("band_idx"), F.col("bucket").alias("band_hash")
-    )
+    # one barrier for the signature stage: it feeds the band frame
+    # AND the verify join's vector/norm lookups
+    sig = storage.checkpoint(_srp_sig(
+        df, id_col, vec_col, dim, num_bits, seed, num_tables
+    ))
     # two-phase candidate_pairs scans the bucket frame twice (key
     # counts, then the anti-join collect); cache the three tiny
-    # columns so the SRP signature arithmetic runs once.
-    storage.cache(band_df)
+    # columns so the signature stage is read once.
+    band_df = storage.cache(_srp_tables(sig, num_tables, "__id",
+                                        band=True)[0])
     # ONE bucket census shared by the key count, the anchor-star seeds
     # and the oversized report — the text path's r12 consolidation
     # (dedup.near_dup_frames), applied identically here so cap-site
@@ -790,258 +853,6 @@ def srp_near_dup_frames(
         # counted by the census already — the near_dup_frames contract
         "n_oversized": n_over,
     }
-
-
-def srp_multi_table_frames(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    threshold: float,
-    dim: int,
-    num_bits: int,
-    num_tables: int,
-    seed: int = 42,
-    max_bucket_size: int = 1000,
-) -> dict[str, DataFrame]:
-    """MULTI-TABLE SRP near-dup pairs — the MinHash-BANDING analog for
-    embeddings the scale notes kept recommending as prose
-    ("at corpus scale run wider signatures or multiple independent
-    tables"), now an operator: ``num_tables`` INDEPENDENT
-    hyperplane tables (table t's planes seeded ``seed + t``, so table
-    0 reproduces the single-table bucketing exactly), a candidate
-    pair needs to share a bucket in ANY table, exact cosine verifies.
-    Per-pair recall rises from p^b (one table) to 1 − (1−p^b)^L with
-    p = 1 − θ/π — the OTHER recall lever next to multiprobe: probes
-    recover Hamming-1 neighbors of one partition, independent tables
-    resample the partition itself, and the two compose.
-
-    Plan shape IS the text path's banding (dedup.candidate_pairs):
-    the per-row signature stage computes all L buckets in one
-    projection (literal-plane JVM arithmetic), posexplode emits
-    (band_idx=table, band_hash=bucket) — so the counted-census
-    bucket-cap machinery, oversized observability and OOM-safe
-    strategy selection are shared verbatim with MinHash banding and
-    the single-table SRP path; cap semantics can never drift across
-    the three. Cost is Σ over (table, bucket) of |bucket|² — L× the
-    single-table candidate volume at equal bits, which is the point:
-    spend it to BUY recall at the same bucket granularity, with
-    num_bits still growing ~log(corpus) (recommended_num_bits) to
-    hold per-table occupancy.
-
-    Returns the near_dup_frames contract: ``{"pairs": (id1, id2,
-    cosine_sim), "oversized": one row per capped (table, bucket)}``;
-    the signature checkpoint and the band-frame cache belong to the
-    caller's ``storage.scope()``. A pair colliding in several tables
-    is emitted once (candidate_pairs dedups inside the bucket expand).
-    """
-    from us_immigration_data_lake_spark.operators.dedup import (
-        _census_report,
-        _counted_census_plan,
-        candidate_pairs,
-    )
-
-    # one barrier for the L·bits·dim-term signature stage (the
-    # srp_bucket_near_dup_pairs rationale: it feeds the band frame
-    # AND the verify join's vector/norm lookups)
-    sig = storage.checkpoint(_srp_multi_sig_base(
-        df, id_col, vec_col, dim, num_bits, num_tables, seed
-    ))
-
-    band_df = storage.cache(sig.select(
-        "__id",
-        F.posexplode("__buckets").alias("band_idx", "band_hash"),
-    ).select("__id", "band_idx", "band_hash"))
-    n_over, census = _counted_census_plan(band_df, "__id", max_bucket_size)
-    cand = candidate_pairs(band_df, "__id", max_bucket_size,
-                           _census=(n_over, census))
-    v1 = sig.select(
-        F.col("__id").alias("id1"), F.col("__v").alias("v1"),
-        F.col("__n").alias("n1"),
-    )
-    v2 = sig.select(
-        F.col("__id").alias("id2"), F.col("__v").alias("v2"),
-        F.col("__n").alias("n2"),
-    )
-    pairs = (
-        cand.join(v1, "id1")
-        .join(v2, "id2")
-        .select(
-            "id1", "id2",
-            F.round(_pair_cosine(dim), 6).alias("cosine_sim"),
-        )
-        .filter(F.col("cosine_sim") >= threshold)
-    )
-    return {"pairs": pairs, "oversized": _census_report(census)}
-
-
-def srp_multi_table_pairs(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    threshold: float,
-    dim: int,
-    num_bits: int,
-    num_tables: int,
-    seed: int = 42,
-    max_bucket_size: int = 1000,
-) -> DataFrame:
-    """``srp_multi_table_frames``'s pairs frame alone."""
-    return srp_multi_table_frames(
-        df, id_col, vec_col, threshold, dim, num_bits, num_tables,
-        seed=seed, max_bucket_size=max_bucket_size,
-    )["pairs"]
-
-
-def _srp_multi_sig_base(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    dim: int,
-    num_bits: int,
-    num_tables: int,
-    seed: int,
-) -> DataFrame:
-    """Per-row multi-table SRP state BEFORE explosion (__id, __v,
-    __n, __buckets array<long>) — one projection computing all L
-    table signatures and the norm; pure per-row expressions, so a
-    streaming frame flows through unchanged. Callers posexplode
-    ``__buckets`` into (band_idx, bucket) where they need the band
-    frame, and take vectors/norms from HERE (one row per id, no
-    dedup shuffle).
-
-    CODEGEN TERM BUDGET (r14 verdict What's wrong #2): all L
-    signatures render into ONE projection, so the unrolled form emits
-    num_tables·num_bits·dim multiply-add terms into a single
-    generated method — janino's 64 KB method limit fails the compile
-    at 768 terms (measured r15: 512 compiles in BOTH the checkpoint
-    and the join-inlined cross context, 768 fails in both, any L —
-    scripts/r15_codegen_probe.py) and Spark then interprets the WHOLE
-    stage, the r6 q181 4.7× penalty landing on every signature row.
-    Above SIG_UNROLL_MAX_TERMS the per-plane dots render as HOF
-    strings instead (CodegenFallback leaves — the stage still
-    compiles, only the dots are interpreted; bucket values are
-    bitwise-identical, the UNROLL_MAX_DIM guarantee). At or below the
-    budget nothing changes, so every L=1 plan stays byte-identical to
-    the single-table form. tests/test_codegen_gate.py pins zero
-    compile fallbacks across the registry's heaviest expression
-    stages."""
-    if num_tables < 1:
-        raise ValueError(f"num_tables must be >= 1, got {num_tables}")
-    hof = bool(dim) and num_tables * num_bits * dim > SIG_UNROLL_MAX_TERMS
-    sig = df.select(
-        F.col(id_col).alias("__id"), _as_double(vec_col).alias("__v")
-    ).select(
-        "__id", "__v",
-        F.array(*[
-            srp_signature("__v", srp_planes(dim, num_bits, seed + t),
-                          hof=hof)
-            for t in range(num_tables)
-        ]).alias("__buckets"),
-    )
-    if dim:
-        return sig.withColumn(
-            "__n", F.expr(f"sqrt({_dot_fixed_sql('__v', '__v', dim)})")
-        )
-    return sig.withColumn("__n", l2_norm(F.col("__v")))
-
-
-def srp_multi_table_ref_index_frames(
-    ref_df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    dim: int,
-    num_bits: int,
-    num_tables: int,
-    seed: int = 42,
-    max_bucket_size: int = 1000,
-) -> dict[str, DataFrame | int]:
-    """MULTI-TABLE reference index for cross-corpus semantic dedup —
-    srp_ref_index_frames with q239's recall lever: the reference is
-    indexed under L independent plane tables, so an incoming batch or
-    stream recovers a near-dup if it collides in ANY table
-    (1 − (1−p^b)^L per-pair recall at L× index size and candidate
-    volume). ``{"index": (band_idx, bucket, id_ref, v2, n2),
-    "oversized": per capped (table, bucket), "num_bits": int,
-    "num_tables": int}`` — build ONCE per reference corpus, reused
-    every batch/micro-batch; the cap is per (table, bucket) via the
-    SAME capped_bucket_members machinery the banded text index uses
-    (key_cols), so truncation semantics are shared, observable, and
-    already oracle-gated on the text path. The reference signature
-    checkpoint belongs to the caller's ``storage.scope()``."""
-    from us_immigration_data_lake_spark.operators.dedup import (
-        capped_bucket_members,
-    )
-
-    base = storage.checkpoint(  # ref side is batch; computed once
-        _srp_multi_sig_base(
-            ref_df, id_col, vec_col, dim, num_bits, num_tables, seed
-        )
-    )
-    band = base.select(
-        "__id", F.posexplode("__buckets").alias("band_idx", "bucket")
-    )
-    capped = capped_bucket_members(
-        band.select("band_idx", "bucket", "__id"), "__id",
-        max_bucket_size, key_cols=("band_idx", "bucket"),
-    ).select("band_idx", "bucket", F.col("__id").alias("id_ref"))
-    vectors = base.select(
-        F.col("__id").alias("id_ref"),
-        F.col("__v").alias("v2"),
-        F.col("__n").alias("n2"),
-    )
-    index = capped.join(vectors, "id_ref")
-    oversized = (
-        band.groupBy("band_idx", "bucket")
-        .agg(F.count(F.lit(1)).alias("bucket_n"),
-             F.min("__id").alias("anchor_id"))
-        .filter(F.col("bucket_n") > max_bucket_size)
-    )
-    return {"index": index, "oversized": oversized,
-            "num_bits": num_bits, "num_tables": num_tables}
-
-
-def cross_srp_multi_table_pairs_indexed(
-    new_df: DataFrame,
-    ref_index: DataFrame,
-    id_col: str,
-    vec_col: str,
-    threshold: float,
-    dim: int,
-    num_bits: int,
-    num_tables: int,
-    seed: int = 42,
-) -> DataFrame:
-    """Cross-corpus semantic near-dup pairs of a NEW batch against a
-    PREBUILT multi-table reference index
-    (srp_multi_table_ref_index_frames): per new row, all L bucket
-    signatures + the norm (pure per-row arithmetic), ONE equi-join on
-    (band_idx, bucket), cosine verify inline. Plane parameters must
-    match the index build — read them back from the index frames'
-    ``num_bits``/``num_tables``. A pair colliding in several tables
-    is emitted ONCE (dropDuplicates on the verified pair — the cosine
-    is a pure function of the pair, so the dedup is deterministic).
-    STREAMING caveat, unlike the single-table path: the per-pair
-    multiplicity means append-mode emission needs the duplicate drop;
-    on a stream that is watermark-bounded dedup state (the text
-    twin's q195 pattern), not free — single-table + multiprobe keeps
-    the zero-state property if that matters more than recall."""
-    sig = _srp_multi_sig_base(
-        new_df, id_col, vec_col, dim, num_bits, num_tables, seed
-    ).select(
-        F.col("__id").alias("id_new"), F.col("__v").alias("v1"),
-        F.col("__n").alias("n1"),
-        F.posexplode("__buckets").alias("band_idx", "bucket"),
-    )
-    return (
-        sig.join(ref_index, ["band_idx", "bucket"])
-        .select(
-            "id_new",
-            "id_ref",
-            F.round(_pair_cosine(dim), 6).alias("cosine_sim"),
-        )
-        .filter(F.col("cosine_sim") >= threshold)
-        .dropDuplicates(["id_new", "id_ref"])
-    )
 
 
 def srp_ref_index(
@@ -1093,13 +904,22 @@ def srp_ref_index_frames(
     num_bits: int | None = 8,
     seed: int = 42,
     max_bucket_size: int = 1000,
+    num_tables: int = 1,
 ) -> dict[str, DataFrame | int]:
     """``srp_ref_index`` with its truncation observable: ``{"index":
     (bucket, id_ref, v2, n2), "oversized": (bucket, bucket_n,
-    anchor_id), "num_bits": int}`` —
+    anchor_id), "num_bits": int, "num_tables": int}`` —
     the embedding twin of dedup.cross_ref_index_frames,
     so amortized/streaming semantic ingest can monitor capped recall
     instead of inheriting the truncation silently.
+
+    ``num_tables`` = L > 1 indexes the reference under L independent
+    plane tables (srp_near_dup_frames's banding lever, q240): an
+    incoming batch or stream recovers a near-dup if it collides in
+    ANY table (1 − (1−p^b)^L per-pair recall at L× index size and
+    candidate volume). Every key then gains the table index:
+    ``index`` is (band_idx, bucket, id_ref, v2, n2) and ``oversized``
+    is per (band_idx, bucket).
 
     Bounded per-key state (the r8 form collect_list'd the full bucket
     before slicing): cap-smallest-ids via the two-phase
@@ -1107,29 +927,36 @@ def srp_ref_index_frames(
     oversized buckets, only their members pay the spillable row_number
     sort, the common ≤cap buckets pass through a broadcast anti-join
     (r9 verdict ask #1: the r9 row_number form sorted EVERY bucket);
-    oversized detection via count+min aggregates. Extra scans of the
-    per-row SRP signature stage are paid ONCE per reference corpus —
-    the index is built once and cached by the caller.
+    oversized detection via count+min aggregates. The cap is per key,
+    the SAME machinery the banded text index uses, so truncation
+    semantics are shared and oracle-gated on the text path. Extra
+    scans of the per-row SRP signature stage are paid ONCE per
+    reference corpus — the index is built once and cached by the
+    caller; the signature checkpoint belongs to the caller's
+    ``storage.scope()``.
 
     ``num_bits=None`` → ``recommended_num_bits(ref_df.count())`` —
     SCALE.md's ref-axis rule ("num_bits ≈ 8 + log2(ref scale)") as
     code: one eager count per index BUILD, amortized with the index.
-    The new side must sign with the SAME bit count, so the RESOLVED
-    value is returned under the ``"num_bits"`` key (always an int,
-    whether auto-picked or passed through) — pass it to
-    cross_srp_pairs_indexed / the streaming wrapper. A query side
-    signing with a different width silently matches nothing."""
+    The new side must sign with the SAME bits and tables, so the
+    RESOLVED values are returned under ``"num_bits"`` (always an int,
+    whether auto-picked or passed through) and ``"num_tables"`` —
+    pass them to cross_srp_pairs_indexed / the streaming wrapper. A
+    query side signing differently silently matches nothing."""
     from us_immigration_data_lake_spark.operators.dedup import (
         capped_bucket_members,
     )
 
     if num_bits is None:
         num_bits = recommended_num_bits(ref_df.count())
-    sig_ref = _srp_sig_frame(ref_df, id_col, vec_col, dim, num_bits, seed)
+    sig_ref = storage.checkpoint(_srp_sig(
+        ref_df, id_col, vec_col, dim, num_bits, seed, num_tables
+    ))
+    band, keys = _srp_tables(sig_ref, num_tables, "__id")
     capped = capped_bucket_members(
-        sig_ref.select("bucket", "__id"), "__id", max_bucket_size,
-        key_cols=("bucket",),
-    ).select("bucket", F.col("__id").alias("id_ref"))
+        band.select(*keys, "__id"), "__id", max_bucket_size,
+        key_cols=tuple(keys),
+    ).select(*keys, F.col("__id").alias("id_ref"))
     index = capped.join(
         sig_ref.select(
             F.col("__id").alias("id_ref"),
@@ -1139,12 +966,13 @@ def srp_ref_index_frames(
         "id_ref",
     )
     oversized = (
-        sig_ref.groupBy("bucket")
+        band.groupBy(*keys)
         .agg(F.count(F.lit(1)).alias("bucket_n"),
              F.min("__id").alias("anchor_id"))
         .filter(F.col("bucket_n") > max_bucket_size)
     )
-    return {"index": index, "oversized": oversized, "num_bits": num_bits}
+    return {"index": index, "oversized": oversized, "num_bits": num_bits,
+            "num_tables": num_tables}
 
 
 def cross_srp_pairs_indexed(
@@ -1156,32 +984,37 @@ def cross_srp_pairs_indexed(
     dim: int,
     num_bits: int = 8,
     seed: int = 42,
+    num_tables: int = 1,
 ) -> DataFrame:
     """Cross-corpus SEMANTIC near-dup pairs of a NEW batch (or STREAM —
     every new-side operation is a per-row expression, so a streaming
     frame flows through unchanged; streaming.dedup wraps this) against
-    a PREBUILT ``srp_ref_index``. Per new row: SRP bucket signature +
-    norm (pure arithmetic, no shuffle, no checkpoint — the batch
-    path's localCheckpoint barrier is an optimization the single
-    downstream consumer here doesn't need), then ONE equi-join on the
-    bucket key with the cosine verify inline. Plane parameters must
-    match the index build. A vector has exactly ONE bucket (single
-    SRP table), so a pair can surface at most once — append-mode
-    emission needs no dedup state at all. Emits exactly
-    ``cross_srp_near_dup_frames(...)["pairs"]`` rows on the same
-    inputs (q204's oracle is q192's SQL verbatim)."""
-    planes = srp_planes(dim, num_bits, seed)
-    sig = new_df.select(
-        F.col(id_col).alias("id_new"), _as_double(vec_col).alias("v1")
-    ).withColumn("bucket", srp_signature("v1", planes))
-    if dim:
-        sig = sig.withColumn(
-            "n1", F.expr(f"sqrt({_dot_fixed_sql('v1', 'v1', dim)})")
-        )
-    else:
-        sig = sig.withColumn("n1", l2_norm(F.col("v1")))
-    return (
-        sig.join(ref_index, "bucket")
+    a PREBUILT ``srp_ref_index`` / ``srp_ref_index_frames`` index. Per
+    new row: SRP bucket signature + norm (pure arithmetic, no shuffle,
+    no checkpoint — the batch path's localCheckpoint barrier is an
+    optimization the single downstream consumer here doesn't need),
+    then ONE equi-join on the bucket key with the cosine verify
+    inline. Plane parameters (``num_bits``, ``num_tables``) must match
+    the index build — read them back from srp_ref_index_frames.
+
+    At one table a vector has exactly ONE bucket, so a pair can
+    surface at most once — append-mode emission needs no dedup state
+    at all. Emits exactly ``cross_srp_near_dup_frames(...)["pairs"]``
+    rows on the same inputs (q204's oracle is q192's SQL verbatim).
+    At L > 1 tables the join is on (band_idx, bucket) and a pair
+    colliding in several tables is emitted ONCE (dropDuplicates on
+    the verified pair — the cosine is a pure function of the pair, so
+    the drop is deterministic). On a stream that drop is
+    watermark-bounded dedup state (the text twin's q195 pattern), not
+    free — one table + multiprobe keeps the zero-state property if
+    that matters more than recall."""
+    sig = _srp_sig(new_df, id_col, vec_col, dim, num_bits, seed, num_tables)
+    new, keys = _srp_tables(
+        sig, num_tables, F.col("__id").alias("id_new"),
+        F.col("__v").alias("v1"), F.col("__n").alias("n1"),
+    )
+    pairs = (
+        new.join(ref_index, keys)
         .select(
             "id_new",
             "id_ref",
@@ -1189,6 +1022,9 @@ def cross_srp_pairs_indexed(
         )
         .filter(F.col("cosine_sim") >= threshold)
     )
+    if num_tables > 1:
+        pairs = pairs.dropDuplicates(["id_new", "id_ref"])
+    return pairs
 
 
 def cross_srp_near_dup_frames(
@@ -1226,8 +1062,12 @@ def cross_srp_near_dup_frames(
     ref buckets over the cap}``. Feed pairs into a left-anti join for
     survivor semantics (dedup.py:cross_dedup_survivors does this for
     the text side; the composition is one extra join either way)."""
-    sig_new = _srp_sig_frame(new_df, id_col, vec_col, dim, num_bits, seed)
-    sig_ref = _srp_sig_frame(ref_df, id_col, vec_col, dim, num_bits, seed)
+    sig_new = storage.checkpoint(
+        _srp_sig(new_df, id_col, vec_col, dim, num_bits, seed)
+    )
+    sig_ref = storage.checkpoint(
+        _srp_sig(ref_df, id_col, vec_col, dim, num_bits, seed)
+    )
 
     # Cap-smallest-ids via the two-phase dedup.capped_bucket_members
     # (count first, window-sort only the rare oversized buckets — r9
@@ -1832,64 +1672,36 @@ def hard_negatives_indexed(
     Returns (query_id, neighbor_id, cosine_sim, neg_rank 1..k)."""
     if num_bits is None:
         num_bits = recommended_num_bits(df.count(), target_occupancy=24)
-    if dim > UNROLL_MAX_DIM:
-        sig = _srp_sig_frame(df, id_col, vec_col, dim, num_bits, seed)
-        base = (
-            sig.join(
-                clusters.select(
-                    F.col(id_col).alias("__id"), F.col("cluster")
-                ),
-                "__id", "left",
-            )
-            .withColumn("cluster", F.coalesce("cluster", F.col("__id")))
+    wide = dim > UNROLL_MAX_DIM
+    sig = _srp_sig(df, id_col, vec_col, dim, num_bits, seed)
+    if wide:
+        sig = storage.checkpoint(sig)
+    base = (
+        sig.join(
+            clusters.select(F.col(id_col).alias("__id"), F.col("cluster")),
+            "__id", "left",
         )
-        q = base.select(
-            F.col("__id").alias("query_id"), F.col("__v").alias("qv"),
-            F.col("__n").alias("n1"),
-            F.col("cluster").alias("q_cluster"), "bucket",
-        )
-    else:
-        planes = srp_planes(dim, num_bits, seed)
-        base = (
-            df.select(
-                F.col(id_col).alias("__id"), _as_double(vec_col).alias("__v")
-            )
-            .withColumn("bucket", srp_signature("__v", planes))
-            .join(
-                clusters.select(
-                    F.col(id_col).alias("__id"), F.col("cluster")
-                ),
-                "__id", "left",
-            )
-            .withColumn("cluster", F.coalesce("cluster", F.col("__id")))
-        )
-        q = base.select(
-            F.col("__id").alias("query_id"), F.col("__v").alias("qv"),
-            F.col("cluster").alias("q_cluster"), "bucket",
-        )
+        .withColumn("cluster", F.coalesce("cluster", F.col("__id")))
+    )
+    # the moderate-dim cosine never reads n1/n2, so the plan prunes
+    # them (and the norm) away
+    q = base.select(
+        F.col("__id").alias("query_id"), F.col("__v").alias("qv"),
+        F.col("__n").alias("n1"),
+        F.col("cluster").alias("q_cluster"), "bucket",
+    )
+    c = base.select(
+        F.col("__id").alias("neighbor_id"), F.col("__v").alias("cv"),
+        F.col("__n").alias("n2"),
+        F.col("cluster").alias("c_cluster"), "bucket",
+    )
     if multiprobe:
-        probes = F.array(
-            F.col("bucket"),
-            *[
-                F.col("bucket").bitwiseXOR(F.lit(1 << i).cast("long"))
-                for i in range(num_bits)
-            ],
-        )
-        q = q.withColumn("bucket", F.explode(probes))
-    if dim > UNROLL_MAX_DIM:
-        c = base.select(
-            F.col("__id").alias("neighbor_id"), F.col("__v").alias("cv"),
-            F.col("__n").alias("n2"),
-            F.col("cluster").alias("c_cluster"), "bucket",
-        )
+        q = _probe_hamming1(q, num_bits)
+    if wide:
         pair_cos = F.expr(_dot_fixed_sql("qv", "cv", dim)) / (
             F.col("n1") * F.col("n2")
         )
     else:
-        c = base.select(
-            F.col("__id").alias("neighbor_id"), F.col("__v").alias("cv"),
-            F.col("cluster").alias("c_cluster"), "bucket",
-        )
         pair_cos = _cosine_maybe_fixed("qv", "cv", dim)
     # Pin the bucket-join exchanges at defaultParallelism (guide §2.5:
     # CPU-bound stage vs size-based coalescing — the spread_by_id

@@ -14986,9 +14986,10 @@ def q238_srp_config_choice(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Q239 — MULTI-TABLE SRP near-dup pairs (operators/similarity.py:
-# srp_multi_table_frames, new r14): the MinHash-banding analog for
-# embeddings that the scale notes recommended as prose ("run wider
-# signatures or multiple independent tables"), as an operator. L
+# srp_near_dup_frames(num_tables=L), new r14): the MinHash-banding
+# analog for embeddings that the scale notes recommended as prose
+# ("run wider signatures or multiple independent tables"), as an
+# operator. L
 # independent hyperplane tables (table t seeded seed+t; table 0 IS
 # the single-table bucketing — a pinned compat theorem), candidates
 # share a bucket in ANY table (band machinery verbatim: band_idx =
@@ -15053,17 +15054,17 @@ def _q239_oracle_sql() -> str:
 def q239_srp_multi_table_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     _tune(spark)
     emb = _t(spark, sf_dir, "embeddings")
-    return sim_ops.srp_multi_table_pairs(
+    return sim_ops.srp_near_dup_frames(
         emb, "vec_id", "embedding", threshold=_Q181_TAU,
         dim=EMBEDDING_DIM, num_bits=_Q239_BITS,
         num_tables=_Q239_TABLES, seed=42, max_bucket_size=1_000_000,
-    )
+    )["pairs"]
 
 
 # ---------------------------------------------------------------------------
 # Q240 — CROSS-corpus multi-table semantic dedup (operators/
-# similarity.py:srp_multi_table_ref_index_frames +
-# cross_srp_multi_table_pairs_indexed, new r14): q192's incremental-
+# similarity.py:srp_ref_index_frames + cross_srp_pairs_indexed at
+# num_tables=L, new r14): q192's incremental-
 # ingest shape with q239's recall lever — the reference corpus is
 # indexed under L independent plane tables, a new-batch row recovers
 # a near-dup on a collision in ANY table (1−(1−p^b)^L per pair), a
@@ -15072,7 +15073,7 @@ def q239_srp_multi_table_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # per-(table,bucket) cap machinery is q190/q192's already-gated
 # surface) so the oracle is the clean OR-union replay: per-table
 # signature CASE sums, DISTINCT candidates across tables, cosine
-# verify. L=1 ≡ cross_srp_pairs_indexed is a pinned test theorem.
+# verify. L=1 ≡ cross_srp_near_dup_frames is a pinned test theorem.
 # ---------------------------------------------------------------------------
 
 
@@ -15129,12 +15130,12 @@ def q240_cross_multi_table_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     new_df = emb.filter(F.col("vec_id") % 2 == 1)
     ref_df = emb.filter(F.col("vec_id") % 2 == 0)
-    frames = sim_ops.srp_multi_table_ref_index_frames(
+    frames = sim_ops.srp_ref_index_frames(
         ref_df, "vec_id", "embedding", dim=EMBEDDING_DIM,
         num_bits=_Q239_BITS, num_tables=_Q239_TABLES, seed=42,
         max_bucket_size=1_000_000,
     )
-    return sim_ops.cross_srp_multi_table_pairs_indexed(
+    return sim_ops.cross_srp_pairs_indexed(
         new_df, frames["index"], "vec_id", "embedding",
         threshold=_Q181_TAU, dim=EMBEDDING_DIM,
         num_bits=frames["num_bits"], num_tables=frames["num_tables"],
