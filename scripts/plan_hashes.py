@@ -10,11 +10,23 @@ last driver gate a priority tier between "red" and "never gated".
     python scripts/plan_hashes.py            # refresh PLAN_HASHES.json
     python scripts/plan_hashes.py --check    # exit 1 if stale
 
-State file: /root/repo/PLAN_HASHES.json — {name: {"hash": sha1,
+State file: PLAN_HASHES.json at the root of the checkout that holds
+this script, whose engine is the one imported — {name: {"hash": sha1,
 "changed_r": N}} where changed_r is the round in which the hash was
 last observed to change (0 = unchanged since tracking began). The
 "current round" is inferred as max(CORRECTNESS_r*.json) + 1 — the
 round whose gate has not run yet.
+
+Recording parallelism: a refresh and a --check both build their
+session at local[32] (RECORD_MASTER), whatever SPARK_GRAFT_CPUS says.
+Some plan builders embed the session's defaultParallelism in the
+optimized plan — dedup.spread_by_id pins its exchange with
+repartition(defaultParallelism, id), and
+similarity.hard_negatives_indexed pins its bucket-join exchanges at
+defaultParallelism — so the same code hashes differently at another
+core count. A check that followed SPARK_GRAFT_CPUS (the test suite
+exports it as the host's nproc) would report those plans stale on any
+host that is not 32-core.
 
 Normalization: Catalyst expression ids (#123), plan/exchange ids,
 LogicalRDD/ExistingRDD output ids and checkpoint RDD numbers vary per
@@ -39,10 +51,13 @@ import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SF_DIR = "/root/testdata/sf0.001"
-STATE = "/root/repo/PLAN_HASHES.json"
+STATE = os.path.join(REPO, "PLAN_HASHES.json")
+# session.get_spark's documented default; see "Recording parallelism"
+RECORD_MASTER = "local[32]"
 
 
 def normalize(plan: str) -> str:
@@ -95,7 +110,7 @@ def normalize(plan: str) -> str:
 def current_round() -> int:
     rounds = [
         int(m.group(1))
-        for p in glob.glob("/root/repo/CORRECTNESS_r*.json")
+        for p in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))
         if (m := re.search(r"CORRECTNESS_r(\d+)\.json$", p))
     ]
     return (max(rounds) + 1) if rounds else 1
@@ -110,7 +125,7 @@ def compute(only: list[str] | None = None) -> dict[str, str]:
         if unknown:
             raise SystemExit(f"unknown query name(s): {' '.join(unknown)}")
 
-    spark = get_spark("plan-hashes")
+    spark = get_spark("plan-hashes", master=RECORD_MASTER)
     spark.sparkContext.setLogLevel("ERROR")
     hashes: dict[str, str] = {}
     for name, spec in QUERIES.items():

@@ -16,8 +16,11 @@ defaultParallelism 32), and plans embed session-derived literals —
 spread_by_id pins its exchange to defaultParallelism, so the conftest
 session (parallelism 8) hashes the same plan differently. The gate
 must replicate the recording environment exactly, which is what
-`plan_hashes.py --check --only …` does (and the driver-facing tier
+`plan_hashes.py --check --only …` does: it builds its session at
+local[32] whatever SPARK_GRAFT_CPUS says (the driver-facing tier
 reads the same snapshot, so this is also the representative check).
+The two JVM-free tests at the end pin that parallelism and show the
+check can still go red.
 
 Why sentinels and not all 232: a full recompute is a multi-minute
 serial sweep (eager fns execute while building); the sentinels build
@@ -33,10 +36,15 @@ refresh, which by construction follows an operator edit.
 from __future__ import annotations
 
 import atexit
+import importlib.util
+import inspect
+import json
 import os
 import subprocess
 import sys
 import tempfile
+
+import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -120,3 +128,74 @@ def test_sentinel_plan_hashes_fresh():
         "so the driver's plan-changed re-gate tier will not fire. Run "
         "`python scripts/plan_hashes.py` and commit the result.\n" + tail
     )
+
+
+def _load_script():
+    spec = importlib.util.spec_from_file_location(
+        "plan_hashes_script", os.path.join(REPO, "scripts", "plan_hashes.py")
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_compute_session_ignores_spark_graft_cpus(monkeypatch):
+    """The hashes are computed at local[32] even when SPARK_GRAFT_CPUS
+    names another core count (the Tier-1 command exports nproc), and
+    the snapshot is the one next to the script, not a fixed path."""
+    from us_immigration_data_lake_spark import session
+
+    ph = _load_script()
+    assert ph.STATE == os.path.join(REPO, "PLAN_HASHES.json")
+
+    class _NoSpark(Exception):
+        pass
+
+    sig = inspect.signature(session.get_spark)
+    calls = []
+
+    def fake_get_spark(*args, **kwargs):
+        calls.append(sig.bind(*args, **kwargs))
+        raise _NoSpark
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "4")
+    monkeypatch.setattr(session, "get_spark", fake_get_spark)
+    with pytest.raises(_NoSpark):
+        ph.compute(SENTINELS)
+    assert len(calls) == 1
+    assert calls[0].arguments.get("master") == "local[32]"
+
+
+def test_check_fails_on_edited_sentinel_hash(monkeypatch, tmp_path, capsys):
+    """`--check --only` exits 1 when one sentinel's snapshot hash
+    differs from the recomputed one (compute stubbed to return the
+    committed hashes), and 0 on the unedited copy."""
+    ph = _load_script()
+    with open(ph.STATE) as f:
+        snapshot = json.load(f)
+    monkeypatch.setattr(
+        ph, "compute", lambda only: {n: snapshot[n]["hash"] for n in only}
+    )
+    monkeypatch.setattr(
+        sys, "argv", ["plan_hashes.py", "--check", "--only", *SENTINELS]
+    )
+    state = tmp_path / "PLAN_HASHES.json"
+    monkeypatch.setattr(ph, "STATE", str(state))
+
+    def run_check(snap):
+        state.write_text(json.dumps(snap))
+        with pytest.raises(SystemExit) as exc:
+            ph.main()
+        assert json.loads(state.read_text()) == snap  # --check never writes
+        return exc.value.code, capsys.readouterr().out
+
+    code, out = run_check(snapshot)
+    assert code == 0, out
+    assert "changed=0 in sync" in out
+
+    edited = json.loads(json.dumps(snapshot))
+    edited["q182_lsh_bucket_cap"]["hash"] = "0" * 40
+    code, out = run_check(edited)
+    assert code == 1, out
+    assert "changed=1 STALE" in out
+    assert "plan-changed: q182_lsh_bucket_cap" in out
