@@ -1,12 +1,12 @@
 """Mimic the driver: foreign SparkSession (non-UTC tz, no engine confs),
 import __spark_entry__, smoke entry(), run all queries vs duckdb oracle."""
-import math, sys, time
+import math, os, sys, time
 from datetime import date, datetime
 from decimal import Decimal
 import duckdb
 from pyspark.sql import SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as em
 
 # hostile driver session: New York tz, default shuffle partitions, no legacy confs

@@ -8,9 +8,10 @@ exemptions (the input-restricted brute-force verification baselines).
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from us_immigration_data_lake_spark.plans.lint import (  # noqa: E402
     lint_plan,

@@ -10,14 +10,16 @@ QUERIES.md itself, so the doc-count drift gate covers this file too.)
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from us_immigration_data_lake_spark.plans.queries import QUERIES  # noqa: E402
 
-SRC = "/root/repo/us_immigration_data_lake_spark/plans/queries.py"
+SRC = os.path.join(REPO, "us_immigration_data_lake_spark", "plans", "queries.py")
 
 
 def _headlines() -> dict[str, str]:

@@ -13,11 +13,12 @@ Usage: python scripts/type_audit.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from us_immigration_data_lake_spark.plans.queries import QUERIES  # noqa: E402
 from us_immigration_data_lake_spark.plans.typecheck import (  # noqa: E402

@@ -14,11 +14,13 @@ silently undercount the suite otherwise).
 
 from __future__ import annotations
 
+import os
 import re
 import subprocess
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from us_immigration_data_lake_spark.plans.queries import QUERIES  # noqa: E402
 
@@ -31,7 +33,7 @@ def pytest_case_count() -> int:
     the summary; both are checked."""
     out = subprocess.run(
         [sys.executable, "-m", "pytest", "tests/", "--collect-only", "-q"],
-        cwd="/root/repo",
+        cwd=REPO,
         capture_output=True,
         text=True,
         timeout=600,
@@ -80,22 +82,22 @@ def main() -> None:
 
     # QUERIES.md is fully generated — rewrite (or drift-check) the
     # whole file from the registry, not just count lines
-    sys.path.insert(0, "/root/repo/scripts")
+    sys.path.insert(0, os.path.join(REPO, "scripts"))
     from registry_index import render  # noqa: E402
 
 
 
     queries_md = render()
     try:
-        current = open("/root/repo/QUERIES.md").read()
+        current = open(os.path.join(REPO, "QUERIES.md")).read()
     except OSError:
         current = ""
     changed = current != queries_md
     if changed and not check:
-        open("/root/repo/QUERIES.md", "w").write(queries_md)
+        open(os.path.join(REPO, "QUERIES.md"), "w").write(queries_md)
 
     changed |= rewrite(
-        "/root/repo/README.md",
+        os.path.join(REPO, "README.md"),
         [
             (
                 r"the query registry: \d+ queries, \d+ with DuckDB",
@@ -106,7 +108,7 @@ def main() -> None:
         check,
     )
     changed |= rewrite(
-        "/root/repo/SURVEY.md",
+        os.path.join(REPO, "SURVEY.md"),
         [
             (
                 r"\d+ queries, \d+ with DuckDB oracles, \d+ bench headliners\.",
@@ -117,7 +119,7 @@ def main() -> None:
         check,
     )
     changed |= rewrite(
-        "/root/repo/SCALE.md",
+        os.path.join(REPO, "SCALE.md"),
         [
             (
                 r"`bench\.py` times \d+ headline queries",

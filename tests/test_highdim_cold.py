@@ -10,7 +10,7 @@ warm session. This gate launches ONE fresh python subprocess (fresh
 JVM, nothing warmed) and drives the six registry code paths that
 consume the dot/cosine/SRP expression family — q22 (cosine_knn), q24
 (srp_lsh_knn), q181/q187 (srp_near_dup_frames), q192
-(cross_srp_near_dup_frames), q233 (hard_negatives_indexed) — at dim
+(srp_ref_index_frames + cross_srp_pairs_indexed), q233 (hard_negatives_indexed) — at dim
 512 AND dim 768. A future refactor that reintroduces an unrolled form
 above UNROLL_MAX_DIM fails HERE deterministically (analyzer overflow
 in the cold JVM) instead of nondeterministically in production.

@@ -1559,14 +1559,26 @@ def cross_corpora(spark):
     )
 
 
+def _cross_pairs(new_df, ref_df, threshold=0.5, max_bucket_size=1000, **kw):
+    """A one-shot text cross dedup: the reference index build, then
+    the probe — ``(index frames, pairs)``."""
+    frames = dd.cross_ref_index_frames(
+        ref_df, "doc_id", "text", max_bucket_size=max_bucket_size, **kw
+    )
+    return frames, dd.cross_near_dup_pairs_indexed(
+        new_df, frames["index"], "doc_id", "text", threshold=threshold,
+        **kw,
+    )
+
+
 @pytest.mark.parametrize("portable", [False, True])
 def test_cross_dedup_drops_only_ref_matches(cross_corpora, portable):
     new_df, ref_df = cross_corpora
-    frames = dd.cross_near_dup_frames(
-        new_df, ref_df, "doc_id", "text", shingle_n=3, num_hashes=32,
-        bands=16, threshold=0.5, portable=portable,
+    _, cross = _cross_pairs(
+        new_df, ref_df, shingle_n=3, num_hashes=32, bands=16,
+        portable=portable,
     )
-    pairs = {(r.id_new, r.id_ref): r.jaccard for r in frames["pairs"].collect()}
+    pairs = {(r.id_new, r.id_ref): r.jaccard for r in cross.collect()}
     assert pairs[(1, 10)] == 1.0          # exact dup found, jaccard exact
     assert (2, 10) in pairs               # near dup found
     assert all(idr != 12 for (_, idr) in pairs)  # nothing matches ref 12
@@ -1585,26 +1597,19 @@ def test_cross_dedup_drops_only_ref_matches(cross_corpora, portable):
 
 @pytest.mark.parametrize("portable", [False, True])
 def test_indexed_cross_dedup_matches_unindexed(cross_corpora, portable):
-    """cross_ref_index + cross_near_dup_pairs_indexed (the amortized
-    weekly-ingest shape, also the streaming twin's plan) must emit
-    exactly cross_near_dup_frames' pairs on the same inputs."""
+    """cross_ref_index_frames + cross_near_dup_pairs_indexed (the one
+    cross path: cold, amortized and streaming alike) emits exactly the
+    (id_new, id_ref, jaccard) rows the former separately implemented
+    unindexed operator emitted on these inputs, pinned literally from
+    it for both hash modes."""
     new_df, ref_df = cross_corpora
-    kw = dict(shingle_n=3, num_hashes=32, bands=16, portable=portable)
-    want = {
-        (r.id_new, r.id_ref): r.jaccard
-        for r in dd.cross_near_dup_frames(
-            new_df, ref_df, "doc_id", "text", threshold=0.5, **kw
-        )["pairs"].collect()
-    }
-    idx = dd.cross_ref_index(
-        ref_df, "doc_id", "text", max_bucket_size=1000,
-        **{k: v for k, v in kw.items() if k != "threshold"},
+    _, cross = _cross_pairs(
+        new_df, ref_df, shingle_n=3, num_hashes=32, bands=16,
+        portable=portable,
     )
-    rows = dd.cross_near_dup_pairs_indexed(
-        new_df, idx, "doc_id", "text", threshold=0.5, **kw
-    ).collect()
-    got = {(r.id_new, r.id_ref): r.jaccard for r in rows}
-    assert got == want
+    rows = cross.collect()
+    got = {(r.id_new, r.id_ref, r.jaccard) for r in rows}
+    assert got == {(1, 10, 1.0), (2, 10, 0.8333333333333334)}
     assert len(rows) == len(got)  # pair-key dedup held — no dup emits
 
 
@@ -1618,11 +1623,11 @@ def test_cross_dedup_ref_bucket_cap_bounds_pairs(cross_corpora, spark):
         [(100 + i, boiler) for i in range(5)], ["doc_id", "text"]
     )
     new_b = spark.createDataFrame([(1, boiler)], ["doc_id", "text"])
-    frames = dd.cross_near_dup_frames(
-        new_b, ref_df, "doc_id", "text", shingle_n=3, num_hashes=32,
-        bands=16, threshold=0.5, max_bucket_size=1,
+    frames, cross = _cross_pairs(
+        new_b, ref_df, shingle_n=3, num_hashes=32, bands=16,
+        max_bucket_size=1,
     )
-    pairs = {(r.id_new, r.id_ref) for r in frames["pairs"].collect()}
+    pairs = {(r.id_new, r.id_ref) for r in cross.collect()}
     # every band bucket keeps the same smallest ref id → exactly 1 pair
     assert pairs == {(1, 100)}
     assert frames["oversized"].count() > 0
@@ -1733,6 +1738,21 @@ def test_dsir_empty_and_single_token_docs(spark, dsir_corpora):
     assert rows[3] == 3           # 2 unigrams + 1 bigram
 
 
+def _cross_srp_pairs(new, ref, threshold, dim, num_bits,
+                     max_bucket_size=1000):
+    """A one-shot embedding cross dedup: the reference index build,
+    then the probe at the bit count the build resolved — ``(index
+    frames, pairs)``."""
+    frames = sim.srp_ref_index_frames(
+        ref, "vec_id", "embedding", dim=dim, num_bits=num_bits,
+        max_bucket_size=max_bucket_size,
+    )
+    return frames, sim.cross_srp_pairs_indexed(
+        new, frames["index"], "vec_id", "embedding", threshold=threshold,
+        dim=dim, num_bits=frames["num_bits"],
+    )
+
+
 def test_cross_srp_dedup_finds_planted_and_skips_within_side(spark):
     """The embedding-side cross dedup: a new vector near-identical to a
     ref vector is found; two near-identical NEW vectors produce no
@@ -1751,10 +1771,8 @@ def test_cross_srp_dedup_finds_planted_and_skips_within_side(spark):
          (5, [-v for v in base])],  # anti-parallel: cosine -1, no match
         ["vec_id", "embedding"],
     )
-    frames = sim.cross_srp_near_dup_frames(
-        new, ref, "vec_id", "embedding", threshold=0.9, dim=dim, num_bits=6
-    )
-    pairs = {(r.id_new, r.id_ref): r.cosine_sim for r in frames["pairs"].collect()}
+    _, cross = _cross_srp_pairs(new, ref, threshold=0.9, dim=dim, num_bits=6)
+    pairs = {(r.id_new, r.id_ref): r.cosine_sim for r in cross.collect()}
     assert (1, 10) in pairs and pairs[(1, 10)] > 0.99
     assert (3, 10) in pairs
     assert all(idr != 12 for (_, idr) in pairs)      # ortho ref unmatched
@@ -1771,11 +1789,10 @@ def test_cross_srp_ref_cap_truncation_observable(spark):
         [(100 + i, v) for i in range(4)], ["vec_id", "embedding"]
     )
     new = spark.createDataFrame([(1, v)], ["vec_id", "embedding"])
-    frames = sim.cross_srp_near_dup_frames(
-        new, ref, "vec_id", "embedding", threshold=0.9, dim=dim,
-        num_bits=6, max_bucket_size=1,
+    frames, cross = _cross_srp_pairs(
+        new, ref, threshold=0.9, dim=dim, num_bits=6, max_bucket_size=1,
     )
-    assert {(r.id_new, r.id_ref) for r in frames["pairs"].collect()} == {(1, 100)}
+    assert {(r.id_new, r.id_ref) for r in cross.collect()} == {(1, 100)}
     assert frames["oversized"].count() == 1
 
 
@@ -1897,12 +1914,12 @@ def test_global_row_number_leaves_no_cache_entry(spark):
     assert jcm.isEmpty(), "global_row_number leaked a CacheManager entry"
 
 
-def test_cross_near_dup_frames_exposes_caches_for_release(cross_corpora, spark):
-    """The cross plan caches three frames — the two hashed-shingle
-    frames (each feeds banding AND the verify join) plus the ref band
-    frame (the two-phase cap + oversized census scan it repeatedly);
-    all three belong to the caller's storage scope, which must
-    actually clear the entries on exit."""
+def test_cross_ref_index_frames_exposes_caches_for_release(cross_corpora, spark):
+    """The reference-index build pins two frames — the reference's
+    hashed-shingle frame (it feeds banding AND the index's verify
+    columns) and its band frame (the two-phase cap + oversized census
+    scan it repeatedly); both belong to the caller's storage scope,
+    which must actually clear the entries on exit."""
     new_df, ref_df = cross_corpora
     from conftest import wait_for_background_sweeps
 
@@ -1910,16 +1927,16 @@ def test_cross_near_dup_frames_exposes_caches_for_release(cross_corpora, spark):
     # sweep (it registers cache entries concurrently) — join first
     wait_for_background_sweeps()
     spark.catalog.clearCache()
+    jcm = spark._jsparkSession.sharedState().cacheManager()
     with storage.scope() as s:
-        frames = dd.cross_near_dup_frames(
-            new_df, ref_df, "doc_id", "text", shingle_n=3, num_hashes=32,
-            bands=16, threshold=0.5,
+        _, cross = _cross_pairs(
+            new_df, ref_df, shingle_n=3, num_hashes=32, bands=16,
         )
-        assert len(s.caches) == 3
-        frames["pairs"].count()
+        assert len(s.caches) == 2
+        cross.count()
         for f in s.caches:
             assert f.storageLevel.useMemory or f.storageLevel.useDisk
-    jcm = spark._jsparkSession.sharedState().cacheManager()
+            assert jcm.lookupCachedData(f._jdf).isDefined()
     assert jcm.isEmpty(), "cached frames not released by the scope"
 
 
@@ -2401,12 +2418,48 @@ def test_cross_ref_index_frames_cap_and_oversized(spark):
     over = frames["oversized"].collect()
     assert len(over) >= 4  # the identical cluster overflows in every band
     assert all(r.bucket_n == 60 and r.anchor_id == 0 for r in over)
-    # wrapper still returns just the index, same rows
-    direct = dd.cross_ref_index(
+    # a second build of the same reference yields the same rows
+    again = dd.cross_ref_index_frames(
         ref_df, "doc_id", "text", shingle_n=3, num_hashes=16, bands=4,
         max_bucket_size=8,
-    )
-    assert direct.count() == idx.count()
+    )["index"]
+    assert again.count() == idx.count()
+
+
+def test_cross_ref_index_frames_signs_reference_once(spark):
+    """One index build runs the reference signature stage ONCE: the
+    build pins the hashed-shingle frame and the band frame, the cap's
+    eager key count materializes both, and every read of the index
+    plan — the cap's common and rare branches and the verify-column
+    join — is a scan of those two pins (plus the collected key set),
+    never a re-run of shingling and signing."""
+    from conftest import wait_for_background_sweeps
+
+    text = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    refs = [(i, text) for i in range(20)] + [(99, "other words entirely here")]
+    ref_df = spark.createDataFrame(refs, ["doc_id", "text"])
+    wait_for_background_sweeps()
+    spark.catalog.clearCache()
+    jcm = spark._jsparkSession.sharedState().cacheManager()
+    with storage.scope() as s:
+        frames = dd.cross_ref_index_frames(
+            ref_df, "doc_id", "text", shingle_n=3, num_hashes=16, bands=4,
+            max_bucket_size=8,
+        )
+        assert len(s.caches) == 2  # hashed-shingle frame, band frame
+        # loaded by the build's own key count, before any index action
+        for pin in s.caches:
+            rel = jcm.lookupCachedData(pin._jdf).get().cachedRepresentation()
+            assert rel.cacheBuilder().isCachedColumnBuffersLoaded()
+        plan = frames["index"]._jdf.queryExecution().optimizedPlan()
+        leaves = plan.collectLeaves()
+        names = [leaves.apply(i).nodeName() for i in range(leaves.size())]
+        # common branch + rare branch read the band pin, the verify
+        # columns read the shingle pin; the rest is the key set
+        assert names.count("InMemoryRelation") == 3, names
+        assert set(names) == {"InMemoryRelation", "LocalRelation"}, names
+        assert frames["index"].count() == 4 * 8 + 4
+    assert jcm.isEmpty()
 
 
 def test_srp_ref_index_frames_cap_and_oversized(spark):
@@ -2437,7 +2490,7 @@ def test_srp_ref_index_frames_cap_and_oversized(spark):
 def test_within_dedup_frames_expose_caches_for_release(spark):
     """r10 advisor: near_dup_frames / srp_near_dup_frames pin internal
     caches (hashed-shingle + band frame / SRP bucket frame) into the
-    caller's storage scope — the cross_near_dup_frames contract — so
+    caller's storage scope — the cross_ref_index_frames contract — so
     loop callers (update_corpus_increment per batch) release them
     instead of relying on LRU eviction."""
     import numpy as np
@@ -2511,7 +2564,8 @@ def test_cross_dedup_survivors_pins_into_callers_scope(spark):
             bands=4, threshold=0.5,
         )
         assert [r.doc_id for r in surv.collect()] == [2]
-        assert len(s.caches) == 3
+        # the reference index build's two pins (the probe pins nothing)
+        assert len(s.caches) == 2
         for fr in s.caches:
             assert fr.storageLevel.useMemory  # actually cached
     jcm = spark._jsparkSession.sharedState().cacheManager()
@@ -3463,18 +3517,19 @@ def test_srp_multi_table_compat_and_recall_dominance(spark):
         sim.srp_near_dup_frames(df, "vec_id", "embedding",
                                 num_tables=0, **kw)
 
-    # CROSS-corpus form (q240): the L=1 ref index + probe reproduces
-    # the separately implemented batch cross path
-    # (cross_srp_near_dup_frames) exactly; L=3 only adds; the index
-    # frames expose the bit/table counts the query side must sign
-    # with (the srp_ref_index_frames num_bits contract)
+    # CROSS-corpus form (q240): the L=1 ref index + probe emits
+    # exactly the pairs the former separately implemented batch cross
+    # operator emitted on these inputs (pinned literally from it);
+    # L=3 only adds; the index frames expose the bit/table counts the
+    # query side must sign with (the srp_ref_index_frames num_bits
+    # contract)
     new_df = df.filter(F.col("vec_id") % 2 == 1)
     ref_df = df.filter(F.col("vec_id") % 2 == 0)
-    s1 = {(r.id_new, r.id_ref, r.cosine_sim) for r in
-          sim.cross_srp_near_dup_frames(
-              new_df, ref_df, "vec_id", "embedding", 0.5, dim=16,
-              num_bits=4,
-          )["pairs"].collect()}
+    s1 = {
+        (13, 10, 0.703625), (13, 46, 0.521966), (43, 10, 0.515797),
+        (61, 10, 0.790159), (61, 46, 0.591375), (61, 76, 0.520622),
+        (103, 10, 0.501193),
+    }
     frames = {
         L: sim.srp_ref_index_frames(
             ref_df, "vec_id", "embedding", dim=16, num_bits=4,
@@ -3492,7 +3547,7 @@ def test_srp_multi_table_compat_and_recall_dominance(spark):
             ).collect()}
         for L in (1, 3)
     }
-    assert cross[1] == s1  # L=1 compat with the batch cross path
+    assert cross[1] == s1  # L=1 pinned pair set
     assert cross[1] <= cross[3]  # tables only add
     # multi-collision pairs are emitted once
     assert len(cross[3]) == len({(a, b) for a, b, _ in cross[3]})
@@ -3608,8 +3663,6 @@ def test_srp_ref_index_num_bits_contract(spark):
     assert sim.srp_ref_index_frames(
         df, "vec_id", "embedding", dim=8, num_bits=5
     )["num_bits"] == 5
-    with pytest.raises(ValueError, match="num_bits"):
-        sim.srp_ref_index(df, "vec_id", "embedding", dim=8, num_bits=None)
 
 
 def test_hard_negatives_indexed_highdim_matches_reference(spark):

@@ -661,7 +661,9 @@ def test_sorted_neighborhood_matches_spec(spark, texts, w):
              min_size=1, max_size=8),
 )
 def test_cross_dedup_sound_and_finds_planted_exacts(spark, new_texts, ref_texts):
-    """Randomized guarantees for cross_near_dup_frames: (1) SOUNDNESS —
+    """Randomized guarantees for the one-shot cross dedup
+    (cross_ref_index_frames, then cross_near_dup_pairs_indexed): (1)
+    SOUNDNESS —
     every emitted pair's jaccard equals the Python replay of the exact
     hashed-shingle-set Jaccard and clears the threshold; (2) EXACT-DUP
     RECALL — a new doc byte-identical to a ref doc collides in every
@@ -674,10 +676,11 @@ def test_cross_dedup_sound_and_finds_planted_exacts(spark, new_texts, ref_texts)
     new_rows[0] = (0, ref_rows[0][1])
     new_df = spark.createDataFrame(new_rows, ["doc_id", "text"])
     ref_df = spark.createDataFrame(ref_rows, ["doc_id", "text"])
-    pairs = dd.cross_near_dup_frames(
-        new_df, ref_df, "doc_id", "text", shingle_n=3, num_hashes=16,
-        bands=8, threshold=0.3, portable=True,
-    )["pairs"].collect()
+    kw = dict(shingle_n=3, num_hashes=16, bands=8, portable=True)
+    index = dd.cross_ref_index_frames(ref_df, "doc_id", "text", **kw)["index"]
+    pairs = dd.cross_near_dup_pairs_indexed(
+        new_df, index, "doc_id", "text", threshold=0.3, **kw
+    ).collect()
 
     def norm(t):
         return " ".join(t.lower().split())

@@ -378,13 +378,38 @@ def test_windowed_agg_state_survives_restart(spark, tmp_path):
     assert len(got) == len({(r[0], r[1]) for r in got})  # no window twice
 
 
+def _batch_cross_pairs(new_df, ref_df, threshold=0.5, **kw):
+    """The batch text cross dedup the streaming twin must equal: the
+    reference index build, then the probe over a static new frame."""
+    from us_immigration_data_lake_spark.operators import dedup as dd
+
+    index = dd.cross_ref_index_frames(ref_df, "doc_id", "text", **kw)["index"]
+    return dd.cross_near_dup_pairs_indexed(
+        new_df, index, "doc_id", "text", threshold=threshold, **kw
+    ).collect()
+
+
+def _batch_cross_srp_pairs(new_df, ref_df, threshold, dim, num_bits,
+                           max_bucket_size=1000):
+    """The batch embedding cross dedup: index build, then probe."""
+    from us_immigration_data_lake_spark.operators import similarity as sim
+
+    frames = sim.srp_ref_index_frames(
+        ref_df, "vec_id", "embedding", dim, num_bits=num_bits,
+        max_bucket_size=max_bucket_size,
+    )
+    return sim.cross_srp_pairs_indexed(
+        new_df, frames["index"], "vec_id", "embedding", threshold=threshold,
+        dim=dim, num_bits=frames["num_bits"],
+    ).collect()
+
+
 def test_stream_cross_dedup_multibatch_equals_batch(spark, tmp_path):
     """stream_cross_near_dup_pairs over a MULTI-FILE source forced to
     one-file micro-batches (maxFilesPerTrigger=1) must emit exactly the
     batch operator's pair set: per-row signature arithmetic can't see
     batch boundaries and the pair-dedup state spans batches (a pair
     whose band collisions straddle two batches must not double-emit)."""
-    from us_immigration_data_lake_spark.operators import dedup as dd
     from us_immigration_data_lake_spark.streaming.dedup import (
         stream_cross_near_dup_pairs,
     )
@@ -428,10 +453,10 @@ def test_stream_cross_dedup_multibatch_equals_batch(spark, tmp_path):
     }
     want = {
         (r.id_new, r.id_ref): r.jaccard
-        for r in dd.cross_near_dup_frames(
-            new_df, ref_df, "doc_id", "text", shingle_n=3, num_hashes=32,
-            bands=16, threshold=0.5, portable=True,
-        )["pairs"].collect()
+        for r in _batch_cross_pairs(
+            new_df, ref_df, shingle_n=3, num_hashes=32, bands=16,
+            portable=True,
+        )
     }
     assert got == want
     assert (1, 10) in got and got[(1, 10)] == 1.0
@@ -441,13 +466,12 @@ def test_stream_cross_dedup_multibatch_equals_batch(spark, tmp_path):
 def test_stream_cross_srp_dedup_multibatch_equals_batch(spark, tmp_path):
     """The SEMANTIC streaming twin: stream_cross_srp_near_dup_pairs
     over a multi-file source forced to one-file micro-batches must
-    emit exactly cross_srp_near_dup_frames' pair set — per-row SRP
+    emit exactly the batch index-build-and-probe pair set — per-row SRP
     signatures can't see batch boundaries, and with ONE bucket per
     vector there is no cross-batch state at all (the append stream
     carries no dropDuplicates)."""
     import math
 
-    from us_immigration_data_lake_spark.operators import similarity as sim
     from us_immigration_data_lake_spark.streaming.dedup import (
         stream_cross_srp_near_dup_pairs,
     )
@@ -489,10 +513,9 @@ def test_stream_cross_srp_dedup_multibatch_equals_batch(spark, tmp_path):
     got = {(r.id_new, r.id_ref): r.cosine_sim for r in rows}
     want = {
         (r.id_new, r.id_ref): r.cosine_sim
-        for r in sim.cross_srp_near_dup_frames(
-            new_df, ref_df, "vec_id", "embedding", threshold=0.9, dim=dim,
-            num_bits=4,
-        )["pairs"].collect()
+        for r in _batch_cross_srp_pairs(
+            new_df, ref_df, threshold=0.9, dim=dim, num_bits=4,
+        )
     }
     assert got == want
     assert (1, 10) in got and got[(1, 10)] == 1.0  # exact dup, cosine exact
@@ -500,12 +523,11 @@ def test_stream_cross_srp_dedup_multibatch_equals_batch(spark, tmp_path):
 
 
 def test_cross_srp_indexed_matches_unindexed(spark):
-    """srp_ref_index + cross_srp_pairs_indexed (the amortized batch
-    shape the streaming twin shares) equals cross_srp_near_dup_frames
-    on the same inputs, oversized-cap semantics included."""
+    """srp_ref_index_frames + cross_srp_pairs_indexed (the one cross
+    path the streaming twin shares) emits exactly the (id_new, id_ref,
+    cosine_sim) rows the former separately implemented unindexed
+    operator emitted on these inputs, pinned literally from it."""
     import math
-
-    from us_immigration_data_lake_spark.operators import similarity as sim
 
     dim = 8
     rows = [
@@ -515,24 +537,14 @@ def test_cross_srp_indexed_matches_unindexed(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     new_df = df.filter(F.col("vec_id") % 2 == 1)
     ref_df = df.filter(F.col("vec_id") % 2 == 0)
-    want = {
-        (r.id_new, r.id_ref): r.cosine_sim
-        for r in sim.cross_srp_near_dup_frames(
-            new_df, ref_df, "vec_id", "embedding", threshold=0.8, dim=dim,
-            num_bits=4, max_bucket_size=2,
-        )["pairs"].collect()
-    }
-    idx = sim.srp_ref_index(
-        ref_df, "vec_id", "embedding", dim, num_bits=4, max_bucket_size=2
-    )
     got = {
-        (r.id_new, r.id_ref): r.cosine_sim
-        for r in sim.cross_srp_pairs_indexed(
-            new_df, idx, "vec_id", "embedding", threshold=0.8, dim=dim,
-            num_bits=4,
-        ).collect()
+        (r.id_new, r.id_ref, r.cosine_sim)
+        for r in _batch_cross_srp_pairs(
+            new_df, ref_df, threshold=0.8, dim=dim, num_bits=4,
+            max_bucket_size=2,
+        )
     }
-    assert got == want
+    assert got == {(1, 0, 1.0), (1, 6, 0.999965), (3, 2, 0.999956)}
 
 
 def test_stream_cross_dedup_watermark_bounds_pair_state(spark, tmp_path):
@@ -543,7 +555,6 @@ def test_stream_cross_dedup_watermark_bounds_pair_state(spark, tmp_path):
     emitted; the bounded form holds only the delay window's."""
     from datetime import datetime
 
-    from us_immigration_data_lake_spark.operators import dedup as dd
     from us_immigration_data_lake_spark.streaming.dedup import (
         stream_cross_near_dup_pairs,
     )
@@ -591,10 +602,10 @@ def test_stream_cross_dedup_watermark_bounds_pair_state(spark, tmp_path):
     }
     want = {
         (r.id_new, r.id_ref): r.jaccard
-        for r in dd.cross_near_dup_frames(
-            new_df.drop("ts"), ref_df, "doc_id", "text", shingle_n=3,
-            num_hashes=32, bands=16, threshold=0.5, portable=True,
-        )["pairs"].collect()
+        for r in _batch_cross_pairs(
+            new_df.drop("ts"), ref_df, shingle_n=3, num_hashes=32,
+            bands=16, portable=True,
+        )
     }
     assert got == want and len(got) == 3  # (1,10) (2,10) (3,10)
 

@@ -261,22 +261,17 @@ from us_immigration_data_lake_spark.operators.sampling import (
 )
 from us_immigration_data_lake_spark.operators.dedup import (
     cross_dedup_survivors,
-    cross_near_dup_frames,
     cross_near_dup_pairs_indexed,
-    cross_ref_index,
     cross_ref_index_frames,
 )
 from us_immigration_data_lake_spark.operators.similarity import (
-    cross_srp_near_dup_frames,
     srp_ref_index_frames,
 )
 
 __all__ += [
     "rrf_fuse", "dsir_logratio", "dsir_select",
-    "cross_dedup_survivors", "cross_near_dup_frames",
-    "cross_near_dup_pairs_indexed", "cross_ref_index",
-    "cross_ref_index_frames",
-    "cross_srp_near_dup_frames", "srp_ref_index_frames",
+    "cross_dedup_survivors", "cross_near_dup_pairs_indexed",
+    "cross_ref_index_frames", "srp_ref_index_frames",
 ]
 
 from us_immigration_data_lake_spark.operators.textstats import bpe_merges

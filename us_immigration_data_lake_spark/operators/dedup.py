@@ -162,24 +162,14 @@ def hashed_shingle_sets(
     )
 
 
-def minhash_signatures(
-    shingle_df: DataFrame, id_col: str, num_hashes: int = 64,
-    portable: bool = False,
+def _signatures_from_sets(
+    hs_df: DataFrame, id_col: str, num_hashes: int, portable: bool,
+    carry_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """MinHash signature per document: sig[i] = min over shingles of
     the i-th rehash of the shingle hash (xxhash64(h + i), or portably
     md5_long(i || '|' || h)). Pure per-row array arithmetic — no
     explode, no aggregation, no shuffle."""
-    return _signatures_from_sets(
-        hashed_shingle_sets(shingle_df, id_col, portable), id_col,
-        num_hashes, portable,
-    ).select(id_col, "signature")
-
-
-def _signatures_from_sets(
-    hs_df: DataFrame, id_col: str, num_hashes: int, portable: bool,
-    carry_cols: tuple[str, ...] = (),
-) -> DataFrame:
     # NB each lambda must take exactly ONE parameter: pyspark dispatches
     # on lambda arity, and a two-arg lambda (e.g. `lambda h, i=i`)
     # becomes an (element, index) lambda with the array INDEX silently
@@ -378,28 +368,30 @@ def _counted_key_plan(
     into a literal local frame: the anti/semi joins then broadcast a
     LocalRelation instead of re-running the key aggregation subtree
     once per join (the count already executed it; exchange reuse
-    between a count and two later joins is not guaranteed).
+    between a count and two later joins is not guaranteed). The
+    ladder itself is _collected_or_counted."""
+    return _collected_or_counted(
+        oversized_bucket_keys(band_df, max_bucket_size, key_cols)
+    )
 
-    r16: the count and the collect are FUSED into one bounded
-    limit-collect — the r15 form paid TWO driver actions (count, then
-    collect) on every cap site whose key set was non-empty-but-tiny,
-    and at bench scale the action round-trip IS the cap site's cost.
-    ≤ COLLECT_KEY_LIMIT rows: len(rows) is the exact count and the
-    rows are already in hand. Above it (pathological high-duplication
-    corpus), fall back to the counted strategy pick — same ladder,
-    one extra action only on that rare branch."""
-    over = oversized_bucket_keys(band_df, max_bucket_size, key_cols)
-    head = over.limit(COLLECT_KEY_LIMIT + 1).collect()
-    n_over = len(head)
-    if 0 < n_over <= COLLECT_KEY_LIMIT:
-        over = F.broadcast(
-            local_frame(band_df.sparkSession, head, over.schema)
+
+def _collected_or_counted(frame: DataFrame) -> tuple[int, DataFrame]:
+    """The size ladder both cap-site plans share: ``(row count, frame
+    to join against)``. ONE bounded limit-collect both decides and
+    fetches (r16: the r15 form paid two driver actions, count then
+    collect, and at bench scale the action round-trip IS the cap
+    site's cost) — up to COLLECT_KEY_LIMIT rows come back as a
+    broadcast literal LocalRelation (an empty one at 0 rows, which
+    callers skip anyway); above it (pathological high-duplication
+    corpus), one extra count picks a broadcast hint up to
+    BROADCAST_KEY_LIMIT and an unhinted AQE plan beyond."""
+    head = frame.limit(COLLECT_KEY_LIMIT + 1).collect()
+    if len(head) <= COLLECT_KEY_LIMIT:
+        return len(head), F.broadcast(
+            local_frame(frame.sparkSession, head, frame.schema)
         )
-    elif n_over > COLLECT_KEY_LIMIT:
-        n_over = over.count()
-        if n_over <= BROADCAST_KEY_LIMIT:
-            over = F.broadcast(over)
-    return n_over, over
+    n = frame.count()
+    return n, F.broadcast(frame) if n <= BROADCAST_KEY_LIMIT else frame
 
 
 def _counted_census_plan(
@@ -436,26 +428,11 @@ def _counted_census_plan(
     Same rescannable-AND-DETERMINISTIC contract on ``band_df`` as
     capped_bucket_members; EAGER (one count job) like
     _counted_key_plan."""
-    census = (
+    return _collected_or_counted(
         band_df.groupBy(*key_cols)
         .agg(F.count(F.lit(1)).alias("__n"), F.min(id_col).alias("__anchor"))
         .filter(F.col("__n") > max_bucket_size)
     )
-    # ONE bounded limit-collect decides the ladder AND fetches the
-    # rows (r16, same fusion as _counted_key_plan above): the r15 form
-    # paid count + collect — two actions — on every cap site with a
-    # non-empty census, which q182/q186/q187/q188 all have at sf0.1.
-    head = census.limit(COLLECT_KEY_LIMIT + 1).collect()
-    n_over = len(head)
-    if n_over <= COLLECT_KEY_LIMIT:
-        census = F.broadcast(
-            local_frame(band_df.sparkSession, head, census.schema)
-        )
-    else:
-        n_over = census.count()
-        if n_over <= BROADCAST_KEY_LIMIT:
-            census = F.broadcast(census)
-    return n_over, census
 
 
 def capped_bucket_members(
@@ -723,117 +700,6 @@ def near_dup_pairs(
     )["pairs"]
 
 
-def cross_near_dup_frames(
-    new_df: DataFrame,
-    ref_df: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_n: int = 3,
-    num_hashes: int = 64,
-    bands: int = 16,
-    threshold: float = 0.5,
-    max_bucket_size: int = 1000,
-    portable: bool = False,
-) -> dict[str, DataFrame]:
-    """CROSS-corpus near-duplicate detection: which documents of a NEW
-    batch are MinHash-LSH near-dups of a fixed REFERENCE corpus — the
-    incremental-ingest shape of dedup (dedupe this week's crawl against
-    the training set you already have) and the fuzzy complement of
-    exact-n-gram decontamination (``decontaminate`` above). The
-    reference is never deduped against itself and never modified; only
-    new-vs-ref pairs come back.
-
-    Not expressible as near_dup_frames over the union: the union's
-    pair graph includes new-new and ref-ref pairs, whose candidate
-    generation cost (and bucket-cap pressure) the cross question never
-    needs — and at 100 TB the reference is the big side, so skipping
-    its self-join is most of the work. Plan shape instead:
-
-    - both sides run the shuffle-free signature stage (hashed shingle
-      set → minhash array per row, operators above);
-    - candidate generation is ONE equi-join of the two band frames on
-      (band_idx, band_hash) — new×ref only, never a self-join;
-    - skew cap: per band bucket, the REF side keeps its
-      ``max_bucket_size`` smallest ids (row_number window — spillable
-      sort, bounded per-key state), so one boilerplate
-      mega-bucket in the reference costs O(new_k · cap) join rows,
-      not O(new_k · ref_k). Capping ref (not new) keeps per-new-doc
-      recall degradation bounded and observable: dropped buckets are
-      returned in ``oversized`` (ref-side, with sizes). Unlike the
-      within-corpus case there is no anchor-star recovery — a capped
-      bucket still retains ``cap`` verifiable representatives per
-      band, and a new doc near-identical to the cluster collides with
-      them in every band;
-    - verification: exact hashed-set Jaccard across the two frames
-      (the within-frame verify_jaccard_hashed can't be reused as-is —
-      its two sides index one frame), same int/int ratio semantics.
-
-    Returns ``pairs`` (id_new, id_ref, jaccard) and ``oversized`` (ref
-    band buckets over the cap). The plan caches the two hashed-shingle
-    frames (each side feeds BOTH the signature stage and the verify
-    join) and the ref band frame (the two-phase cap and the oversized
-    census scan it four times); those caches belong to the caller's
-    ``storage.scope()``. ``portable=True`` selects md5-based hashing
-    throughout so an external engine replays every bucket and
-    signature (functions/hashing.py); xxhash64 remains the perf path.
-    """
-    rows = num_hashes // bands
-
-    def _side(df: DataFrame) -> tuple[DataFrame, DataFrame]:
-        sh = shingles(spread_by_id(df, id_col), id_col, text_col, shingle_n)
-        hs = hashed_shingle_sets(sh, id_col, portable)
-        storage.cache(hs)  # consumed by banding AND the verify join
-        sig = _signatures_from_sets(hs, id_col, num_hashes, portable)
-        return hs, lsh_bands(sig, id_col, bands, rows, portable)
-
-    hs_new, bands_new = _side(new_df)
-    hs_ref, bands_ref = _side(ref_df)
-    # The two-phase cap scans the ref band frame three times (key
-    # counts, common anti-join, rare semi-join) and ``oversized`` a
-    # fourth — cache it so the 64-hash signature stage runs once.
-    # Tiny rows: (id, band_idx int, band_hash long) × bands per doc.
-    storage.cache(bands_ref)
-
-    # Cap-smallest-ids via the two-phase capped_bucket_members (count
-    # first, window-sort only the rare oversized keys) — the r9 form's
-    # row_number window sorted EVERY ref bucket; the r8 array form
-    # buffered the full uncapped bucket in one aggregation row. Ids are
-    # unique per (band_idx, band_hash) — one band per band_idx per doc —
-    # so cap-smallest-ids semantics are exact.
-    capped_ref = capped_bucket_members(
-        bands_ref, id_col, max_bucket_size
-    ).select("band_idx", "band_hash", F.col(id_col).alias("__ref_id"))
-    oversized = (
-        bands_ref.groupBy("band_idx", "band_hash")
-        .agg(F.count(F.lit(1)).alias("bucket_n"),
-             F.min(id_col).alias("anchor_id"))
-        .filter(F.col("bucket_n") > max_bucket_size)
-    )
-
-    cand = (
-        bands_new.select("band_idx", "band_hash", F.col(id_col).alias("id_new"))
-        .join(capped_ref, ["band_idx", "band_hash"])
-        .select("id_new", F.col("__ref_id").alias("id_ref"))
-        .dropDuplicates()
-    )
-
-    s_new = hs_new.select(F.col(id_col).alias("id_new"), F.col("hs").alias("hs_n"))
-    s_ref = hs_ref.select(F.col(id_col).alias("id_ref"), F.col("hs").alias("hs_r"))
-    inter = F.size(F.array_intersect("hs_n", "hs_r")).cast("long")
-    union = (F.size("hs_n") + F.size("hs_r")).cast("long") - inter
-    pairs = (
-        cand.join(s_new, "id_new")
-        .join(s_ref, "id_ref")
-        .select(
-            "id_new",
-            "id_ref",
-            (inter.cast("double") / union.cast("double")).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-    return {"pairs": pairs, "oversized": oversized}
-
-
 def cross_dedup_survivors(
     new_df: DataFrame,
     ref_df: DataFrame,
@@ -846,62 +712,30 @@ def cross_dedup_survivors(
     max_bucket_size: int = 1000,
     portable: bool = False,
 ) -> DataFrame:
-    """The NEW rows that are NOT near-dups of the reference corpus —
-    ``cross_near_dup_frames`` pairs fed into one left-anti join. The
-    reference passes through unchanged (it is the kept set by
-    definition); within-new duplicates are out of scope here — run
-    near_dup_pairs/dedup_survivors on the survivors if the new batch
-    needs its own dedup (the corpus pipeline does both)."""
-    frames = cross_near_dup_frames(
-        new_df, ref_df, id_col, text_col, shingle_n=shingle_n,
-        num_hashes=num_hashes, bands=bands, threshold=threshold,
-        max_bucket_size=max_bucket_size, portable=portable,
-    )
-    matched = (
-        frames["pairs"]
-        .select(F.col("id_new").alias(id_col))
-        .dropDuplicates()
-    )
-    return new_df.join(matched, on=id_col, how="left_anti")
-
-
-def cross_ref_index(
-    ref_df: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_n: int = 3,
-    num_hashes: int = 64,
-    bands: int = 16,
-    max_bucket_size: int = 1000,
-    portable: bool = False,
-) -> DataFrame:
-    """The REFERENCE-side index for cross-corpus dedup, built as a
-    standalone cacheable frame: ``(band_idx, band_hash, id_ref,
-    hs_r)`` — the reference's capped LSH band buckets (``max_bucket_
-    size`` smallest ids per bucket, cross_near_dup_frames's truncation
-    semantics) joined to its hashed shingle sets so downstream
-    verification needs no second look at the reference.
-
-    This is the piece of the cross-dedup plan whose cost is linear in
-    the REFERENCE corpus — at 100 TB the axis that dwarfs every weekly
-    batch. Build it ONCE per reference (``storage.cache`` or write it
-    as a parquet table) and amortize across every batch and
-    micro-batch: feed it to ``cross_near_dup_pairs_indexed`` for batch
-    ingests and ``streaming.dedup.stream_cross_near_dup_pairs`` for
-    streams (both consume this exact shape; the streaming module
-    builds it through this function). Per-batch cost then scales with
-    the BATCH alone — measured in SCALE.md's ref-side slope table.
-
-    The cap silently truncates over-cap buckets here; ingest pipelines
-    that need to monitor the capped-recall signal should build through
-    ``cross_ref_index_frames``, which additionally returns the
-    oversized-bucket frame (band_idx, band_hash, bucket_n, anchor_id).
-    """
-    return cross_ref_index_frames(
+    """The NEW rows that are NOT near-dups of the reference corpus — a
+    one-shot cross dedup: ``cross_ref_index_frames`` over the
+    reference, ``cross_near_dup_pairs_indexed`` for the batch, and the
+    pairs fed into one left-anti join. The reference passes through
+    unchanged (it is the kept set by definition); within-new
+    duplicates are out of scope here — run near_dup_pairs/
+    dedup_survivors on the survivors if the new batch needs its own
+    dedup (the corpus pipeline does both). The index build's caches
+    belong to the caller's ``storage.scope()``."""
+    index = cross_ref_index_frames(
         ref_df, id_col, text_col, shingle_n=shingle_n,
         num_hashes=num_hashes, bands=bands,
         max_bucket_size=max_bucket_size, portable=portable,
     )["index"]
+    matched = (
+        cross_near_dup_pairs_indexed(
+            new_df, index, id_col, text_col, shingle_n=shingle_n,
+            num_hashes=num_hashes, bands=bands, threshold=threshold,
+            portable=portable,
+        )
+        .select(F.col("id_new").alias(id_col))
+        .dropDuplicates()
+    )
+    return new_df.join(matched, on=id_col, how="left_anti")
 
 
 def cross_ref_index_frames(
@@ -914,38 +748,63 @@ def cross_ref_index_frames(
     max_bucket_size: int = 1000,
     portable: bool = False,
 ) -> dict[str, DataFrame]:
-    """``cross_ref_index`` with its truncation observable: returns
-    ``{"index": (band_idx, band_hash, id_ref, hs_r), "oversized":
-    (band_idx, band_hash, bucket_n, anchor_id)}``. The unindexed
-    ``cross_near_dup_frames`` has always reported its dropped buckets;
-    the amortized/streaming path lost that signal at index-build time —
-    this variant restores it, so a pipeline that caches the index once
-    can also record how many reference buckets were capped (recall
-    degradation is bounded — cap representatives per band survive —
-    but it should be MONITORED, not silent).
+    """The REFERENCE-side index for CROSS-corpus near-dup detection —
+    which documents of a NEW batch are MinHash-LSH near-dups of a
+    fixed REFERENCE corpus: the incremental-ingest shape of dedup
+    (dedupe this week's crawl against the training set you already
+    have) and the fuzzy complement of exact-n-gram decontamination
+    (``decontaminate`` above). Returns ``{"index": (band_idx,
+    band_hash, id_ref, hs_r), "oversized": (band_idx, band_hash,
+    bucket_n, anchor_id)}``: the reference's capped LSH band buckets
+    joined to its hashed shingle sets, so verification needs no second
+    look at the reference, plus the buckets the cap truncated. Probe
+    it with ``cross_near_dup_pairs_indexed`` — a one-shot ("cold")
+    cross dedup is this build followed by that probe
+    (``cross_dedup_survivors``), an amortized ingest builds once and
+    probes every batch, the stream probes every micro-batch
+    (streaming.dedup).
 
-    Bounded per-key state throughout (the r8 form collect_list'd the
-    full bucket before slicing — an unbounded aggregation-buffer row
-    on exactly the mega-bucket input the cap guards against), and
-    two-phase since r11 (the r9/r10 form paid a row_number window —
-    a full sort of the band frame — on EVERY reference bucket, the
-    heaviest remaining site of the pattern the r9-ask removed):
-    cap-smallest-ids via ``capped_bucket_members`` — count-only hash
-    agg finds the rare >cap keys, the common ≤cap buckets pass a
-    broadcast anti-join untouched, only flagged keys pay the spillable
-    sort; oversized detection is count+min aggregates. Build-once
-    amortization is unchanged: the extra count scan of the band frame
-    is paid once per reference corpus."""
+    Not expressible as near_dup_frames over the union: the union's
+    pair graph includes new-new and ref-ref pairs, whose candidate
+    cost (and bucket-cap pressure) the cross question never needs —
+    at 100 TB the reference is the big side, so skipping its
+    self-join is most of the work. The reference is never deduped
+    against itself and never modified.
+
+    Skew cap: per band bucket the reference keeps its
+    ``max_bucket_size`` smallest ids, so one boilerplate mega-bucket
+    costs O(new_k · cap) join rows, not O(new_k · ref_k). Capping ref
+    (not new) keeps per-new-doc recall degradation bounded and
+    observable through ``oversized``; there is no anchor-star recovery
+    — a capped bucket still retains ``cap`` verifiable
+    representatives per band, and a new doc near-identical to the
+    cluster collides with them in every band. Ids are unique per
+    (band_idx, band_hash) — one band per band_idx per doc — so
+    cap-smallest-ids semantics are exact. The cap is the two-phase
+    ``capped_bucket_members`` (count-only hash agg finds the rare >cap
+    keys, the common ≤cap buckets pass a broadcast anti-join
+    untouched, only flagged keys pay the spillable sort); bounded
+    per-key state throughout.
+
+    The build caches the reference's hashed-shingle frame (it feeds
+    the signature stage AND the index's verify columns) and its band
+    frame (the cap's key count, its common and rare branches and the
+    oversized census all scan it), so the 64-hash signature stage runs
+    once per build; both caches belong to the caller's
+    ``storage.scope()``. EAGER: one key-count job. ``portable=True``
+    selects md5-based hashing throughout so an external engine replays
+    every bucket and signature (functions/hashing.py); xxhash64
+    remains the perf path."""
     rows = num_hashes // bands
     ref_sh = shingles(
         spread_by_id(ref_df, id_col), id_col, text_col, shingle_n
     )
-    ref_hs = hashed_shingle_sets(ref_sh, id_col, portable)
+    ref_hs = storage.cache(hashed_shingle_sets(ref_sh, id_col, portable))
     ref_sig = _signatures_from_sets(ref_hs, id_col, num_hashes, portable)
-    ref_bands = ref_sig.select(
+    ref_bands = storage.cache(ref_sig.select(
         F.col(id_col).alias("id_ref"),
         F.explode(band_structs(bands, rows, portable)).alias("band"),
-    ).select("id_ref", "band.band_idx", "band.band_hash")
+    ).select("id_ref", "band.band_idx", "band.band_hash"))
     index = (
         capped_bucket_members(ref_bands, "id_ref", max_bucket_size)
         .select("band_idx", "band_hash", "id_ref")
@@ -975,16 +834,15 @@ def cross_near_dup_pairs_indexed(
     bands: int = 16,
     threshold: float = 0.5,
     portable: bool = False,
-    repartition_new: bool = True,
     event_time_col: str | None = None,
     watermark_delay: str | None = None,
 ) -> DataFrame:
-    """Cross-corpus near-dup pairs of a NEW batch against a PREBUILT
-    reference index (``cross_ref_index``) — the amortized shape of
-    ``cross_near_dup_frames`` for repeated ingests: the reference is
-    scanned, shingled, signed and banded ONCE when the index is built;
-    each batch pays only its own signature pass + one equi-join on the
-    band key. Shingle/hash/band parameters must match the index build
+    """Cross-corpus near-dup pairs ``(id_new, id_ref, jaccard)`` of a
+    NEW batch or stream against a reference index
+    (``cross_ref_index_frames(...)["index"]``): the reference is
+    scanned, shingled, signed and banded when the index is built; each
+    batch pays only its own signature pass + one equi-join on the band
+    key. Shingle/hash/band parameters must match the index build
     (band hashes are pure functions of them).
 
     Plan shape (identical for batch and streaming input — the
@@ -992,19 +850,17 @@ def cross_near_dup_pairs_indexed(
     side's hashed shingle set is CARRIED through the band explode
     (``bands``× fan-out of one array column) so verification is inline
     in the single join — no second join against the new side, no
-    cache to manage, zero state. Exact hashed-set Jaccard, threshold
-    filter, then a pair-key dropDuplicates (the same pair collides in
-    several bands; jaccard is a pure function of the pair so any kept
-    row is THE row). Emits exactly ``cross_near_dup_frames(...)
-    ["pairs"]`` rows on the same inputs.
+    cache to manage, zero state. Exact hashed-set Jaccard (int/int
+    ratio), threshold filter, then a pair-key dropDuplicates (the
+    same pair collides in several bands; jaccard is a pure function of
+    the pair so any kept row is THE row).
 
-    ``repartition_new`` (default on) spreads the batch before the
-    CPU-bound signature arithmetic — a small batch parquet is often
-    ONE scan split, and 64 rehashes of every shingle on one core
-    dominates the whole plan (measured 6.2 s of a 7.4 s run before
-    the fix, scripts/cross_scale_probe.py). The streaming twin turns
-    it off: micro-batches arrive pre-partitioned by the source and
-    its hot path stays shuffle-free.
+    A batch input is spread before the CPU-bound signature arithmetic
+    — a small batch parquet is often ONE scan split, and 64 rehashes
+    of every shingle on one core dominates the whole plan (measured
+    6.2 s of a 7.4 s run before the fix, scripts/cross_scale_probe.py).
+    A stream is not: micro-batches arrive pre-partitioned by the
+    source and the per-row hot path stays shuffle-free.
 
     ``event_time_col`` + ``watermark_delay`` select the BOUNDED-STATE
     streaming form: the event-time column is carried through the
@@ -1020,9 +876,10 @@ def cross_near_dup_pairs_indexed(
     Batch mode ignores both (the plain pair dropDuplicates runs).
     """
     rows = num_hashes // bands
-    if repartition_new:
+    streaming = new_df.isStreaming
+    if not streaming:
         new_df = spread_by_id(new_df, id_col)
-    carry = (event_time_col,) if event_time_col and new_df.isStreaming else ()
+    carry = (event_time_col,) if event_time_col and streaming else ()
     sh = shingles(new_df, id_col, text_col, shingle_n, carry_cols=carry)
     hs = hashed_shingle_sets(sh, id_col, portable, carry_cols=carry)
     sig = _signatures_from_sets(hs, id_col, num_hashes, portable,

@@ -855,47 +855,6 @@ def srp_near_dup_frames(
     }
 
 
-def srp_ref_index(
-    ref_df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    dim: int,
-    num_bits: int | None = 8,
-    seed: int = 42,
-    max_bucket_size: int = 1000,
-) -> DataFrame:
-    """The REFERENCE-side index for cross-corpus SEMANTIC dedup as a
-    standalone cacheable frame: ``(bucket, id_ref, v2, n2)`` — the
-    reference's capped SRP bucket members (``max_bucket_size``
-    smallest ids per bucket, cross_srp_near_dup_frames's truncation
-    semantics) joined to their vectors and precomputed norms, so
-    downstream cosine verification needs no second look at the
-    reference. The embedding twin of dedup.cross_ref_index: build
-    ONCE per reference corpus (cache/persist), amortize across every
-    batch and micro-batch — the ref-side cost (signature pass + one
-    capped-bucket window) is linear in the reference and paid once.
-    Use ``srp_ref_index_frames`` to also observe which buckets the
-    cap truncated (the dedup.cross_ref_index_frames twin).
-
-    ``num_bits=None`` is rejected here: this form returns ONLY the
-    index frame, so an auto-picked bit count would be unrecoverable
-    and a query side signing with the default 8 would silently match
-    nothing. Auto-pick via ``srp_ref_index_frames`` (which returns
-    the resolved value under ``"num_bits"``) or pass explicit bits
-    from ``recommended_num_bits`` to both sides."""
-    if num_bits is None:
-        raise ValueError(
-            "srp_ref_index(num_bits=None) would auto-pick a bit count "
-            "the caller cannot recover; use srp_ref_index_frames "
-            "(returns the resolved 'num_bits') or pass explicit bits "
-            "from recommended_num_bits() to both index and query sides"
-        )
-    return srp_ref_index_frames(
-        ref_df, id_col, vec_col, dim, num_bits=num_bits, seed=seed,
-        max_bucket_size=max_bucket_size,
-    )["index"]
-
-
 def srp_ref_index_frames(
     ref_df: DataFrame,
     id_col: str,
@@ -906,12 +865,25 @@ def srp_ref_index_frames(
     max_bucket_size: int = 1000,
     num_tables: int = 1,
 ) -> dict[str, DataFrame | int]:
-    """``srp_ref_index`` with its truncation observable: ``{"index":
-    (bucket, id_ref, v2, n2), "oversized": (bucket, bucket_n,
-    anchor_id), "num_bits": int, "num_tables": int}`` —
-    the embedding twin of dedup.cross_ref_index_frames,
-    so amortized/streaming semantic ingest can monitor capped recall
-    instead of inheriting the truncation silently.
+    """The REFERENCE-side index for CROSS-corpus SEMANTIC dedup —
+    which embeddings of a NEW batch are cosine near-dups of a fixed
+    REFERENCE corpus (this week's crawl vs the training set you
+    already have, paraphrases included): ``{"index": (bucket, id_ref,
+    v2, n2), "oversized": (bucket, bucket_n, anchor_id), "num_bits":
+    int, "num_tables": int}``. The index holds the reference's capped
+    SRP bucket members (``max_bucket_size`` smallest ids per bucket)
+    joined to their vectors and precomputed norms, so cosine
+    verification needs no second look at the reference; ``oversized``
+    makes the truncation observable. The embedding twin of
+    dedup.cross_ref_index_frames: a one-shot ("cold") cross dedup is
+    this build followed by ``cross_srp_pairs_indexed``; an amortized
+    or streaming ingest builds once and probes every batch or
+    micro-batch (streaming.dedup). The reference never self-joins (at
+    100 TB its self-pairs are most of the work the cross question
+    never needs), and a vector's bucket does not depend on which
+    frame it sits in. No anchor-star recovery: a capped bucket
+    retains cap verifiable representatives and there is no
+    within-side clustering to preserve.
 
     ``num_tables`` = L > 1 indexes the reference under L independent
     plane tables (srp_near_dup_frames's banding lever, q240): an
@@ -929,11 +901,10 @@ def srp_ref_index_frames(
     (r9 verdict ask #1: the r9 row_number form sorted EVERY bucket);
     oversized detection via count+min aggregates. The cap is per key,
     the SAME machinery the banded text index uses, so truncation
-    semantics are shared and oracle-gated on the text path. Extra
-    scans of the per-row SRP signature stage are paid ONCE per
-    reference corpus — the index is built once and cached by the
-    caller; the signature checkpoint belongs to the caller's
-    ``storage.scope()``.
+    semantics are shared and oracle-gated on the text path. The
+    signature stage is checkpointed once per build (the cap's scans
+    and the vector join all read it); the checkpoint belongs to the
+    caller's ``storage.scope()``.
 
     ``num_bits=None`` → ``recommended_num_bits(ref_df.count())`` —
     SCALE.md's ref-axis rule ("num_bits ≈ 8 + log2(ref scale)") as
@@ -989,7 +960,7 @@ def cross_srp_pairs_indexed(
     """Cross-corpus SEMANTIC near-dup pairs of a NEW batch (or STREAM —
     every new-side operation is a per-row expression, so a streaming
     frame flows through unchanged; streaming.dedup wraps this) against
-    a PREBUILT ``srp_ref_index`` / ``srp_ref_index_frames`` index. Per
+    an ``srp_ref_index_frames`` index. Per
     new row: SRP bucket signature + norm (pure arithmetic, no shuffle,
     no checkpoint — the batch path's localCheckpoint barrier is an
     optimization the single downstream consumer here doesn't need),
@@ -999,9 +970,8 @@ def cross_srp_pairs_indexed(
 
     At one table a vector has exactly ONE bucket, so a pair can
     surface at most once — append-mode emission needs no dedup state
-    at all. Emits exactly ``cross_srp_near_dup_frames(...)["pairs"]``
-    rows on the same inputs (q204's oracle is q192's SQL verbatim).
-    At L > 1 tables the join is on (band_idx, bucket) and a pair
+    at all; the batch (q192) and the stream (q204) share one oracle
+    SQL. At L > 1 tables the join is on (band_idx, bucket) and a pair
     colliding in several tables is emitted ONCE (dropDuplicates on
     the verified pair — the cosine is a pure function of the pair, so
     the drop is deterministic). On a stream that drop is
@@ -1025,95 +995,6 @@ def cross_srp_pairs_indexed(
     if num_tables > 1:
         pairs = pairs.dropDuplicates(["id_new", "id_ref"])
     return pairs
-
-
-def cross_srp_near_dup_frames(
-    new_df: DataFrame,
-    ref_df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    threshold: float,
-    dim: int,
-    num_bits: int = 8,
-    seed: int = 42,
-    max_bucket_size: int = 1000,
-) -> dict[str, DataFrame]:
-    """CROSS-corpus SEMANTIC near-dup detection: which embeddings of a
-    NEW batch are cosine near-dups of a fixed REFERENCE corpus — the
-    embedding-side twin of dedup.py:cross_near_dup_frames (same
-    incremental-ingest shape: this week's crawl vs the training set
-    you already have, paraphrases included). Same plan skeleton:
-
-    - both sides compute the per-row SRP bucket signature (identical
-      planes — a vector's bucket does not depend on which frame it
-      sits in);
-    - candidate generation is ONE new×ref equi-join on the bucket key,
-      never a self-join (at 100 TB the reference's self-pairs are most
-      of the work the cross question never needs);
-    - ref-side mega-buckets keep their ``max_bucket_size`` smallest
-      ids (bounded fan-out: O(new_k · cap) join rows per bucket);
-      dropped buckets come back in ``oversized``. No anchor-star here
-      — a capped bucket retains cap verifiable representatives and
-      there is no within-side clustering to preserve;
-    - verification is exact cosine across the two frames (precomputed
-      norms, fixed-dim unrolled dot product).
-
-    Returns ``{"pairs": (id_new, id_ref, cosine_sim), "oversized":
-    ref buckets over the cap}``. Feed pairs into a left-anti join for
-    survivor semantics (dedup.py:cross_dedup_survivors does this for
-    the text side; the composition is one extra join either way)."""
-    sig_new = storage.checkpoint(
-        _srp_sig(new_df, id_col, vec_col, dim, num_bits, seed)
-    )
-    sig_ref = storage.checkpoint(
-        _srp_sig(ref_df, id_col, vec_col, dim, num_bits, seed)
-    )
-
-    # Cap-smallest-ids via the two-phase dedup.capped_bucket_members
-    # (count first, window-sort only the rare oversized buckets — r9
-    # verdict ask #1), oversized via count+min — no collect_list: the
-    # r8 array form buffered the FULL uncapped bucket in one
-    # aggregation row on exactly the mega-bucket input the cap guards
-    # against (dedup.cross_near_dup_frames, same fix).
-    from us_immigration_data_lake_spark.operators.dedup import (
-        capped_bucket_members,
-    )
-
-    capped_ref = capped_bucket_members(
-        sig_ref.select("bucket", "__id"), "__id", max_bucket_size,
-        key_cols=("bucket",),
-    ).select("bucket", F.col("__id").alias("id_ref"))
-    oversized = (
-        sig_ref.groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("bucket_n"),
-             F.min("__id").alias("anchor_id"))
-        .filter(F.col("bucket_n") > max_bucket_size)
-    )
-
-    cand = (
-        sig_new.select(F.col("__id").alias("id_new"), "bucket")
-        .join(capped_ref, "bucket")
-        .select("id_new", "id_ref")
-        .dropDuplicates()
-    )
-    vn = sig_new.select(
-        F.col("__id").alias("id_new"), F.col("__v").alias("v1"),
-        F.col("__n").alias("n1"),
-    )
-    vr = sig_ref.select(
-        F.col("__id").alias("id_ref"), F.col("__v").alias("v2"),
-        F.col("__n").alias("n2"),
-    )
-    pairs = (
-        cand.join(vn, "id_new")
-        .join(vr, "id_ref")
-        .select(
-            "id_new", "id_ref",
-            F.round(_pair_cosine(dim), 6).alias("cosine_sim"),
-        )
-        .filter(F.col("cosine_sim") >= threshold)
-    )
-    return {"pairs": pairs, "oversized": oversized}
 
 
 def semantic_dedup(

@@ -120,16 +120,3 @@ def hilbert_key(x_col: str, y_col: str, bits: int = 10):
         return pd.Series(d)
 
     return _h(F.col(x_col), F.col(y_col))
-
-
-def hilbert_layout(
-    df: DataFrame, x_col: str, y_col: str, bits: int = 10, num_files: int = 200
-) -> DataFrame:
-    """zorder_layout's Hilbert variant: range-partition + sort by the
-    Hilbert key so file min/max ranges cover compact 2-D tiles."""
-    keyed = df.withColumn("_hkey", hilbert_key(x_col, y_col, bits))
-    return (
-        keyed.repartitionByRange(num_files, F.col("_hkey"))
-        .sortWithinPartitions("_hkey")
-        .drop("_hkey")
-    )

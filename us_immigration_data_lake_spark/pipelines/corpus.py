@@ -211,8 +211,9 @@ def update_corpus_increment(
     1. quality-gate the NEW batch (the reference corpus is already
        curated and passes as-is);
     2. CROSS-corpus dedup: drop new docs that are near-dups of the
-       reference (operators/dedup.py:cross_near_dup_frames — one
-       new×ref band join, the reference never self-joins);
+       reference (operators/dedup.py:cross_dedup_survivors — a
+       reference index build, one new×ref band join, the reference
+       never self-joins);
     3. WITHIN-batch dedup of the cross survivors (near_dup_frames with
        the cap + anchor-star guard → connected components →
        keep-smallest survivors).
@@ -229,16 +230,10 @@ def update_corpus_increment(
             .drop("quality_score")
         )
 
-        cross = dd.cross_near_dup_frames(
+        surv_cross = storage.cache(dd.cross_dedup_survivors(
             gated, ref_docs, id_col, text_col, shingle_n=shingle_n,
             num_hashes=num_hashes, bands=bands, threshold=threshold,
             max_bucket_size=max_bucket_size, portable=portable,
-        )
-        cross_pairs = cross["pairs"]
-        surv_cross = storage.cache(gated.join(
-            cross_pairs.select(F.col("id_new").alias(id_col)).dropDuplicates(),
-            on=id_col,
-            how="left_anti",
         ))
 
         within_frames = dd.near_dup_frames(
@@ -302,7 +297,8 @@ def update_embedding_increment(
        embedding analog of the text quality gate);
     2. CROSS-corpus semantic dedup: drop new vectors that are cosine
        near-dups of the reference (one new×ref bucket join, the
-       reference never self-joins — similarity.cross_srp_near_dup_frames);
+       reference never self-joins — similarity.srp_ref_index_frames
+       probed by cross_srp_pairs_indexed);
     3. WITHIN-batch semantic dedup of the cross survivors
        (capped-SRP pairs + anchor-star recovery → connected
        components → keep-smallest survivors — similarity.semantic_dedup).
@@ -315,10 +311,14 @@ def update_embedding_increment(
     with storage.scope() as s:
         gated = storage.cache(new_emb.filter(F.size(F.col(vec_col)) == dim))
 
-        cross_pairs = sim.cross_srp_near_dup_frames(
-            gated, ref_emb, id_col, vec_col, threshold=threshold, dim=dim,
-            num_bits=num_bits, max_bucket_size=cross_bucket_cap,
-        )["pairs"]
+        ref_index = sim.srp_ref_index_frames(
+            ref_emb, id_col, vec_col, dim=dim, num_bits=num_bits,
+            max_bucket_size=cross_bucket_cap,
+        )
+        cross_pairs = sim.cross_srp_pairs_indexed(
+            gated, ref_index["index"], id_col, vec_col, threshold=threshold,
+            dim=dim, num_bits=ref_index["num_bits"],
+        )
         surv_cross = storage.cache(gated.join(
             cross_pairs.select(F.col("id_new").alias(id_col)).dropDuplicates(),
             on=id_col,

@@ -10801,7 +10801,8 @@ def q189_exact_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Q190 — CROSS-corpus near-dup dedup (operators/dedup.py:
-# cross_near_dup_frames, new r7): which docs of a NEW batch are
+# cross_ref_index_frames + cross_near_dup_pairs_indexed, new r7 — one
+# reference-index build, then one probe): which docs of a NEW batch are
 # MinHash-LSH near-dups of a fixed REFERENCE corpus — the
 # incremental-ingest dedup (this week's crawl vs the training set you
 # already have). Candidate generation is ONE new×ref equi-join on the
@@ -10870,11 +10871,14 @@ def q190_cross_corpus_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
     new_df = docs.filter(F.col("doc_id") % 2 == 1)
     ref_df = docs.filter(F.col("doc_id") % 2 == 0)
-    return dedup_ops.cross_near_dup_frames(
-        new_df, ref_df, "doc_id", "text", shingle_n=2,
-        num_hashes=_Q55_HASHES, bands=_Q55_BANDS, threshold=0.055,
-        max_bucket_size=_Q190_CAP, portable=True,
-    )["pairs"]
+    kw = dict(shingle_n=2, num_hashes=_Q55_HASHES, bands=_Q55_BANDS,
+              portable=True)
+    index = dedup_ops.cross_ref_index_frames(
+        ref_df, "doc_id", "text", max_bucket_size=_Q190_CAP, **kw
+    )["index"]
+    return dedup_ops.cross_near_dup_pairs_indexed(
+        new_df, index, "doc_id", "text", threshold=0.055, **kw
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -10979,7 +10983,8 @@ def q191_dsir_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Q192 — CROSS-corpus SEMANTIC dedup (operators/similarity.py:
-# cross_srp_near_dup_frames, new r7): the embedding-side twin of q190
+# srp_ref_index_frames + cross_srp_pairs_indexed, new r7 — one
+# reference-index build, then one probe): the embedding-side twin of q190
 # — which NEW vectors are cosine near-dups of a fixed REFERENCE
 # corpus. One new×ref equi-join on the SRP bucket key (never a
 # self-join), ref-side buckets capped to their smallest ids with
@@ -11041,10 +11046,14 @@ def q192_cross_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     new_df = emb.filter(F.col("vec_id") % 2 == 1)
     ref_df = emb.filter(F.col("vec_id") % 2 == 0)
-    return sim_ops.cross_srp_near_dup_frames(
-        new_df, ref_df, "vec_id", "embedding", threshold=_Q181_TAU,
-        dim=EMBEDDING_DIM, num_bits=_Q187_BITS, max_bucket_size=_Q192_CAP,
-    )["pairs"]
+    frames = sim_ops.srp_ref_index_frames(
+        ref_df, "vec_id", "embedding", dim=EMBEDDING_DIM,
+        num_bits=_Q187_BITS, max_bucket_size=_Q192_CAP,
+    )
+    return sim_ops.cross_srp_pairs_indexed(
+        new_df, frames["index"], "vec_id", "embedding", threshold=_Q181_TAU,
+        dim=EMBEDDING_DIM, num_bits=frames["num_bits"],
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -11204,7 +11213,9 @@ def q194_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 # hot path is stateless per row (shingle/signature/band arithmetic,
 # shingle sets carried through the band explode), candidates + exact
 # verify ride ONE stream-static join against the cached capped
-# reference lookup, and the only streaming state is the final
+# reference index (q190's own cross_ref_index_frames build and
+# cross_near_dup_pairs_indexed probe, the new side bound to a
+# stream), and the only streaming state is the final
 # pair-key dropDuplicates. availableNow emission is batch-equivalent
 # by construction, so the oracle IS q190's SQL, verbatim — the two
 # rows gate the same answer through the batch and streaming engines.
@@ -12042,8 +12053,9 @@ def q203_train_quality_classifier(
 # stream_cross_srp_near_dup_pairs, new r8): the embedding twin of
 # q195, closing the matrix — q190/q195 are batch/stream text,
 # q192/q204 are batch/stream semantic. NEW embeddings arrive as a
-# file stream; the static side is similarity.srp_ref_index (capped
-# bucket members + vectors + norms, cached once); the hot path is
+# file stream; the static side is q192's similarity.
+# srp_ref_index_frames index (capped bucket members + vectors +
+# norms, cached once); the hot path is
 # per-row SRP signature arithmetic + ONE stream-static bucket join
 # with the cosine verify inline. A vector has exactly ONE bucket, so
 # a pair surfaces at most once and append mode carries ZERO streaming
@@ -15073,7 +15085,8 @@ def q239_srp_multi_table_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # per-(table,bucket) cap machinery is q190/q192's already-gated
 # surface) so the oracle is the clean OR-union replay: per-table
 # signature CASE sums, DISTINCT candidates across tables, cosine
-# verify. L=1 ≡ cross_srp_near_dup_frames is a pinned test theorem.
+# verify. At L=1 this is q192's builder and probe exactly; the L=1
+# pair set is pinned literally in tests/test_llm_ops.py.
 # ---------------------------------------------------------------------------
 
 

@@ -78,39 +78,3 @@ def _delta_conf() -> dict[str, str]:
             "org.apache.spark.sql.delta.catalog.DeltaCatalog"
         ),
     }
-
-
-def s3a_conf(
-    hadoop_aws_version: str = "3.3.4",
-    endpoint: str | None = None,
-) -> dict[str, str]:
-    """Conf fragment for S3A object storage (SURVEY.md §2.1 S8).
-
-    The reference hardcoded AWS keys in a committed config file
-    (dl.cfg — a flaw we do not replicate). Credentials here come from
-    the standard provider chain: env vars, instance profile, or SSO —
-    never from code or checked-in files.
-    """
-    conf = {
-        "spark.jars.packages": f"org.apache.hadoop:hadoop-aws:{hadoop_aws_version}",
-        "spark.hadoop.fs.s3a.aws.credentials.provider": (
-            "com.amazonaws.auth.DefaultAWSCredentialsProviderChain"
-        ),
-    }
-    if endpoint:
-        conf["spark.hadoop.fs.s3a.endpoint"] = endpoint
-    return conf
-
-
-def tune_for_oracle(spark: SparkSession) -> SparkSession:
-    """Runtime-settable confs for deterministic, oracle-comparable runs.
-
-    Safe to call on a session we did not create (the driver harness owns
-    its own session); only touches runtime-mutable SQL confs.
-    """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
-    except Exception:
-        pass  # non-mutable on some deployments; AQE coalesces anyway
-    return spark

@@ -1,6 +1,7 @@
 """Streaming deduplication against a static reference corpus.
 
-The streaming shape of operators/dedup.py:cross_near_dup_frames: NEW
+The streaming shape of cross-corpus dedup (operators/dedup.py:
+cross_ref_index_frames + cross_near_dup_pairs_indexed): NEW
 documents arrive as a stream (this week's crawl), the REFERENCE corpus
 (the training set you already have) is a static frame, and every
 micro-batch's near-dups are emitted as they arrive. The entire hot
@@ -18,7 +19,7 @@ from pyspark.sql import DataFrame
 from us_immigration_data_lake_spark.operators import storage
 from us_immigration_data_lake_spark.operators.dedup import (
     cross_near_dup_pairs_indexed,
-    cross_ref_index,
+    cross_ref_index_frames,
 )
 
 
@@ -47,8 +48,9 @@ def stream_cross_near_dup_pairs(
       would be a stream-stream join and need watermark state);
     - static side (built once, cached): the reference's band frame
       with its ``max_bucket_size`` smallest ids per bucket (the
-      cross_near_dup_frames cap — bounded fan-out per band key, same
-      truncation semantics) joined to its hashed shingle sets;
+      cross_ref_index_frames cap — bounded fan-out per band key, same
+      truncation semantics as a batch ingest) joined to its hashed
+      shingle sets;
     - ONE stream-static inner join on (band_idx, band_hash), exact
       hashed-set Jaccard inline, threshold filter;
     - a streaming dropDuplicates on the pair key: the same pair
@@ -66,28 +68,29 @@ def stream_cross_near_dup_pairs(
       re-arrives after the delay.
 
     Batch-equivalence: with an availableNow trigger the emitted set
-    equals operators/dedup.py:cross_near_dup_frames on the same
-    inputs (q195's oracle is exactly q190's SQL), regardless of how
+    equals the batch probe of the same index on the same inputs
+    (q195's oracle is exactly q190's SQL), regardless of how
     many micro-batches the source splits into — per-row expressions
     can't see batch boundaries and the pair-dedup state spans batches.
 
     Construction is shared with the batch path: the static side IS
-    ``operators.dedup.cross_ref_index`` (cached here — reused every
-    micro-batch) and the hot path IS ``cross_near_dup_pairs_indexed``
-    over the stream frame; the streaming twin differs from an indexed
-    batch ingest only in what the new side is bound to.
+    ``operators.dedup.cross_ref_index_frames``'s index (cached here —
+    reused every micro-batch) and the hot path IS
+    ``cross_near_dup_pairs_indexed`` over the stream frame (which
+    skips the batch path's spread, so the per-row hot path stays
+    shuffle-free); the streaming twin differs from an indexed batch
+    ingest only in what the new side is bound to.
     """
     # static side: materialize once, reused every micro-batch
-    capped_ref = storage.cache(cross_ref_index(
+    capped_ref = storage.cache(cross_ref_index_frames(
         ref_df, id_col, text_col, shingle_n=shingle_n,
         num_hashes=num_hashes, bands=bands,
         max_bucket_size=max_bucket_size, portable=portable,
-    ))
+    )["index"])
     return cross_near_dup_pairs_indexed(
         new_stream, capped_ref, id_col, text_col, shingle_n=shingle_n,
         num_hashes=num_hashes, bands=bands, threshold=threshold,
         portable=portable,
-        repartition_new=False,  # per-row hot path stays shuffle-free
         event_time_col=event_time_col, watermark_delay=watermark_delay,
     )
 
@@ -106,8 +109,9 @@ def stream_cross_srp_near_dup_pairs(
     """Verified (id_new, id_ref, cosine_sim) SEMANTIC near-dup pairs of
     an EMBEDDING stream against a static reference corpus — the
     embedding twin of stream_cross_near_dup_pairs (q195), same
-    construction sharing: the static side IS similarity.srp_ref_index
-    (cached — reused every micro-batch) and the hot path IS
+    construction sharing: the static side IS the index of
+    similarity.srp_ref_index_frames (cached — reused every
+    micro-batch) and the hot path IS
     similarity.cross_srp_pairs_indexed over the stream frame.
 
     Even more state-free than the text twin: a vector lands in exactly
@@ -121,15 +125,15 @@ def stream_cross_srp_near_dup_pairs(
     """
     from us_immigration_data_lake_spark.operators.similarity import (
         cross_srp_pairs_indexed,
-        srp_ref_index,
+        srp_ref_index_frames,
     )
 
     # static side: materialize once, reused every micro-batch
-    idx = storage.cache(srp_ref_index(
+    frames = srp_ref_index_frames(
         ref_df, id_col, vec_col, dim, num_bits=num_bits, seed=seed,
         max_bucket_size=max_bucket_size,
-    ))
+    )
     return cross_srp_pairs_indexed(
-        new_stream, idx, id_col, vec_col, threshold, dim,
-        num_bits=num_bits, seed=seed,
+        new_stream, storage.cache(frames["index"]), id_col, vec_col,
+        threshold, dim, num_bits=frames["num_bits"], seed=seed,
     )
