@@ -2336,7 +2336,7 @@ def test_capped_bucket_members_two_phase_plan_and_results(mega_band):
     window on their path (anti-join, strategy left to AQE), oversized buckets keep
     the cap smallest ids via a window confined to the rare semi-joined
     branch."""
-    capped = dd.capped_bucket_members(mega_band, "doc_id", 50)
+    capped, _ = dd.capped_bucket_members(mega_band, "doc_id", 50)
     plan = capped._jdf.queryExecution().optimizedPlan().toString()
     assert "LeftAnti" in plan and "LeftSemi" in plan
     assert "collect_list" not in plan
@@ -2358,12 +2358,12 @@ def test_counted_cap_strategy_branches(spark, mega_band):
         [(0, 5, 1), (0, 5, 2), (0, 9, 3)],
         ["band_idx", "band_hash", "doc_id"],
     )
-    out = dd.capped_bucket_members(clean, "doc_id", 50)
+    out, _ = dd.capped_bucket_members(clean, "doc_id", 50)
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     assert "Join" not in plan  # passthrough, zero extra work
     assert out.count() == 3
 
-    capped = dd.capped_bucket_members(mega_band, "doc_id", 50)
+    capped, _ = dd.capped_bucket_members(mega_band, "doc_id", 50)
     plan = capped._jdf.queryExecution().optimizedPlan().toString()
     assert "strategy=broadcast" in plan  # counted-small -> hinted
     cand = dd.candidate_pairs(mega_band, "doc_id", max_bucket_size=50)
@@ -3755,7 +3755,7 @@ def test_hard_negative_recall_theorems(spark):
 
 
 def test_census_plan_matches_legacy_aggregates(mega_band):
-    """r12 census consolidation: the single (keys, __n, __anchor)
+    """r12 census consolidation: the single (keys, bucket_n, anchor_id)
     census must be value-equivalent to the three r11 aggregates it
     replaced — the oversized_buckets report, the
     oversized_bucket_star_pairs seeds, and the oversized-key set — on
@@ -3765,10 +3765,12 @@ def test_census_plan_matches_legacy_aggregates(mega_band):
     assert n_over == 1
 
     # report == legacy oversized_buckets (rows and columns)
-    report = {tuple(r) for r in dd._census_report(census).collect()}
+    report = {tuple(r) for r in census.collect()}
     legacy = {tuple(r) for r in
               dd.oversized_buckets(mega_band, "doc_id", 50).collect()}
     assert report == legacy == {(0, 7, 5000, 0)}
+    assert census.columns == dd.oversized_buckets(
+        mega_band, "doc_id", 50).columns
 
     # star pairs == legacy anchor-star recovery
     star = {(r.id1, r.id2) for r in
@@ -3779,17 +3781,23 @@ def test_census_plan_matches_legacy_aggregates(mega_band):
     assert star == legacy_star
     assert star == {(0, i) for i in range(1, 5000)}
 
-    # candidate_pairs fed the census == candidate_pairs re-deriving
-    fed = {(r.id1, r.id2) for r in
-           dd.candidate_pairs(mega_band, "doc_id", 50,
-                              _census=(n_over, census)).collect()}
+    # the self-path tail's candidates == candidate_pairs, and its
+    # census/count are the census above
+    cand, tail_census, tail_n = dd._census_candidates(
+        mega_band, "doc_id", 50, False)
+    fed = {(r.id1, r.id2) for r in cand.collect()}
     rederived = {(r.id1, r.id2) for r in
                  dd.candidate_pairs(mega_band, "doc_id", 50).collect()}
     assert fed == rederived
+    assert tail_n == n_over
+    assert {tuple(r) for r in tail_census.collect()} == report
     # only the 3-member bucket expands: mega bucket dropped, pairs from
     # {1e6, 1e6+1, 1e6+2}
     assert fed == {(10**6, 10**6 + 1), (10**6, 10**6 + 2),
                    (10**6 + 1, 10**6 + 2)}
+    # recover_oversized adds exactly the anchor-star pairs
+    recovered, _, _ = dd._census_candidates(mega_band, "doc_id", 50, True)
+    assert {(r.id1, r.id2) for r in recovered.collect()} == fed | star
 
 
 def test_census_empty_case_is_local_and_lazy_free(spark):
@@ -3808,7 +3816,8 @@ def test_census_empty_case_is_local_and_lazy_free(spark):
     assert ("LocalRelation" in plan or "LogicalRDD" in plan)
     assert "Aggregate" not in plan
     assert census.count() == 0
-    cand = dd.candidate_pairs(band, "doc_id", 50, _census=(n_over, census))
+    cand, _, tail_n = dd._census_candidates(band, "doc_id", 50, False)
+    assert tail_n == 0
     assert "Join" not in cand._jdf.queryExecution().optimizedPlan().toString()
 
 

@@ -28,7 +28,7 @@ def _census_schema(spark) -> T.StructType:
         spark.range(3)
         .select(F.col("id").cast("int").alias("band_idx"), F.col("id").alias("band_hash"))
         .groupBy("band_idx", "band_hash")
-        .agg(F.count(F.lit(1)).alias("__n"), F.min("band_hash").alias("__anchor"))
+        .agg(F.count(F.lit(1)).alias("bucket_n"), F.min("band_hash").alias("anchor_id"))
         .schema
     )
 
@@ -227,6 +227,62 @@ def test_raw_pin_scan_flags_cache_and_passes_storage(tmp_path):
     )
     found = _raw_pin_calls(str(src), "operators/mod.py")
     assert [f.split(":")[1] for f in found] == ["2", "4", "5", "5"]
+
+
+# the three aggregations allowed to decide "which band buckets exceed
+# max_bucket_size?": the engine's one cap census and the two reference
+# implementations the census is tested against
+_CAP_CENSUS_OWNERS = {
+    "_counted_census_plan", "oversized_buckets", "oversized_bucket_star_pairs",
+}
+
+
+def _cap_aggregations(path: str, rel: str) -> list[str]:
+    """Functions that call ``.agg(`` and compare something with
+    ``max_bucket_size`` — an oversized-bucket aggregation."""
+    found = set()
+    for func in ast.walk(ast.parse(open(path).read())):
+        if not isinstance(func, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        nodes = list(ast.walk(func))
+        aggregates = any(
+            isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+            and n.func.attr == "agg" for n in nodes
+        )
+        compares_cap = any(
+            isinstance(n, ast.Compare) and any(
+                isinstance(o, ast.Name) and o.id == "max_bucket_size"
+                for o in [n.left, *n.comparators]
+            )
+            for n in nodes
+        )
+        if aggregates and compares_cap:
+            found.add(f"{rel}:{func.lineno}: {func.name}")
+    return sorted(found)
+
+
+def test_one_cap_census_in_operators():
+    found = [f for f in _scan_engine(_cap_aggregations)
+             if f.startswith("operators/")]
+    assert sorted(f.rsplit(" ", 1)[1] for f in found) == sorted(_CAP_CENSUS_OWNERS), (
+        "decide oversized buckets with dedup._counted_census_plan:\n"
+        + "\n".join(found)
+    )
+
+
+def test_cap_aggregation_scan_flags_agg_compared_to_cap(tmp_path):
+    src = tmp_path / "mod.py"
+    src.write_text(
+        "def bad(df, max_bucket_size):\n"
+        "    return (df.groupBy('k').agg(F.count(F.lit(1)).alias('n'))\n"
+        "            .filter(F.col('n') > max_bucket_size))\n"
+        "def ok_window(df, max_bucket_size):\n"
+        "    return df.filter(F.col('rn') <= max_bucket_size)\n"
+        "def ok_agg(df, cap):\n"
+        "    return df.groupBy('k').agg(F.min('id'))\n"
+    )
+    found = _cap_aggregations(str(src), "operators/mod.py")
+    assert found == ["operators/mod.py:1: bad"]
 
 
 def test_list_fed_scan_flags_lists_and_passes_arrow(tmp_path):

@@ -502,11 +502,11 @@ def per_group_cap(
     sort is bounded by the group's size, spillable, and the common
     web-corpus group (a domain) is far below partition scale; a
     DEGENERATE group (one source = half the corpus) pays a single-
-    partition sort — if that is your distribution, cap via the counted
-    two-phase machinery (operators/dedup.py:_counted_key_plan) or
-    pre-aggregate sources. Unlike the LSH bucket cap this op's OUTPUT
-    is the capped set itself, so the window rank is the semantics, not
-    an implementation shortcut."""
+    partition sort — if that is your distribution, cap via the
+    census-driven two-phase machinery (operators/dedup.py:
+    capped_bucket_members) or pre-aggregate sources. Unlike the LSH
+    bucket cap this op's OUTPUT is the capped set itself, so the
+    window rank is the semantics, not an implementation shortcut."""
     from pyspark.sql import Window
 
     from us_immigration_data_lake_spark.functions.hashing import md5_long

@@ -803,10 +803,7 @@ def srp_near_dup_frames(
     band-frame cache belong to the caller's ``storage.scope()``.
     """
     from us_immigration_data_lake_spark.operators.dedup import (
-        _census_report,
-        _census_star_pairs,
-        _counted_census_plan,
-        candidate_pairs,
+        _census_candidates,
     )
 
     # one barrier for the signature stage: it feeds the band frame
@@ -814,22 +811,17 @@ def srp_near_dup_frames(
     sig = storage.checkpoint(_srp_sig(
         df, id_col, vec_col, dim, num_bits, seed, num_tables
     ))
-    # two-phase candidate_pairs scans the bucket frame twice (key
-    # counts, then the anti-join collect); cache the three tiny
-    # columns so the signature stage is read once.
+    # the census and the candidate expansion both scan the bucket
+    # frame; cache the three tiny columns so the signature stage is
+    # read once.
     band_df = storage.cache(_srp_tables(sig, num_tables, "__id",
                                         band=True)[0])
     # ONE bucket census shared by the key count, the anchor-star seeds
-    # and the oversized report — the text path's r12 consolidation
-    # (dedup.near_dup_frames), applied identically here so cap-site
-    # cost can never drift between the two pipelines.
-    n_over, census = _counted_census_plan(band_df, "__id", max_bucket_size)
-    cand = candidate_pairs(band_df, "__id", max_bucket_size,
-                           _census=(n_over, census))
-    if recover_oversized and n_over > 0:
-        cand = cand.unionByName(
-            _census_star_pairs(band_df, "__id", census)
-        ).dropDuplicates()
+    # and the oversized report — the same tail as dedup.near_dup_frames,
+    # so cap-site cost can never drift between the two pipelines.
+    cand, oversized, n_over = _census_candidates(
+        band_df, "__id", max_bucket_size, recover_oversized
+    )
     v1 = sig.select(
         F.col("__id").alias("id1"), F.col("__v").alias("v1"),
         F.col("__n").alias("n1"),
@@ -849,7 +841,7 @@ def srp_near_dup_frames(
     )
     return {
         "pairs": pairs,
-        "oversized": _census_report(census),
+        "oversized": oversized,
         # counted by the census already — the near_dup_frames contract
         "n_oversized": n_over,
     }
@@ -895,11 +887,12 @@ def srp_ref_index_frames(
 
     Bounded per-key state (the r8 form collect_list'd the full bucket
     before slicing): cap-smallest-ids via the two-phase
-    dedup.capped_bucket_members — count-only hash agg finds the rare
+    dedup.capped_bucket_members — one count+min census finds the rare
     oversized buckets, only their members pay the spillable row_number
     sort, the common ≤cap buckets pass through a broadcast anti-join
     (r9 verdict ask #1: the r9 row_number form sorted EVERY bucket);
-    oversized detection via count+min aggregates. The cap is per key,
+    ``oversized`` IS that census (no second aggregation, no job to
+    read when it was collected). The cap is per key,
     the SAME machinery the banded text index uses, so truncation
     semantics are shared and oracle-gated on the text path. The
     signature stage is checkpointed once per build (the cap's scans
@@ -924,23 +917,17 @@ def srp_ref_index_frames(
         ref_df, id_col, vec_col, dim, num_bits, seed, num_tables
     ))
     band, keys = _srp_tables(sig_ref, num_tables, "__id")
-    capped = capped_bucket_members(
+    capped, oversized = capped_bucket_members(
         band.select(*keys, "__id"), "__id", max_bucket_size,
         key_cols=tuple(keys),
-    ).select(*keys, F.col("__id").alias("id_ref"))
-    index = capped.join(
+    )
+    index = capped.select(*keys, F.col("__id").alias("id_ref")).join(
         sig_ref.select(
             F.col("__id").alias("id_ref"),
             F.col("__v").alias("v2"),
             F.col("__n").alias("n2"),
         ),
         "id_ref",
-    )
-    oversized = (
-        band.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("bucket_n"),
-             F.min("__id").alias("anchor_id"))
-        .filter(F.col("bucket_n") > max_bucket_size)
     )
     return {"index": index, "oversized": oversized, "num_bits": num_bits,
             "num_tables": num_tables}

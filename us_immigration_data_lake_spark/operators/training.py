@@ -105,6 +105,120 @@ def hashed_token_features(
     return feats.unionByName(bias)
 
 
+def _train_ovr_hashed(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    label_col: str,
+    classes: list[int],
+    num_buckets: int,
+    rounds: int,
+    lr_den: int,
+    decay: bool,
+) -> dict[tuple[int, int], int]:
+    """The one GD loop behind both trainers: an independent
+    hard-sigmoid head per class k in ``classes`` with target
+    ``label == k``, over ONE shared hashed feature frame. Returns the
+    final weights ``{(k, bucket): w_pm}`` ({} when no document is
+    labeled). The binary trainer is the single head k = 1 (its 0/1
+    labels make ``label == 1`` the label itself), so both run the
+    exact integer spec of train_logreg_hashed's docstring."""
+    if rounds < 1:
+        raise ValueError(f"rounds must be >= 1, got {rounds}")
+    if lr_den < 1:
+        raise ValueError(f"lr_den must be >= 1, got {lr_den}")
+    spark = df.sparkSession
+    # NULL labels are EXCLUDED from the training set (not just from the
+    # gradient): a NULL y makes the error term NULL, which F.sum would
+    # silently drop while the row still counted in n — shrinking every
+    # update with no error raised (r8 advisor). Filtering here keeps n,
+    # the features, and the gradient consistent: unlabeled docs simply
+    # don't participate.
+    labels = (
+        df.filter(
+            F.col(text_col).isNotNull() & F.col(label_col).isNotNull()
+        )
+        .select(F.col(id_col), F.col(label_col).cast("long").alias("__y"))
+    )
+    feats = hashed_token_features(df, id_col, text_col, num_buckets)
+    class_arr = F.array(*[F.lit(k).cast("long") for k in classes])
+
+    # EAGER localCheckpoint, not cache() (r13 wrong-results root-cause,
+    # see hashed_token_features): a cached feature frame is an eviction
+    # away from re-planning as the raw union lineage, whose falsely
+    # co-partitioned shape double-counted every gradient — a routine
+    # event under executor memory pressure at corpus scale (and
+    # reproduced locally with a concurrent clearCache()). The
+    # checkpoint truncates lineage to a LogicalRDD: the iteration reads
+    # materialized rows, cannot be silently re-derived mid-train, and
+    # every downstream aggregate plans its own exchange. The scope
+    # releases both once the model is driver-held rows.
+    with storage.scope():
+        labels = storage.checkpoint(labels)
+        feats = storage.checkpoint(feats)
+        n = labels.count()
+        w: dict[tuple[int, int], int] = {}
+        if n == 0:
+            return w
+        target = F.lit(4_000_000) * (F.col("__y") == F.col("__k")).cast("long")
+        for r in range(rounds):
+            m = lr_den * 4 * n * ((r + 1) if decay else 1)
+            if not w:
+                # all weights are exactly 0 (round 0, always) ⇒ every
+                # logit is exactly 0 and p_qm = clamp(0 + 2e6) = 2e6 —
+                # the whole z pass (a feats scan + broadcast join +
+                # groupBy) computes a constant. Emit the identical
+                # error frame straight from labels instead (r15;
+                # guide §1.2 "don't compute things you throw away").
+                # Every labeled doc has the intercept feature row, so
+                # the skipped inner join dropped no rows.
+                err = labels.withColumn("__k", F.explode(class_arr)).select(
+                    F.col(id_col),
+                    F.col("__k"),
+                    (target - F.lit(2_000_000)).alias("__e"),
+                )
+            else:
+                wdf = local_frame(
+                    spark,
+                    [(k, b, v) for (k, b), v in w.items()],
+                    "__k long, bucket long, __w long",
+                )
+                z = (
+                    feats.withColumn("__k", F.explode(class_arr))
+                    .join(F.broadcast(wdf), ["__k", "bucket"], "left")
+                    .groupBy(id_col, "__k")
+                    .agg(
+                        F.sum(
+                            F.coalesce(F.col("__w"), F.lit(0)) * F.col("cnt")
+                        ).alias("__z")
+                    )
+                )
+                err = labels.join(z, id_col).select(
+                    F.col(id_col),
+                    F.col("__k"),
+                    (
+                        target
+                        - F.least(
+                            F.lit(4_000_000),
+                            F.greatest(
+                                F.lit(0), F.col("__z") + F.lit(2_000_000)
+                            ),
+                        )
+                    ).alias("__e"),
+                )
+            grad = (
+                feats.join(err, id_col)
+                .groupBy("__k", "bucket")
+                .agg(F.sum(F.col("__e") * F.col("cnt")).alias("__g"))
+                .collect()  # model-sized: <= len(classes)*(num_buckets+1)
+            )
+            for row in grad:
+                # python // is floor division == the SQL pmod formula
+                key = (row["__k"], row["bucket"])
+                w[key] = w.get(key, 0) + row["__g"] // m
+        return w
+
+
 def train_logreg_hashed(
     df: DataFrame,
     id_col: str,
@@ -133,95 +247,17 @@ def train_logreg_hashed(
 
     The /4n folds the qm->pm unit change and the mean-gradient
     normalization into one exact floor division. ``label_col`` must be
-    0/1. Every quantity is integer, so a pure-Python replay (and the
-    q203 SQL oracle) matches bit-for-bit — tests/test_training.py."""
-    if rounds < 1:
-        raise ValueError(f"rounds must be >= 1, got {rounds}")
-    if lr_den < 1:
-        raise ValueError(f"lr_den must be >= 1, got {lr_den}")
-    spark = df.sparkSession
-    # NULL labels are EXCLUDED from the training set (not just from the
-    # gradient): a NULL y makes the error term NULL, which F.sum would
-    # silently drop while the row still counted in n — shrinking every
-    # update with no error raised (r8 advisor). Filtering here keeps n,
-    # the features, and the gradient consistent: unlabeled docs simply
-    # don't participate.
-    labels = (
-        df.filter(
-            F.col(text_col).isNotNull() & F.col(label_col).isNotNull()
-        )
-        .select(F.col(id_col), F.col(label_col).cast("long").alias("__y"))
+    0/1 — the model is the class-1 head of the one-vs-rest loop
+    (_train_ovr_hashed). Every quantity is integer, so a pure-Python
+    replay (and the q203 SQL oracle) matches bit-for-bit —
+    tests/test_training.py."""
+    w = _train_ovr_hashed(df, id_col, text_col, label_col, [1],
+                          num_buckets, rounds, lr_den, decay)
+    return local_frame(
+        df.sparkSession,
+        [(b, v) for (_, b), v in sorted(w.items())],
+        "bucket long, w_pm long",
     )
-    feats = hashed_token_features(df, id_col, text_col, num_buckets)
-
-    # EAGER localCheckpoint, not cache() (r13 wrong-results root-cause,
-    # see hashed_token_features): a cached feature frame is an eviction
-    # away from re-planning as the raw union lineage, whose falsely
-    # co-partitioned shape double-counted every gradient — a routine
-    # event under executor memory pressure at corpus scale (and
-    # reproduced locally with a concurrent clearCache()). The
-    # checkpoint truncates lineage to a LogicalRDD: the iteration reads
-    # materialized rows, cannot be silently re-derived mid-train, and
-    # every downstream aggregate plans its own exchange. The scope
-    # releases both once the model is driver-held rows.
-    with storage.scope():
-        labels = storage.checkpoint(labels)
-        feats = storage.checkpoint(feats)
-        n = labels.count()
-        if n == 0:
-            return local_frame(spark, [], "bucket long, w_pm long")
-        w: dict[int, int] = {}
-        for r in range(rounds):
-            m = lr_den * 4 * n * ((r + 1) if decay else 1)
-            if not w:
-                # all weights are exactly 0 (round 0, always) ⇒ every
-                # logit is exactly 0 and p_qm = clamp(0 + 2e6) = 2e6 —
-                # the whole z pass (a feats scan + broadcast join +
-                # groupBy) computes a constant. Emit the identical
-                # error frame straight from labels instead (r15;
-                # guide §1.2 "don't compute things you throw away").
-                # Every labeled doc has the intercept feature row, so
-                # the skipped inner join dropped no rows.
-                err = labels.select(
-                    F.col(id_col),
-                    (
-                        F.lit(4_000_000) * F.col("__y") - F.lit(2_000_000)
-                    ).alias("__e"),
-                )
-            else:
-                wdf = local_frame(spark, list(w.items()), "bucket long, __w long")
-                z = (
-                    feats.join(F.broadcast(wdf), "bucket", "left")
-                    .groupBy(id_col)
-                    .agg(
-                        F.sum(
-                            F.coalesce(F.col("__w"), F.lit(0)) * F.col("cnt")
-                        ).alias("__z")
-                    )
-                )
-                err = labels.join(z, id_col).select(
-                    F.col(id_col),
-                    (
-                        F.lit(4_000_000) * F.col("__y")
-                        - F.least(
-                            F.lit(4_000_000),
-                            F.greatest(
-                                F.lit(0), F.col("__z") + F.lit(2_000_000)
-                            ),
-                        )
-                    ).alias("__e"),
-                )
-            grad = (
-                feats.join(err, id_col)
-                .groupBy("bucket")
-                .agg(F.sum(F.col("__e") * F.col("cnt")).alias("__g"))
-                .collect()  # model-sized: <= num_buckets + 1 rows
-            )
-            for row in grad:
-                # python // is floor division == the SQL pmod formula
-                w[row["bucket"]] = w.get(row["bucket"], 0) + row["__g"] // m
-        return local_frame(spark, sorted(w.items()), "bucket long, w_pm long")
-
 
 
 def train_multinomial_logreg_hashed(
@@ -259,95 +295,19 @@ def train_multinomial_logreg_hashed(
     no extra shuffle key), the broadcast weight join carries (class,
     bucket), and the gradient groupBy is (class, bucket) with a
     model-sized collect (<= num_classes * (num_buckets+1) rows). k
-    rounds = k aggregate passes over the cached feature frame — the
-    per-round cost is the binary trainer's with a K× map-side fan-out,
-    not K separate training jobs."""
-    if rounds < 1:
-        raise ValueError(f"rounds must be >= 1, got {rounds}")
-    if lr_den < 1:
-        raise ValueError(f"lr_den must be >= 1, got {lr_den}")
+    rounds = k aggregate passes over the checkpointed feature frame —
+    the per-round cost is the binary trainer's with a K× map-side
+    fan-out, not K separate training jobs."""
     if num_classes < 2:
         raise ValueError(f"num_classes must be >= 2, got {num_classes}")
-    spark = df.sparkSession
-    labels = (
-        df.filter(
-            F.col(text_col).isNotNull() & F.col(label_col).isNotNull()
-        )
-        .select(F.col(id_col), F.col(label_col).cast("long").alias("__y"))
+    w = _train_ovr_hashed(df, id_col, text_col, label_col,
+                          list(range(num_classes)), num_buckets, rounds,
+                          lr_den, decay)
+    return local_frame(
+        df.sparkSession,
+        [(k, b, v) for (k, b), v in sorted(w.items())],
+        "class long, bucket long, w_pm long",
     )
-    feats = hashed_token_features(df, id_col, text_col, num_buckets)
-    classes = F.array(*[F.lit(k).cast("long") for k in range(num_classes)])
-
-    # eager localCheckpoint, not cache() — same wrong-results
-    # root-cause as train_logreg_hashed above
-    with storage.scope():
-        labels = storage.checkpoint(labels)
-        feats = storage.checkpoint(feats)
-        n = labels.count()
-        if n == 0:
-            return local_frame(spark, [], "class long, bucket long, w_pm long")
-        w: dict[tuple[int, int], int] = {}
-        for r in range(rounds):
-            m = lr_den * 4 * n * ((r + 1) if decay else 1)
-            if not w:
-                # round 0: all-zero weights ⇒ every per-class logit is
-                # exactly 0 ⇒ p_qm = 2e6 — skip the constant z pass
-                # (see train_logreg_hashed; same exact arithmetic, the
-                # K-way fan-out moves onto the labels frame)
-                err = labels.withColumn("__k", F.explode(classes)).select(
-                    F.col(id_col),
-                    F.col("__k"),
-                    (
-                        F.lit(4_000_000)
-                        * (F.col("__y") == F.col("__k")).cast("long")
-                        - F.lit(2_000_000)
-                    ).alias("__e"),
-                )
-            else:
-                wdf = local_frame(
-                    spark,
-                    [(k, b, v) for (k, b), v in w.items()],
-                    "__k long, bucket long, __w long",
-                )
-                z = (
-                    feats.withColumn("__k", F.explode(classes))
-                    .join(F.broadcast(wdf), ["__k", "bucket"], "left")
-                    .groupBy(id_col, "__k")
-                    .agg(
-                        F.sum(
-                            F.coalesce(F.col("__w"), F.lit(0)) * F.col("cnt")
-                        ).alias("__z")
-                    )
-                )
-                err = labels.join(z, id_col).select(
-                    F.col(id_col),
-                    F.col("__k"),
-                    (
-                        F.lit(4_000_000)
-                        * (F.col("__y") == F.col("__k")).cast("long")
-                        - F.least(
-                            F.lit(4_000_000),
-                            F.greatest(
-                                F.lit(0), F.col("__z") + F.lit(2_000_000)
-                            ),
-                        )
-                    ).alias("__e"),
-                )
-            grad = (
-                feats.join(err, id_col)
-                .groupBy("__k", "bucket")
-                .agg(F.sum(F.col("__e") * F.col("cnt")).alias("__g"))
-                .collect()  # model-sized: <= num_classes*(num_buckets+1)
-            )
-            for row in grad:
-                key = (row["__k"], row["bucket"])
-                w[key] = w.get(key, 0) + row["__g"] // m
-        return local_frame(
-            spark,
-            [(k, b, v) for (k, b), v in sorted(w.items())],
-            "class long, bucket long, w_pm long",
-        )
-
 
 
 def naive_bayes_model(
