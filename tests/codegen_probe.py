@@ -1,14 +1,14 @@
-"""r15 codegen-fallback probe (verdict What's wrong #2): run named
+"""Codegen-fallback probe: run named
 registry queries in a FRESH subprocess JVM with log level WARN and
 grep its stderr for whole-stage-codegen compile failures ("Code grows
 beyond 64 KB" → janino CompileException → interpreted fallback).
 
-    python scripts/r15_codegen_probe.py q239_srp_multi_table_pairs ...
+    python tests/codegen_probe.py q239_srp_multi_table_pairs ...
 
 Prints one line per query: name, rows, fallback hit count, and the
 distinct failure signatures seen. Exit 1 if any query hit a fallback.
 The suite gate (tests/test_codegen_gate.py) wraps the same mechanism;
-this script is the standalone reproducer the r14 judge used.
+this script is its standalone reproducer.
 """
 
 from __future__ import annotations

@@ -113,10 +113,11 @@ def pytest_collection_finish(session):
     for hook in hooks:
         # each sweep runs on its own newSession() CLONE (shared
         # SparkContext + CacheManager, PRIVATE SQLConf and temp-view
-        # catalog): registry builders _tune() the session to the
-        # engine's 32 shuffle partitions, which on the shared session
-        # flipped the foreground tests' conf (8) mid-suite for every
-        # concurrent test (r13 advisor). Cache state is still global —
+        # catalog): every registered query fn tunes its session
+        # (_register wraps each body with _tune) to the engine's 32
+        # shuffle partitions, which on the shared session flipped the
+        # foreground tests' conf (8) mid-suite for every concurrent
+        # test (r13 advisor). Cache state is still global —
         # tests that assert on it join the sweeps first
         # (wait_for_background_sweeps).
         hook(spark.newSession(), nodeids, _SWEEP_EXECUTOR)

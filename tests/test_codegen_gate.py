@@ -20,7 +20,7 @@ and asserts the stderr carries ZERO compile-failure signatures
 64 KB" / "Whole-stage codegen disabled").
 
 Mechanism is single-sourced with the judge's standalone reproducer:
-scripts/r15_codegen_probe.py (same child script, same signature
+tests/codegen_probe.py (same child script, same signature
 list). A fresh JVM is required — a warm suite session has already
 compiled-and-cached the generated classes, and log capture of an
 in-process JVM's stderr is unreliable under pytest capture."""
@@ -33,8 +33,7 @@ import os
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 _spec = importlib.util.spec_from_file_location(
-    "r15_codegen_probe",
-    os.path.join(REPO, "scripts", "r15_codegen_probe.py"),
+    "codegen_probe", os.path.join(REPO, "tests", "codegen_probe.py"),
 )
 _probe = importlib.util.module_from_spec(_spec)
 _spec.loader.exec_module(_probe)

@@ -5,6 +5,7 @@ plumbing must round-trip bytes through Arrow batches."""
 
 from __future__ import annotations
 
+import re
 import time
 
 import pytest
@@ -3772,13 +3773,9 @@ def test_census_plan_matches_legacy_aggregates(mega_band):
     assert census.columns == dd.oversized_buckets(
         mega_band, "doc_id", 50).columns
 
-    # star pairs == legacy anchor-star recovery
+    # the legacy anchor-star recovery the census anchors must reproduce
     star = {(r.id1, r.id2) for r in
-            dd._census_star_pairs(mega_band, "doc_id", census).collect()}
-    legacy_star = {(r.id1, r.id2) for r in
-                   dd.oversized_bucket_star_pairs(
-                       mega_band, "doc_id", 50).collect()}
-    assert star == legacy_star
+            dd.oversized_bucket_star_pairs(mega_band, "doc_id", 50).collect()}
     assert star == {(0, i) for i in range(1, 5000)}
 
     # the self-path tail's candidates == candidate_pairs, and its
@@ -3798,6 +3795,30 @@ def test_census_plan_matches_legacy_aggregates(mega_band):
     # recover_oversized adds exactly the anchor-star pairs
     recovered, _, _ = dd._census_candidates(mega_band, "doc_id", 50, True)
     assert {(r.id1, r.id2) for r in recovered.collect()} == fed | star
+
+
+def test_census_candidates_dedup_pairs_once(spark):
+    """With recover_oversized the bucket expansion and the anchor-star
+    pairs are unioned raw and deduplicated once: the optimized plan
+    holds exactly one (id1, id2) Aggregate (the earlier form had
+    three: the expansion's, the star pairs' and the union's), and the
+    rows are the expansion pairs plus the reference anchor-star
+    recovery. Both bands plant the same 60-member and 3-member
+    buckets, so every pair arrives twice before the dedup."""
+    rows = [(b, 7, i) for b in (0, 1) for i in range(60)] + [
+        (b, 9, j) for b in (0, 1) for j in (100, 101, 102)
+    ]
+    band = spark.createDataFrame(rows, ["band_idx", "band_hash", "doc_id"])
+    cand, _, n_over = dd._census_candidates(band, "doc_id", 50, True)
+    assert n_over == 2
+    plan = cand._jdf.queryExecution().optimizedPlan().toString()
+    assert len(re.findall(r"Aggregate \[id1#\d+L?, id2#\d+L?\]", plan)) == 1
+    got = [(r.id1, r.id2) for r in cand.collect()]
+    star = {(r.id1, r.id2) for r in
+            dd.oversized_bucket_star_pairs(band, "doc_id", 50).collect()}
+    assert star == {(0, i) for i in range(1, 60)}
+    assert len(got) == len(set(got))
+    assert set(got) == star | {(100, 101), (100, 102), (101, 102)}
 
 
 def test_census_empty_case_is_local_and_lazy_free(spark):

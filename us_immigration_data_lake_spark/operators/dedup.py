@@ -278,27 +278,6 @@ def oversized_bucket_star_pairs(
     )
 
 
-def _census_star_pairs(
-    band_df: DataFrame, id_col: str, census: DataFrame
-) -> DataFrame:
-    """oversized_bucket_star_pairs, fed from a precomputed
-    _counted_census_plan census instead of re-aggregating the band
-    frame for its anchors — the census's ``anchor_id`` IS min(id) per
-    oversized bucket. One equi-join (broadcast when the census rode
-    the LocalRelation/hint ladder) fans each mega-bucket member out
-    against its anchor; same linear-per-bucket bound and downstream
-    Jaccard verification as the standalone form."""
-    anchors = census.select(
-        "band_idx", "band_hash", F.col("anchor_id").alias("id1")
-    )
-    return (
-        band_df.join(anchors, ["band_idx", "band_hash"])
-        .select("id1", F.col(id_col).alias("id2"))
-        .filter(F.col("id1") < F.col("id2"))
-        .dropDuplicates()
-    )
-
-
 # Oversized-key sets up to this many rows ride an explicit broadcast
 # (~2M (int, long) keys ≈ the session's 64 MB autoBroadcastJoinThreshold
 # in unsafe-row bytes); beyond it the cap joins fall back to unhinted
@@ -455,16 +434,23 @@ def _census_candidates(
             ),
         )
     )
-    cand = (
-        buckets.select(F.explode(pairs_arr).alias("p"))
-        .select("p.id1", "p.id2")
-        .dropDuplicates()
+    cand = buckets.select(F.explode(pairs_arr).alias("p")).select(
+        "p.id1", "p.id2"
     )
     if recover_oversized and n_over > 0:
+        # the census's anchor_id IS min(id) per oversized bucket: one
+        # equi-join fans each mega-bucket member out against its anchor
+        anchors = census.select(
+            "band_idx", "band_hash", F.col("anchor_id").alias("id1")
+        )
         cand = cand.unionByName(
-            _census_star_pairs(band_df, id_col, census)
-        ).dropDuplicates()
-    return cand, census, n_over
+            band_df.join(anchors, ["band_idx", "band_hash"])
+            .select("id1", F.col(id_col).alias("id2"))
+            .filter(F.col("id1") < F.col("id2"))
+        )
+    # one pair-key dedup over the union: a pair shared by several bands
+    # (or by the expansion and the stars) collapses here, once
+    return cand.dropDuplicates(), census, n_over
 
 
 def candidate_pairs(

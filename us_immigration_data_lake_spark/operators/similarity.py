@@ -68,7 +68,7 @@ UNROLL_MAX_DIM = 256
 # join stage's consume method), and when that method fails to compile
 # Spark silently interprets the ENTIRE stage — the r6 q181 4.7×-cost
 # class. One table of 12 bits at dim 64 (768 terms) hits it exactly
-# like three tables of 4. Measured r15 (scripts/r15_codegen_probe.py,
+# like three tables of 4. Measured r15 (tests/codegen_probe.py,
 # both the checkpoint context and the join-inlined cross context):
 # 512 terms compile, 768 fail — in both contexts and regardless of
 # the (L, bits) split. 512 is therefore the measured ceiling, kept

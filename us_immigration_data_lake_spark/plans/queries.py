@@ -19,10 +19,17 @@ Oracle-parity design rules (learned constraints, applied everywhere):
 5. Timestamps never cross the compare boundary raw: group keys become
    DATE or formatted strings (UTC session timezone, set per query).
 6. Deterministic top-k only: every ORDER BY ends with a unique key.
+7. An oracle that replays an engine chain composes the shared fragment
+   builders (_TOKENS_SQL, _jaccard_sql, _srp_bucket_sql,
+   _capped_candidates_sql, _closure_sql, _keep_sql, _materialized, the
+   MinHash prefix/verify pair, ...) and never copies their SQL; copies
+   drift. tests/test_registry_fragments.py scans for copies.
 """
 
 from __future__ import annotations
 
+import functools
+import re
 from dataclasses import dataclass, field
 from typing import Callable
 
@@ -67,12 +74,21 @@ def _register(
     bench: bool = False,
     result_schema: str | None = None,
 ):
+    """Register ``fn`` under ``name``. The registered (and returned)
+    function tunes the session (``_tune``) before the body runs, so a
+    query is deterministic on a foreign session and a direct call of
+    the decorated name tunes too."""
     def deco(fn):
+        @functools.wraps(fn)
+        def tuned(spark: SparkSession, sf_dir: str) -> DataFrame:
+            _tune(spark)
+            return fn(spark, sf_dir)
+
         QUERIES[name] = QuerySpec(
-            fn=fn, oracle=oracle, tags=tags, bench=bench,
+            fn=tuned, oracle=oracle, tags=tags, bench=bench,
             result_schema=result_schema,
         )
-        return fn
+        return tuned
     return deco
 
 
@@ -112,6 +128,208 @@ def _cents(col) -> F.Column:
 
 
 # ---------------------------------------------------------------------------
+# Shared DuckDB oracle fragments (rule 7). An oracle that replays an
+# engine chain composes these builders instead of copying their SQL,
+# so the oracles of one operator family cannot drift apart.
+# ---------------------------------------------------------------------------
+
+# the engine's whitespace tokenizer over a ``text`` column: lower,
+# trim, split on runs of whitespace, drop empty tokens
+_TOKENS_SQL = (
+    r"list_filter(string_split_regex(trim(lower(text)), '\s+'), t -> t <> '')"
+)
+# dedup.shingles(n=2) of a ``toks`` list: the distinct 2-grams; a doc
+# shorter than 2 tokens contributes its whole normalized text
+_SHINGLES_SQL = """CASE WHEN len(toks) >= 2
+                  THEN list_distinct([array_to_string(toks[i:i+1], ' ')
+                                      for i in range(1, len(toks))])
+                  ELSE [array_to_string(toks, ' ')] END"""
+# hashed shingle sets for the verify stage (dedup.verify_jaccard_hashed)
+_HS_SQL = "hs AS (SELECT doc_id, list(h) AS hs FROM hx GROUP BY doc_id)"
+
+
+def _jaccard_sql(a: str, b: str) -> str:
+    """Set Jaccard of list expressions ``a`` and ``b`` as a DOUBLE
+    ratio. One operand order everywhere, so every oracle's doubles are
+    bit-identical to the engine's."""
+    return (
+        f"CAST(len(list_intersect({a}, {b})) AS DOUBLE)"
+        f" / (len({a}) + len({b}) - len(list_intersect({a}, {b})))"
+    )
+
+
+def _materialized(sql: str, *names: str) -> str:
+    """Hint the CTEs ``names`` of ``sql`` AS MATERIALIZED. DuckDB
+    inlines a CTE once per reference, so a CTE that several later
+    stages (or count subqueries) read re-executes its whole chain per
+    reader; q186 measured 135 s → 0.12 s at sf0.01 with its hints."""
+    for name in names:
+        sql = re.sub(
+            rf"(?<![A-Za-z_]){name} AS \(", f"{name} AS MATERIALIZED (", sql
+        )
+    return sql
+
+
+@functools.lru_cache(maxsize=None)
+def _srp_bucket_sql(num_bits: int, seed: int = 42) -> str:
+    """The SRP bucket of a ``v`` DOUBLE[] column as a BIGINT expression,
+    hash-for-hash with similarity.srp_planes. The seed-fixed plane
+    matrix is embedded as full-precision repr literals (shortest
+    round-trip parses back to the exact double), and each dot product
+    is the same left fold Spark's aggregate/zip_with runs (SQL ``+`` is
+    left-associative; IEEE add/mul are correctly rounded), so every
+    sign bit is identical with no tolerance."""
+    planes = sim_ops.srp_planes(EMBEDDING_DIM, num_bits=num_bits, seed=seed)
+    bits = " + ".join(
+        "(CASE WHEN ({}) > 0 THEN {} ELSE 0 END)".format(
+            " + ".join(
+                f"v[{j + 1}]*({float(planes[i][j])!r})"
+                for j in range(EMBEDDING_DIM)
+            ),
+            1 << i,
+        )
+        for i in range(num_bits)
+    )
+    return f"CAST({bits} AS BIGINT)"
+
+
+def _capped_candidates_sql(
+    src: str, id_col: str, keys: tuple[str, ...], cap: int, prefix: str = ""
+) -> str:
+    """Capped-LSH candidate pairs, the oracle twin of
+    dedup._census_candidates(recover_oversized=True): buckets of
+    ``src`` keyed by ``keys`` with 2..cap members emit all their pairs,
+    larger buckets emit anchor-star pairs (bucket-min id ↔ member).
+    Emits the CTEs ``{prefix}sizes`` (keys, n), ``{prefix}small_pairs``,
+    ``{prefix}anchors``, ``{prefix}star_pairs`` and ``{prefix}cand``
+    (id1, id2); the UNION in ``cand`` is the one pair dedup."""
+    on = " AND ".join(f"s.{k} = x.{k}" for k in keys)
+    return f"""{prefix}sizes AS (
+      SELECT {", ".join(keys)}, COUNT(*) AS n
+      FROM {src} GROUP BY {", ".join(keys)}
+    ), {prefix}small_pairs AS (
+      SELECT x.{id_col} AS id1, y.{id_col} AS id2
+      FROM {src} x
+      JOIN {src} y ON {" AND ".join(f"x.{k} = y.{k}" for k in keys)}
+               AND x.{id_col} < y.{id_col}
+      JOIN {prefix}sizes s ON {on}
+      WHERE s.n BETWEEN 2 AND {cap}
+    ), {prefix}anchors AS (
+      SELECT {", ".join(f"x.{k}" for k in keys)}, MIN(x.{id_col}) AS anchor
+      FROM {src} x JOIN {prefix}sizes s ON {on}
+      WHERE s.n > {cap}
+      GROUP BY {", ".join(f"x.{k}" for k in keys)}
+    ), {prefix}star_pairs AS (
+      SELECT an.anchor AS id1, x.{id_col} AS id2
+      FROM {prefix}anchors an
+      JOIN {src} x ON {" AND ".join(f"x.{k} = an.{k}" for k in keys)}
+      WHERE an.anchor < x.{id_col}
+    ), {prefix}cand AS (
+      SELECT id1, id2 FROM {prefix}small_pairs
+      UNION
+      SELECT id1, id2 FROM {prefix}star_pairs
+    )"""
+
+
+def _closure_sql(*pairs: str) -> str:
+    """Connected components of the undirected pair graph over the
+    (id1, id2) CTEs ``pairs``: the recursive transitive closure the
+    engine's iterative min-label propagation must agree with. Emits
+    the CTEs ``edges``, ``reach`` and ``labels`` (id, cluster = the
+    component's smallest id); ids in no pair have no label."""
+    selects = [f"SELECT id1 AS src, id2 AS dst FROM {pairs[0]}",
+               f"SELECT id2, id1 FROM {pairs[0]}"]
+    for p in pairs[1:]:
+        selects += [f"SELECT id1, id2 FROM {p}", f"SELECT id2, id1 FROM {p}"]
+    union = "\n      UNION ".join(selects)
+    return f"""edges AS MATERIALIZED (
+      {union}
+    ), reach AS (
+      SELECT src, dst FROM edges
+      UNION
+      SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
+      WHERE e.dst <> r.src
+    ), labels AS MATERIALIZED (
+      SELECT src AS id, LEAST(src, MIN(dst)) AS cluster
+      FROM reach GROUP BY src
+    )"""
+
+
+def _keep_sql(id_col: str, src: str) -> str:
+    """Every id of the subquery ``src`` with its component label and
+    keep flag (dedup_survivors: the smallest id of each component
+    survives), over the ``labels`` CTE of _closure_sql."""
+    return f"""SELECT d.{id_col},
+           COALESCE(l.cluster, d.{id_col}) AS cluster,
+           d.{id_col} = COALESCE(l.cluster, d.{id_col}) AS keep
+    FROM ({src}) d
+    LEFT JOIN labels l ON d.{id_col} = l.id"""
+
+
+def _survivors_sql(id_col: str, src: str) -> str:
+    """The ids of CTE ``src`` that survive near-dup dedup over the
+    ``labels`` CTE of _closure_sql (unlabeled, or their component's
+    smallest id)."""
+    return f"""SELECT s.{id_col} FROM {src} s
+      LEFT JOIN labels l ON s.{id_col} = l.id
+      WHERE COALESCE(l.cluster, s.{id_col}) = s.{id_col}"""
+
+
+def _portable_minhash_prefix_sql(where: str, num_hashes: int, bands: int) -> str:
+    """The SHARED DuckDB replay of the portable MinHash pipeline's
+    front half (operators/dedup.py: shingles → hashed shingle sets →
+    signatures → band keys), parameterized exactly like the operator —
+    one definition for the q20 / q55 / q182 oracles instead of three
+    drifting copies (r5 review finding). Emits CTE bodies ``tok, sh,
+    hx, sig, bnd``; the caller appends its candidate CTE and the
+    shared verify tail (_minhash_verify_sql). The band key is the raw
+    comma-joined signature slice (lsh_bands portable mode; a 1-row
+    band degenerates to the bare value, matching q55's original)."""
+    rows = num_hashes // bands
+    mh_cols = ",\n             ".join(
+        f"MIN(('0x' || substr(md5('{i}|' || CAST(h AS VARCHAR)), 1, 15))::BIGINT) AS mh{i}"
+        for i in range(num_hashes)
+    )
+    band_selects = "\n      UNION ALL ".join(
+        "SELECT doc_id, {b} AS band_idx, {key} AS band_key FROM sig".format(
+            b=b,
+            key=" || ',' || ".join(
+                f"CAST(mh{b * rows + r} AS VARCHAR)" for r in range(rows)
+            ),
+        )
+        for b in range(bands)
+    )
+    return f"""tok AS (
+      SELECT doc_id, {_TOKENS_SQL} AS toks FROM documents{where}
+    ), sh AS MATERIALIZED (
+      SELECT doc_id, {_SHINGLES_SQL} AS shingles FROM tok
+    ), hx AS (
+      SELECT DISTINCT doc_id, ('0x' || substr(md5(s), 1, 15))::BIGINT AS h
+      FROM (SELECT doc_id, unnest(shingles) AS s FROM sh)
+    ), sig AS (
+      SELECT doc_id,
+             {mh_cols}
+      FROM hx GROUP BY doc_id
+    ), bnd AS (
+      {band_selects}
+    )"""
+
+
+def _minhash_verify_sql(threshold: float) -> str:
+    """Shared verify tail: exact Jaccard on the hashed shingle sets
+    for a candidate CTE named ``cand`` (id1, id2), mirroring
+    dedup.py:verify_jaccard_hashed."""
+    return f""", {_HS_SQL}
+    SELECT * FROM (
+      SELECT c.id1, c.id2, {_jaccard_sql("h1.hs", "h2.hs")} AS jaccard
+      FROM cand c
+      JOIN hs h1 ON c.id1 = h1.doc_id
+      JOIN hs h2 ON c.id2 = h2.doc_id
+    ) WHERE jaccard >= {threshold}
+    """
+
+
+# ---------------------------------------------------------------------------
 # Q01 — pricing summary (TPC-H Q1 shape; flagship).
 # Re-expresses the reference's grouped-aggregate pattern (etl.py:169-183,
 # 355-358) over the fact table: filter → groupBy → partial+final hash agg.
@@ -139,7 +357,6 @@ def _cents(col) -> F.Column:
     bench=True,
 )
 def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     li = _t(spark, sf_dir, "lineitem")
     qty = F.col("l_quantity").cast("long")
     base_c = _cents(F.col("l_extendedprice"))
@@ -189,7 +406,6 @@ def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,
 )
 def q02_date_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     li = _t(spark, sf_dir, "lineitem")
     d = F.to_date("l_shipdate")
     return (
@@ -231,7 +447,6 @@ def q02_date_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,
 )
 def q03_fact_stay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     li = _t(spark, sf_dir, "lineitem")
     orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
     joined = li.join(orders, li.l_orderkey == orders.o_orderkey, "inner")
@@ -271,7 +486,6 @@ def q03_fact_stay(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,
 )
 def q04_top_revenue_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     cust = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
     orders = _t(spark, sf_dir, "orders").filter(
         F.to_date("o_orderdate") < F.lit("1998-03-15").cast("date")
@@ -308,7 +522,6 @@ def q04_top_revenue_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("semi-join", "agg"),
 )
 def q05_priority_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     orders = _t(spark, sf_dir, "orders")
     heavy = _t(spark, sf_dir, "lineitem").filter(F.col("l_quantity") > 45)
     return (
@@ -333,7 +546,6 @@ def q05_priority_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("anti-join",),
 )
 def q06_customers_no_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     cust = _t(spark, sf_dir, "customer")
     orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
     return anti_join(cust, orders, cust.c_custkey == orders.o_custkey).select(
@@ -364,7 +576,6 @@ _SEGMENTS = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
     tags=("pivot", "broadcast-join"),
 )
 def q07_segment_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     cust = _t(spark, sf_dir, "customer")
     nation = _t(spark, sf_dir, "nation")
     return (
@@ -397,7 +608,6 @@ def q07_segment_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("broadcast-join", "left-join", "coalesce"),
 )
 def q08_nation_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     nation = _t(spark, sf_dir, "nation")
     region = _t(spark, sf_dir, "region")
     supp = (
@@ -441,7 +651,6 @@ def q08_nation_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,
 )
 def q09_top_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     orders = _t(spark, sf_dir, "orders")
     ranked = top_k_per_group(
         orders,
@@ -476,7 +685,6 @@ def q09_top_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("rollup",),
 )
 def q10_rollup_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     cust = _t(spark, sf_dir, "customer")
     nation = _t(spark, sf_dir, "nation")
     region = _t(spark, sf_dir, "region")
@@ -508,7 +716,6 @@ def q10_rollup_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("setops",),
 )
 def q11_setops_custkeys(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     cust_keys = _t(spark, sf_dir, "customer").select("c_custkey")
     order_keys = _t(spark, sf_dir, "orders").select(F.col("o_custkey").alias("c_custkey"))
     with_orders = cust_keys.intersect(order_keys).select(
@@ -538,7 +745,6 @@ def q11_setops_custkeys(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("agg", "distinct-agg"),
 )
 def q12_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     orders = _t(spark, sf_dir, "orders")
     total_c = _cents(F.col("o_totalprice"))
     return orders.groupBy("o_orderstatus").agg(
@@ -567,7 +773,6 @@ def q12_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("json", "agg"),
 )
 def q13_events_json(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     ev = load_events(spark, sf_dir)
     k = F.get_json_object("props", "$.k").cast("long")
     return ev.groupBy("event_type").agg(
@@ -597,7 +802,6 @@ def q13_events_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,
 )
 def q14_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     ev = load_events(spark, sf_dir)
     return (
         ev.groupBy(
@@ -633,7 +837,6 @@ def q14_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,
 )
 def q15_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents")
     return (
         docs.groupBy(F.md5(normalized_text(F.col("text"))).alias("fingerprint"))
@@ -669,7 +872,6 @@ def q15_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,
 )
 def q16_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents")
     tok = F.split(F.trim(F.col("text")), r"\s+")
     feat = docs.select(
@@ -723,7 +925,6 @@ def q16_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("textstats", "quality"),
 )
 def q17_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents")
     feats = ts_ops.text_features(docs, "doc_id", "text")
     scored = ts_ops.quality_score(feats)
@@ -768,7 +969,6 @@ _LANG_CASES_SQL = """
     tags=("textstats", "lang-id"),
 )
 def q18_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents")
     pred = ts_ops.lang_id(docs, "doc_id", "text")
     return pred.groupBy("lang", "predicted_lang").agg(F.count(F.lit(1)).alias("n"))
@@ -782,7 +982,7 @@ def q18_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "q19_ngram_jaccard",
-    oracle="""
+    oracle=f"""
     WITH sh AS (
       SELECT doc_id, lang,
              list_distinct([array_to_string(toks[i:i+2], ' ')
@@ -793,8 +993,7 @@ def q18_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
       WHERE len(toks) >= 3
     )
     SELECT a.doc_id AS id1, b.doc_id AS id2,
-           CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-             / (len(a.shingles) + len(b.shingles) - len(list_intersect(a.shingles, b.shingles)))
+           {_jaccard_sql("a.shingles", "b.shingles")}
              AS jaccard
     FROM sh a JOIN sh b ON a.lang = b.lang AND a.doc_id < b.doc_id
     WHERE len(list_intersect(a.shingles, b.shingles)) > 0
@@ -802,7 +1001,6 @@ def q18_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dedup", "jaccard"),
 )
 def q19_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
     tok = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
     sh = docs.select(
@@ -853,73 +1051,6 @@ def q19_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q20_HASHES, _Q20_BANDS = 24, 6
 
 
-def _portable_minhash_prefix_sql(where: str, num_hashes: int, bands: int) -> str:
-    """The SHARED DuckDB replay of the portable MinHash pipeline's
-    front half (operators/dedup.py: shingles → hashed shingle sets →
-    signatures → band keys), parameterized exactly like the operator —
-    one definition for the q20 / q55 / q182 oracles instead of three
-    drifting copies (r5 review finding). Emits CTE bodies ``tok, sh,
-    hx, sig, bnd``; the caller appends its candidate CTE and the
-    shared verify tail (_minhash_verify_sql). The band key is the raw
-    comma-joined signature slice (lsh_bands portable mode; a 1-row
-    band degenerates to the bare value, matching q55's original)."""
-    rows = num_hashes // bands
-    mh_cols = ",\n             ".join(
-        f"MIN(('0x' || substr(md5('{i}|' || CAST(h AS VARCHAR)), 1, 15))::BIGINT) AS mh{i}"
-        for i in range(num_hashes)
-    )
-    band_selects = "\n      UNION ALL ".join(
-        "SELECT doc_id, {b} AS band_idx, {key} AS band_key FROM sig".format(
-            b=b,
-            key=" || ',' || ".join(
-                f"CAST(mh{b * rows + r} AS VARCHAR)" for r in range(rows)
-            ),
-        )
-        for b in range(bands)
-    )
-    return f"""tok AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                         t -> t <> '') AS toks
-      FROM documents{where}
-    ), sh AS MATERIALIZED (
-      SELECT doc_id,
-             CASE WHEN len(toks) >= 2
-                  THEN list_distinct([array_to_string(toks[i:i+1], ' ')
-                                      for i in range(1, len(toks))])
-                  ELSE [array_to_string(toks, ' ')] END AS shingles
-      FROM tok
-    ), hx AS (
-      SELECT DISTINCT doc_id, ('0x' || substr(md5(s), 1, 15))::BIGINT AS h
-      FROM (SELECT doc_id, unnest(shingles) AS s FROM sh)
-    ), sig AS (
-      SELECT doc_id,
-             {mh_cols}
-      FROM hx GROUP BY doc_id
-    ), bnd AS (
-      {band_selects}
-    )"""
-
-
-def _minhash_verify_sql(threshold: float) -> str:
-    """Shared verify tail: exact Jaccard on the hashed shingle sets
-    for a candidate CTE named ``cand`` (id1, id2), mirroring
-    dedup.py:verify_jaccard_hashed."""
-    return f""", hs AS (
-      SELECT doc_id, list(h) AS hs FROM hx GROUP BY doc_id
-    )
-    SELECT * FROM (
-      SELECT c.id1, c.id2,
-             CAST(len(list_intersect(h1.hs, h2.hs)) AS DOUBLE)
-               / (len(h1.hs) + len(h2.hs) - len(list_intersect(h1.hs, h2.hs)))
-               AS jaccard
-      FROM cand c
-      JOIN hs h1 ON c.id1 = h1.doc_id
-      JOIN hs h2 ON c.id2 = h2.doc_id
-    ) WHERE jaccard >= {threshold}
-    """
-
-
 @_register(
     "q20_minhash_near_dups",
     oracle=f"""
@@ -933,7 +1064,6 @@ def _minhash_verify_sql(threshold: float) -> str:
     bench=True,
 )
 def q20_minhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents")
     # the synthetic corpus has no planted duplicates, so the jaccard
     # threshold is set where shared-vocabulary 2-gram overlap still
@@ -977,8 +1107,7 @@ _Q21_BIT_TERMS = "\n             + ".join(
     oracle=f"""
     WITH tok AS (
       SELECT doc_id,
-             unnest(list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                                t -> t <> '')) AS t
+             unnest({_TOKENS_SQL}) AS t
       FROM documents WHERE doc_id < 200
     ), h AS (
       SELECT doc_id, ('0x' || substr(md5(t), 1, 15))::BIGINT AS h FROM tok
@@ -994,7 +1123,6 @@ _Q21_BIT_TERMS = "\n             + ".join(
     tags=("dedup", "simhash"),
 )
 def q21_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
     return dedup_ops.simhash(docs, "doc_id", "text", portable=True)
 
@@ -1027,7 +1155,6 @@ def q21_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,
 )
 def q22_knn_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     # deliberately the HOF (dim=None) path: the unrolled fixed-dim dot
@@ -1056,7 +1183,6 @@ def q22_knn_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("similarity", "agg"),
 )
 def q23_embedding_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     emb = _t(spark, sf_dir, "embeddings")
     v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     norm = F.sqrt(F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x))
@@ -1092,20 +1218,10 @@ def _q24_oracle_sql() -> str:
     aggregate/zip_with uses (SQL + is left-associative; IEEE add/mul
     are correctly rounded), so every sign bit — and therefore every
     bucket — is bit-identical, no tolerance needed."""
-    planes = sim_ops.srp_planes(EMBEDDING_DIM, num_bits=6, seed=42)
-
-    def dot_expr(i: int) -> str:
-        return " + ".join(
-            f"v[{j + 1}]*({float(planes[i][j])!r})" for j in range(EMBEDDING_DIM)
-        )
-
-    bits = " + ".join(
-        f"(CASE WHEN ({dot_expr(i)}) > 0 THEN {1 << i} ELSE 0 END)"
-        for i in range(6)
-    )
+    bits = _srp_bucket_sql(6)
     return f"""
     WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    b AS (SELECT vec_id, v, CAST({bits} AS BIGINT) AS bucket FROM base),
+    b AS (SELECT vec_id, v, {bits} AS bucket FROM base),
     q AS (SELECT vec_id AS query_id, v AS qv, bucket FROM b WHERE vec_id < 10),
     c AS (SELECT vec_id AS neighbor_id, v AS cv, bucket FROM b),
     scored AS (
@@ -1131,7 +1247,6 @@ def _q24_oracle_sql() -> str:
     bench=True,
 )
 def q24_srp_lsh_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     emb = _t(spark, sf_dir, "embeddings")
     # plan-embedded width guard: if the dataset is ever regenerated at
     # a different dim, fail loudly instead of silently hashing padded
@@ -1171,7 +1286,6 @@ def q24_srp_lsh_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("multimodal", "binary"),
 )
 def q25_multimodal_bytes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents")
     media = mm_ops.text_as_media(docs, "doc_id", "text")
     return media.select(
@@ -1230,7 +1344,6 @@ def _sink_name(base: str) -> str:
     tags=("streaming", "window"),
 )
 def q26_stream_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     stream = read_event_stream(spark, sf_dir)
     return run_to_memory(tumbling_agg(stream, "1 hour"), _sink_name("q26_hourly"))
 
@@ -1269,7 +1382,6 @@ def q26_stream_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "session-window"),
 )
 def q27_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     stream = read_event_stream(spark, sf_dir)
     return run_to_memory(session_agg(stream, "10 minutes"), _sink_name("q27_sessions"))
 
@@ -1303,7 +1415,6 @@ def q27_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "stateful"),
 )
 def q28_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     stream = read_event_stream(spark, sf_dir)
     return run_to_memory(
         running_user_stats(stream), _sink_name("q28_stateful"), mode="update"
@@ -1346,7 +1457,6 @@ from us_immigration_data_lake_spark.operators.joins import as_of_join  # noqa: E
     tags=("asof-join", "events"),
 )
 def q29_asof_purchase_view(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     ev = load_events(spark, sf_dir).withColumn("ts_us", F.unix_micros("ts"))
     purchases = ev.filter(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts_us"
@@ -1383,7 +1493,6 @@ def q29_asof_purchase_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("cube",),
 )
 def q30_cube_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     orders = _t(spark, sf_dir, "orders")
     return orders.cube("o_orderstatus", "o_orderpriority").agg(
         F.count(F.lit(1)).alias("n"),
@@ -1421,7 +1530,6 @@ def q30_cube_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("functions", "strings", "arrays"),
 )
 def q31_scalar_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     part = _t(spark, sf_dir, "part")
     words = F.split(F.col("p_name"), " ")
     return part.select(
@@ -1463,7 +1571,6 @@ def q31_scalar_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sql", "subquery"),
 )
 def q32_sql_above_avg_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     from us_immigration_data_lake_spark.sources.catalog import Catalog
 
     Catalog(spark, sf_dir, tables=("orders",)).register_views(prefix="q32_")
@@ -1504,7 +1611,6 @@ def q32_sql_above_avg_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q33_window_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    _tune(spark)
     orders = _t(spark, sf_dir, "orders")
     total_c = _cents(F.col("o_totalprice"))
     order_cols = [F.to_date("o_orderdate"), F.col("o_orderkey")]
@@ -1540,7 +1646,6 @@ def q33_window_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("similarity", "dedup"),
 )
 def q34_embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     emb = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 300)
     return sim_ops.cosine_near_dup_pairs(emb, "vec_id", "embedding", threshold=0.35)
 
@@ -1566,7 +1671,6 @@ def q34_embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("textstats", "tokenize"),
 )
 def q35_token_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents")
     words = F.size(F.regexp_extract_all(F.col("text"), F.lit(r"[A-Za-z]+"), 0)).cast("long")
     nums = F.size(F.regexp_extract_all(F.col("text"), F.lit(r"[0-9]+"), 0)).cast("long")
@@ -1607,7 +1711,6 @@ def q35_token_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("window", "sliding", "events"),
 )
 def q36_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     ev = load_events(spark, sf_dir)
     return (
         ev.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type")
@@ -1667,7 +1770,6 @@ from us_immigration_data_lake_spark.functions.text import title_case  # noqa: E4
     tags=("recode", "fillna", "cast"),
 )
 def q37_recode_fillna(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     nation = _t(spark, sf_dir, "nation")
     region = _t(spark, sf_dir, "region")
     supp = (
@@ -1710,7 +1812,6 @@ def q37_recode_fillna(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("text", "udf-replacement"),
 )
 def q38_title_case(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     part = _t(spark, sf_dir, "part")
     return part.select("p_partkey", title_case("p_name").alias("name_title"))
 
@@ -1739,7 +1840,6 @@ def q38_title_case(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dates", "udf-replacement"),
 )
 def q39_sas_dates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     li = _t(spark, sf_dir, "lineitem")
     ship_sas = F.datediff(F.to_date("l_shipdate"), F.lit(SAS_EPOCH).cast("date")).cast("long")
     sas = li.select(
@@ -1778,7 +1878,6 @@ def q39_sas_dates(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("percentile", "agg"),
 )
 def q40_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     orders = _t(spark, sf_dir, "orders")
     total_c = _cents(F.col("o_totalprice"))
     return orders.groupBy("o_orderstatus").agg(
@@ -1822,7 +1921,6 @@ def q40_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("fingerprint", "rolling-hash", "dedup"),
 )
 def q41_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     # both sides restrict to docs long enough for a full k+window pass:
     # the library's short-doc fallback (one whole-text hash) is not
     # SQL-portable, and modeling it in the oracle would couple the gate
@@ -1864,7 +1962,6 @@ from us_immigration_data_lake_spark.streaming.windows import (  # noqa: E402
     tags=("streaming", "stream-stream-join"),
 )
 def q42_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     stream = read_event_stream(spark, sf_dir)
     joined = purchase_view_interval_join(stream, "30 minutes")
     return run_to_memory(joined, _sink_name("q42_ssj"), mode="append")
@@ -1884,51 +1981,30 @@ def q42_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # candidate generator stays the 100 TB path in q20/q55.
 # ---------------------------------------------------------------------------
 
-@_register(
-    "q43_dup_clusters",
-    oracle="""
-    WITH RECURSIVE tok AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                         t -> t <> '') AS toks
+# exact 2-gram Jaccard >= 0.08 pairs over the doc_id < 200 slice (what
+# postings_jaccard_pairs returns uncapped) and their components:
+# CTEs tok, sh, pairs and _closure_sql's labels (q43, q184, q222)
+_Q43_CLUSTERS_SQL = f"""tok AS (
+      SELECT doc_id, {_TOKENS_SQL} AS toks
       FROM documents WHERE doc_id < 200
     ), sh AS MATERIALIZED (
-      -- mirror operators/dedup.py:shingles — distinct 2-grams; a doc
-      -- shorter than 2 tokens contributes its whole normalized text
-      SELECT doc_id,
-             CASE WHEN len(toks) >= 2
-                  THEN list_distinct([array_to_string(toks[i:i+1], ' ')
-                                      for i in range(1, len(toks))])
-                  ELSE [array_to_string(toks, ' ')] END AS shingles
-      FROM tok
+      SELECT doc_id, {_SHINGLES_SQL} AS shingles FROM tok
     ), pairs AS MATERIALIZED (
       SELECT a.doc_id AS id1, b.doc_id AS id2
       FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-      WHERE CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-            / (len(a.shingles) + len(b.shingles)
-               - len(list_intersect(a.shingles, b.shingles))) >= 0.08
-    ), edges AS MATERIALIZED (
-      SELECT id1 AS src, id2 AS dst FROM pairs
-      UNION SELECT id2, id1 FROM pairs
-    ), reach AS (
-      SELECT src, dst FROM edges
-      UNION
-      SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-      WHERE e.dst <> r.src
-    ), labels AS MATERIALIZED (
-      SELECT src AS id, LEAST(src, MIN(dst)) AS cluster
-      FROM reach GROUP BY src
-    )
-    SELECT d.doc_id,
-           COALESCE(l.cluster, d.doc_id) AS cluster,
-           d.doc_id = COALESCE(l.cluster, d.doc_id) AS keep
-    FROM (SELECT doc_id FROM documents WHERE doc_id < 200) d
-    LEFT JOIN labels l ON d.doc_id = l.id
+      WHERE {_jaccard_sql("a.shingles", "b.shingles")} >= 0.08
+    ), {_closure_sql("pairs")}"""
+
+
+@_register(
+    "q43_dup_clusters",
+    oracle=f"""
+    WITH RECURSIVE {_Q43_CLUSTERS_SQL}
+    {_keep_sql("doc_id", "SELECT doc_id FROM documents WHERE doc_id < 200")}
     """,
     tags=("dedup", "clustering", "iterative"),
 )
 def q43_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
     sh = dedup_ops.shingles(docs, "doc_id", "text", n=2)
     # Candidates via the inverted-index generator (dedup.py:
@@ -1968,7 +2044,6 @@ def q43_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q44_nested_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import LongType, StructField, StructType
 
-    _tune(spark)
     ev = load_events(spark, sf_dir)
     props_schema = StructType([StructField("k", LongType(), True)])
     nested = ev.select(
@@ -2014,7 +2089,6 @@ def q44_nested_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("search", "textstats", "topk"),
 )
 def q45_keyword_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents")
     tok = F.split(F.trim(F.col("text")), r"\s+")
     tf = F.size(F.filter(tok, lambda t: t == F.lit("spark"))).cast("long")
@@ -2046,7 +2120,6 @@ def q45_keyword_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("left-join", "double-agg", "histogram"),
 )
 def q46_order_count_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     cust = _t(spark, sf_dir, "customer")
     orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderpriority") != "1-URGENT")
     per_cust = (
@@ -2076,7 +2149,6 @@ def q46_order_count_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("having", "subquery", "semi-join"),
 )
 def q47_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     orders = _t(spark, sf_dir, "orders")
     big = (
         _t(spark, sf_dir, "lineitem")
@@ -2119,7 +2191,6 @@ def q47_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q48_train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     from us_immigration_data_lake_spark.functions.splits import split_label
 
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents")
     return (
         docs.select(split_label(F.col("doc_id"), 80).alias("split"), "lang")
@@ -2158,7 +2229,6 @@ def q48_train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("chunking", "textstats"),
 )
 def q49_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents")
     return ts_ops.chunk_documents(docs, "doc_id", "text", chunk_tokens=50, overlap=10)
 
@@ -2201,7 +2271,6 @@ def q49_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q50_session_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    _tune(spark)
     ev = load_events(spark, sf_dir).select(
         "user_id", "event_type", F.unix_micros("ts").alias("ts_us")
     )
@@ -2257,7 +2326,6 @@ from us_immigration_data_lake_spark.quality import profile_table  # noqa: E402
     tags=("quality", "profile"),
 )
 def q51_quality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     li = _t(spark, sf_dir, "lineitem").withColumn(
         "l_qty_long", F.col("l_quantity").cast("long")
     )
@@ -2299,7 +2367,6 @@ def q51_quality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dates", "calendar"),
 )
 def q52_calendar_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     orders = _t(spark, sf_dir, "orders")
     d = F.to_date("o_orderdate")
     return orders.select(
@@ -2331,7 +2398,6 @@ def q52_calendar_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("collect", "agg"),
 )
 def q53_collect_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     cust = _t(spark, sf_dir, "customer")
     nation = _t(spark, sf_dir, "nation")
     return (
@@ -2365,7 +2431,6 @@ def q53_collect_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("grouping-sets",),
 )
 def q54_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     orders = _t(spark, sf_dir, "orders")
     return orders.groupingSets(
         [["o_orderstatus"], ["o_orderpriority"], []],
@@ -2410,7 +2475,6 @@ _Q55_HASHES, _Q55_BANDS = 8, 8
     tags=("dedup", "minhash", "lsh", "portable"),
 )
 def q55_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
     return dedup_ops.near_dup_pairs(
         docs, "doc_id", "text", shingle_n=2, num_hashes=_Q55_HASHES,
@@ -2455,7 +2519,6 @@ def q55_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "watermark", "append"),
 )
 def q56_stream_append_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     stream = read_event_stream(spark, sf_dir)
     return run_to_memory(
         tumbling_agg_append(stream, "1 hour", "1 hour"),
@@ -2523,7 +2586,6 @@ def q56_stream_append_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("search", "bm25", "textstats", "topk"),
 )
 def q57_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents")
     return ts_ops.bm25_term_scores(
         docs, "doc_id", "text", terms=("vector", "merge", "filter"), k=10
@@ -2593,7 +2655,6 @@ def q57_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("search", "bm25", "multiterm", "topk"),
 )
 def q58_bm25_multiterm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents")
     return ts_ops.bm25_multiterm_topk(
         docs, "doc_id", "text", terms=("vector", "merge", "filter"), k=20
@@ -2621,7 +2682,6 @@ def q58_bm25_multiterm(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "stream-static", "broadcast"),
 )
 def q59_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     stream = read_event_stream(spark, sf_dir)
     dim = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     return run_to_memory(
@@ -2687,7 +2747,6 @@ def q59_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "quality", "repetition"),
 )
 def q60_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents")
     return ts_ops.repetition_stats(docs, "doc_id", "text")
 
@@ -2755,7 +2814,6 @@ _PII_PHONE = _PII["phone"]
 def q61_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     from us_immigration_data_lake_spark.operators.pii import pii_counts, scrub_pii
 
-    _tune(spark)
     cust = _t(spark, sf_dir, "customer")
     nat = _t(spark, sf_dir, "nation")
     k = F.col("c_custkey")
@@ -2823,7 +2881,6 @@ def q61_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "ngram", "top-k"),
 )
 def q62_ngram_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents")
     return ts_ops.ngram_profile(docs, "text", top_k=25)
 
@@ -2850,7 +2907,6 @@ def q62_ngram_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q63_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from us_immigration_data_lake_spark.operators.sampling import stratified_sample
 
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents")
     return stratified_sample(
         docs, "lang", "doc_id", {"en": 25, "fr": 50}
@@ -2896,7 +2952,6 @@ def q63_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "decontamination", "broadcast"),
 )
 def q64_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % 50 == 0)
     corpus = docs.filter(F.col("doc_id") % 50 != 0)
@@ -2930,7 +2985,6 @@ _Z_ORACLE = f"""
     tags=("layout", "zorder", "data-skipping"),
 )
 def q65_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     orders = _t(spark, sf_dir, "orders")
     return orders.select(
         "o_orderkey",
@@ -2962,7 +3016,6 @@ def q65_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q66_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     from us_immigration_data_lake_spark.operators.aggregate import salted_sum
 
-    _tune(spark)
     li = _t(spark, sf_dir, "lineitem")
     return salted_sum(
         li,
@@ -3005,7 +3058,6 @@ def q66_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "vocab", "broadcast"),
 )
 def q67_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents")
     return ts_ops.oov_rate(docs, "doc_id", "text", vocab_size=100)
 
@@ -3049,7 +3101,6 @@ from us_immigration_data_lake_spark.operators.history import (  # noqa: E402
     tags=("history", "scd2", "window"),
 )
 def q68_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     ev = load_events(spark, sf_dir).select(
         "user_id", "event_type", "event_id", F.unix_micros("ts").alias("ts_us")
     )
@@ -3094,7 +3145,6 @@ def q68_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("history", "upsert", "merge"),
 )
 def q69_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     base = _t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus",
         _cents(F.col("o_totalprice")).alias("total_c"),
@@ -3158,7 +3208,6 @@ from us_immigration_data_lake_spark.operators.quantize import (  # noqa: E402
     tags=("similarity", "quantize"),
 )
 def q70_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     emb = _t(spark, sf_dir, "embeddings")
     quantized = quantize_int8(emb, "vec_id", "embedding")
     return quantized.select(
@@ -3220,7 +3269,6 @@ def q71_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # int8 products are <= 127^2 and dims are small, so the double
     # list_dot_product in the oracle is exact integer arithmetic —
     # same BIGINTs as the engine's zip_with/aggregate fold.
-    _tune(spark)
     emb = _t(spark, sf_dir, "embeddings")
     quantized = quantize_int8(emb, "vec_id", "embedding")
     queries = quantized.filter(F.col("vec_id") % 50 == 0)
@@ -3251,7 +3299,6 @@ def q71_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q72_salted_join_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from us_immigration_data_lake_spark.operators.joins import salted_join
 
-    _tune(spark)
     li = _t(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("okey"),
         _cents(F.col("l_extendedprice")).alias("price_c"),
@@ -3282,7 +3329,6 @@ def q72_salted_join_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q73_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from us_immigration_data_lake_spark.streaming.windows import stream_dedup
 
-    _tune(spark)
     stream = read_event_stream(spark, sf_dir)
     # watermark wider than the testdata's event-time span: state is
     # never evicted mid-run, so the result equals batch DISTINCT even
@@ -3320,7 +3366,6 @@ def q73_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sketch", "hll", "agg"),
 )
 def q74_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     ev = load_events(spark, sf_dir)
     agg = ev.groupBy("event_type").agg(
         F.count_distinct("user_id").alias("n_users_exact"),
@@ -3363,7 +3408,6 @@ def q74_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q75_ranking_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    _tune(spark)
     orders = _t(spark, sf_dir, "orders")
     total_c = _cents(F.col("o_totalprice"))
     w = Window.partitionBy("o_orderstatus").orderBy(total_c, "o_orderkey")
@@ -3408,7 +3452,6 @@ def q75_ranking_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q76_binned_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from us_immigration_data_lake_spark.operators.joins import binned_range_join
 
-    _tune(spark)
     ev = load_events(spark, sf_dir).withColumn("ts_us", F.unix_micros("ts"))
     views = ev.filter(F.col("event_type") == "view").select(
         F.col("event_id").alias("view_id"),
@@ -3449,7 +3492,7 @@ def q76_binned_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "q77_postings_jaccard",
-    oracle="""
+    oracle=f"""
     WITH sh AS (
       SELECT doc_id, lang,
              list_distinct([array_to_string(toks[i:i+2], ' ')
@@ -3460,8 +3503,7 @@ def q76_binned_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
       WHERE len(toks) >= 3
     )
     SELECT a.doc_id AS id1, b.doc_id AS id2,
-           CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-             / (len(a.shingles) + len(b.shingles) - len(list_intersect(a.shingles, b.shingles)))
+           {_jaccard_sql("a.shingles", "b.shingles")}
              AS jaccard
     FROM sh a JOIN sh b ON a.lang = b.lang AND a.doc_id < b.doc_id
     WHERE len(list_intersect(a.shingles, b.shingles)) > 0
@@ -3469,7 +3511,6 @@ def q76_binned_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dedup", "jaccard", "postings", "scale"),
 )
 def q77_postings_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
     tok = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
     sh = docs.select(
@@ -3513,7 +3554,6 @@ def q77_postings_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sketch", "percentile", "agg"),
 )
 def q78_approx_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     orders = _t(spark, sf_dir, "orders").select(
         "o_orderstatus", _cents(F.col("o_totalprice")).alias("total_c")
     )
@@ -3567,7 +3607,6 @@ def q78_approx_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("reshape", "unpivot"),
 )
 def q79_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     cust = _t(spark, sf_dir, "customer").select(
         "c_custkey",
         F.col("c_nationkey").cast("long").alias("c_nationkey"),
@@ -3605,7 +3644,6 @@ def q79_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q80_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from us_immigration_data_lake_spark.operators.sampling import weighted_sample
 
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
     return weighted_sample(docs, "doc_id", "n_chars", k=50)
 
@@ -3620,11 +3658,10 @@ def q80_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "q81_unigram_xent",
-    oracle="""
+    oracle=f"""
     WITH tok AS (
       SELECT doc_id,
-             unnest(list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                                t -> t <> '')) AS token
+             unnest({_TOKENS_SQL}) AS token
       FROM documents
     ),
     dc AS (SELECT doc_id, token, CAST(COUNT(*) AS BIGINT) AS c_dt
@@ -3644,7 +3681,6 @@ def q80_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "quality", "perplexity"),
 )
 def q81_unigram_xent(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents")
     return ts_ops.unigram_cross_entropy(docs, "doc_id", "text")
 
@@ -3657,11 +3693,10 @@ def q81_unigram_xent(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "q82_pack_sequences",
-    oracle="""
+    oracle=f"""
     WITH sized AS (
       SELECT doc_id,
-             array_length(list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                                      t -> t <> '')) AS n_tok,
+             array_length({_TOKENS_SQL}) AS n_tok,
              (('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 5, 4))::INTEGER) % 8
                AS shard
       FROM documents
@@ -3684,7 +3719,6 @@ def q82_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     from us_immigration_data_lake_spark.operators.sampling import sample_bucket
     from us_immigration_data_lake_spark.functions.text import token_count
 
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", token_count(F.lower(F.col("text"))).cast("long").alias("n_tok")
     )
@@ -3723,7 +3757,6 @@ def q82_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q83_resample_zero_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     from us_immigration_data_lake_spark.operators.windows import resample_fill
 
-    _tune(spark)
     ev = load_events(spark, sf_dir)
     hourly = (
         ev.select(
@@ -3766,7 +3799,6 @@ def q83_resample_zero_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("analytics", "cohort", "retention"),
 )
 def q84_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     ev = load_events(spark, sf_dir)
     weekly = ev.select(
         "user_id", F.expr("unix_micros(ts) div 604800000000").alias("week")
@@ -3822,7 +3854,6 @@ def q84_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("agg", "statistics"),
 )
 def q85_exact_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     li = _t(spark, sf_dir, "lineitem").select(
         "l_returnflag",
         F.col("l_quantity").cast("decimal(38,0)").alias("x"),
@@ -3874,7 +3905,6 @@ def q85_exact_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("agg", "conditional", "sql"),
 )
 def q86_conditional_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     orders = _t(spark, sf_dir, "orders")
     total_c = _cents(F.col("o_totalprice"))
     is_f = F.col("o_orderstatus") == "F"
@@ -3911,7 +3941,6 @@ def q86_conditional_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("join", "fuzzy", "entity-resolution"),
 )
 def q87_fuzzy_name_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     cust = _t(spark, sf_dir, "customer").filter(F.col("c_custkey") < 100).select(
         "c_custkey", "c_name", "c_nationkey"
     )
@@ -3960,7 +3989,6 @@ def q87_fuzzy_name_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q88_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    _tune(spark)
     orders = _t(spark, sf_dir, "orders")
     cell = orders.groupBy("o_orderpriority", "o_orderstatus").agg(
         F.sum(_cents(F.col("o_totalprice"))).alias("rev_c")
@@ -4000,7 +4028,6 @@ def q88_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q89_positional_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    _tune(spark)
     orders = _t(spark, sf_dir, "orders")
     total_c = _cents(F.col("o_totalprice"))
     w = (
@@ -4043,7 +4070,6 @@ def q89_positional_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("quality", "checksum", "reconciliation"),
 )
 def q90_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     li = _t(spark, sf_dir, "lineitem")
     row_key = F.concat_ws(
         "|",
@@ -4094,7 +4120,6 @@ def q90_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("session-window", "batch", "agg"),
 )
 def q91_batch_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     ev = load_events(spark, sf_dir)
     return (
         ev.groupBy(F.session_window("ts", "10 minutes").alias("w"), "user_id")
@@ -4161,7 +4186,6 @@ def _q92_oracle_sql() -> str:
     tags=("similarity", "ivf", "ann"),
 )
 def q92_ivf_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") % 100 == 3)
     return sim_ops.ivf_knn(
@@ -4193,7 +4217,6 @@ def q92_ivf_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("agg", "argmax"),
 )
 def q93_argmax_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     orders = _t(spark, sf_dir, "orders")
     pair = F.struct(
         _cents(F.col("o_totalprice")).alias("c"), F.col("o_orderkey").alias("k")
@@ -4256,7 +4279,6 @@ from us_immigration_data_lake_spark.operators.audit import (  # noqa: E402
     tags=("audit", "anti-join", "quality"),
 )
 def q94_referential_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     lineitem = _t(spark, sf_dir, "lineitem")
     orders = _t(spark, sf_dir, "orders")
     customer = _t(spark, sf_dir, "customer")
@@ -4302,7 +4324,6 @@ from us_immigration_data_lake_spark.operators.basket import (  # noqa: E402
     tags=("basket", "cooccurrence", "self-join"),
 )
 def q95_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     lineitem = _t(spark, sf_dir, "lineitem")
     return cooccurrence_pairs(
         lineitem, "l_orderkey", "l_partkey", min_support=2
@@ -4334,7 +4355,6 @@ def q95_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("binning", "histogram", "agg"),
 )
 def q96_price_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     orders = _t(spark, sf_dir, "orders")
     c = _cents(F.col("o_totalprice"))
     w = 2_500_000  # $25k bins
@@ -4391,7 +4411,6 @@ def q96_price_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q97_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     from us_immigration_data_lake_spark.operators.joins import as_of_join
 
-    _tune(spark)
     e = load_events(spark, sf_dir).select(
         "user_id",
         "event_type",
@@ -4466,7 +4485,6 @@ def q97_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q98_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     from us_immigration_data_lake_spark.operators.history import snapshot_diff
 
-    _tune(spark)
     old = _t(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_orderstatus",
@@ -4516,7 +4534,6 @@ def q99_rolling_active(spark: SparkSession, sf_dir: str) -> DataFrame:
         rolling_distinct_count,
     )
 
-    _tune(spark)
     orders = _t(spark, sf_dir, "orders").select(
         F.col("o_orderdate").cast("date").alias("d"), "o_custkey"
     )
@@ -4566,7 +4583,6 @@ def q99_rolling_active(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("profile", "quality", "single-pass"),
 )
 def q100_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     t = _t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority",
         _cents(F.col("o_totalprice")).alias("total_c"),
@@ -4608,7 +4624,6 @@ def q100_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q101_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     from us_immigration_data_lake_spark.operators.orderstats import weighted_median
 
-    _tune(spark)
     s = _t(spark, sf_dir, "lineitem").select(
         "l_returnflag",
         _cents(F.col("l_extendedprice")).alias("v"),
@@ -4671,7 +4686,6 @@ def q101_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q102_bloom_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     from us_immigration_data_lake_spark.operators.sketches import bloom_contract
 
-    _tune(spark)
     customer = _t(spark, sf_dir, "customer")
     build = customer.filter(F.col("c_mktsegment") == "BUILDING").select(
         "c_custkey"
@@ -4716,7 +4730,6 @@ def q102_bloom_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q103_skyline_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from us_immigration_data_lake_spark.operators.orderstats import skyline_2d
 
-    _tune(spark)
     p = _t(spark, sf_dir, "part").select(
         "p_partkey",
         _cents(F.col("p_retailprice")).alias("price_c"),
@@ -4774,7 +4787,6 @@ def q103_skyline_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("session-window", "attribution", "argmax"),
 )
 def q104_session_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     ev = load_events(spark, sf_dir).select(
         "user_id",
         "event_id",
@@ -4842,7 +4854,6 @@ def q104_session_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,
 )
 def q105_local_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     nation = _t(spark, sf_dir, "nation")
     customer = _t(spark, sf_dir, "customer")
@@ -4904,7 +4915,6 @@ def q105_local_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q106_mom_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    _tune(spark)
     orders = _t(spark, sf_dir, "orders")
     customer = _t(spark, sf_dir, "customer")
     monthly = (
@@ -4969,7 +4979,6 @@ def q106_mom_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("subquery", "anti-join", "agg"),
 )
 def q107_idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     customer = _t(spark, sf_dir, "customer")
     orders = _t(spark, sf_dir, "orders")
     bal_c = _cents(F.col("c_acctbal"))
@@ -5048,7 +5057,6 @@ def q108_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_to_memory,
     )
 
-    _tune(spark)
     stream = read_event_stream(spark, sf_dir)
     joined = purchase_view_interval_join(stream, "30 minutes", how="leftOuter")
     return run_to_memory(joined, _sink_name("q108_outer"), mode="append")
@@ -5095,7 +5103,6 @@ def q109_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         triangle_count,
     )
 
-    _tune(spark)
     lineitem = _t(spark, sf_dir, "lineitem")
     pairs = cooccurrence_pairs(lineitem, "l_orderkey", "l_partkey", min_support=2)
     edges = canonical_edges(pairs, "item_a", "item_b")
@@ -5137,7 +5144,6 @@ def q109_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("feature-prep", "zscore", "broadcast"),
 )
 def q110_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     li = _t(spark, sf_dir, "lineitem")
     s = li.select(
         "l_orderkey", "l_linenumber", "l_returnflag",
@@ -5201,7 +5207,6 @@ def q110_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("stats", "chi-square", "contingency"),
 )
 def q111_chi_square(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     orders = _t(spark, sf_dir, "orders")
     obs = orders.groupBy(
         F.col("o_orderpriority").alias("r"), F.col("o_orderstatus").alias("c")
@@ -5252,7 +5257,6 @@ def q111_chi_square(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q112_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    _tune(spark)
     ev = load_events(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy(
         F.unix_micros(F.col("ts")), F.col("event_id")
@@ -5297,7 +5301,6 @@ def q112_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("skew", "diagnostics", "agg"),
 )
 def q113_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     orders = _t(spark, sf_dir, "orders")
     f = orders.groupBy(F.col("o_custkey").alias("key")).agg(
         F.count(F.lit(1)).cast("long").alias("n")
@@ -5371,7 +5374,6 @@ def q113_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q114_groupwise_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
     from us_immigration_data_lake_spark.operators.regress import groupwise_ols
 
-    _tune(spark)
     li = _t(spark, sf_dir, "lineitem")
     s = li.select(
         "l_returnflag",
@@ -5422,7 +5424,6 @@ def q114_groupwise_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q115_ewma_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
     from us_immigration_data_lake_spark.operators.regress import ewma_smooth
 
-    _tune(spark)
     ev = load_events(spark, sf_dir).select(
         "event_id", "user_id", "ts", _cents(F.col("value")).alias("v")
     )
@@ -5491,7 +5492,6 @@ def q115_ewma_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q116_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     from us_immigration_data_lake_spark.operators.regress import mad_outlier_stats
 
-    _tune(spark)
     li = _t(spark, sf_dir, "lineitem")
     s = li.select(
         F.col("l_returnflag"),
@@ -5539,7 +5539,6 @@ def q116_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("tpch-q17", "correlated-agg", "broadcast"),
 )
 def q117_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     li = _t(spark, sf_dir, "lineitem")
     part = _t(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#13")
     l = li.join(
@@ -5591,7 +5590,6 @@ def q117_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("tpch-q18", "having", "broadcast"),
 )
 def q118_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     li = _t(spark, sf_dir, "lineitem")
     orders = _t(spark, sf_dir, "orders")
     t = (
@@ -5635,7 +5633,6 @@ def q118_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("tpch-q19", "disjunction", "predicate-derivation"),
 )
 def q119_disjunctive_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     li = _t(spark, sf_dir, "lineitem")
     part = _t(spark, sf_dir, "part")
     # Part-side implied filter (union of the disjuncts' part terms):
@@ -5705,7 +5702,6 @@ def q119_disjunctive_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("tpch-q21", "exists", "anti-join"),
 )
 def q120_sole_blame_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     li = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_returnflag"
     )
@@ -5766,7 +5762,6 @@ def q121_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         merge_states,
     )
 
-    _tune(spark)
     orders = _t(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderdate", _cents(F.col("o_totalprice")).alias("cents")
     )
@@ -5842,7 +5837,6 @@ def q122_pagerank_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
     from us_immigration_data_lake_spark.operators.graph import pagerank_quantized
 
-    _tune(spark)
     ev = load_events(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy(
         F.unix_micros(F.col("ts")), F.col("event_id")
@@ -5876,11 +5870,10 @@ def q122_pagerank_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "q123_tfidf_topk",
-    oracle="""
+    oracle=f"""
     WITH tok AS (
       SELECT doc_id,
-             unnest(list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                                t -> t <> '')) AS token
+             unnest({_TOKENS_SQL}) AS token
       FROM documents
     ),
     dc AS (SELECT doc_id, token, CAST(COUNT(*) AS BIGINT) AS c_dt
@@ -5910,7 +5903,6 @@ def q123_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
     from us_immigration_data_lake_spark.functions.text import tokens
 
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id", F.explode(tokens(F.lower(F.col("text")))).alias("token")
@@ -5979,7 +5971,6 @@ def q123_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q124_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    _tune(spark)
     orders = _t(spark, sf_dir, "orders")
     s = orders.select(
         "o_orderkey", _cents(F.col("o_totalprice")).alias("cents")
@@ -6041,7 +6032,6 @@ def q124_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q125_winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    _tune(spark)
     li = _t(spark, sf_dir, "lineitem")
     s = li.select(
         F.col("l_returnflag").alias("g"),
@@ -6107,7 +6097,6 @@ def q126_bloom_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         bloom_probe,
     )
 
-    _tune(spark)
     li = _t(spark, sf_dir, "lineitem")
     supplier = _t(spark, sf_dir, "supplier").filter(F.col("s_nationkey") == 3)
     dim = supplier.select("s_suppkey", "s_name")
@@ -6168,7 +6157,6 @@ def q127_stream_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_latest_state,
     )
 
-    _tune(spark)
     stream = read_event_stream(spark, sf_dir).select(
         "user_id", _cents(F.col("value")).alias("cents")
     )
@@ -6209,7 +6197,6 @@ def q127_stream_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sequence", "pattern-match", "regex"),
 )
 def q128_sequence_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     ev = load_events(spark, sf_dir)
     seq = ev.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_events"),
@@ -6275,7 +6262,6 @@ def q128_sequence_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q129_constraint_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from us_immigration_data_lake_spark.operators.audit import constraint_report
 
-    _tune(spark)
     li = _t(spark, sf_dir, "lineitem")
     return constraint_report(
         li,
@@ -6338,7 +6324,6 @@ def q129_constraint_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q130_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     from us_immigration_data_lake_spark.operators.sketches import kmv_distinct
 
-    _tune(spark)
     li = _t(spark, sf_dir, "lineitem")
     sk = kmv_distinct(li, ["l_returnflag"], "l_partkey", k=64)
     exact = li.groupBy("l_returnflag").agg(
@@ -6372,7 +6357,6 @@ def q130_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("join", "null-safe", "semantics"),
 )
 def q131_null_safe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     customer = _t(spark, sf_dir, "customer").select(
         F.nullif(F.col("c_nationkey"), F.lit(0)).alias("ck")
     )
@@ -6425,7 +6409,6 @@ def q131_null_safe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q132_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    _tune(spark)
     ev = load_events(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy(F.col("t"), F.col("event_id"))
     s = ev.select(
@@ -6488,7 +6471,6 @@ def q132_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q133_gaps_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    _tune(spark)
     ev = load_events(spark, sf_dir)
     days = ev.select(
         "user_id", F.to_date(F.col("ts")).alias("d")
@@ -6531,7 +6513,6 @@ def q133_gaps_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("tpch-q11", "scalar-subquery", "share"),
 )
 def q134_revenue_share_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     li = _t(spark, sf_dir, "lineitem")
     pr = li.groupBy("l_partkey").agg(
         F.sum(_cents(F.col("l_extendedprice"))).cast("long").alias("rev")
@@ -6567,7 +6548,6 @@ def q134_revenue_share_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("tpch-q15", "scalar-subquery", "argmax"),
 )
 def q135_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     li = _t(spark, sf_dir, "lineitem")
     supplier = _t(spark, sf_dir, "supplier")
     sr = li.groupBy("l_suppkey").agg(
@@ -6609,7 +6589,6 @@ def q135_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("array", "higher-order", "functions"),
 )
 def q136_higher_order_fns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     emb = _t(spark, sf_dir, "embeddings")
     v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     zero = F.lit(0.0)
@@ -6662,7 +6641,6 @@ def q136_higher_order_fns(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("reconciliation", "integrity", "join"),
 )
 def q137_order_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     li = _t(spark, sf_dir, "lineitem")
     orders = _t(spark, sf_dir, "orders")
     ls = li.groupBy("l_orderkey").agg(
@@ -6715,7 +6693,6 @@ def q137_order_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("mode", "argmax", "agg"),
 )
 def q138_group_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     orders = _t(spark, sf_dir, "orders")
     customer = _t(spark, sf_dir, "customer")
     c = (
@@ -6765,7 +6742,6 @@ def q138_group_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q139_time_since_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    _tune(spark)
     ev = load_events(spark, sf_dir)
     s = ev.select(
         "event_id", "user_id", "event_type",
@@ -6818,7 +6794,6 @@ def q139_time_since_error(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q140_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    _tune(spark)
     ev = load_events(spark, sf_dir)
     s = ev.select(
         "user_id", "event_id",
@@ -6899,7 +6874,6 @@ def q141_countmin_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
         countmin_query,
     )
 
-    _tune(spark)
     li = _t(spark, sf_dir, "lineitem")
     sketch = countmin_build(li, "l_partkey", depth=4, width=2048)
     probe = (
@@ -7012,7 +6986,6 @@ def q142_kmv_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         kmv_jaccard,
     )
 
-    _tune(spark)
     li = _t(spark, sf_dir, "lineitem")
     sk_a = kmv_hashes(
         li.filter(F.col("l_returnflag") == "A"), ["l_linestatus"], "l_partkey", k=64
@@ -7085,7 +7058,6 @@ def q142_kmv_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("tpch-q7", "multi-join", "broadcast"),
 )
 def q143_nation_trade_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     nation = _t(spark, sf_dir, "nation").filter(
         F.col("n_name").isin("NATION_1", "NATION_2")
     )
@@ -7160,7 +7132,6 @@ def q143_nation_trade_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("tpch-q8", "market-share", "multi-join", "broadcast"),
 )
 def q144_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     nation = _t(spark, sf_dir, "nation")
     region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     asia_cust = (
@@ -7232,7 +7203,6 @@ def q144_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("tpch-q4", "exists", "semi-join", "residual-predicate"),
 )
 def q145_priority_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     orders = _t(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate").cast("date") >= F.lit("1996-01-01"))
         & (F.col("o_orderdate").cast("date") < F.lit("1996-04-01"))
@@ -7276,7 +7246,6 @@ def q145_priority_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("tpch-q13", "left-outer", "count-of-counts"),
 )
 def q146_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     cust = _t(spark, sf_dir, "customer").select("c_custkey")
     orders = _t(spark, sf_dir, "orders").select("o_custkey", "o_orderkey")
     per_cust = (
@@ -7320,7 +7289,6 @@ def q147_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         countmin_query,
     )
 
-    _tune(spark)
     threshold = 45
     li = _t(spark, sf_dir, "lineitem")
     sketch = countmin_build(li, "l_partkey", depth=4, width=65536)
@@ -7383,7 +7351,6 @@ def q147_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q148_min_price_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    _tune(spark)
     nation = _t(spark, sf_dir, "nation")
     region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
     eur_supp = (
@@ -7458,7 +7425,6 @@ def q148_min_price_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("tpch-q6", "scan-agg", "pushdown"),
 )
 def q149_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     li = _t(spark, sf_dir, "lineitem")
     return (
         li.filter(
@@ -7510,7 +7476,6 @@ def q149_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("tpch-q10", "top-k", "two-phase-agg"),
 )
 def q150_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     orders = _t(spark, sf_dir, "orders").filter(
         F.col("o_orderdate").cast("date").between("1996-01-01", "1996-03-31")
     )
@@ -7570,7 +7535,6 @@ def q150_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("tpch-q14", "conditional-agg", "broadcast"),
 )
 def q151_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     li = _t(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate").cast("date").between("1996-09-01", "1996-09-30")
     )
@@ -7617,7 +7581,6 @@ def q151_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("tpch-q16", "count-distinct", "anti-join", "broadcast"),
 )
 def q152_supplier_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     part = _t(spark, sf_dir, "part").filter(
         (F.col("p_type") != "STANDARD")
         & F.col("p_size").isin(1, 4, 9, 16, 25, 36, 49)
@@ -7676,7 +7639,6 @@ def q152_supplier_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("tpch-q20", "nested-agg", "conditional-agg"),
 )
 def q153_class_dominant_shippers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     part = _t(spark, sf_dir, "part").select(
         "p_partkey",
         F.col("p_type").isin("PROMO", "ECONOMY", "SMALL").alias("in_class"),
@@ -7736,7 +7698,6 @@ def q153_class_dominant_shippers(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("tpch-q9", "profit", "like-pushdown", "broadcast"),
 )
 def q154_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     part = _t(spark, sf_dir, "part").filter(F.col("p_name").like("%widget%"))
     supp = (
         _t(spark, sf_dir, "supplier")
@@ -7797,7 +7758,6 @@ def q154_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("tpch-q12", "case-split", "date-arith"),
 )
 def q155_late_priority_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     li = _t(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate").cast("date").between("1997-01-01", "1997-12-31")
     )
@@ -7912,7 +7872,6 @@ def q156_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         hll_registers,
     )
 
-    _tune(spark)
     li = _t(spark, sf_dir, "lineitem")
     g = ["l_returnflag"]
     est_d = hll_estimate(hll_registers(li, g, "l_orderkey"), g)
@@ -8033,7 +7992,6 @@ def _q157_oracle_sql() -> str:
     tags=("similarity", "pq", "ivf-pq", "ann", "adc"),
 )
 def q157_ivfpq_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     emb = _t(spark, sf_dir, "embeddings")
     coarse, books = _q157_models()
     queries = emb.filter(F.col("vec_id") % 100 == 7)
@@ -8100,7 +8058,6 @@ def q157_ivfpq_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,
 )
 def q158_segment_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents")
     return dedup_ops.remove_boilerplate(
         docs, "doc_id", "text", seg_words=10, min_docs=2
@@ -8161,7 +8118,6 @@ def q159_token_budget_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
         token_budget_fill,
     )
 
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents")
     kept = token_budget_fill(
         docs.withColumn(
@@ -8236,7 +8192,6 @@ _Q160_BIAS = -480000
     bench=True,
 )
 def q160_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents")
     feats = ts_ops.text_features(docs, "doc_id", "text").join(
         docs.select("doc_id", "lang"), "doc_id"
@@ -8317,7 +8272,6 @@ def q161_stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_latest_state,
     )
 
-    _tune(spark)
     stream = read_event_stream(spark, sf_dir).select("event_type", "user_id")
     root = tempfile.mkdtemp(prefix="q161_hll_")
     state_dir = f"{root}/state"
@@ -8403,7 +8357,6 @@ def q162_stream_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_latest_state,
     )
 
-    _tune(spark)
     stream = read_event_stream(spark, sf_dir).select("user_id")
     root = tempfile.mkdtemp(prefix="q162_cm_")
     state_dir = f"{root}/state"
@@ -8502,7 +8455,6 @@ def q163_sketch_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
         hll_registers,
     )
 
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents")
     # ONE pass over data: the base-cell registers
     cells = hll_registers(docs, ["lang", "source"], "doc_id")
@@ -8598,7 +8550,6 @@ def q164_interpolate_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
         interpolate_fill,
     )
 
-    _tune(spark)
     ev = load_events(spark, sf_dir).filter(F.col("user_id") % 25 == 3)
     obs = (
         ev.select(
@@ -8699,7 +8650,6 @@ def q165_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         histogram_quantile,
     )
 
-    _tune(spark)
     li = _t(spark, sf_dir, "lineitem").withColumn(
         "cents", _cents(F.col("l_extendedprice"))
     )
@@ -8774,7 +8724,6 @@ def q165_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dedup", "jaccard", "prefix-filter", "ssjoin", "scale"),
 )
 def q166_prefix_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 1000)
     tok = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
     sh = docs.select(
@@ -8824,7 +8773,6 @@ def q166_prefix_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sql-surface", "pivot", "unpivot"),
 )
 def q167_sql_pivot_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     _t(spark, sf_dir, "orders").createOrReplaceTempView("q167_orders")
     return spark.sql(
         """
@@ -8871,7 +8819,6 @@ def q167_sql_pivot_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sql-surface", "set-ops", "bag-semantics"),
 )
 def q168_setops_bag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     li = _t(spark, sf_dir, "lineitem")
     a = li.filter(F.col("l_returnflag") == "A").select(
         F.col("l_suppkey").alias("k")
@@ -8974,7 +8921,6 @@ def q169_hll_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         hll_registers,
     )
 
-    _tune(spark)
     ev = load_events(spark, sf_dir)
     views = ev.filter(F.col("event_type") == "view")
     buys = ev.filter(F.col("event_type") == "purchase")
@@ -9061,7 +9007,6 @@ def q170_cm_join_size(spark: SparkSession, sf_dir: str) -> DataFrame:
         countmin_inner_product,
     )
 
-    _tune(spark)
     li = _t(spark, sf_dir, "lineitem")
     orders = _t(spark, sf_dir, "orders")
     sk_a = countmin_build(li, "l_orderkey", depth=4, width=2048)
@@ -9140,7 +9085,6 @@ def q171_stream_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_latest_state,
     )
 
-    _tune(spark)
     stream = (
         read_event_stream(spark, sf_dir)
         .filter(F.col("value").isNotNull())
@@ -9231,7 +9175,6 @@ def q172_weighted_hist_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
         histogram_quantile,
     )
 
-    _tune(spark)
     li = _t(spark, sf_dir, "lineitem").select(
         "l_returnflag",
         _cents(F.col("l_extendedprice")).alias("cents"),
@@ -9335,7 +9278,6 @@ def q173_rolling_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         hll_registers,
     )
 
-    _tune(spark)
     ev = load_events(spark, sf_dir).filter(F.col("user_id").isNotNull())
     daily = ev.select(F.col("ts").cast("date").alias("d"), "user_id")
     day_regs = hll_registers(daily, ["d"], "user_id")
@@ -9468,7 +9410,6 @@ def q174_histogram_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         histogram_rank,
     )
 
-    _tune(spark)
     orders = _t(spark, sf_dir, "orders").select(
         F.col("o_orderstatus").alias("g"),
         "o_orderkey",
@@ -9522,7 +9463,6 @@ def q174_histogram_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sql-surface", "recursive-cte", "iteration"),
 )
 def q175_recursive_compound(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     _t(spark, sf_dir, "customer").createOrReplaceTempView("q175_customer")
     return spark.sql(
         """
@@ -9552,23 +9492,20 @@ def q175_recursive_compound(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "q176_recursive_closure",
-    oracle="""
+    oracle=f"""
     WITH RECURSIVE sh AS (
       SELECT doc_id,
              list_distinct([array_to_string(toks[i:i+1], ' ')
                             for i in range(1, len(toks))]) AS shingles
       FROM (SELECT doc_id,
-                   list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                               t -> t <> '') AS toks
+                   {_TOKENS_SQL} AS toks
             FROM documents WHERE doc_id < 120)
       WHERE len(toks) >= 2
     ),
     edges AS (
       SELECT a.doc_id AS src, b.doc_id AS dst
       FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-      WHERE CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-            / (len(a.shingles) + len(b.shingles)
-               - len(list_intersect(a.shingles, b.shingles))) >= 0.08
+      WHERE {_jaccard_sql("a.shingles", "b.shingles")} >= 0.08
     ),
     walk AS (
       SELECT src, dst, 1 AS lvl FROM edges
@@ -9584,7 +9521,6 @@ def q175_recursive_compound(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sql-surface", "recursive-cte", "graph", "dag"),
 )
 def q176_recursive_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     _t(spark, sf_dir, "documents").filter(
         F.col("doc_id") < 120
     ).createOrReplaceTempView("q176_documents")
@@ -9641,13 +9577,11 @@ def q176_recursive_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "q177_corpus_pipeline",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
       SELECT doc_id, source,
              md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fp,
-             CAST(array_length(list_filter(
-               string_split_regex(trim(lower(text)), '\\s+'),
-               t -> t <> '')) AS BIGINT) AS n_tok
+             CAST(array_length({_TOKENS_SQL}) AS BIGINT) AS n_tok
       FROM documents
     ),
     surv_ids AS (SELECT MIN(doc_id) AS doc_id FROM toks GROUP BY fp),
@@ -9707,7 +9641,6 @@ def q177_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         token_budget_fill,
     )
 
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id",
         "source",
@@ -9790,7 +9723,6 @@ def q177_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("scalar-functions", "strings", "sql-surface"),
 )
 def q178_string_breadth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     supp = _t(spark, sf_dir, "supplier").filter(F.col("s_suppkey") % 7 == 0)
     return supp.select(
         "s_suppkey",
@@ -9832,7 +9764,6 @@ def q178_string_breadth(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("scalar-functions", "calendar", "dates"),
 )
 def q179_calendar_breadth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 211 == 0)
     d = F.col("o_orderdate").cast("date")
     return orders.select(
@@ -9878,7 +9809,6 @@ def q179_calendar_breadth(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("scalar-functions", "bitwise", "math"),
 )
 def q180_bitmath_breadth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     li = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 977 == 0)
     return li.select(
         "l_orderkey",
@@ -9912,50 +9842,44 @@ def q180_bitmath_breadth(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q181_BITS, _Q181_TAU = 4, 0.35
 
 
-def _q181_oracle_sql() -> str:
-    planes = sim_ops.srp_planes(EMBEDDING_DIM, num_bits=_Q181_BITS, seed=42)
-
-    def dot_expr(i: int) -> str:
-        return " + ".join(
-            f"v[{j + 1}]*({float(planes[i][j])!r})" for j in range(EMBEDDING_DIM)
-        )
-
-    bits = " + ".join(
-        f"(CASE WHEN ({dot_expr(i)}) > 0 THEN {1 << i} ELSE 0 END)"
-        for i in range(_Q181_BITS)
-    )
-    return f"""
-    WITH RECURSIVE base AS (
-      SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-    ), b AS (
-      SELECT vec_id, v, CAST({bits} AS BIGINT) AS bucket FROM base
-    ), pairs AS MATERIALIZED (
+def _semdedup_pairs_sql(num_bits: int, cap: int | None, prefix: str = "") -> str:
+    """SemDeDup's pair stage (similarity.semantic_dedup) for q181, q187
+    and q188: SRP buckets ``{prefix}b`` of every embedding, candidate
+    pairs ``{prefix}cand`` (every within-bucket pair, or the capped
+    chain of _capped_candidates_sql), and the pairs ``{prefix}pairs``
+    whose round-6 cosine reaches _Q181_TAU."""
+    p = prefix
+    if cap is None:
+        cand = f"""{p}cand AS (
       SELECT x.vec_id AS id1, y.vec_id AS id2
-      FROM b x JOIN b y ON x.bucket = y.bucket AND x.vec_id < y.vec_id
+      FROM {p}b x JOIN {p}b y ON x.bucket = y.bucket AND x.vec_id < y.vec_id
+    )"""
+    else:
+        cand = _capped_candidates_sql(f"{p}b", "vec_id", ("bucket",), cap, p)
+    return f"""{p}b AS (
+      SELECT vec_id, v, {_srp_bucket_sql(num_bits)} AS bucket
+      FROM (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)
+    ), {cand}, {p}pairs AS (
+      SELECT c.id1, c.id2
+      FROM {p}cand c
+      JOIN {p}b x ON c.id1 = x.vec_id
+      JOIN {p}b y ON c.id2 = y.vec_id
       WHERE ROUND(list_cosine_similarity(x.v, y.v), 6) >= {_Q181_TAU}
-    ), edges AS MATERIALIZED (
-      SELECT id1 AS src, id2 AS dst FROM pairs
-      UNION SELECT id2, id1 FROM pairs
-    ), reach AS (
-      SELECT src, dst FROM edges
-      UNION
-      SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-      WHERE e.dst <> r.src
-    ), labels AS MATERIALIZED (
-      SELECT src AS id, LEAST(src, MIN(dst)) AS cluster
-      FROM reach GROUP BY src
-    )
-    SELECT d.vec_id,
-           COALESCE(l.cluster, d.vec_id) AS cluster,
-           d.vec_id = COALESCE(l.cluster, d.vec_id) AS keep
-    FROM (SELECT vec_id FROM embeddings) d
-    LEFT JOIN labels l ON d.vec_id = l.id
-    """
+    )"""
+
+
+def _semdedup_oracle_sql(num_bits: int, cap: int | None) -> str:
+    """q181 (uncapped) and q187 (capped): SemDeDup pairs, components,
+    keep-smallest-per-cluster over every embedding."""
+    return _materialized(f"""
+    WITH RECURSIVE {_semdedup_pairs_sql(num_bits, cap)}, {_closure_sql("pairs")}
+    {_keep_sql("vec_id", "SELECT vec_id FROM embeddings")}
+    """, "b", "sizes", "cand", "pairs")
 
 
 @_register(
     "q181_semantic_dedup",
-    oracle=_q181_oracle_sql(),
+    oracle=_semdedup_oracle_sql(_Q181_BITS, None),
     tags=("similarity", "dedup", "clustering", "semdedup"),
     # r6: bench headliner — semantic dedup is the operator whose cost
     # explodes first at scale (r5 verdict ask #5), so its SRP-bucketed
@@ -9963,7 +9887,6 @@ def _q181_oracle_sql() -> str:
     bench=True,
 )
 def q181_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     emb = _t(spark, sf_dir, "embeddings")
     # max_bucket_size=None EXPLICITLY: this row pins the uncapped
     # exact-within-bucket SemDeDup oracle semantics (and keeps the
@@ -9991,41 +9914,17 @@ def q181_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _Q182_CAP = 5
+_BAND_KEYS = ("band_idx", "band_key")
 
 
-def _q182_oracle_sql() -> str:
-    return f"""
-    WITH {_portable_minhash_prefix_sql(" WHERE doc_id < 100", _Q55_HASHES, _Q55_BANDS)}, sizes AS (
-      SELECT band_idx, band_key, COUNT(*) AS n
-      FROM bnd GROUP BY band_idx, band_key
-    ), small_pairs AS (
-      SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-      FROM bnd a
-      JOIN bnd b ON a.band_idx = b.band_idx AND a.band_key = b.band_key
-               AND a.doc_id < b.doc_id
-      JOIN sizes s ON s.band_idx = a.band_idx AND s.band_key = a.band_key
-      WHERE s.n BETWEEN 2 AND {_Q182_CAP}
-    ), anchors AS (
-      SELECT b.band_idx, b.band_key, MIN(b.doc_id) AS anchor
-      FROM bnd b JOIN sizes s
-        ON s.band_idx = b.band_idx AND s.band_key = b.band_key
-      WHERE s.n > {_Q182_CAP}
-      GROUP BY b.band_idx, b.band_key
-    ), star_pairs AS (
-      SELECT DISTINCT an.anchor AS id1, m.doc_id AS id2
-      FROM anchors an
-      JOIN bnd m ON m.band_idx = an.band_idx AND m.band_key = an.band_key
-      WHERE an.anchor < m.doc_id
-    ), cand AS (
-      SELECT id1, id2 FROM small_pairs
-      UNION
-      SELECT id1, id2 FROM star_pairs
-    ){_minhash_verify_sql(0.055)}"""
 
 
 @_register(
     "q182_lsh_bucket_cap",
-    oracle=_q182_oracle_sql(),
+    oracle=f"""
+    WITH {_portable_minhash_prefix_sql(" WHERE doc_id < 100", _Q55_HASHES, _Q55_BANDS)},
+    {_capped_candidates_sql("bnd", "doc_id", _BAND_KEYS, _Q182_CAP)}
+    {_minhash_verify_sql(0.055)}""",
     tags=("dedup", "minhash", "lsh", "portable", "skew-guard"),
     # r6: bench headliner — the skew-guard (cap + anchor-star recovery)
     # is the branch that saves the 100 TB run; track its cost too
@@ -10033,7 +9932,6 @@ def _q182_oracle_sql() -> str:
     bench=True,
 )
 def q182_lsh_bucket_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
     frames = dedup_ops.near_dup_frames(
         docs, "doc_id", "text", shingle_n=2, num_hashes=_Q55_HASHES,
@@ -10064,8 +9962,7 @@ _Q183_LO, _Q183_W, _Q183_NBINS = 3_000_000, 10_000, 128
     oracle=f"""
     WITH tok AS (
       SELECT doc_id,
-             unnest(list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                                t -> t <> '')) AS token
+             unnest({_TOKENS_SQL}) AS token
       FROM documents
     ),
     dc AS (SELECT doc_id, token, CAST(COUNT(*) AS BIGINT) AS c_dt
@@ -10106,7 +10003,6 @@ def q183_xent_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         histogram_rank,
     )
 
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents")
     xent = ts_ops.unigram_cross_entropy(
         docs, "doc_id", "text", as_micronats=True
@@ -10135,37 +10031,8 @@ def q183_xent_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "q184_dedup_keep_longest",
-    oracle="""
-    WITH RECURSIVE tok AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                         t -> t <> '') AS toks
-      FROM documents WHERE doc_id < 200
-    ), sh AS MATERIALIZED (
-      SELECT doc_id,
-             CASE WHEN len(toks) >= 2
-                  THEN list_distinct([array_to_string(toks[i:i+1], ' ')
-                                      for i in range(1, len(toks))])
-                  ELSE [array_to_string(toks, ' ')] END AS shingles
-      FROM tok
-    ), pairs AS MATERIALIZED (
-      SELECT a.doc_id AS id1, b.doc_id AS id2
-      FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-      WHERE CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-            / (len(a.shingles) + len(b.shingles)
-               - len(list_intersect(a.shingles, b.shingles))) >= 0.08
-    ), edges AS MATERIALIZED (
-      SELECT id1 AS src, id2 AS dst FROM pairs
-      UNION SELECT id2, id1 FROM pairs
-    ), reach AS (
-      SELECT src, dst FROM edges
-      UNION
-      SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-      WHERE e.dst <> r.src
-    ), labels AS MATERIALIZED (
-      SELECT src AS id, LEAST(src, MIN(dst)) AS cluster
-      FROM reach GROUP BY src
-    ), labeled AS (
+    oracle=f"""
+    WITH RECURSIVE {_Q43_CLUSTERS_SQL}, labeled AS (
       SELECT d.doc_id,
              COALESCE(l.cluster, d.doc_id) AS cluster,
              CAST(length(d.text) AS BIGINT) AS n_chars
@@ -10185,7 +10052,6 @@ def q183_xent_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dedup", "clustering", "survivor-policy"),
 )
 def q184_dedup_keep_longest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
     sh = dedup_ops.shingles(docs, "doc_id", "text", n=2)
     pairs = dedup_ops.postings_jaccard_pairs(sh, "doc_id", min_jaccard=0.08)
@@ -10220,7 +10086,6 @@ def q184_dedup_keep_longest(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,
 )
 def q185_lsh_production_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents")
     # identical parameters to q20 — the ONLY difference is
     # portable=False (xxhash64 shingle/band hashing, the default users
@@ -10257,17 +10122,15 @@ def q185_lsh_production_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q186_MIN_QUALITY = 0.46
 
 
-def _q186_oracle_sql() -> str:
-    prefix = _portable_minhash_prefix_sql(
-        " WHERE doc_id IN (SELECT doc_id FROM exact_surv)",
-        _Q55_HASHES, _Q55_BANDS,
-    )
-    sql = f"""
-    WITH RECURSIVE qtok AS (
+def _quality_gate_sql(where: str) -> str:
+    """The corpus pipeline's heuristic quality gate (q186, q200) over
+    ``documents{where}``: CTEs ``qtok`` (every input doc), ``qfeat``
+    and ``gate`` (the doc_ids scoring >= _Q186_MIN_QUALITY)."""
+    return f"""qtok AS (
       SELECT doc_id,
              list_filter(string_split_regex(trim(text), '\\s+'),
                          t -> t <> '') AS toks
-      FROM documents WHERE doc_id < 100
+      FROM documents{where}
     ), qfeat AS (
       SELECT doc_id,
              CAST(array_length(toks) AS BIGINT) AS n_tokens,
@@ -10286,60 +10149,38 @@ def _q186_oracle_sql() -> str:
               + 0.2 * LEAST(CAST(n_tokens AS DOUBLE) / 100.0, 1.0)
               + 0.2 * LEAST((sum_len / CAST(n_tokens AS DOUBLE)) / 8.0, 1.0)
             , 6) END >= {_Q186_MIN_QUALITY}
-    ), exact_surv AS (
+    )"""
+
+
+def _lsh_pairs_sql(src: str, threshold: float, prefix: str = "") -> str:
+    """Capped text-LSH near-dup pairs (dedup.near_dup_frames with
+    recover_oversized=True at cap _Q182_CAP) over the band rows ``src``
+    (band_idx, band_key, doc_id): the CTEs of _capped_candidates_sql
+    plus ``{prefix}pairs``, the candidates whose hashed-shingle Jaccard
+    on the ``hs`` CTE (_HS_SQL) reaches ``threshold``."""
+    cand = _capped_candidates_sql(src, "doc_id", _BAND_KEYS, _Q182_CAP, prefix)
+    return f"""{cand}, {prefix}pairs AS (
+      SELECT c.id1, c.id2
+      FROM {prefix}cand c
+      JOIN hs h1 ON c.id1 = h1.doc_id
+      JOIN hs h2 ON c.id2 = h2.doc_id
+      WHERE {_jaccard_sql("h1.hs", "h2.hs")} >= {threshold}
+    )"""
+
+
+def _q186_oracle_sql() -> str:
+    prefix = _portable_minhash_prefix_sql(
+        " WHERE doc_id IN (SELECT doc_id FROM exact_surv)",
+        _Q55_HASHES, _Q55_BANDS,
+    )
+    sql = f"""
+    WITH RECURSIVE {_quality_gate_sql(" WHERE doc_id < 100")}, exact_surv AS (
       SELECT MIN(d.doc_id) AS doc_id
       FROM documents d JOIN gate g ON d.doc_id = g.doc_id
       GROUP BY md5(trim(regexp_replace(lower(d.text), '\\s+', ' ', 'g')))
-    ), {prefix}, sizes AS (
-      SELECT band_idx, band_key, COUNT(*) AS n
-      FROM bnd GROUP BY band_idx, band_key
-    ), small_pairs AS (
-      SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-      FROM bnd a
-      JOIN bnd b ON a.band_idx = b.band_idx AND a.band_key = b.band_key
-               AND a.doc_id < b.doc_id
-      JOIN sizes s ON s.band_idx = a.band_idx AND s.band_key = a.band_key
-      WHERE s.n BETWEEN 2 AND {_Q182_CAP}
-    ), anchors AS (
-      SELECT b.band_idx, b.band_key, MIN(b.doc_id) AS anchor
-      FROM bnd b JOIN sizes s
-        ON s.band_idx = b.band_idx AND s.band_key = b.band_key
-      WHERE s.n > {_Q182_CAP}
-      GROUP BY b.band_idx, b.band_key
-    ), star_pairs AS (
-      SELECT DISTINCT an.anchor AS id1, m.doc_id AS id2
-      FROM anchors an
-      JOIN bnd m ON m.band_idx = an.band_idx AND m.band_key = an.band_key
-      WHERE an.anchor < m.doc_id
-    ), cand AS (
-      SELECT id1, id2 FROM small_pairs
-      UNION
-      SELECT id1, id2 FROM star_pairs
-    ), hs AS (
-      SELECT doc_id, list(h) AS hs FROM hx GROUP BY doc_id
-    ), verified AS (
-      SELECT c.id1, c.id2
-      FROM cand c
-      JOIN hs h1 ON c.id1 = h1.doc_id
-      JOIN hs h2 ON c.id2 = h2.doc_id
-      WHERE CAST(len(list_intersect(h1.hs, h2.hs)) AS DOUBLE)
-            / (len(h1.hs) + len(h2.hs) - len(list_intersect(h1.hs, h2.hs)))
-            >= 0.055
-    ), edges AS MATERIALIZED (
-      SELECT id1 AS src, id2 AS dst FROM verified
-      UNION SELECT id2, id1 FROM verified
-    ), reach AS (
-      SELECT src, dst FROM edges
-      UNION
-      SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-      WHERE e.dst <> r.src
-    ), labels AS MATERIALIZED (
-      SELECT src AS id, LEAST(src, MIN(dst)) AS cluster
-      FROM reach GROUP BY src
-    ), nd_surv AS (
-      SELECT s.doc_id FROM exact_surv s
-      LEFT JOIN labels l ON s.doc_id = l.id
-      WHERE COALESCE(l.cluster, s.doc_id) = s.doc_id
+    ), {prefix}, {_HS_SQL}, {_lsh_pairs_sql("bnd", 0.055)},
+    {_closure_sql("pairs")}, nd_surv AS (
+      {_survivors_sql("doc_id", "exact_surv")}
     ), ch AS (
       SELECT d.doc_id,
              GREATEST(CAST(ceil((len(string_split_regex(
@@ -10357,21 +10198,12 @@ def _q186_oracle_sql() -> str:
       CAST((SELECT COUNT(*) FROM sizes WHERE n > {_Q182_CAP}) AS BIGINT)
         AS oversized_lsh_buckets
     """
-    # DuckDB inlines CTEs per reference by default; the seven count
-    # subqueries each re-reference the stage chain, and bnd's
-    # band-select UNION ALL references sig once PER BAND — unhinted,
-    # the minhash aggregation re-executes O(bands × counts) times
-    # (measured: 135 s → 0.12 s at sf0.01 with hints, identical row).
-    import re
-
-    for name in (
-        "qtok", "gate", "exact_surv", "hx", "sig", "bnd", "sizes",
-        "cand", "hs", "verified", "labels", "nd_surv", "ch",
-    ):
-        sql = re.sub(
-            rf"(?<![A-Za-z_]){name} AS \(", f"{name} AS MATERIALIZED (", sql
-        )
-    return sql
+    # the seven count subqueries each re-reference the stage chain, and
+    # bnd's band-select UNION ALL references sig once PER BAND
+    return _materialized(
+        sql, "qtok", "gate", "exact_surv", "hx", "sig", "bnd", "sizes",
+        "cand", "hs", "pairs", "labels", "nd_surv", "ch",
+    )
 
 
 @_register(
@@ -10396,7 +10228,6 @@ def q186_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_training_corpus,
     )
 
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
     _, st = build_training_corpus(
         docs,
@@ -10448,81 +10279,17 @@ def q186_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q187_BITS, _Q187_CAP = 8, 5
 
 
-def _q187_oracle_sql() -> str:
-    planes = sim_ops.srp_planes(EMBEDDING_DIM, num_bits=_Q187_BITS, seed=42)
-
-    def dot_expr(i: int) -> str:
-        return " + ".join(
-            f"v[{j + 1}]*({float(planes[i][j])!r})" for j in range(EMBEDDING_DIM)
-        )
-
-    bits = " + ".join(
-        f"(CASE WHEN ({dot_expr(i)}) > 0 THEN {1 << i} ELSE 0 END)"
-        for i in range(_Q187_BITS)
-    )
-    return f"""
-    WITH RECURSIVE base AS (
-      SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-    ), b AS MATERIALIZED (
-      SELECT vec_id, v, CAST({bits} AS BIGINT) AS bucket FROM base
-    ), sizes AS MATERIALIZED (
-      SELECT bucket, COUNT(*) AS n FROM b GROUP BY bucket
-    ), small_pairs AS (
-      SELECT x.vec_id AS id1, y.vec_id AS id2
-      FROM b x
-      JOIN b y ON x.bucket = y.bucket AND x.vec_id < y.vec_id
-      JOIN sizes s ON s.bucket = x.bucket
-      WHERE s.n BETWEEN 2 AND {_Q187_CAP}
-    ), anchors AS (
-      SELECT m.bucket, MIN(m.vec_id) AS anchor
-      FROM b m JOIN sizes s ON s.bucket = m.bucket
-      WHERE s.n > {_Q187_CAP}
-      GROUP BY m.bucket
-    ), star_pairs AS (
-      SELECT an.anchor AS id1, m.vec_id AS id2
-      FROM anchors an
-      JOIN b m ON m.bucket = an.bucket
-      WHERE an.anchor < m.vec_id
-    ), cand AS MATERIALIZED (
-      SELECT id1, id2 FROM small_pairs
-      UNION
-      SELECT id1, id2 FROM star_pairs
-    ), pairs AS MATERIALIZED (
-      SELECT c.id1, c.id2
-      FROM cand c
-      JOIN b x ON c.id1 = x.vec_id
-      JOIN b y ON c.id2 = y.vec_id
-      WHERE ROUND(list_cosine_similarity(x.v, y.v), 6) >= {_Q181_TAU}
-    ), edges AS MATERIALIZED (
-      SELECT id1 AS src, id2 AS dst FROM pairs
-      UNION SELECT id2, id1 FROM pairs
-    ), reach AS (
-      SELECT src, dst FROM edges
-      UNION
-      SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-      WHERE e.dst <> r.src
-    ), labels AS MATERIALIZED (
-      SELECT src AS id, LEAST(src, MIN(dst)) AS cluster
-      FROM reach GROUP BY src
-    )
-    SELECT d.vec_id,
-           COALESCE(l.cluster, d.vec_id) AS cluster,
-           d.vec_id = COALESCE(l.cluster, d.vec_id) AS keep
-    FROM (SELECT vec_id FROM embeddings) d
-    LEFT JOIN labels l ON d.vec_id = l.id
-    """
 
 
 @_register(
     "q187_semantic_dedup_capped",
-    oracle=_q187_oracle_sql(),
+    oracle=_semdedup_oracle_sql(_Q187_BITS, _Q187_CAP),
     tags=("similarity", "dedup", "semdedup", "skew-guard"),
     # benched alongside the uncapped q181 so the scaling table
     # contrasts guarded vs unguarded semantic dedup directly
     bench=True,
 )
 def q187_semantic_dedup_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     emb = _t(spark, sf_dir, "embeddings")
     return sim_ops.semantic_dedup(
         emb, "vec_id", "embedding", threshold=_Q181_TAU,
@@ -10550,118 +10317,21 @@ def q187_semantic_dedup_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q188_oracle_sql() -> str:
-    planes = sim_ops.srp_planes(EMBEDDING_DIM, num_bits=_Q187_BITS, seed=42)
-
-    def dot_expr(i: int) -> str:
-        return " + ".join(
-            f"v[{j + 1}]*({float(planes[i][j])!r})" for j in range(EMBEDDING_DIM)
-        )
-
-    bits = " + ".join(
-        f"(CASE WHEN ({dot_expr(i)}) > 0 THEN {1 << i} ELSE 0 END)"
-        for i in range(_Q187_BITS)
-    )
-    prefix = _portable_minhash_prefix_sql(
-        " WHERE doc_id IN (SELECT vec_id FROM embeddings)",
-        _Q55_HASHES, _Q55_BANDS,
-    )
+    joined = " WHERE doc_id IN (SELECT vec_id FROM embeddings)"
     sql = f"""
-    WITH RECURSIVE {prefix}, tsizes AS (
-      SELECT band_idx, band_key, COUNT(*) AS n
-      FROM bnd GROUP BY band_idx, band_key
-    ), tsmall AS (
-      SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-      FROM bnd a
-      JOIN bnd b ON a.band_idx = b.band_idx AND a.band_key = b.band_key
-               AND a.doc_id < b.doc_id
-      JOIN tsizes s ON s.band_idx = a.band_idx AND s.band_key = a.band_key
-      WHERE s.n BETWEEN 2 AND {_Q182_CAP}
-    ), tanch AS (
-      SELECT b.band_idx, b.band_key, MIN(b.doc_id) AS anchor
-      FROM bnd b JOIN tsizes s
-        ON s.band_idx = b.band_idx AND s.band_key = b.band_key
-      WHERE s.n > {_Q182_CAP}
-      GROUP BY b.band_idx, b.band_key
-    ), tstar AS (
-      SELECT DISTINCT an.anchor AS id1, m.doc_id AS id2
-      FROM tanch an
-      JOIN bnd m ON m.band_idx = an.band_idx AND m.band_key = an.band_key
-      WHERE an.anchor < m.doc_id
-    ), tcand AS (
-      SELECT id1, id2 FROM tsmall UNION SELECT id1, id2 FROM tstar
-    ), hs AS (
-      SELECT doc_id, list(h) AS hs FROM hx GROUP BY doc_id
-    ), tpairs AS (
-      SELECT c.id1, c.id2
-      FROM tcand c
-      JOIN hs h1 ON c.id1 = h1.doc_id
-      JOIN hs h2 ON c.id2 = h2.doc_id
-      WHERE CAST(len(list_intersect(h1.hs, h2.hs)) AS DOUBLE)
-            / (len(h1.hs) + len(h2.hs) - len(list_intersect(h1.hs, h2.hs)))
-            >= 0.055
-    ), sb AS (
-      SELECT vec_id, v, CAST({bits} AS BIGINT) AS bucket
-      FROM (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)
-    ), ssz AS (
-      SELECT bucket, COUNT(*) AS n FROM sb GROUP BY bucket
-    ), ssmall AS (
-      SELECT x.vec_id AS id1, y.vec_id AS id2
-      FROM sb x
-      JOIN sb y ON x.bucket = y.bucket AND x.vec_id < y.vec_id
-      JOIN ssz s ON s.bucket = x.bucket
-      WHERE s.n BETWEEN 2 AND {_Q187_CAP}
-    ), sanch AS (
-      SELECT m.bucket, MIN(m.vec_id) AS anchor
-      FROM sb m JOIN ssz s ON s.bucket = m.bucket
-      WHERE s.n > {_Q187_CAP}
-      GROUP BY m.bucket
-    ), sstar AS (
-      SELECT an.anchor AS id1, m.vec_id AS id2
-      FROM sanch an
-      JOIN sb m ON m.bucket = an.bucket
-      WHERE an.anchor < m.vec_id
-    ), scand AS (
-      SELECT id1, id2 FROM ssmall UNION SELECT id1, id2 FROM sstar
-    ), spairs AS (
-      SELECT c.id1, c.id2
-      FROM scand c
-      JOIN sb x ON c.id1 = x.vec_id
-      JOIN sb y ON c.id2 = y.vec_id
-      WHERE ROUND(list_cosine_similarity(x.v, y.v), 6) >= {_Q181_TAU}
-    ), jedges AS (
-      SELECT id1 AS src, id2 AS dst FROM tpairs
-      UNION SELECT id2, id1 FROM tpairs
-      UNION SELECT id1, id2 FROM spairs
-      UNION SELECT id2, id1 FROM spairs
-    ), reach AS (
-      SELECT src, dst FROM jedges
-      UNION
-      SELECT r.src, e.dst FROM reach r JOIN jedges e ON r.dst = e.src
-      WHERE e.dst <> r.src
-    ), jlabels AS (
-      SELECT src AS id, LEAST(src, MIN(dst)) AS cluster
-      FROM reach GROUP BY src
-    )
-    SELECT d.doc_id,
-           COALESCE(l.cluster, d.doc_id) AS cluster,
-           d.doc_id = COALESCE(l.cluster, d.doc_id) AS keep
-    FROM (SELECT doc_id FROM documents
-          WHERE doc_id IN (SELECT vec_id FROM embeddings)) d
-    LEFT JOIN jlabels l ON d.doc_id = l.id
+    WITH RECURSIVE {_portable_minhash_prefix_sql(joined, _Q55_HASHES, _Q55_BANDS)},
+    {_HS_SQL}, {_lsh_pairs_sql("bnd", 0.055, "t")},
+    {_semdedup_pairs_sql(_Q187_BITS, _Q187_CAP, "s")},
+    {_closure_sql("tpairs", "spairs")}
+    {_keep_sql("doc_id", "SELECT doc_id FROM documents" + joined)}
     """
     # multi-referenced CTEs (see the MATERIALIZED note on q186): bnd
     # fans out of sig per band; hx/hs, sb, the candidate unions and
     # the closure base+step all re-reference their chain
-    import re
-
-    for name in (
-        "hx", "sig", "bnd", "tsizes", "tcand", "hs", "tpairs",
-        "sb", "ssz", "scand", "spairs", "jedges", "jlabels",
-    ):
-        sql = re.sub(
-            rf"(?<![A-Za-z_]){name} AS \(", f"{name} AS MATERIALIZED (", sql
-        )
-    return sql
+    return _materialized(
+        sql, "hx", "sig", "bnd", "tsizes", "tcand", "hs", "tpairs",
+        "sb", "ssizes", "scand", "spairs",
+    )
 
 
 @_register(
@@ -10673,7 +10343,6 @@ def _q188_oracle_sql() -> str:
     # a measured slope next to its parents q182/q187.
 )
 def q188_joint_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents")
     emb = _t(spark, sf_dir, "embeddings")
     joined = docs.join(
@@ -10711,8 +10380,7 @@ def _q189_oracle_sql() -> str:
     sql = f"""
     WITH tok AS (
       SELECT doc_id,
-             list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                         t -> t <> '') AS t
+             {_TOKENS_SQL} AS t
       FROM documents
     ), occ AS (
       SELECT doc_id, pos,
@@ -10775,13 +10443,7 @@ def _q189_oracle_sql() -> str:
     """
     # tok fans out 3 ways, spans 2 ways (see the MATERIALIZED note on
     # q186 for the measured rationale)
-    import re
-
-    for name in ("tok", "marked", "spans"):
-        sql = re.sub(
-            rf"(?<![A-Za-z_]){name} AS \(", f"{name} AS MATERIALIZED (", sql
-        )
-    return sql
+    return _materialized(sql, "tok", "marked", "spans")
 
 
 @_register(
@@ -10792,7 +10454,6 @@ def _q189_oracle_sql() -> str:
     # merge is shuffle-bound on the shingle key; benched from day one.
 )
 def q189_exact_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents")
     return dedup_ops.remove_repeated_substrings(
         docs, "doc_id", "text", k=_Q189_K, portable=True
@@ -10839,26 +10500,17 @@ def _q190_oracle_sql() -> str:
       SELECT DISTINCT n.doc_id AS id_new, c.doc_id AS id_ref
       FROM newb n
       JOIN capped c ON n.band_idx = c.band_idx AND n.band_key = c.band_key
-    ), hs AS (
-      SELECT doc_id, list(h) AS hs FROM hx GROUP BY doc_id
-    )
+    ), {_HS_SQL}
     SELECT * FROM (
       SELECT c.id_new, c.id_ref,
-             CAST(len(list_intersect(h1.hs, h2.hs)) AS DOUBLE)
-               / (len(h1.hs) + len(h2.hs) - len(list_intersect(h1.hs, h2.hs)))
+             {_jaccard_sql("h1.hs", "h2.hs")}
                AS jaccard
       FROM cand c
       JOIN hs h1 ON c.id_new = h1.doc_id
       JOIN hs h2 ON c.id_ref = h2.doc_id
     ) WHERE jaccard >= 0.055
     """
-    import re
-
-    for name in ("tok", "sh", "hx", "bnd", "refb", "cand", "hs"):
-        sql = re.sub(
-            rf"(?<![A-Za-z_]){name} AS \(", f"{name} AS MATERIALIZED (", sql
-        )
-    return sql
+    return _materialized(sql, "tok", "sh", "hx", "bnd", "refb", "cand", "hs")
 
 
 @_register(
@@ -10867,7 +10519,6 @@ def _q190_oracle_sql() -> str:
     tags=("dedup", "minhash", "lsh", "cross-corpus", "portable"),
 )
 def q190_cross_corpus_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
     new_df = docs.filter(F.col("doc_id") % 2 == 1)
     ref_df = docs.filter(F.col("doc_id") % 2 == 0)
@@ -10903,8 +10554,7 @@ def _q191_oracle_sql() -> str:
     sql = f"""
     WITH tok AS (
       SELECT doc_id, lang,
-             list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                         t -> t <> '') AS toks
+             {_TOKENS_SQL} AS toks
       FROM documents
     ), g AS (
       SELECT doc_id, lang, unnest(toks) AS gram FROM tok
@@ -10953,13 +10603,7 @@ def _q191_oracle_sql() -> str:
     ORDER BY key_micro DESC, doc_id ASC
     LIMIT {k}
     """
-    import re
-
-    for name in ("tok", "g", "gb", "dc", "rawc", "tgtc"):
-        sql = re.sub(
-            rf"(?<![A-Za-z_]){name} AS \(", f"{name} AS MATERIALIZED (", sql
-        )
-    return sql
+    return _materialized(sql, "tok", "g", "gb", "dc", "rawc", "tgtc")
 
 
 @_register(
@@ -10972,7 +10616,6 @@ def _q191_oracle_sql() -> str:
 def q191_dsir_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     from us_immigration_data_lake_spark.operators.sampling import dsir_select
 
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents")
     target = docs.filter(F.col("lang") == "en")
     return dsir_select(
@@ -10999,22 +10642,12 @@ _Q192_CAP = 5
 
 
 def _q192_oracle_sql() -> str:
-    planes = sim_ops.srp_planes(EMBEDDING_DIM, num_bits=_Q187_BITS, seed=42)
-
-    def dot_expr(i: int) -> str:
-        return " + ".join(
-            f"v[{j + 1}]*({float(planes[i][j])!r})" for j in range(EMBEDDING_DIM)
-        )
-
-    bits = " + ".join(
-        f"(CASE WHEN ({dot_expr(i)}) > 0 THEN {1 << i} ELSE 0 END)"
-        for i in range(_Q187_BITS)
-    )
+    bits = _srp_bucket_sql(_Q187_BITS)
     return f"""
     WITH base AS (
       SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
     ), b AS MATERIALIZED (
-      SELECT vec_id, v, CAST({bits} AS BIGINT) AS bucket FROM base
+      SELECT vec_id, v, {bits} AS bucket FROM base
     ), capped AS MATERIALIZED (
       SELECT bucket, vec_id FROM (
         SELECT bucket, vec_id,
@@ -11042,7 +10675,6 @@ def _q192_oracle_sql() -> str:
     tags=("similarity", "dedup", "semdedup", "cross-corpus", "skew-guard"),
 )
 def q192_cross_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     emb = _t(spark, sf_dir, "embeddings")
     new_df = emb.filter(F.col("vec_id") % 2 == 1)
     ref_df = emb.filter(F.col("vec_id") % 2 == 0)
@@ -11106,7 +10738,6 @@ def _q193_oracle_sql() -> str:
 def q193_rrf_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from us_immigration_data_lake_spark.operators.retrieval import rrf_fuse
 
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents")
     emb = _t(spark, sf_dir, "embeddings")
     lex = ts_ops.bm25_multiterm_topk(
@@ -11173,8 +10804,7 @@ def _q194_oracle_sql() -> str:
     return f"""
     WITH words AS MATERIALIZED (
       SELECT w, CAST(COUNT(*) AS BIGINT) AS cnt FROM (
-        SELECT unnest(list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                                  t -> t <> '')) AS w
+        SELECT unnest({_TOKENS_SQL}) AS w
         FROM documents
       ) GROUP BY w
     ), s0 AS MATERIALIZED (
@@ -11200,7 +10830,6 @@ def _q194_oracle_sql() -> str:
     ),
 )
 def q194_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents")
     return ts_ops.bpe_merges(docs, "text", n_merges=_Q194_MERGES)
 
@@ -11236,7 +10865,6 @@ def q195_stream_cross_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from us_immigration_data_lake_spark.streaming.windows import run_to_memory
 
-    _tune(spark)
     stream = read_parquet_stream(
         spark, f"{sf_dir.rstrip('/')}/documents*.parquet"
     ).filter((F.col("doc_id") < 200) & (F.col("doc_id") % 2 == 1))
@@ -11274,24 +10902,18 @@ def _q196_oracle_sql() -> str:
     sql = f"""
     WITH tok AS (
       SELECT doc_id,
-             list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                         t -> t <> '') AS toks,
+             {_TOKENS_SQL} AS toks,
              substr(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')),
                     1, {_Q196_PREFIX}) AS key
       FROM documents
     ), sh AS (
       SELECT doc_id, key,
-             CASE WHEN len(toks) >= 2
-                  THEN list_distinct([array_to_string(toks[i:i+1], ' ')
-                                      for i in range(1, len(toks))])
-                  ELSE [array_to_string(toks, ' ')] END AS shingles
+             {_SHINGLES_SQL} AS shingles
       FROM tok
     ), hx AS (
       SELECT DISTINCT doc_id, ('0x' || substr(md5(s), 1, 15))::BIGINT AS h
       FROM (SELECT doc_id, unnest(shingles) AS s FROM sh)
-    ), hs AS (
-      SELECT doc_id, list(h) AS hs FROM hx GROUP BY doc_id
-    ), rnk AS (
+    ), {_HS_SQL}, rnk AS (
       SELECT doc_id,
              CAST(ROW_NUMBER() OVER (ORDER BY key, doc_id) AS BIGINT) AS r
       FROM sh
@@ -11301,21 +10923,14 @@ def _q196_oracle_sql() -> str:
     )
     SELECT * FROM (
       SELECT c.id1, c.id2,
-             CAST(len(list_intersect(h1.hs, h2.hs)) AS DOUBLE)
-               / (len(h1.hs) + len(h2.hs) - len(list_intersect(h1.hs, h2.hs)))
+             {_jaccard_sql("h1.hs", "h2.hs")}
                AS jaccard
       FROM cand c
       JOIN hs h1 ON c.id1 = h1.doc_id
       JOIN hs h2 ON c.id2 = h2.doc_id
     ) WHERE jaccard >= 0.055
     """
-    import re
-
-    for name in ("tok", "sh", "hx", "hs", "rnk", "cand"):
-        sql = re.sub(
-            rf"(?<![A-Za-z_]){name} AS \(", f"{name} AS MATERIALIZED (", sql
-        )
-    return sql
+    return _materialized(sql, "tok", "sh", "hx", "hs", "rnk", "cand")
 
 
 @_register(
@@ -11324,7 +10939,6 @@ def _q196_oracle_sql() -> str:
     tags=("dedup", "sorted-neighborhood", "blocking", "portable"),
 )
 def q196_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents")
     return dedup_ops.sorted_neighborhood_pairs(
         docs, "doc_id", "text", window=_Q196_WINDOW,
@@ -11370,7 +10984,6 @@ _Q197_D, _Q197_PREFIX = 2, 16
 )
 def q197_edit_distance_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
-    _tune(spark)
     named = (
         docs.filter(F.col("doc_id") < 300)
         .select(
@@ -11452,7 +11065,6 @@ def _q198_oracle_sql() -> str:
 def q198_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     from us_immigration_data_lake_spark.operators.regress import holt_linear
 
-    _tune(spark)
     ev = load_events(spark, sf_dir)
     daily = ev.groupBy(
         "event_type", F.date_trunc("day", "ts").alias("d")
@@ -11542,7 +11154,6 @@ def _q199_oracle_sql() -> str:
 def q199_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from us_immigration_data_lake_spark.operators.regress import cusum_drift
 
-    _tune(spark)
     ev = load_events(spark, sf_dir)
     daily = ev.groupBy(
         "event_type", F.date_trunc("day", "ts").alias("d")
@@ -11580,32 +11191,8 @@ def _q200_oracle_sql() -> str:
         " WHERE doc_id < 100", _Q55_HASHES, _Q55_BANDS
     )
     sql = f"""
-    WITH RECURSIVE qtok AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(trim(text), '\\s+'),
-                         t -> t <> '') AS toks
-      FROM documents WHERE doc_id < 100 AND doc_id % 2 = 1
-    ), qfeat AS (
-      SELECT doc_id,
-             CAST(array_length(toks) AS BIGINT) AS n_tokens,
-             CAST(array_length(list_distinct(toks)) AS BIGINT) AS n_distinct,
-             CAST(len(list_filter(toks,
-               t -> list_contains(['the','a','and','of','to','is','in','it'], t)))
-               AS BIGINT) AS n_stop,
-             CAST(list_sum(list_transform(toks, t -> length(t))) AS BIGINT)
-               AS sum_len
-      FROM qtok
-    ), gate AS (
-      SELECT doc_id FROM qfeat
-      WHERE CASE WHEN n_tokens = 0 THEN CAST(0.0 AS DOUBLE) ELSE ROUND(
-              0.4 * (n_distinct / CAST(n_tokens AS DOUBLE))
-              + 0.2 * LEAST((n_stop / CAST(n_tokens AS DOUBLE)) * 5.0, 1.0)
-              + 0.2 * LEAST(CAST(n_tokens AS DOUBLE) / 100.0, 1.0)
-              + 0.2 * LEAST((sum_len / CAST(n_tokens AS DOUBLE)) / 8.0, 1.0)
-            , 6) END >= {_Q186_MIN_QUALITY}
-    ), {prefix}, hs AS (
-      SELECT doc_id, list(h) AS hs FROM hx GROUP BY doc_id
-    ), refb AS (
+    WITH RECURSIVE {_quality_gate_sql(" WHERE doc_id < 100 AND doc_id % 2 = 1")},
+    {prefix}, {_HS_SQL}, refb AS (
       SELECT band_idx, band_key, doc_id FROM bnd WHERE doc_id % 2 = 0
     ), newb AS (
       SELECT b.band_idx, b.band_key, b.doc_id
@@ -11623,8 +11210,7 @@ def _q200_oracle_sql() -> str:
       JOIN capped c ON n.band_idx = c.band_idx AND n.band_key = c.band_key
       JOIN hs h1 ON n.doc_id = h1.doc_id
       JOIN hs h2 ON c.doc_id = h2.doc_id
-      WHERE CAST(len(list_intersect(h1.hs, h2.hs)) AS DOUBLE)
-            / (len(h1.hs) + len(h2.hs) - len(list_intersect(h1.hs, h2.hs)))
+      WHERE {_jaccard_sql("h1.hs", "h2.hs")}
             >= 0.055
     ), xsurv AS (
       SELECT g.doc_id FROM gate g
@@ -11633,51 +11219,8 @@ def _q200_oracle_sql() -> str:
     ), wb AS (
       SELECT b.band_idx, b.band_key, b.doc_id
       FROM bnd b JOIN xsurv s ON b.doc_id = s.doc_id
-    ), sizes AS (
-      SELECT band_idx, band_key, COUNT(*) AS n
-      FROM wb GROUP BY band_idx, band_key
-    ), small_pairs AS (
-      SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-      FROM wb a
-      JOIN wb b ON a.band_idx = b.band_idx AND a.band_key = b.band_key
-              AND a.doc_id < b.doc_id
-      JOIN sizes s ON s.band_idx = a.band_idx AND s.band_key = a.band_key
-      WHERE s.n BETWEEN 2 AND {_Q182_CAP}
-    ), anchors AS (
-      SELECT b.band_idx, b.band_key, MIN(b.doc_id) AS anchor
-      FROM wb b JOIN sizes s
-        ON s.band_idx = b.band_idx AND s.band_key = b.band_key
-      WHERE s.n > {_Q182_CAP}
-      GROUP BY b.band_idx, b.band_key
-    ), star_pairs AS (
-      SELECT DISTINCT an.anchor AS id1, m.doc_id AS id2
-      FROM anchors an
-      JOIN wb m ON m.band_idx = an.band_idx AND m.band_key = an.band_key
-      WHERE an.anchor < m.doc_id
-    ), wver AS (
-      SELECT c.id1, c.id2
-      FROM (SELECT id1, id2 FROM small_pairs
-            UNION SELECT id1, id2 FROM star_pairs) c
-      JOIN hs h1 ON c.id1 = h1.doc_id
-      JOIN hs h2 ON c.id2 = h2.doc_id
-      WHERE CAST(len(list_intersect(h1.hs, h2.hs)) AS DOUBLE)
-            / (len(h1.hs) + len(h2.hs) - len(list_intersect(h1.hs, h2.hs)))
-            >= 0.055
-    ), edges AS MATERIALIZED (
-      SELECT id1 AS src, id2 AS dst FROM wver
-      UNION SELECT id2, id1 FROM wver
-    ), reach AS (
-      SELECT src, dst FROM edges
-      UNION
-      SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-      WHERE e.dst <> r.src
-    ), labels AS MATERIALIZED (
-      SELECT src AS id, LEAST(src, MIN(dst)) AS cluster
-      FROM reach GROUP BY src
-    ), wsurv AS (
-      SELECT s.doc_id FROM xsurv s
-      LEFT JOIN labels l ON s.doc_id = l.id
-      WHERE COALESCE(l.cluster, s.doc_id) = s.doc_id
+    ), {_lsh_pairs_sql("wb", 0.055)}, {_closure_sql("pairs")}, wsurv AS (
+      {_survivors_sql("doc_id", "xsurv")}
     )
     SELECT
       CAST((SELECT COUNT(*) FROM documents
@@ -11686,17 +11229,11 @@ def _q200_oracle_sql() -> str:
       CAST((SELECT COUNT(*) FROM xsurv) AS BIGINT) AS after_cross_dedup,
       CAST((SELECT COUNT(*) FROM wsurv) AS BIGINT) AS after_within_dedup
     """
-    import re
-
-    for name in (
-        "qtok", "gate", "hx", "sig", "bnd", "hs", "refb", "newb", "capped",
-        "xver", "xsurv", "wb", "sizes", "small_pairs", "anchors",
-        "star_pairs", "wver", "wsurv",
-    ):
-        sql = re.sub(
-            rf"(?<![A-Za-z_]){name} AS \(", f"{name} AS MATERIALIZED (", sql
-        )
-    return sql
+    return _materialized(
+        sql, "qtok", "gate", "hx", "sig", "bnd", "hs", "refb", "newb",
+        "capped", "xver", "xsurv", "wb", "sizes", "small_pairs", "anchors",
+        "star_pairs", "pairs", "wsurv",
+    )
 
 
 @_register(
@@ -11714,7 +11251,6 @@ def q200_incremental_corpus_update(spark: SparkSession, sf_dir: str) -> DataFram
         update_corpus_increment,
     )
 
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
     new_df = docs.filter(F.col("doc_id") % 2 == 1)
     ref_df = docs.filter(F.col("doc_id") % 2 == 0)
@@ -11827,7 +11363,6 @@ def q201_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
         holt_winters_additive,
     )
 
-    _tune(spark)
     ev = load_events(spark, sf_dir)
     daily = ev.groupBy(
         "event_type", F.date_trunc("day", "ts").alias("d")
@@ -11863,8 +11398,7 @@ def _q202_oracle_sql() -> str:
     sql = f"""
     WITH tok AS (
       SELECT doc_id,
-             list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                         t -> t <> '') AS toks,
+             {_TOKENS_SQL} AS toks,
              trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS norm
       FROM documents
       WHERE regexp_matches(text, '^[ -~]*$')
@@ -11878,17 +11412,12 @@ def _q202_oracle_sql() -> str:
       FROM tok
     ), sh AS (
       SELECT doc_id,
-             CASE WHEN len(toks) >= 2
-                  THEN list_distinct([array_to_string(toks[i:i+1], ' ')
-                                      for i in range(1, len(toks))])
-                  ELSE [array_to_string(toks, ' ')] END AS shingles
+             {_SHINGLES_SQL} AS shingles
       FROM keyed
     ), hx AS (
       SELECT DISTINCT doc_id, ('0x' || substr(md5(s), 1, 15))::BIGINT AS h
       FROM (SELECT doc_id, unnest(shingles) AS s FROM sh)
-    ), hs AS (
-      SELECT doc_id, list(h) AS hs FROM hx GROUP BY doc_id
-    ), rnk AS (
+    ), {_HS_SQL}, rnk AS (
       SELECT doc_id,
              CAST(ROW_NUMBER() OVER (ORDER BY k1, doc_id) AS BIGINT) AS r1,
              CAST(ROW_NUMBER() OVER (ORDER BY k2, doc_id) AS BIGINT) AS r2,
@@ -11904,21 +11433,14 @@ def _q202_oracle_sql() -> str:
     )
     SELECT * FROM (
       SELECT c.id1, c.id2,
-             CAST(len(list_intersect(h1.hs, h2.hs)) AS DOUBLE)
-               / (len(h1.hs) + len(h2.hs) - len(list_intersect(h1.hs, h2.hs)))
+             {_jaccard_sql("h1.hs", "h2.hs")}
                AS jaccard
       FROM cand c
       JOIN hs h1 ON c.id1 = h1.doc_id
       JOIN hs h2 ON c.id2 = h2.doc_id
     ) WHERE jaccard >= 0.055
     """
-    import re
-
-    for name in ("tok", "keyed", "sh", "hx", "hs", "rnk", "cand"):
-        sql = re.sub(
-            rf"(?<![A-Za-z_]){name} AS \(", f"{name} AS MATERIALIZED (", sql
-        )
-    return sql
+    return _materialized(sql, "tok", "keyed", "sh", "hx", "hs", "rnk", "cand")
 
 
 @_register(
@@ -11930,7 +11452,6 @@ def _q202_oracle_sql() -> str:
 def q202_multi_pass_sorted_neighborhood(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents").filter(
         F.col("text").rlike("^[ -~]*$")
     )
@@ -11968,8 +11489,7 @@ def _q203_oracle_sql() -> str:
     sql = f"""
     WITH base AS MATERIALIZED (
       SELECT doc_id,
-             list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                         t -> t <> '') AS toks
+             {_TOKENS_SQL} AS toks
       FROM documents WHERE text IS NOT NULL
     ), lab AS MATERIALIZED (
       SELECT doc_id,
@@ -12029,7 +11549,6 @@ def q203_train_quality_classifier(
 ) -> DataFrame:
     from us_immigration_data_lake_spark.operators import training as tr_ops
 
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     toks = F.filter(
         F.split(F.trim(F.lower(F.col("text"))), r"[ \t\n\x0B\f\r]+"),
@@ -12084,7 +11603,6 @@ def q204_stream_cross_semantic_dedup(
     )
     from us_immigration_data_lake_spark.streaming.windows import run_to_memory
 
-    _tune(spark)
     stream = read_parquet_stream(
         spark, f"{sf_dir.rstrip('/')}/embeddings*.parquet"
     ).filter(F.col("vec_id") % 2 == 1)
@@ -12129,8 +11647,7 @@ def _q205_oracle_sql() -> str:
     sql = f"""
     WITH base AS MATERIALIZED (
       SELECT doc_id,
-             list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                         t -> t <> '') AS toks
+             {_TOKENS_SQL} AS toks
       FROM documents WHERE text IS NOT NULL
     ), lab AS MATERIALIZED (
       SELECT doc_id, CAST({_Q205_LANG_CASE} AS BIGINT) AS y
@@ -12188,7 +11705,6 @@ def q205_train_langid_multinomial(
 ) -> DataFrame:
     from us_immigration_data_lake_spark.operators import training as tr_ops
 
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     labeled = docs.withColumn("__y", F.expr(_Q205_LANG_CASE).cast("long"))
     return tr_ops.train_multinomial_logreg_hashed(
@@ -12221,8 +11737,7 @@ def _q206_oracle_sql() -> str:
     return f"""
     WITH base AS MATERIALIZED (
       SELECT doc_id,
-             list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                         t -> t <> '') AS toks
+             {_TOKENS_SQL} AS toks
       FROM documents WHERE text IS NOT NULL
     ), lab AS MATERIALIZED (
       SELECT doc_id, CAST({_Q205_LANG_CASE} AS BIGINT) AS k
@@ -12285,7 +11800,6 @@ def _q206_oracle_sql() -> str:
 def q206_naive_bayes_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     from us_immigration_data_lake_spark.operators import training as tr_ops
 
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     labeled = docs.withColumn("__y", F.expr(_Q205_LANG_CASE).cast("long"))
     model = tr_ops.naive_bayes_model(
@@ -12319,8 +11833,7 @@ def _q207_oracle_sql() -> str:
     return f"""
     WITH RECURSIVE sized AS (
       SELECT doc_id,
-             CAST(len(list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                                  t -> t <> '')) AS BIGINT) AS n_tok,
+             CAST(len({_TOKENS_SQL}) AS BIGINT) AS n_tok,
              ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
                % {shards} AS shard
       FROM documents WHERE text IS NOT NULL
@@ -12362,7 +11875,6 @@ def q207_pack_nextfit(spark: SparkSession, sf_dir: str) -> DataFrame:
         pack_sequences_nextfit,
     )
 
-    _tune(spark)
     docs = (
         _t(spark, sf_dir, "documents")
         .filter(F.col("text").isNotNull())
@@ -12392,11 +11904,10 @@ def q207_pack_nextfit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q208_oracle_sql() -> str:
-    return """
+    return f"""
     WITH dd AS MATERIALIZED (
       SELECT doc_id,
-             list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                         t -> t <> '') AS toks
+             {_TOKENS_SQL} AS toks
       FROM documents WHERE text IS NOT NULL
     ), refp AS MATERIALIZED (
       SELECT unnest((list_prepend(chr(1), toks))[1:len(toks)]) AS prev,
@@ -12440,7 +11951,6 @@ def q208_ref_lm_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         ref_lm_bigram_xent,
     )
 
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     new_df = docs.filter(F.col("doc_id") % 2 == 1)
     ref_df = docs.filter(F.col("doc_id") % 2 == 0)
@@ -12495,8 +12005,7 @@ def _q209_oracle_sql() -> str:
     return f"""
     WITH words AS MATERIALIZED (
       SELECT w, CAST(COUNT(*) AS BIGINT) AS cnt FROM (
-        SELECT unnest(list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                                  t -> t <> '')) AS w
+        SELECT unnest({_TOKENS_SQL}) AS w
         FROM documents
       ) GROUP BY w
     ), s0 AS MATERIALIZED (
@@ -12505,9 +12014,7 @@ def _q209_oracle_sql() -> str:
     ), {blocks}, wtok AS MATERIALIZED (
       SELECT w, CAST(len(symbols) AS BIGINT) AS n_bpe FROM s{n}
     ), occ AS (
-      SELECT doc_id, unnest(list_filter(
-               string_split_regex(trim(lower(text)), '\\s+'),
-               t -> t <> '')) AS w
+      SELECT doc_id, unnest({_TOKENS_SQL}) AS w
       FROM documents WHERE text IS NOT NULL
     )
     SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_words,
@@ -12524,7 +12031,6 @@ def _q209_oracle_sql() -> str:
     tags=("llm", "tokenizer", "bpe", "encode", "token-count", "portable"),
 )
 def q209_bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents")
     merges = [
         (r["left"], r["right"])
@@ -12559,8 +12065,7 @@ def _q210_oracle_sql() -> str:
     return f"""
     WITH base AS MATERIALIZED (
       SELECT doc_id,
-             list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                         t -> t <> '') AS toks
+             {_TOKENS_SQL} AS toks
       FROM documents WHERE text IS NOT NULL
     ), lab AS MATERIALIZED (
       SELECT doc_id, CAST({_Q205_LANG_CASE} AS BIGINT) AS y
@@ -12628,7 +12133,6 @@ def q210_stream_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from us_immigration_data_lake_spark.streaming.windows import run_to_memory
 
-    _tune(spark)
     train = (
         _t(spark, sf_dir, "documents")
         .filter(F.col("text").isNotNull() & (F.col("doc_id") % 2 == 0))
@@ -12659,11 +12163,10 @@ def q210_stream_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q211_oracle_sql() -> str:
-    return """
+    return f"""
     WITH tok AS (
       SELECT source,
-             list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                         t -> t <> '') AS toks
+             {_TOKENS_SQL} AS toks
       FROM documents WHERE text IS NOT NULL
     ), sh AS MATERIALIZED (
       SELECT source,
@@ -12700,7 +12203,6 @@ def _q211_oracle_sql() -> str:
           "portable"),
 )
 def q211_cross_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents")
     return dedup_ops.cross_group_overlap(
         docs, "doc_id", "text", "source", shingle_n=3, portable=True
@@ -12759,7 +12261,6 @@ def _q212_oracle_sql() -> str:
 def q212_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from us_immigration_data_lake_spark.operators.regress import ks_two_sample
 
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents")
     return ks_two_sample(docs, "lang", "n_chars", "en", "zh")
 
@@ -12823,7 +12324,6 @@ def _q213_oracle_sql() -> str:
 def q213_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from us_immigration_data_lake_spark.operators.regress import psi_drift
 
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents")
     return psi_drift(
         docs, "lang", "n_chars", "en", "zh",
@@ -12846,23 +12346,13 @@ def q213_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q214_oracle_sql() -> str:
-    planes = sim_ops.srp_planes(EMBEDDING_DIM, num_bits=_Q187_BITS, seed=42)
-
-    def dot_expr(i: int) -> str:
-        return " + ".join(
-            f"v[{j + 1}]*({float(planes[i][j])!r})" for j in range(EMBEDDING_DIM)
-        )
-
-    bits = " + ".join(
-        f"(CASE WHEN ({dot_expr(i)}) > 0 THEN {1 << i} ELSE 0 END)"
-        for i in range(_Q187_BITS)
-    )
-    return f"""
+    bits = _srp_bucket_sql(_Q187_BITS)
+    return _materialized(f"""
     WITH RECURSIVE base AS (
       SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
       WHERE len(embedding) = {EMBEDDING_DIM}
     ), b AS MATERIALIZED (
-      SELECT vec_id, v, CAST({bits} AS BIGINT) AS bucket FROM base
+      SELECT vec_id, v, {bits} AS bucket FROM base
     ), capped AS MATERIALIZED (
       SELECT bucket, vec_id FROM (
         SELECT bucket, vec_id,
@@ -12883,50 +12373,16 @@ def _q214_oracle_sql() -> str:
       SELECT vec_id, v, bucket FROM b
       WHERE vec_id % 2 = 1
         AND vec_id NOT IN (SELECT id_new FROM xpairs)
-    ), sizes AS MATERIALIZED (
-      SELECT bucket, COUNT(*) AS n FROM surv GROUP BY bucket
-    ), small_pairs AS (
-      SELECT x.vec_id AS id1, y.vec_id AS id2
-      FROM surv x
-      JOIN surv y ON x.bucket = y.bucket AND x.vec_id < y.vec_id
-      JOIN sizes s ON s.bucket = x.bucket
-      WHERE s.n BETWEEN 2 AND {_Q187_CAP}
-    ), anchors AS (
-      SELECT m.bucket, MIN(m.vec_id) AS anchor
-      FROM surv m JOIN sizes s ON s.bucket = m.bucket
-      WHERE s.n > {_Q187_CAP}
-      GROUP BY m.bucket
-    ), star_pairs AS (
-      SELECT an.anchor AS id1, m.vec_id AS id2
-      FROM anchors an
-      JOIN surv m ON m.bucket = an.bucket
-      WHERE an.anchor < m.vec_id
-    ), wcand AS MATERIALIZED (
-      SELECT id1, id2 FROM small_pairs
-      UNION
-      SELECT id1, id2 FROM star_pairs
-    ), wpairs AS MATERIALIZED (
+    ), {_capped_candidates_sql("surv", "vec_id", ("bucket",), _Q187_CAP)},
+    wpairs AS MATERIALIZED (
       SELECT c.id1, c.id2
-      FROM wcand c
+      FROM cand c
       JOIN surv x ON c.id1 = x.vec_id
       JOIN surv y ON c.id2 = y.vec_id
       WHERE ROUND(list_cosine_similarity(x.v, y.v), 6) >= {_Q181_TAU}
-    ), edges AS MATERIALIZED (
-      SELECT id1 AS src, id2 AS dst FROM wpairs
-      UNION SELECT id2, id1 FROM wpairs
-    ), reach AS (
-      SELECT src, dst FROM edges
-      UNION
-      SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-      WHERE e.dst <> r.src
-    ), labels AS MATERIALIZED (
-      SELECT src AS id, LEAST(src, MIN(dst)) AS cluster
-      FROM reach GROUP BY src
-    )
-    SELECT s.vec_id FROM surv s
-    LEFT JOIN labels l ON s.vec_id = l.id
-    WHERE s.vec_id = COALESCE(l.cluster, s.vec_id)
-    """
+    ), {_closure_sql("wpairs")}
+    {_survivors_sql("vec_id", "surv")}
+    """, "sizes", "cand")
 
 
 @_register(
@@ -12940,7 +12396,6 @@ def q214_embedding_increment(spark: SparkSession, sf_dir: str) -> DataFrame:
         update_embedding_increment,
     )
 
-    _tune(spark)
     emb = _t(spark, sf_dir, "embeddings")
     final, _stats = update_embedding_increment(
         emb.filter(F.col("vec_id") % 2 == 1),
@@ -12978,8 +12433,7 @@ def _q215_scored_cte(label_case: str) -> str:
     return f"""
     WITH base AS MATERIALIZED (
       SELECT doc_id,
-             list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                         t -> t <> '') AS toks
+             {_TOKENS_SQL} AS toks
       FROM documents WHERE text IS NOT NULL
     ), lab AS MATERIALIZED (
       SELECT doc_id, CAST({label_case} AS BIGINT) AS y
@@ -13063,7 +12517,6 @@ def _q215_oracle_sql() -> str:
 def q215_eval_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from us_immigration_data_lake_spark.operators import training as tr_ops
 
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     train = docs.filter(F.col("doc_id") % 2 == 0).withColumn(
         "__y", F.expr(_Q205_LANG_CASE).cast("long")
@@ -13139,7 +12592,6 @@ def _q216_oracle_sql() -> str:
 def q216_eval_pr_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from us_immigration_data_lake_spark.operators import training as tr_ops
 
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     train = docs.filter(F.col("doc_id") % 2 == 0).withColumn(
         "__y", F.expr(_Q205_LANG_CASE).cast("long")
@@ -13190,8 +12642,7 @@ def _q217_oracle_sql() -> str:
     return f"""
     WITH base AS MATERIALIZED (
       SELECT doc_id,
-             list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                         t -> t <> '') AS toks
+             {_TOKENS_SQL} AS toks
       FROM documents WHERE text IS NOT NULL
     ), lab AS MATERIALIZED (
       SELECT doc_id, CAST({_Q217_LABEL_CASE} AS BIGINT) AS y
@@ -13278,7 +12729,6 @@ def _q217_oracle_sql() -> str:
 def q217_eval_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     from us_immigration_data_lake_spark.operators import training as tr_ops
 
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     train = docs.filter(F.col("doc_id") % 2 == 0).withColumn(
         "__y", F.expr(_Q217_LABEL_CASE).cast("long")
@@ -13389,7 +12839,6 @@ def q218_stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_psi_by_snapshot,
     )
 
-    _tune(spark)
     ref = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 2 == 0)
     census = reference_census(
         ref, "n_chars", lo=_Q213_LO, width=_Q213_W, n_bins=_Q213_B
@@ -13425,8 +12874,7 @@ def _q219_oracle_sql() -> str:
     return f"""
     WITH base AS MATERIALIZED (
       SELECT doc_id,
-             list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                         t -> t <> '') AS toks
+             {_TOKENS_SQL} AS toks
       FROM documents WHERE text IS NOT NULL
     ), lab AS MATERIALIZED (
       SELECT doc_id, CAST({_Q205_LANG_CASE} AS BIGINT) AS k
@@ -13524,7 +12972,6 @@ def q219_eval_classification_report(
 ) -> DataFrame:
     from us_immigration_data_lake_spark.operators import training as tr_ops
 
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     train = docs.filter(F.col("doc_id") % 2 == 0).withColumn(
         "__y", F.expr(_Q205_LANG_CASE).cast("long")
@@ -13598,7 +13045,6 @@ def q220_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
         temperature_mixture_weights,
     )
 
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     sized = docs.select(
         "lang",
@@ -13632,21 +13078,11 @@ _Q221_K, _Q221_BITS, _Q221_NQ = 5, 6, 50
 
 
 def _q221_oracle_sql() -> str:
-    planes = sim_ops.srp_planes(EMBEDDING_DIM, num_bits=_Q221_BITS, seed=42)
-
-    def dot_expr(i: int) -> str:
-        return " + ".join(
-            f"v[{j + 1}]*({float(planes[i][j])!r})" for j in range(EMBEDDING_DIM)
-        )
-
-    bits = " + ".join(
-        f"(CASE WHEN ({dot_expr(i)}) > 0 THEN {1 << i} ELSE 0 END)"
-        for i in range(_Q221_BITS)
-    )
+    bits = _srp_bucket_sql(_Q221_BITS)
     k, nq = _Q221_K, _Q221_NQ
     return f"""
     WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    b AS (SELECT vec_id, v, CAST({bits} AS BIGINT) AS bucket FROM base),
+    b AS (SELECT vec_id, v, {bits} AS bucket FROM base),
     q AS (SELECT vec_id AS query_id, v AS qv, bucket FROM b
           WHERE vec_id < {nq}),
     c AS (SELECT vec_id AS neighbor_id, v AS cv, bucket FROM b),
@@ -13691,7 +13127,6 @@ def _q221_oracle_sql() -> str:
     tags=("similarity", "ann", "recall", "evaluation", "calibration"),
 )
 def q221_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < _Q221_NQ)
     return sim_ops.ann_recall_at_k(
@@ -13715,37 +13150,8 @@ def q221_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "q222_leakage_safe_split",
-    oracle="""
-    WITH RECURSIVE tok AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                         t -> t <> '') AS toks
-      FROM documents WHERE doc_id < 200
-    ), sh AS MATERIALIZED (
-      SELECT doc_id,
-             CASE WHEN len(toks) >= 2
-                  THEN list_distinct([array_to_string(toks[i:i+1], ' ')
-                                      for i in range(1, len(toks))])
-                  ELSE [array_to_string(toks, ' ')] END AS shingles
-      FROM tok
-    ), pairs AS MATERIALIZED (
-      SELECT a.doc_id AS id1, b.doc_id AS id2
-      FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-      WHERE CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-            / (len(a.shingles) + len(b.shingles)
-               - len(list_intersect(a.shingles, b.shingles))) >= 0.08
-    ), edges AS MATERIALIZED (
-      SELECT id1 AS src, id2 AS dst FROM pairs
-      UNION SELECT id2, id1 FROM pairs
-    ), reach AS (
-      SELECT src, dst FROM edges
-      UNION
-      SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-      WHERE e.dst <> r.src
-    ), labels AS MATERIALIZED (
-      SELECT src AS id, LEAST(src, MIN(dst)) AS cluster
-      FROM reach GROUP BY src
-    ), clustered AS (
+    oracle=f"""
+    WITH RECURSIVE {_Q43_CLUSTERS_SQL}, clustered AS (
       SELECT d.doc_id, COALESCE(l.cluster, d.doc_id) AS cluster
       FROM (SELECT doc_id FROM documents WHERE doc_id < 200) d
       LEFT JOIN labels l ON d.doc_id = l.id
@@ -13763,7 +13169,6 @@ def q222_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         cluster_split_label,
     )
 
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
     sh = dedup_ops.shingles(docs, "doc_id", "text", n=2)
     pairs = dedup_ops.postings_jaccard_pairs(sh, "doc_id", min_jaccard=0.08)
@@ -13806,9 +13211,7 @@ def _q223_oracle_sql() -> str:
       FROM bnd x JOIN bnd y
         ON x.band_idx = y.band_idx AND x.band_key = y.band_key
        AND x.doc_id < y.doc_id
-    ), hs AS (
-      SELECT doc_id, list(h) AS hs FROM hx GROUP BY doc_id
-    )
+    ), {_HS_SQL}
     SELECT c.id1, c.id2,
            CAST({match_sum} AS BIGINT) AS n_match,
            {est} AS est_jaccard,
@@ -13828,7 +13231,6 @@ def _q223_oracle_sql() -> str:
     tags=("dedup", "minhash", "calibration", "evaluation", "portable"),
 )
 def q223_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 1000)
     return dedup_ops.minhash_estimate_calibration(
         docs, "doc_id", "text", shingle_n=2, num_hashes=_Q20_HASHES,
@@ -13877,7 +13279,6 @@ def q224_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
         epoch_shuffle_order,
     )
 
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents")
     return epoch_shuffle_order(
         docs, "doc_id", epoch=_Q224_EPOCH, n_shards=_Q224_SHARDS
@@ -13917,7 +13318,6 @@ def _q225_oracle_sql() -> str:
           "portable"),
 )
 def q225_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents")
     merges = [
         (r["left"], r["right"])
@@ -13979,7 +13379,6 @@ def q226_per_source_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
         per_group_cap,
     )
 
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents").select("doc_id", "source")
     return per_group_cap(docs, "source", "doc_id", cap=_Q226_CAP)
 
@@ -14028,7 +13427,6 @@ def q227_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
         curriculum_order,
     )
 
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents")
     scored = ts_ops.quality_score(ts_ops.text_features(docs, "doc_id", "text"))
     return curriculum_order(
@@ -14092,7 +13490,6 @@ def q228_mixture_interleave(spark: SparkSession, sf_dir: str) -> DataFrame:
         temperature_mixture_weights,
     )
 
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     sized = docs.select(
         "lang",
@@ -14176,7 +13573,6 @@ def _q229_oracle_sql() -> str:
     tags=("textstats", "script", "unicode", "profile", "portable"),
 )
 def q229_script_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents")
     return ts_ops.script_profile(docs, "doc_id", "text")
 
@@ -14209,18 +13605,7 @@ def _q230_oracle_sql() -> str:
       SELECT a.vec_id AS id1, b.vec_id AS id2
       FROM base a JOIN base b ON a.vec_id < b.vec_id
       WHERE ROUND(list_cosine_similarity(a.v, b.v), 6) >= {thr}
-    ), edges AS MATERIALIZED (
-      SELECT id1 AS src, id2 AS dst FROM pairs
-      UNION SELECT id2, id1 FROM pairs
-    ), reach AS (
-      SELECT src, dst FROM edges
-      UNION
-      SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-      WHERE e.dst <> r.src
-    ), labels AS MATERIALIZED (
-      SELECT src AS id, LEAST(src, MIN(dst)) AS cluster
-      FROM reach GROUP BY src
-    ), cl AS (
+    ), {_closure_sql("pairs")}, cl AS (
       SELECT b.vec_id, b.v, COALESCE(l.cluster, b.vec_id) AS cluster
       FROM base b LEFT JOIN labels l ON b.vec_id = l.id
     ), scored AS (
@@ -14245,7 +13630,6 @@ def _q230_oracle_sql() -> str:
           "clustering", "portable"),
 )
 def q230_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     emb = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") < _Q230_N)
     return sim_ops.hard_negatives(
         emb, "vec_id", "embedding", k=_Q230_K, dim=EMBEDDING_DIM,
@@ -14313,7 +13697,6 @@ def q231_stream_mixture_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_mixture_by_snapshot,
     )
 
-    _tune(spark)
     ref = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 2 == 0)
     per = ref.groupBy(F.col("lang").alias("group")).agg(
         F.count(F.lit(1)).cast("long").alias("rn")
@@ -14389,7 +13772,6 @@ def q232_incremental_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
         update_capped_corpus,
     )
 
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents").select("doc_id", "source")
     base = per_group_cap(
         docs.filter(F.col("doc_id") % 2 == 0), "source", "doc_id",
@@ -14422,17 +13804,7 @@ _Q233_K, _Q233_BITS, _Q233_THR = 5, 6, 0.35
 
 
 def _q233_oracle_sql() -> str:
-    planes = sim_ops.srp_planes(EMBEDDING_DIM, num_bits=_Q233_BITS, seed=42)
-
-    def dot_expr(i: int) -> str:
-        return " + ".join(
-            f"v[{j + 1}]*({float(planes[i][j])!r})" for j in range(EMBEDDING_DIM)
-        )
-
-    bits = " + ".join(
-        f"(CASE WHEN ({dot_expr(i)}) > 0 THEN {1 << i} ELSE 0 END)"
-        for i in range(_Q233_BITS)
-    )
+    bits = _srp_bucket_sql(_Q233_BITS)
     probes = ", ".join(
         ["bucket"] + [f"xor(bucket, {1 << i})" for i in range(_Q233_BITS)]
     )
@@ -14441,23 +13813,12 @@ def _q233_oracle_sql() -> str:
     WITH RECURSIVE base AS (
       SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
     ), b AS MATERIALIZED (
-      SELECT vec_id, v, CAST({bits} AS BIGINT) AS bucket FROM base
+      SELECT vec_id, v, {bits} AS bucket FROM base
     ), pairs AS MATERIALIZED (
       SELECT x.vec_id AS id1, y.vec_id AS id2
       FROM b x JOIN b y ON x.bucket = y.bucket AND x.vec_id < y.vec_id
       WHERE ROUND(list_cosine_similarity(x.v, y.v), 6) >= {thr}
-    ), edges AS MATERIALIZED (
-      SELECT id1 AS src, id2 AS dst FROM pairs
-      UNION SELECT id2, id1 FROM pairs
-    ), reach AS (
-      SELECT src, dst FROM edges
-      UNION
-      SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-      WHERE e.dst <> r.src
-    ), labels AS MATERIALIZED (
-      SELECT src AS id, LEAST(src, MIN(dst)) AS cluster
-      FROM reach GROUP BY src
-    ), cl AS MATERIALIZED (
+    ), {_closure_sql("pairs")}, cl AS MATERIALIZED (
       SELECT b.vec_id, b.v, b.bucket,
              COALESCE(l.cluster, b.vec_id) AS cluster
       FROM b LEFT JOIN labels l ON b.vec_id = l.id
@@ -14488,7 +13849,6 @@ def _q233_oracle_sql() -> str:
     bench=True,  # q230's scale twin: the bench prices index vs all-pairs
 )
 def q233_hard_negatives_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     emb = _t(spark, sf_dir, "embeddings")
     pairs = sim_ops.srp_bucket_near_dup_pairs(
         emb, "vec_id", "embedding", threshold=_Q233_THR,
@@ -14622,7 +13982,6 @@ def q234_training_order_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         training_order_pipeline,
     )
 
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents")
     scored = ts_ops.quality_score(ts_ops.text_features(docs, "doc_id", "text"))
     base = scored.select("doc_id", "n_tokens", "quality_score").join(
@@ -14701,7 +14060,6 @@ def q234_training_order_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("textstats", "quality", "repetition", "gopher", "portable"),
 )
 def q235_line_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents")
     # deterministic multi-line synthesis (see oracle comment): the
     # fixture's texts are single-line, which would gate the operator
@@ -14751,25 +14109,14 @@ def _hn_recall_oracle_parts(
     n, k, thr = _Q236_N, _Q236_K, _Q236_THR
 
     def config_ctes(bits: int, mp: bool) -> tuple[str, str]:
-        planes = sim_ops.srp_planes(EMBEDDING_DIM, num_bits=bits, seed=42)
-
-        def dot_expr(i: int) -> str:
-            return " + ".join(
-                f"v[{j + 1}]*({float(planes[i][j])!r})"
-                for j in range(EMBEDDING_DIM)
-            )
-
-        sig = " + ".join(
-            f"(CASE WHEN ({dot_expr(i)}) > 0 THEN {1 << i} ELSE 0 END)"
-            for i in range(bits)
-        )
+        sig = _srp_bucket_sql(bits)
         probes = ", ".join(
             ["bucket"]
             + ([f"xor(bucket, {1 << i})" for i in range(bits)] if mp else [])
         )
         tag = f"{bits}_{int(mp)}"
         cte = f"""b_{tag} AS MATERIALIZED (
-      SELECT vec_id, v, cluster, CAST({sig} AS BIGINT) AS bucket FROM cl
+      SELECT vec_id, v, cluster, {sig} AS bucket FROM cl
     ), probed_{tag} AS (
       SELECT vec_id AS query_id, v AS qv, cluster AS q_cluster,
              unnest(list_value({probes})) AS bucket
@@ -14815,18 +14162,7 @@ def _hn_recall_oracle_parts(
       SELECT a.vec_id AS id1, b.vec_id AS id2
       FROM base a JOIN base b ON a.vec_id < b.vec_id
       WHERE ROUND(list_cosine_similarity(a.v, b.v), 6) >= {thr}
-    ), edges AS MATERIALIZED (
-      SELECT id1 AS src, id2 AS dst FROM pairs
-      UNION SELECT id2, id1 FROM pairs
-    ), reach AS (
-      SELECT src, dst FROM edges
-      UNION
-      SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-      WHERE e.dst <> r.src
-    ), labels AS MATERIALIZED (
-      SELECT src AS id, LEAST(src, MIN(dst)) AS cluster
-      FROM reach GROUP BY src
-    ), cl AS MATERIALIZED (
+    ), {_closure_sql("pairs")}, cl AS MATERIALIZED (
       SELECT b.vec_id, b.v, COALESCE(l.cluster, b.vec_id) AS cluster
       FROM base b LEFT JOIN labels l ON b.vec_id = l.id
     ), exact AS MATERIALIZED (
@@ -14863,7 +14199,6 @@ def _q236_oracle_sql() -> str:
           "calibration", "lsh", "portable"),
 )
 def q236_hard_negative_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     emb = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") < _Q236_N)
     return sim_ops.hard_negative_recall(
         emb, "vec_id", "embedding", k=_Q236_K, dim=EMBEDDING_DIM,
@@ -14924,7 +14259,6 @@ def q237_training_order_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
         training_order_epochs,
     )
 
-    _tune(spark)
     docs = _t(spark, sf_dir, "documents")
     scored = ts_ops.quality_score(ts_ops.text_features(docs, "doc_id", "text"))
     base = scored.select("doc_id", "n_tokens", "quality_score").join(
@@ -14987,7 +14321,6 @@ def _q238_oracle_sql() -> str:
           "lsh", "deployment-rule", "portable"),
 )
 def q238_srp_config_choice(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     emb = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") < _Q236_N)
     return sim_ops.choose_srp_config(
         emb, "vec_id", "embedding", k=_Q236_K, dim=EMBEDDING_DIM,
@@ -15016,23 +14349,8 @@ _Q239_BITS, _Q239_TABLES = 4, 3
 
 
 def _q239_oracle_sql() -> str:
-    def table_bits(t: int) -> str:
-        planes = sim_ops.srp_planes(EMBEDDING_DIM, num_bits=_Q239_BITS,
-                                    seed=42 + t)
-
-        def dot_expr(i: int) -> str:
-            return " + ".join(
-                f"v[{j + 1}]*({float(planes[i][j])!r})"
-                for j in range(EMBEDDING_DIM)
-            )
-
-        return " + ".join(
-            f"(CASE WHEN ({dot_expr(i)}) > 0 THEN {1 << i} ELSE 0 END)"
-            for i in range(_Q239_BITS)
-        )
-
     bucket_cols = ", ".join(
-        f"CAST({table_bits(t)} AS BIGINT) AS b{t}"
+        f"{_srp_bucket_sql(_Q239_BITS, 42 + t)} AS b{t}"
         for t in range(_Q239_TABLES)
     )
     any_shared = " OR ".join(
@@ -15064,7 +14382,6 @@ def _q239_oracle_sql() -> str:
           "multi-table", "portable"),
 )
 def q239_srp_multi_table_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     emb = _t(spark, sf_dir, "embeddings")
     return sim_ops.srp_near_dup_frames(
         emb, "vec_id", "embedding", threshold=_Q181_TAU,
@@ -15091,23 +14408,8 @@ def q239_srp_multi_table_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q240_oracle_sql() -> str:
-    def table_bits(t: int) -> str:
-        planes = sim_ops.srp_planes(EMBEDDING_DIM, num_bits=_Q239_BITS,
-                                    seed=42 + t)
-
-        def dot_expr(i: int) -> str:
-            return " + ".join(
-                f"v[{j + 1}]*({float(planes[i][j])!r})"
-                for j in range(EMBEDDING_DIM)
-            )
-
-        return " + ".join(
-            f"(CASE WHEN ({dot_expr(i)}) > 0 THEN {1 << i} ELSE 0 END)"
-            for i in range(_Q239_BITS)
-        )
-
     bucket_cols = ", ".join(
-        f"CAST({table_bits(t)} AS BIGINT) AS b{t}"
+        f"{_srp_bucket_sql(_Q239_BITS, 42 + t)} AS b{t}"
         for t in range(_Q239_TABLES)
     )
     any_shared = " OR ".join(
@@ -15139,7 +14441,6 @@ def _q240_oracle_sql() -> str:
           "banding", "multi-table", "portable"),
 )
 def q240_cross_multi_table_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
     emb = _t(spark, sf_dir, "embeddings")
     new_df = emb.filter(F.col("vec_id") % 2 == 1)
     ref_df = emb.filter(F.col("vec_id") % 2 == 0)
