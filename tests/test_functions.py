@@ -129,13 +129,14 @@ def test_fk_coverage(spark):
 
 
 def test_read_sas_stub_raises_helpfully(spark, tmp_path):
-    from us_immigration_data_lake_spark.sources.sas import read_sas
+    from us_immigration_data_lake_spark.sources import register_sas_datasource
 
     p = tmp_path / "x.sas7bdat"
     p.write_bytes(b"\x00" * 10)
+    register_sas_datasource(spark)
     import pytest as _pytest
     with _pytest.raises(Exception):
-        read_sas(spark, str(p))
+        spark.read.format("sas7bdat").load(str(p)).collect()
 
 
 def test_dedup_exact_coherent_row_on_order_ties(spark):

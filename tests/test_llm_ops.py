@@ -346,7 +346,7 @@ def test_connected_components_fused_round_matches_union_find(spark):
     # edges (one join per round instead of two). Pin the fixpoint
     # against an independent union-find on a graph with the jump's
     # worst case (a 60-chain) plus a dense random block, and that the
-    # default round budget still converges (strict would raise).
+    # default round budget still converges (running out raises).
     import random
 
     rng = random.Random(7)
@@ -405,6 +405,15 @@ def test_connected_components_local_and_loop_paths_agree(spark, monkeypatch):
     monkeypatch.setattr(dd, "CC_LOCAL_EDGE_LIMIT", 100_000)
     got = {r.id: r.cluster for r in dd.connected_components(spairs).collect()}
     assert got == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
+
+
+def test_connected_components_raises_when_rounds_run_out(spark, monkeypatch):
+    # split clusters would leak duplicates into a corpus build, so an
+    # exhausted round budget is an error, never a partial labeling
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(40)], ["id1", "id2"])
+    monkeypatch.setattr(dd, "CC_LOCAL_EDGE_LIMIT", 0)  # force the loop
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds; raise max_iter$"):
+        dd.connected_components(pairs, max_iter=1)
 
 
 def test_connected_components_local_path_releases_edge_checkpoint(spark):

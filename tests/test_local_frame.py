@@ -46,7 +46,8 @@ def _cases(spark):
          [("CA", "CALIFORNIA"), ("99", "All Other Codes")]),
         ("cleaning.recode_via_broadcast_map", ["__rk", "__rv"],
          [("US", "United States"), ("MX", "Mexico")]),
-        ("windows.global_row_number", "__pid int, __off long", [(0, 0), (1, 17)]),
+        ("windows.global_row_number (global_cumsum of one column)",
+         "__pid int, __off___one long", [(0, 0), (1, 17)]),
         ("windows.global_cumsum", "__pid int, __off_a long, __off_b long",
          [(0, 0, 0), (1, 5, -3)]),
         ("textstats.bpe_merges",
@@ -124,9 +125,6 @@ def test_local_frame_plans_a_local_relation(spark):
     assert "LocalRelation" in labels and "LogicalRDD" not in labels
 
 
-# sources/sas.py's reader parallelizes the file paths itself: one slice
-# per file, which mapInPandas then parses on the executors.
-_EXEMPT = {("sources/sas.py", "path_rdd")}
 _ARROW_ROOTS = {"pa", "pd", "pyarrow", "pandas"}
 
 
@@ -163,8 +161,6 @@ def _list_fed_calls(path: str, rel: str) -> list[str]:
                 continue
             arg = node.args[0]
             key = arg.id if isinstance(arg, ast.Name) else ast.unparse(arg)
-            if (rel, key) in _EXEMPT:
-                continue
             value = _assigned(func, arg.id) if isinstance(arg, ast.Name) else arg
             # pandas / Arrow built data crosses into the JVM as Arrow
             if isinstance(value, ast.Call) and _root_name(value) in _ARROW_ROOTS:

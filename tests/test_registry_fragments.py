@@ -5,14 +5,17 @@ A JVM-free AST scan of plans/queries.py fails on any copy of what the
 shared builders own: a ``_tune`` call inside a registered body (the
 registered function tunes before the body runs), a hand-rolled SRP
 ``dot_expr``, an ``import re`` MATERIALIZED-hint loop inside a function
-(``_materialized`` is the one), or the recursive-closure SQL outside
-``_closure_sql``. A planted source shows the scan going red; a Spark
+(``_materialized`` is the one), the recursive-closure SQL outside
+``_closure_sql``, or a hand-written reference-side bucket cap
+(``ROW_NUMBER() OVER (PARTITION BY <keys> ORDER BY <id>) ... WHERE
+rn <= {cap}``) outside ``_capped_cross_candidates_sql``. A planted source shows the scan going red; a Spark
 test shows that a registered ``fn`` tunes a foreign session."""
 
 from __future__ import annotations
 
 import ast
 import os
+import re
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 QUERIES_PY = os.path.join(
@@ -20,8 +23,18 @@ QUERIES_PY = os.path.join(
 )
 
 # the shared builders: the only places their own fragments may appear
-SHARED = {"_closure_sql", "_srp_bucket_sql", "_materialized"}
+SHARED = {
+    "_closure_sql", "_srp_bucket_sql", "_materialized",
+    "_capped_cross_candidates_sql",
+}
 CLOSURE_STEP = "FROM reach r JOIN"
+# the cap keeps each bucket's smallest ids: a plain-id ordered
+# row_number filtered against a formatted bound (hash-ordered
+# per-source caps and literal top-k filters do not match)
+CAP_COPY = re.compile(
+    r"ROW_NUMBER\(\)\s+OVER\s+\(PARTITION BY [\w, ]+?\s+ORDER BY \w+\)"
+    r"\s+AS rn\s+FROM [^()]*\)\s*WHERE rn <= \{\}"
+)
 
 
 def _is_register(dec: ast.expr) -> bool:
@@ -30,6 +43,19 @@ def _is_register(dec: ast.expr) -> bool:
         and isinstance(dec.func, ast.Name)
         and dec.func.id == "_register"
     )
+
+
+def _sql_text(node: ast.AST) -> str | None:
+    """A string literal's text; an f-string's with ``{}`` for each
+    formatted value."""
+    if isinstance(node, ast.Constant) and isinstance(node.value, str):
+        return node.value
+    if isinstance(node, ast.JoinedStr):
+        return "".join(
+            v.value if isinstance(v, ast.Constant) else "{}"
+            for v in node.values
+        )
+    return None
 
 
 def _owner_map(tree: ast.Module) -> dict[ast.AST, str]:
@@ -75,6 +101,12 @@ def scan(source: str) -> list[str]:
             and where not in SHARED
         ):
             out.append(f"{where}:{node.lineno}: closure SQL")
+        elif (
+            isinstance(node, ast.JoinedStr)
+            and where not in SHARED
+            and CAP_COPY.search(_sql_text(node))
+        ):
+            out.append(f"{where}:{node.lineno}: bucket cap SQL")
     return out
 
 
@@ -101,8 +133,24 @@ def _q_planted_oracle_sql():
     return re.sub("x", "y", sql)
 
 
+def _q_planted_cap_oracle_sql(cap):
+    return f"""capped AS (
+      SELECT bucket, vec_id FROM (
+        SELECT bucket, vec_id,
+               ROW_NUMBER() OVER (PARTITION BY bucket ORDER BY vec_id) AS rn
+        FROM b WHERE vec_id % 2 = 0
+      ) WHERE rn <= {cap}
+    )"""
+
+
 def _closure_sql(*pairs):
     return "SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src"
+
+
+def _capped_cross_candidates_sql(cap):
+    return f"""capped AS (SELECT * FROM (
+        SELECT k, id, ROW_NUMBER() OVER (PARTITION BY k ORDER BY id) AS rn
+        FROM ref) WHERE rn <= {cap})"""
 '''
 
 
@@ -110,9 +158,13 @@ def test_scan_goes_red_on_planted_copies():
     found = scan(_PLANTED)
     assert [v.split(": ", 1)[1] for v in found] == [
         "_tune in body", "import re", "def dot_expr", "closure SQL",
+        "bucket cap SQL",
     ], found
-    # the shared builder's own closure SQL is allowed
-    assert not any(v.startswith("_closure_sql:") for v in found)
+    # the shared builders' own fragments are allowed
+    assert not any(
+        v.startswith(("_closure_sql:", "_capped_cross_candidates_sql:"))
+        for v in found
+    )
 
 
 def test_registered_fn_tunes_a_foreign_session(spark, sf_dir):

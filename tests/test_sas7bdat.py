@@ -15,8 +15,7 @@ import pandas as pd
 import pytest
 
 from us_immigration_data_lake_spark.sources import (
-    read_sas,
-    read_sas_distributed,
+    register_sas_datasource,
     sas_schema,
     write_sas7bdat,
 )
@@ -90,9 +89,17 @@ def test_sas_schema_metadata_only(sas_dir):
     }
 
 
+def _read(spark, path: str, schema=None):
+    register_sas_datasource(spark)
+    reader = spark.read.format("sas7bdat")
+    if schema is not None:
+        reader = reader.schema(schema)
+    return reader.load(path)
+
+
 def test_read_sas_single_file(spark, sas_dir):
     path = str(sorted(sas_dir.glob("*.sas7bdat"))[0])
-    df = read_sas(spark, path)
+    df = _read(spark, path)
     assert df.count() == 500
     row = df.orderBy("cicid").first()
     assert row["cicid"] == 1_000_000.0
@@ -100,19 +107,8 @@ def test_read_sas_single_file(spark, sas_dir):
     assert row["arrdate"] == dt.datetime(2016, 1, 1)
 
 
-def test_read_sas_jvm_engine_is_explicit_and_loud(spark, sas_dir):
-    # r5: the JVM spark-sas7bdat route is opt-in and must raise when
-    # the package isn't on the classpath (this sandbox never has it) —
-    # no silent fallback to a different engine.
-    path = str(sorted(sas_dir.glob("*.sas7bdat"))[0])
-    with pytest.raises(Exception):
-        read_sas(spark, path, engine="jvm")
-    with pytest.raises(ValueError, match="engine"):
-        read_sas(spark, path, engine="arrow")
-
-
-def test_read_sas_distributed_over_directory(spark, sas_dir):
-    df = read_sas_distributed(spark, str(sas_dir))
+def test_read_sas_directory_one_partition_per_file(spark, sas_dir):
+    df = _read(spark, str(sas_dir))
     assert df.count() == 1500
     # one task per file
     assert df.rdd.getNumPartitions() == 3
@@ -131,40 +127,39 @@ def test_read_sas_distributed_over_directory(spark, sas_dir):
     assert got["gender"] is None
 
 
-def test_read_sas_distributed_explicit_list_and_schema(spark, sas_dir):
-    files = [str(p) for p in sorted(sas_dir.glob("*.sas7bdat"))[:2]]
-    sch = sas_schema(files[0])
-    df = read_sas_distributed(spark, files, schema=sch)
-    assert df.count() == 1000
+def test_read_sas_user_schema_is_honoured(spark, sas_dir):
+    sch = sas_schema(str(sorted(sas_dir.glob("*.sas7bdat"))[0]))
+    df = _read(spark, str(sas_dir), schema=sch)
+    assert df.count() == 1500
     assert df.schema == sch
 
 
-def test_read_sas_distributed_empty_dir(spark, tmp_path):
-    with pytest.raises(ValueError, match="no .sas7bdat files"):
-        read_sas_distributed(spark, str(tmp_path))
-
-
-def test_read_sas_driver_limit(spark, sas_dir):
-    path = str(sorted(sas_dir.glob("*.sas7bdat"))[0])
-    with pytest.raises(ValueError, match="read_sas_distributed"):
-        read_sas(spark, path, driver_side_limit_mb=0)
+def test_read_sas_empty_dir_raises(spark, tmp_path):
+    with pytest.raises(Exception, match="no .sas7bdat files"):
+        _read(spark, str(tmp_path)).count()
 
 
 def test_python_datasource_matches_distributed_reader(spark, sas_dir):
-    from us_immigration_data_lake_spark.sources.sas_datasource import (
-        register_sas_datasource,
-    )
-
+    """The source's rows and schema equal pandas' parse of each file."""
     register_sas_datasource(spark)
     via_ds = (
         spark.read.format("sas7bdat")
         .option("chunksize", 200)
         .load(str(sas_dir))
     )
-    via_map = read_sas_distributed(spark, str(sas_dir))
-    assert via_ds.schema == via_map.schema
+    assert via_ds.schema == sas_schema(str(sorted(sas_dir.glob("*.sas7bdat"))[0]))
     # one input partition per file
     assert via_ds.rdd.getNumPartitions() == 3
-    a = sorted(map(tuple, via_ds.collect()))
-    b = sorted(map(tuple, via_map.collect()))
-    assert a == b and len(a) == 1500
+    want = []
+    for f in sorted(sas_dir.glob("*.sas7bdat")):
+        pdf = pd.read_sas(str(f), format="sas7bdat", encoding="utf-8")
+        for rec in pdf.itertuples(index=False):
+            want.append(tuple(
+                None if v is None or (isinstance(v, float) and np.isnan(v))
+                else v.to_pydatetime() if isinstance(v, pd.Timestamp)
+                else v
+                for v in rec
+            ))
+    got = sorted(map(tuple, via_ds.collect()))
+    assert len(got) == 1500
+    assert got == sorted(want)

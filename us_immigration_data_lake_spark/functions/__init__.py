@@ -9,8 +9,6 @@ from us_immigration_data_lake_spark.functions.cleaning import (
     cast_types,
     recode,
     recode_via_broadcast_map,
-    rename_columns,
-    fill_nulls,
     coalesce_fallback,
 )
 from us_immigration_data_lake_spark.functions.text import (
@@ -29,8 +27,6 @@ __all__ = [
     "cast_types",
     "recode",
     "recode_via_broadcast_map",
-    "rename_columns",
-    "fill_nulls",
     "coalesce_fallback",
     "title_case",
     "token_count",

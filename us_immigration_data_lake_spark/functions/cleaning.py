@@ -20,10 +20,11 @@ def cast_types(df: DataFrame, mapping: dict[str, str]) -> DataFrame:
     return df.withColumns(present)
 
 
-def recode(col: Column | str, mapping: dict, default_to_input: bool = True) -> Column:
+def recode(col: Column | str, mapping: dict) -> Column:
     """Value rewrite as a when-chain (reference pattern etl.py:92-103).
 
-    Fine for a handful of literals; for big mappings use
+    Values outside ``mapping`` pass through unchanged. Fine for a
+    handful of literals; for big mappings use
     ``recode_via_broadcast_map`` — a thousand-branch CASE bloats the
     codegen'd method past the JIT limit.
     """
@@ -34,7 +35,7 @@ def recode(col: Column | str, mapping: dict, default_to_input: bool = True) -> C
         expr = F.when(cond, F.lit(new)) if expr is None else expr.when(cond, F.lit(new))
     if expr is None:
         return c
-    return expr.otherwise(c) if default_to_input else expr
+    return expr.otherwise(c)
 
 
 def recode_via_broadcast_map(
@@ -54,19 +55,6 @@ def recode_via_broadcast_map(
     map_df = local_frame(spark, list(mapping.items()), ["__rk", "__rv"])
     joined = df.join(F.broadcast(map_df), df[col] == map_df["__rk"], "left")
     return joined.withColumn(out_col, F.coalesce("__rv", col)).drop("__rk", "__rv")
-
-
-def rename_columns(df: DataFrame, mapping: dict[str, str]) -> DataFrame:
-    """Bulk rename (reference does 14 withColumnRenamed calls,
-    etl.py:187-197,356-358); one select keeps it a single projection."""
-    return df.select(
-        *[F.col(c).alias(mapping.get(c, c)) for c in df.columns]
-    )
-
-
-def fill_nulls(df: DataFrame, value, subset: list[str] | None = None) -> DataFrame:
-    """fillna wrapper (etl.py:215 fills 12 numeric cols with 0)."""
-    return df.fillna(value, subset=subset)
 
 
 def coalesce_fallback(primary: Column | str, fallback: Column | str) -> Column:

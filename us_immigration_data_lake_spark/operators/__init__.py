@@ -1,8 +1,4 @@
-from us_immigration_data_lake_spark.operators.aggregate import (
-    grouped_agg,
-    pivot_agg,
-    dedup_exact,
-)
+from us_immigration_data_lake_spark.operators.aggregate import dedup_exact
 from us_immigration_data_lake_spark.operators.joins import (
     dim_join,
     semi_join,
@@ -11,7 +7,6 @@ from us_immigration_data_lake_spark.operators.joins import (
     range_join,
     salted_join,
 )
-from us_immigration_data_lake_spark.operators.windows import ranked, top_k
 from us_immigration_data_lake_spark.operators.dedup import (
     near_dup_pairs,
     simhash,
@@ -30,7 +25,6 @@ from us_immigration_data_lake_spark.operators.textstats import (
     text_features,
     quality_score,
     lang_id,
-    fingerprint,
     winnow_fingerprints,
     repetition_stats,
     ngram_profile,
@@ -108,8 +102,6 @@ from us_immigration_data_lake_spark.operators.avi import (
 )
 
 __all__ = [
-    "grouped_agg",
-    "pivot_agg",
     "dedup_exact",
     "dim_join",
     "semi_join",
@@ -117,8 +109,6 @@ __all__ = [
     "as_of_join",
     "range_join",
     "salted_join",
-    "ranked",
-    "top_k",
     "near_dup_pairs",
     "simhash",
     "connected_components",
@@ -131,7 +121,6 @@ __all__ = [
     "text_features",
     "quality_score",
     "lang_id",
-    "fingerprint",
     "winnow_fingerprints",
     "repetition_stats",
     "ngram_profile",

@@ -9,62 +9,17 @@ Scale notes baked in:
   for hash aggregates — declaring ``groupBy().agg()`` is enough; never
   hand-roll combiners.
 - ``first()`` without ordering is nondeterministic (the reference
-  relies on it); ``grouped_agg`` therefore offers ``min``/``max`` and a
-  deterministic ``first_by`` (min_by/max_by) instead.
+  relies on it); use ``min``/``max`` or ``min_by``/``max_by`` instead
+  (``dedup_exact`` keeps a deterministic survivor that way).
 - ``pivot`` without an explicit value list costs an extra distinct-scan
-  job AND is unsafe at scale (unbounded output columns); ``pivot_agg``
-  requires the list.
+  job AND is unsafe at scale (unbounded output columns); always pass
+  the list (q07 does).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-_AGG_FNS = {
-    "sum": F.sum,
-    "avg": F.avg,
-    "min": F.min,
-    "max": F.max,
-    "count": F.count,
-    "first": F.first,
-    "count_distinct": F.count_distinct,
-    "stddev": F.stddev,
-}
-
-
-def grouped_agg(
-    df: DataFrame,
-    keys: list[str],
-    aggs: list[tuple[str, str, str]],
-) -> DataFrame:
-    """groupBy(keys).agg(...) from a declarative spec.
-
-    ``aggs``: list of (fn, column, alias); fn ∈ _AGG_FNS or
-    'min_by:<ord_col>' / 'max_by:<ord_col>' for deterministic firsts.
-    """
-    exprs: list[Column] = []
-    for fn, col, alias in aggs:
-        if fn.startswith("min_by:"):
-            exprs.append(F.min_by(col, fn.split(":", 1)[1]).alias(alias))
-        elif fn.startswith("max_by:"):
-            exprs.append(F.max_by(col, fn.split(":", 1)[1]).alias(alias))
-        else:
-            exprs.append(_AGG_FNS[fn](col).alias(alias))
-    return df.groupBy(*keys).agg(*exprs)
-
-
-def pivot_agg(
-    df: DataFrame,
-    keys: list[str],
-    pivot_col: str,
-    values: list[str],
-    agg: Column,
-) -> DataFrame:
-    """Pivot with a REQUIRED explicit value list (etl.py:183 omits it
-    and pays a distinct-scan; unbounded pivots are unsafe at 100 TB —
-    SURVEY.md §7)."""
-    return df.groupBy(*keys).pivot(pivot_col, values).agg(agg)
 
 
 def dedup_exact(

@@ -466,32 +466,13 @@ def candidate_pairs(
     return _census_candidates(band_df, id_col, max_bucket_size, False)[0]
 
 
-def verify_jaccard(
-    pairs: DataFrame, shingle_df: DataFrame, id_col: str, threshold: float
-) -> DataFrame:
-    """Exact Jaccard on shingle arrays for candidate pairs; ratio is
-    int/int → deterministic double."""
-    s1 = shingle_df.select(F.col(id_col).alias("id1"), F.col("shingles").alias("sh1"))
-    s2 = shingle_df.select(F.col(id_col).alias("id2"), F.col("shingles").alias("sh2"))
-    inter = F.size(F.array_intersect("sh1", "sh2")).cast("long")
-    union = F.size(F.array_union("sh1", "sh2")).cast("long")
-    return (
-        pairs.join(s1, "id1").join(s2, "id2")
-        .select(
-            "id1", "id2",
-            (inter.cast("double") / union.cast("double")).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-
-
 def verify_jaccard_hashed(
     pairs: DataFrame, hashset_df: DataFrame, id_col: str, threshold: float
 ) -> DataFrame:
     """Exact Jaccard on hashed shingle SETS (array<long>) for candidate
-    pairs — same semantics as verify_jaccard modulo 64-bit hash
+    pairs — the Jaccard of the shingle sets modulo 64-bit hash
     collisions (~2^-64 per shingle pair, negligible), at a fraction of
-    the shuffle width."""
+    the shuffle width of the raw shingle arrays."""
     s1 = hashset_df.select(F.col(id_col).alias("id1"), F.col("hs").alias("hs1"))
     s2 = hashset_df.select(F.col(id_col).alias("id2"), F.col("hs").alias("hs2"))
     inter = F.size(F.array_intersect("hs1", "hs2")).cast("long")
@@ -934,7 +915,6 @@ def connected_components(
     pairs: DataFrame,
     id_cols: tuple[str, str] = ("id1", "id2"),
     max_iter: int = 20,
-    strict: bool = True,
 ) -> DataFrame:
     """Duplicate clustering: connected components over the near-dup
     pair graph. Returns (id, cluster) where cluster = smallest id
@@ -957,7 +937,7 @@ def connected_components(
     driver-coordinated but every step is a DataFrame job; lineage is
     truncated per round with an eager localCheckpoint (the classic
     iterative-algorithm trap). If the loop still exhausts max_iter
-    without converging, ``strict`` raises instead of silently
+    without converging, it raises instead of silently
     returning split clusters (which would leak duplicates into a
     corpus build).
 
@@ -995,11 +975,11 @@ def connected_components(
     # labels are released on return; the labels returned move to the
     # caller's scope
     with storage.scope() as s:
-        return s.hand_off(_components(pairs, id_cols, max_iter, strict))
+        return s.hand_off(_components(pairs, id_cols, max_iter))
 
 
 def _components(
-    pairs: DataFrame, id_cols: tuple[str, str], max_iter: int, strict: bool
+    pairs: DataFrame, id_cols: tuple[str, str], max_iter: int
 ) -> DataFrame:
     a, b = id_cols
     # the ONE-direction edge set is what materializes: checkpointing
@@ -1090,10 +1070,10 @@ def _components(
         if not (obs.get["changed"] or 0):
             converged = True
             break
-    if not converged and strict:
+    if not converged:
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds; "
-            "raise max_iter (or pass strict=False to accept split clusters)"
+            "raise max_iter"
         )
     return labels
 

@@ -21,7 +21,6 @@ def dim_join(
     dim: DataFrame,
     on: Sequence[str] | Column,
     how: str = "left",
-    broadcast_dim: bool = True,
 ) -> DataFrame:
     """Fact ⋈ dimension with a broadcast hint on the dim side.
 
@@ -29,9 +28,8 @@ def dim_join(
     hint removes the initial shuffle planning entirely and is exact for
     known-small dims (nation=25, region=5 rows; reference lookup=288).
     """
-    d = F.broadcast(dim) if broadcast_dim else dim
     on_arg = list(on) if isinstance(on, Sequence) and not isinstance(on, str) else on
-    return fact.join(d, on=on_arg, how=how)
+    return fact.join(F.broadcast(dim), on=on_arg, how=how)
 
 
 def semi_join(left: DataFrame, right: DataFrame, on) -> DataFrame:
@@ -194,14 +192,13 @@ def range_join(
     point_col: str,
     lo_col: str,
     hi_col: str,
-    broadcast_right: bool = True,
 ) -> DataFrame:
     """Non-equi interval join: left.point ∈ [right.lo, right.hi).
 
     Broadcast-nested-loop when right is small (the only sane plan);
     at scale, bucket both sides by a coarse range key first.
     """
-    r = F.broadcast(right) if broadcast_right else right
+    r = F.broadcast(right)
     cond = (left[point_col] >= r[lo_col]) & (left[point_col] < r[hi_col])
     return left.join(r, on=cond, how="inner")
 

@@ -143,7 +143,6 @@ def cosine_knn(
     id_col: str,
     vec_col: str,
     k: int,
-    query_id_col: str | None = None,
     dim: int | None = None,
 ) -> DataFrame:
     """Exact brute-force cosine top-k: broadcast queries × corpus →
@@ -151,10 +150,9 @@ def cosine_knn(
     id). Returns (query_id, neighbor_id, cosine_sim). Pass ``dim``
     when the vector width is known to unroll the dot product into
     codegen (bitwise-identical values, see _dot_fixed_sql)."""
-    qid = query_id_col or id_col
     q = F.broadcast(
         queries.select(
-            F.col(qid).alias("query_id"), _as_double(vec_col).alias("qv")
+            F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qv")
         )
     )
     c = corpus.select(

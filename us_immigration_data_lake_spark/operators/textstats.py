@@ -282,16 +282,6 @@ def chunk_documents(
     )
 
 
-def fingerprint(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Deterministic document fingerprint: md5 of whitespace-normalized
-    lowercase text (etl.py's capitalize/normalize family generalized to
-    content addressing for dedup)."""
-    return df.select(
-        F.col(id_col),
-        F.md5(normalized_text(F.col(text_col))).alias("fingerprint"),
-    )
-
-
 def bm25_term_scores(
     df: DataFrame,
     id_col: str,

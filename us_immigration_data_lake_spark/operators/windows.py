@@ -19,18 +19,6 @@ from us_immigration_data_lake_spark.operators import storage
 from us_immigration_data_lake_spark.operators.storage import local_frame
 
 
-def ranked(
-    df: DataFrame,
-    partition_by: list[str],
-    order_by: list[Column],
-    rank_col: str = "rank",
-    method: str = "row_number",
-) -> DataFrame:
-    w = Window.partitionBy(*partition_by).orderBy(*order_by)
-    fn = {"row_number": F.row_number, "rank": F.rank, "dense_rank": F.dense_rank}[method]
-    return df.withColumn(rank_col, fn().over(w))
-
-
 def top_k_per_group(
     df: DataFrame,
     partition_by: list[str],
@@ -38,12 +26,8 @@ def top_k_per_group(
     k: int,
     rank_col: str = "rank",
 ) -> DataFrame:
-    return ranked(df, partition_by, order_by, rank_col).filter(F.col(rank_col) <= k)
-
-
-def top_k(df: DataFrame, order_by: list[Column], k: int) -> DataFrame:
-    """Global top-k → TakeOrderedAndProject (no full sort)."""
-    return df.orderBy(*order_by).limit(k)
+    w = Window.partitionBy(*partition_by).orderBy(*order_by)
+    return df.withColumn(rank_col, F.row_number().over(w)).filter(F.col(rank_col) <= k)
 
 
 def resample_fill(
@@ -204,20 +188,12 @@ def global_row_number(
     order_by: list[str],
     rank_col: str = "rank",
     num_partitions: int | None = None,
-    fault_tolerant: bool = False,
 ) -> DataFrame:
     """Global 1-based row_number over a TOTAL order — WITHOUT the
     single-partition window ``row_number().over(Window.orderBy(...))``
     plans (every row through one task: the classic global-rank scale
-    trap). Two-phase instead:
-
-    1. range-partition on the order keys + per-partition local
-       row_number (the window partitions on spark_partition_id, so
-       ranking runs fully parallel);
-    2. per-partition row counts (one tiny aggregate, numPartitions
-       rows) turn into cumulative offsets on the driver — the
-       sanctioned scalar-sized collect — broadcast back as a lookup;
-       rank = offset[pid] + local rank.
+    trap). It is ``global_cumsum`` of a constant 1: a range-partitioned
+    per-partition running count plus each partition's offset.
 
     ``order_by`` must be a TOTAL order (append a unique id as the last
     key): equal keys land in one range partition deterministically,
@@ -226,54 +202,11 @@ def global_row_number(
     cluster parallelism; the only global structure is the range
     exchange any distributed sort pays.
     """
-    cols = [F.col(c) for c in order_by]
-    rp = (
-        df.repartitionByRange(num_partitions, *cols)
-        if num_partitions
-        else df.repartitionByRange(*cols)
-    )
-    local = rp.withColumn("__pid", F.spark_partition_id()).withColumn(
-        "__lrank",
-        F.row_number().over(Window.partitionBy("__pid").orderBy(*cols)),
-    )
-    # checkpoint (NOT cache): the counts collect below executes the
-    # ranked frame and the returned plan consumes it again, so the sort
-    # must not run twice; the returned plan reads the checkpoint, so it
-    # belongs to the caller's storage scope, and with none open the
-    # ContextCleaner reclaims it when the frame is garbage-collected.
-    # (Re-execution would also be CORRECT — range boundaries sample
-    # deterministically for the same input — this only avoids paying
-    # the sort twice.)
-    #
-    # TRADEOFF (r8 advisor): localCheckpoint blocks are unreplicated
-    # executor-local storage — losing an executor (failure or
-    # dynamic-allocation decommission) fails downstream stages with
-    # lost-block errors instead of recomputing. ``fault_tolerant=True``
-    # opts cluster runs out: the offsets collect runs against a plain
-    # plan and the returned plan re-executes the sort (paying it twice,
-    # deterministically identical ranks) — no pinned cache, no
-    # unreplicated blocks, survives executor loss. local-mode/bench
-    # default stays on the checkpoint fast path.
-    if not fault_tolerant:
-        local = storage.checkpoint(local)
-    counts = (
-        local.groupBy("__pid").agg(F.count(F.lit(1)).alias("__n")).collect()
-    )
-    offsets, acc = {}, 0
-    # Row["__pid"]: attribute access on dunder-prefixed columns trips
-    # pyspark's Row attribute guard — index access only
-    for row in sorted(counts, key=lambda r: r["__pid"]):
-        offsets[row["__pid"]] = acc
-        acc += row["__n"]
-    off_df = local_frame(
-        df.sparkSession,
-        [(p, o) for p, o in offsets.items()] or [(0, 0)],
-        "__pid int, __off long",
-    )
+    ones = df.withColumn("__one", F.lit(1).cast("long"))
     return (
-        local.join(F.broadcast(off_df), "__pid", "left")
-        .withColumn(rank_col, (F.coalesce("__off", F.lit(0)) + F.col("__lrank")).cast("long"))
-        .drop("__pid", "__lrank", "__off")
+        global_cumsum(ones, order_by, ["__one"], num_partitions)
+        .drop("__one")
+        .withColumnRenamed("__one_cum", rank_col)
     )
 
 
@@ -282,21 +215,23 @@ def global_cumsum(
     order_by: list[str],
     value_cols: list[str],
     num_partitions: int | None = None,
-    fault_tolerant: bool = False,
 ) -> DataFrame:
-    """Global running SUM of ``value_cols`` over a TOTAL order — the
-    cumulative-sum sibling of ``global_row_number``, and the same
-    scale story: never ``sum().over(Window.orderBy(...))`` (a
-    single-partition window pulls every row through one task). Two
-    phases: range-partition on the order keys + per-partition local
-    cumsums (fully parallel), then per-partition totals (a
-    numPartitions-sized collect) become driver-side offsets added
-    back per partition. Appends ``<col>_cum`` for each value column;
-    sums are computed in the columns' own type (cast to long/decimal
-    upstream for exactness). ``order_by`` must be a total order
-    (append a unique id). ``fault_tolerant`` as in global_row_number:
-    True re-executes the deterministic sort instead of pinning
-    unreplicated localCheckpoint blocks."""
+    """Global running SUM of ``value_cols`` over a TOTAL order — never
+    ``sum().over(Window.orderBy(...))`` (a single-partition window
+    pulls every row through one task). Two phases:
+
+    1. range-partition on the order keys + per-partition local
+       cumsums (the window partitions on spark_partition_id, so it
+       runs fully parallel);
+    2. per-partition totals (one tiny aggregate, numPartitions rows)
+       turn into cumulative offsets on the driver — the sanctioned
+       scalar-sized collect — broadcast back as a lookup and added
+       per partition.
+
+    Appends ``<col>_cum`` for each value column; sums are computed in
+    the columns' own type (cast to long/decimal upstream for
+    exactness). ``order_by`` must be a total order (append a unique
+    id)."""
     cols = [F.col(c) for c in order_by]
     rp = (
         df.repartitionByRange(num_partitions, *cols)
@@ -311,8 +246,17 @@ def global_cumsum(
     local = rp.withColumn("__pid", F.spark_partition_id())
     for c in value_cols:
         local = local.withColumn(f"{c}_cum", F.sum(F.col(c)).over(w))
-    if not fault_tolerant:
-        local = storage.checkpoint(local)
+    # checkpoint (NOT cache): the totals collect below executes the
+    # local frame and the returned plan consumes it again, so the sort
+    # must not run twice; the returned plan reads the checkpoint, so it
+    # belongs to the caller's storage scope, and with none open the
+    # ContextCleaner reclaims it when the frame is garbage-collected.
+    # (Re-execution would also be CORRECT — range boundaries sample
+    # deterministically for the same input — this only avoids paying
+    # the sort twice.) localCheckpoint blocks are unreplicated
+    # executor-local storage: losing an executor fails downstream
+    # stages with lost-block errors instead of recomputing.
+    local = storage.checkpoint(local)
     # partition totals from the RAW columns (sum), not max(cum):
     # max(cum) only equals the partition total when values are
     # non-negative — sums are sign-agnostic
@@ -323,6 +267,8 @@ def global_cumsum(
     )
     offsets: dict[int, list] = {}
     acc = [0] * len(value_cols)
+    # Row["__pid"]: attribute access on dunder-prefixed columns trips
+    # pyspark's Row attribute guard — index access only
     for row in sorted(totals, key=lambda r: r["__pid"]):
         offsets[row["__pid"]] = list(acc)
         acc = [a + (row[c] or 0) for a, c in zip(acc, value_cols)]

@@ -21,9 +21,9 @@ Oracle-parity design rules (learned constraints, applied everywhere):
 6. Deterministic top-k only: every ORDER BY ends with a unique key.
 7. An oracle that replays an engine chain composes the shared fragment
    builders (_TOKENS_SQL, _jaccard_sql, _srp_bucket_sql,
-   _capped_candidates_sql, _closure_sql, _keep_sql, _materialized, the
-   MinHash prefix/verify pair, ...) and never copies their SQL; copies
-   drift. tests/test_registry_fragments.py scans for copies.
+   _capped_candidates_sql, _capped_cross_candidates_sql, _closure_sql,
+   _keep_sql, _materialized, the MinHash prefix/verify pair, ...) and
+   never copies their SQL; copies drift. tests/test_registry_fragments.py scans for copies.
 """
 
 from __future__ import annotations
@@ -228,6 +228,29 @@ def _capped_candidates_sql(
       SELECT id1, id2 FROM {prefix}small_pairs
       UNION
       SELECT id1, id2 FROM {prefix}star_pairs
+    )"""
+
+
+def _capped_cross_candidates_sql(
+    new: str, ref: str, id_col: str, keys: tuple[str, ...], cap: int
+) -> str:
+    """Cross-corpus capped-LSH candidates, the oracle twin of
+    dedup.capped_bucket_members plus the new × ref equi-join: each
+    ``ref`` bucket keyed by ``keys`` keeps its ``cap`` smallest ids and
+    every ``new`` row pairs with them. ``new`` and ``ref`` are FROM
+    items (a CTE name or a parenthesized subquery). Emits the CTEs
+    ``capped`` (keys, id) and ``xcand`` (distinct id_new, id_ref)."""
+    k = ", ".join(keys)
+    return f"""capped AS (
+      SELECT {k}, {id_col} FROM (
+        SELECT {k}, {id_col},
+               ROW_NUMBER() OVER (PARTITION BY {k} ORDER BY {id_col}) AS rn
+        FROM {ref}
+      ) WHERE rn <= {cap}
+    ), xcand AS (
+      SELECT DISTINCT n.{id_col} AS id_new, c.{id_col} AS id_ref
+      FROM {new} n
+      JOIN capped c ON {" AND ".join(f"n.{x} = c.{x}" for x in keys)}
     )"""
 
 
@@ -10489,28 +10512,18 @@ def _q190_oracle_sql() -> str:
       SELECT band_idx, band_key, doc_id FROM bnd WHERE doc_id % 2 = 0
     ), newb AS (
       SELECT band_idx, band_key, doc_id FROM bnd WHERE doc_id % 2 = 1
-    ), capped AS (
-      SELECT band_idx, band_key, doc_id FROM (
-        SELECT band_idx, band_key, doc_id,
-               ROW_NUMBER() OVER (PARTITION BY band_idx, band_key
-                                  ORDER BY doc_id) AS rn
-        FROM refb
-      ) WHERE rn <= {_Q190_CAP}
-    ), cand AS (
-      SELECT DISTINCT n.doc_id AS id_new, c.doc_id AS id_ref
-      FROM newb n
-      JOIN capped c ON n.band_idx = c.band_idx AND n.band_key = c.band_key
-    ), {_HS_SQL}
+    ), {_capped_cross_candidates_sql("newb", "refb", "doc_id", _BAND_KEYS, _Q190_CAP)},
+    {_HS_SQL}
     SELECT * FROM (
       SELECT c.id_new, c.id_ref,
              {_jaccard_sql("h1.hs", "h2.hs")}
                AS jaccard
-      FROM cand c
+      FROM xcand c
       JOIN hs h1 ON c.id_new = h1.doc_id
       JOIN hs h2 ON c.id_ref = h2.doc_id
     ) WHERE jaccard >= 0.055
     """
-    return _materialized(sql, "tok", "sh", "hx", "bnd", "refb", "cand", "hs")
+    return _materialized(sql, "tok", "sh", "hx", "bnd", "refb", "xcand", "hs")
 
 
 @_register(
@@ -10641,32 +10654,32 @@ def q191_dsir_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q192_CAP = 5
 
 
+def _q192_cross_candidates_sql() -> str:
+    """q192's capped cross candidates over the bucketed CTE ``b``:
+    odd vec_ids probe the even-id reference side."""
+    return _capped_cross_candidates_sql(
+        "(SELECT * FROM b WHERE vec_id % 2 = 1)",
+        "(SELECT * FROM b WHERE vec_id % 2 = 0)",
+        "vec_id", ("bucket",), _Q192_CAP,
+    )
+
+
 def _q192_oracle_sql() -> str:
     bits = _srp_bucket_sql(_Q187_BITS)
-    return f"""
+    return _materialized(f"""
     WITH base AS (
       SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
     ), b AS MATERIALIZED (
       SELECT vec_id, v, {bits} AS bucket FROM base
-    ), capped AS MATERIALIZED (
-      SELECT bucket, vec_id FROM (
-        SELECT bucket, vec_id,
-               ROW_NUMBER() OVER (PARTITION BY bucket ORDER BY vec_id) AS rn
-        FROM b WHERE vec_id % 2 = 0
-      ) WHERE rn <= {_Q192_CAP}
-    ), cand AS MATERIALIZED (
-      SELECT DISTINCT n.vec_id AS id_new, c.vec_id AS id_ref
-      FROM b n JOIN capped c ON n.bucket = c.bucket
-      WHERE n.vec_id % 2 = 1
-    )
+    ), {_q192_cross_candidates_sql()}
     SELECT * FROM (
       SELECT c.id_new, c.id_ref,
              ROUND(list_cosine_similarity(x.v, y.v), 6) AS cosine_sim
-      FROM cand c
+      FROM xcand c
       JOIN b x ON c.id_new = x.vec_id
       JOIN b y ON c.id_ref = y.vec_id
     ) WHERE cosine_sim >= {_Q181_TAU}
-    """
+    """, "capped", "xcand")
 
 
 @_register(
@@ -11197,19 +11210,12 @@ def _q200_oracle_sql() -> str:
     ), newb AS (
       SELECT b.band_idx, b.band_key, b.doc_id
       FROM bnd b JOIN gate g ON b.doc_id = g.doc_id
-    ), capped AS (
-      SELECT band_idx, band_key, doc_id FROM (
-        SELECT band_idx, band_key, doc_id,
-               ROW_NUMBER() OVER (PARTITION BY band_idx, band_key
-                                  ORDER BY doc_id) AS rn
-        FROM refb
-      ) WHERE rn <= {_Q182_CAP}
-    ), xver AS (
-      SELECT DISTINCT n.doc_id AS id_new
-      FROM newb n
-      JOIN capped c ON n.band_idx = c.band_idx AND n.band_key = c.band_key
-      JOIN hs h1 ON n.doc_id = h1.doc_id
-      JOIN hs h2 ON c.doc_id = h2.doc_id
+    ), {_capped_cross_candidates_sql("newb", "refb", "doc_id", _BAND_KEYS, _Q182_CAP)},
+    xver AS (
+      SELECT DISTINCT c.id_new
+      FROM xcand c
+      JOIN hs h1 ON c.id_new = h1.doc_id
+      JOIN hs h2 ON c.id_ref = h2.doc_id
       WHERE {_jaccard_sql("h1.hs", "h2.hs")}
             >= 0.055
     ), xsurv AS (
@@ -11231,7 +11237,7 @@ def _q200_oracle_sql() -> str:
     """
     return _materialized(
         sql, "qtok", "gate", "hx", "sig", "bnd", "hs", "refb", "newb",
-        "capped", "xver", "xsurv", "wb", "sizes", "small_pairs", "anchors",
+        "capped", "xcand", "xver", "xsurv", "wb", "sizes", "small_pairs", "anchors",
         "star_pairs", "pairs", "wsurv",
     )
 
@@ -12353,17 +12359,8 @@ def _q214_oracle_sql() -> str:
       WHERE len(embedding) = {EMBEDDING_DIM}
     ), b AS MATERIALIZED (
       SELECT vec_id, v, {bits} AS bucket FROM base
-    ), capped AS MATERIALIZED (
-      SELECT bucket, vec_id FROM (
-        SELECT bucket, vec_id,
-               ROW_NUMBER() OVER (PARTITION BY bucket ORDER BY vec_id) AS rn
-        FROM b WHERE vec_id % 2 = 0
-      ) WHERE rn <= {_Q192_CAP}
-    ), xcand AS MATERIALIZED (
-      SELECT DISTINCT n.vec_id AS id_new, c.vec_id AS id_ref
-      FROM b n JOIN capped c ON n.bucket = c.bucket
-      WHERE n.vec_id % 2 = 1
-    ), xpairs AS MATERIALIZED (
+    ), {_q192_cross_candidates_sql()},
+    xpairs AS MATERIALIZED (
       SELECT c.id_new
       FROM xcand c
       JOIN b x ON c.id_new = x.vec_id
@@ -12382,7 +12379,7 @@ def _q214_oracle_sql() -> str:
       WHERE ROUND(list_cosine_similarity(x.v, y.v), 6) >= {_Q181_TAU}
     ), {_closure_sql("wpairs")}
     {_survivors_sql("vec_id", "surv")}
-    """, "sizes", "cand")
+    """, "capped", "xcand", "sizes", "cand")
 
 
 @_register(

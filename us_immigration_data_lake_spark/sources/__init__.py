@@ -1,20 +1,14 @@
-from us_immigration_data_lake_spark.sources.readers import (
-    read_csv,
-    read_json,
-    read_parquet,
-)
+from us_immigration_data_lake_spark.sources.readers import read_csv, read_parquet
 from us_immigration_data_lake_spark.sources.sas_labels import (
     I94_VISA_CATEGORIES,
     parse_sas_format_blocks,
     read_sas_labels,
 )
 from us_immigration_data_lake_spark.sources.sas import (
-    read_sas,
-    read_sas_distributed,
+    register_sas_datasource,
     sas_schema,
 )
 from us_immigration_data_lake_spark.sources.sas7bdat_writer import write_sas7bdat
-from us_immigration_data_lake_spark.sources.sas_datasource import register_sas_datasource
 from us_immigration_data_lake_spark.sources.events import (
     load_events,
     read_event_stream,
@@ -32,11 +26,8 @@ from us_immigration_data_lake_spark.sources.manifest_sink import (
 
 __all__ = [
     "read_csv",
-    "read_json",
     "read_parquet",
     "write_parquet",
-    "read_sas",
-    "read_sas_distributed",
     "sas_schema",
     "write_sas7bdat",
     "register_sas_datasource",

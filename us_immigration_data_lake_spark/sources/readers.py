@@ -89,18 +89,6 @@ def read_csv_with_quarantine(
     return clean, quarantined
 
 
-def read_json(
-    spark: SparkSession,
-    path: str,
-    schema: StructType | str | None = None,
-    **options: str,
-) -> DataFrame:
-    reader = spark.read.options(**options)
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
 def read_parquet_evolved(
     spark: SparkSession,
     path: str,

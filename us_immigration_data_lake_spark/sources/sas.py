@@ -1,34 +1,33 @@
-"""SAS sas7bdat ingestion (SURVEY.md §2.1 S4).
+"""SAS sas7bdat ingestion (SURVEY.md §2.1 S4): ``sas7bdat`` as a Spark
+data source (Python DataSource API, Spark 4).
+``spark.read.format("sas7bdat").load(path)`` after one
+``register_sas_datasource(spark)`` call reads a file or a directory of
+``*.sas7bdat`` files (non-recursive).
 
 The reference's raw monthly I-94 files are sas7bdat (read in its
 notebook with ``pandas.read_sas`` — 25 minutes for one month, cell-7;
 ``../../data/18-83510-I94-Data-2016/*.sas7bdat``).  Spark has no
-native reader, so the engine offers three routes:
+native reader, so this is the engine's one route: one whole file per
+input partition, each task streaming pandas' pure-Python parser in
+bounded-memory chunks and handing rows back as Arrow RecordBatches
+(the API's fast path), never per-row Python objects.  The reference
+dataset is 12 monthly files ≈ 6 GB each — file-per-task is exactly
+the right granularity for it (sas7bdat pages are not byte-splittable
+without reimplementing the format in the JVM).  Paths must be visible
+to executors (shared FS / distributed FS) — true in local mode and on
+any real cluster with HDFS/NFS/S3-fuse.  A cluster that ships the
+``spark-sas7bdat`` JVM package (byte-range splittable) can read with
+``spark.read.format("com.github.saurfang.sas.spark")`` instead.
 
-1. ``read_sas_distributed`` — the scale path.  One whole file per
-   task: a DataFrame of file paths is repartitioned so each task runs
-   pandas' pure-Python sas7bdat parser on its own file and streams
-   Arrow batches back (``mapInPandas``).  The reference dataset is 12
-   monthly files ≈ 6 GB each — file-per-task is exactly the right
-   granularity for it (sas7bdat pages are not byte-splittable without
-   reimplementing the format in the JVM; the public
-   ``spark-sas7bdat`` package is the only finer-grained reader).
-   Requires paths visible to executors (shared FS / distributed FS) —
-   true in local mode and on any real cluster with HDFS/NFS/S3-fuse.
-2. ``read_sas`` — single file.  Default engine is the pandas parser
-   driver-side (guarded by a size limit: a 6 GB monthly file must NOT
-   be collect-parsed on the driver); ``engine="jvm"`` explicitly
-   selects the ``spark-sas7bdat`` JVM data source on clusters that
-   ship it, raising loudly when it can't load (no silent fallback —
-   r5 change).
-3. Parquet (``sources/readers.py``) — the reference's own curated
-   form (it re-published the SAS data as parquet in sas_data/), and
-   the form every other query in this engine consumes.
-
+The schema comes from the first file's metadata (``sas_schema``);
+``spark.read.format("sas7bdat").schema(s)`` skips that probe.  All
+files must share one schema (the reference's monthly files do).
 sas7bdat date/datetime columns arrive as the format dictates
 (pandas converts DATE/DATETIME-formatted doubles to datetime64); the
 SAS epoch helpers in ``functions/dates.py`` handle the raw-double
-convention for data curated without formats.
+convention for data curated without formats.  Parquet
+(``sources/readers.py``) is the reference's own curated form and the
+form every other query in this engine consumes.
 
 Fixtures for the end-to-end tests are produced by
 ``sources/sas7bdat_writer.py`` (this repo's minimal public-spec
@@ -38,30 +37,24 @@ writer) — no SAS installation involved.
 from __future__ import annotations
 
 import os
-from typing import Iterable, Iterator
 
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 
-def list_sas_files(path_or_paths) -> list[str]:
-    """Resolve a file path, directory (non-recursive ``*.sas7bdat``
-    scan), or explicit iterable of paths to a sorted file list —
-    shared by the mapInPandas reader and the Python DataSource so the
-    listing/validation rules cannot drift apart."""
-    if isinstance(path_or_paths, str):
-        if os.path.isdir(path_or_paths):
-            files = sorted(
-                os.path.join(path_or_paths, f)
-                for f in os.listdir(path_or_paths)
-                if f.endswith(".sas7bdat")
-            )
-        else:
-            files = [path_or_paths]
+def list_sas_files(path: str) -> list[str]:
+    """A file path, or a directory's ``*.sas7bdat`` files (non-recursive
+    scan), as a sorted file list."""
+    if os.path.isdir(path):
+        files = sorted(
+            os.path.join(path, f)
+            for f in os.listdir(path)
+            if f.endswith(".sas7bdat")
+        )
     else:
-        files = sorted(path_or_paths)
+        files = [path]
     if not files:
-        raise ValueError(f"no .sas7bdat files under {path_or_paths!r}")
+        raise ValueError(f"no .sas7bdat files under {path!r}")
     return files
 
 
@@ -99,93 +92,64 @@ def sas_schema(path: str) -> T.StructType:
         rdr.close()
 
 
-def read_sas_distributed(
-    spark: SparkSession,
-    paths: Iterable[str] | str,
-    schema: T.StructType | None = None,
-) -> DataFrame:
-    """Whole-file-per-task distributed sas7bdat scan.
-
-    ``paths`` is a list of files or a directory (scanned non-recursively
-    for ``*.sas7bdat``).  Each task parses one file with pandas'
-    sas7bdat reader and yields its rows as Arrow batches — the classic
-    Spark pattern for a format with no splittable JVM reader.  All
-    files must share one schema (the reference's monthly files do);
-    pass ``schema`` to skip the driver-side metadata probe of the
-    first file.
-
-    Scale: parallelism == number of files.  For the reference's 12
-    monthly 6 GB files that is 12 tasks × streaming chunked parse —
-    executor memory stays bounded because the parser yields
-    ``chunksize`` rows at a time, never the whole file.
-    """
-    files = list_sas_files(paths)
-
-    if schema is None:
-        schema = sas_schema(files[0])
-    names = [f.name for f in schema.fields]
-
-    def _parse(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            for path in pdf["path"]:
-                # chunked parse: bounded memory per task even for the
-                # reference's 6 GB monthlies
-                with pd.read_sas(
-                    path, format="sas7bdat", encoding="utf-8",
-                    chunksize=100_000, iterator=True,
-                ) as rdr:
-                    for chunk in rdr:
-                        yield chunk[names]
-
-    # one slice per file (parallelize, not hash-repartition: hashing
-    # paths into len(files) partitions leaves some empty and some with
-    # 2+ files — measured 3 idle tasks and 2x wall clock on 12 files)
-    path_rdd = spark.sparkContext.parallelize([(p,) for p in files], len(files))
-    path_df = spark.createDataFrame(
-        path_rdd, T.StructType([T.StructField("path", T.StringType())])
-    )
-    return path_df.mapInPandas(_parse, schema=schema)
-
-
-def read_sas(
-    spark: SparkSession,
-    path: str,
-    driver_side_limit_mb: int = 256,
-    engine: str = "pandas",
-) -> DataFrame:
-    """Read one sas7bdat file.
-
-    ``engine="pandas"`` (default, the SUPPORTED path — parity-tested
-    against round-tripped reference-shaped files in
-    tests/test_sas7bdat.py): parse driver-side for small files; large
-    single files should go through ``read_sas_distributed`` (one
-    task, but executor-side and chunk-streamed) rather than a
-    driver-side collect-parse.
-
-    ``engine="jvm"``: the ``spark-sas7bdat`` JVM data source
-    (byte-range splittable — the best reader when the cluster ships
-    the package on its classpath). EXPLICIT opt-in, and any failure
-    (package absent, version mismatch) raises loudly: the r2–r4
-    design tried it first behind ``except Exception: pass``, which
-    meant an untestable silent branch in this sandbox (no package
-    install) — the r4 verdict's #6; a cluster that ships the package
-    selects it deliberately instead.
-    """
-    if engine == "jvm":
-        return spark.read.format("com.github.saurfang.sas.spark").load(path)
-    if engine != "pandas":
-        raise ValueError(f"engine must be 'pandas' or 'jvm', got {engine!r}")
-    if os.path.getsize(path) > driver_side_limit_mb * 1024 * 1024:
+def _path_option(options) -> str:
+    try:
+        return options["path"]
+    except KeyError:
         raise ValueError(
-            f"{path} exceeds the {driver_side_limit_mb} MB driver-side "
-            "limit; use read_sas_distributed() (executor-side, chunked) "
-            "or install the spark-sas7bdat JVM package for split reads"
-        )
-    import pandas as pd
+            "sas7bdat source requires a path: "
+            "spark.read.format('sas7bdat').load('/dir/of/files')"
+        ) from None
 
-    return spark.createDataFrame(
-        pd.read_sas(path, format="sas7bdat", encoding="utf-8"),
-        schema=sas_schema(path),
-    )
+
+class SasDataSource(DataSource):
+    """``format("sas7bdat")``; options: ``path`` (file or directory),
+    ``chunksize`` (rows per Arrow batch, default 100000)."""
+
+    @classmethod
+    def name(cls) -> str:
+        return "sas7bdat"
+
+    def schema(self):
+        return sas_schema(list_sas_files(_path_option(self.options))[0])
+
+    def reader(self, schema) -> "SasReader":
+        return SasReader(self.options, schema)
+
+
+class SasReader(DataSourceReader):
+    def __init__(self, options, schema):
+        self._files = list_sas_files(_path_option(options))
+        self._chunksize = int(options.get("chunksize", 100_000))
+        self._names = [f.name for f in schema.fields]
+        self._schema = schema
+
+    def partitions(self):
+        # one whole file per partition: the format's split granularity
+        return [InputPartition(p) for p in self._files]
+
+    def read(self, partition):
+        import pandas as pd
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        # pandas hands back ns-precision datetimes; Spark's Arrow
+        # ingestion wants exactly the schema's types (us timestamps),
+        # so each batch casts to the declared Arrow schema
+        arrow_schema = to_arrow_schema(self._schema)
+        with pd.read_sas(
+            partition.value,
+            format="sas7bdat",
+            encoding="utf-8",
+            chunksize=self._chunksize,
+            iterator=True,
+        ) as rdr:
+            for chunk in rdr:
+                tbl = pa.Table.from_pandas(
+                    chunk[self._names], preserve_index=False
+                ).cast(arrow_schema)
+                yield from tbl.to_batches()
+
+
+def register_sas_datasource(spark) -> None:
+    spark.dataSource.register(SasDataSource)

@@ -10,8 +10,8 @@ Staleness: the cache key includes the file's mtime (one stat call per
 lookup, ~µs), so rewriting a path with a different schema invalidates
 the entry instead of silently serving NULL-filled columns through a
 stale ``spark.read.schema(old)``. Glob/multi-file paths have no
-single mtime; they key on the path string alone — callers re-writing
-globbed directories mid-process should call ``invalidate``.
+single mtime; they key on the path string alone, so a globbed
+directory re-written mid-process with a new schema keeps its first.
 """
 
 from __future__ import annotations
@@ -46,11 +46,3 @@ def read_parquet_cached(spark: SparkSession, path: str):
     inference (after the first call per path)."""
     return spark.read.schema(parquet_schema(spark, path)).parquet(path)
 
-
-def invalidate(path: str | None = None) -> None:
-    """Drop one path's entries, or everything."""
-    if path is None:
-        _CACHE.clear()
-    else:
-        for k in [k for k in _CACHE if k[0] == path]:
-            del _CACHE[k]
