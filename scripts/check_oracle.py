@@ -28,10 +28,10 @@ TABLES = (
 
 
 def _norm_cell(v):
+    """One result cell as a type-aware string: a bool stays "True"/"False",
+    so it never matches an integer 1/0 from the other engine."""
     if v is None:
         return "NULL"
-    if isinstance(v, bool):
-        return str(int(v))
     if isinstance(v, float):
         if math.isnan(v):
             return "NaN"
@@ -50,11 +50,11 @@ def _norm_cell(v):
 
 
 def normalize(rows, columns):
+    """The one result canonicalizer of every Spark-vs-DuckDB compare
+    (this script, driver_mimic.py, tests/test_oracle_parity.py): cells
+    in column-name order, rows sorted — an order-insensitive multiset."""
     order = sorted(range(len(columns)), key=lambda i: columns[i])
-    out = sorted(
-        "|".join(_norm_cell(row[i]) for i in order) for row in rows
-    )
-    return out
+    return sorted("|".join(_norm_cell(row[i]) for i in order) for row in rows)
 
 
 def main():

@@ -1,13 +1,12 @@
 """Mimic the driver: foreign SparkSession (non-UTC tz, no engine confs),
 import __spark_entry__, smoke entry(), run all queries vs duckdb oracle."""
-import math, os, sys, time
-from datetime import date, datetime
-from decimal import Decimal
+import os, sys, time
 import duckdb
 from pyspark.sql import SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as em
+from check_oracle import normalize as canon
 
 # hostile driver session: New York tz, default shuffle partitions, no legacy confs
 spark = (SparkSession.builder.master("local[8]")
@@ -27,20 +26,6 @@ sf = "/root/testdata/sf0.01"
 con = duckdb.connect()
 for t, in [("region",),("nation",),("customer",),("supplier",),("part",),("orders",),("lineitem",),("events",),("documents",),("embeddings",)]:
     con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
-
-def norm(v):
-    if v is None: return "NULL"
-    if isinstance(v, float): return "NaN" if math.isnan(v) else repr(v)
-    if isinstance(v, Decimal): return repr(float(v))
-    if isinstance(v, datetime): return v.strftime("%Y-%m-%d %H:%M:%S.%f")
-    if isinstance(v, date): return v.isoformat()
-    if isinstance(v, (bytes, bytearray)): return v.hex()
-    if isinstance(v, list): return "[" + ",".join(norm(x) for x in v) + "]"
-    return str(v)
-
-def canon(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted("|".join(norm(r[i]) for i in order) for r in rows)
 
 qs, oracles = em.queries(), em.oracle_sql()
 fails = 0

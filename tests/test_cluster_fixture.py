@@ -123,7 +123,7 @@ def test_recall_ladder_discriminates_on_clustered_geometry(
     )
     rows = sim.hard_negative_recall(
         df, "vec_id", "embedding", k=3, dim=64, dup_threshold=0.9,
-        configs=((3, True), (5, True)), seed=42,
+        configs=((3, True), (5, True)),
     ).collect()
     rec = {(r.num_bits, bool(r.multiprobe)): r.recall for r in rows}
     assert rec[(3, True)] > rec[(5, True)] + 0.05  # bits discriminate

@@ -25,7 +25,7 @@ def test_never_undercounts_and_bounded_overcount(spark):
     vals = _skewed(rng, 5000)
     truth = Counter(vals)
     df = spark.createDataFrame([(v,) for v in vals], ["k"])
-    sk = countmin_build(df, "k", depth=4, width=2048)
+    sk = countmin_build(df, "k", width=2048)
     keys = spark.createDataFrame([(k,) for k in truth], ["k"])
     est = {r.k: r.est_count for r in countmin_query(sk, keys, "k").collect()}
     n = len(vals)
@@ -79,7 +79,7 @@ def test_negative_weight_raises(spark):
     df = spark.createDataFrame(
         [("a", 3), ("b", -1)], ["k", "w"]
     )
-    sk = countmin_build(df, "k", depth=2, width=64, weight_col="w")
+    sk = countmin_build(df, "k", width=64, weight_col="w")
     with pytest.raises(Exception, match="negative weight"):
         sk.collect()
 
@@ -94,11 +94,11 @@ def test_null_weight_counts_as_zero(spark):
         [("a", 3), ("a", None), ("b", 2)],
         schema="k string, w long",
     )
-    sk = countmin_build(df, "k", depth=4, width=256, weight_col="w")
+    sk = countmin_build(df, "k", width=256, weight_col="w")
     keys = df.select("k").distinct()
     est = {
         r["k"]: r["est_count"]
-        for r in countmin_query(sk, keys, "k", depth=4, width=256).collect()
+        for r in countmin_query(sk, keys, "k", width=256).collect()
     }
     # NULL weight contributes 0, so totals are still never-under
     assert est["a"] >= 3 and est["b"] >= 2
@@ -113,8 +113,8 @@ def test_inner_product_never_undercounts_and_is_tight_when_sparse(spark):
     a = spark.createDataFrame([(k,) for k in [1, 1, 2, 3]], ["k"])
     b = spark.createDataFrame([(k,) for k in [1, 3, 3, 9]], ["k"])
     # true inner product: 2*1 (k=1) + 0 (k=2) + 1*2 (k=3) + 0 (k=9) = 4
-    sk_a = countmin_build(a, "k", depth=4, width=2048)
-    sk_b = countmin_build(b, "k", depth=4, width=2048)
+    sk_a = countmin_build(a, "k", width=2048)
+    sk_b = countmin_build(b, "k", width=2048)
     est = countmin_inner_product(sk_a, sk_b, depth=4).collect()[0]
     assert est.est_join_size == 4  # wide sketch, 4 keys → no collisions
 
@@ -127,8 +127,8 @@ def test_inner_product_zero_when_disjoint(spark):
 
     a = spark.createDataFrame([(k,) for k in range(0, 50)], ["k"])
     b = spark.createDataFrame([(k,) for k in range(1000, 1050)], ["k"])
-    sk_a = countmin_build(a, "k", depth=4, width=8)  # tiny → collisions
-    sk_b = countmin_build(b, "k", depth=4, width=8)
+    sk_a = countmin_build(a, "k", width=8)  # tiny → collisions
+    sk_b = countmin_build(b, "k", width=8)
     est = countmin_inner_product(sk_a, sk_b, depth=4).collect()[0]
     # disjoint keys but width-8 cells collide: estimate must be >= 0
     # (true 0) and the MIN over rows keeps it from exploding

@@ -101,7 +101,7 @@ def test_hilbert_key_udf_matches_numpy(spark):
     df = spark.createDataFrame(pts, ["x", "y"])
     got = {
         (r.x, r.y): r.h
-        for r in df.withColumn("h", hilbert_key("x", "y", 10)).collect()
+        for r in df.withColumn("h", hilbert_key("x", "y")).collect()
     }
     xs = np.array([p[0] for p in pts])
     ys = np.array([p[1] for p in pts])

@@ -3,11 +3,9 @@ duplicate insensitivity, and the portable rho computation's edge bits."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from us_immigration_data_lake_spark.operators.sketches import (
-    HLL_ALPHA_PPM,
     hll_bitlen_sql,
     hll_estimate,
     hll_merge,
@@ -73,13 +71,6 @@ def test_nulls_excluded(spark):
     regs = hll_registers(df, ["g"], "v")
     # exact: only 2 non-null values → at most 2 registers hit
     assert regs.count() <= 2
-
-
-def test_invalid_log2m_raises(spark):
-    df = _vals(spark, 10)
-    with pytest.raises(ValueError, match="log2m"):
-        hll_registers(df, ["g"], "v", log2m=10)
-    assert 10 not in HLL_ALPHA_PPM
 
 
 def test_bitlen_case_chain_edges(spark):

@@ -316,7 +316,7 @@ def test_winnow_fingerprints_robust_to_local_edit(spark):
     base = "the quick brown fox jumps over the lazy dog and runs far away today"
     edited = base.replace("jumps", "leaps")
     df = spark.createDataFrame([(1, base), (2, edited)], ["doc_id", "text"])
-    fps = ts.winnow_fingerprints(df, "doc_id", "text", k=8, window=4)
+    fps = ts.winnow_fingerprints(df, "doc_id", "text")
     s1 = {r.fingerprint for r in fps.filter(F.col("doc_id") == 1).collect()}
     s2 = {r.fingerprint for r in fps.filter(F.col("doc_id") == 2).collect()}
     overlap = len(s1 & s2) / len(s1 | s2)
@@ -325,7 +325,7 @@ def test_winnow_fingerprints_robust_to_local_edit(spark):
 
 def test_winnow_fingerprints_short_doc_fallback(spark):
     df = spark.createDataFrame([(1, "tiny"), (2, "tiny")], ["doc_id", "text"])
-    fps = ts.winnow_fingerprints(df, "doc_id", "text", k=8, window=4)
+    fps = ts.winnow_fingerprints(df, "doc_id", "text")
     rows = fps.collect()
     assert len(rows) == 2
     assert rows[0].fingerprint == rows[1].fingerprint  # same text, same hash
@@ -906,7 +906,7 @@ def test_contaminated_docs_planted(spark):
     )
     got = {
         r["doc_id"]: r["n_shared_shingles"]
-        for r in contaminated_docs(corpus, bench, "doc_id", "text", n=5).collect()
+        for r in contaminated_docs(corpus, bench, "doc_id", "text").collect()
     }
     # exactly one shared 5-gram: "beta gamma delta epsilon zeta"
     assert got == {1: 1}
@@ -1298,7 +1298,7 @@ def test_srp_frames_cap_semantics_and_recovery(spark):
     # survivor under the smallest planted id
     surv = sim.semantic_dedup(
         df, "vec_id", "embedding", threshold=0.5, dim=dim, num_bits=2,
-        max_bucket_size=5, recover_oversized=True,
+        max_bucket_size=5,
     ).collect()
     planted = {r.vec_id: (r.cluster, r.keep) for r in surv if r.vec_id < 100}
     assert {c for c, _ in planted.values()} == {0}
@@ -1899,6 +1899,22 @@ def test_global_row_number_matches_single_partition_semantics(spark):
     want_order = sorted(rows, key=lambda t: (t[1], t[0]))
     assert [g[2] for g in got] == list(range(1, 201))  # dense 1..n
     assert [(g[0], g[1]) for g in got] == [(k, i) for i, k in want_order]
+
+
+def test_global_row_number_rank_is_non_null_long(spark):
+    """The rank keeps row_number's schema contract: a non-nullable
+    long, placed after the input columns."""
+    from pyspark.sql.types import LongType
+
+    from us_immigration_data_lake_spark.operators.windows import (
+        global_row_number,
+    )
+
+    df = spark.createDataFrame([(i, i % 3) for i in range(20)], ["id", "key"])
+    out = global_row_number(df, ["key", "id"], rank_col="pos", num_partitions=4)
+    assert out.columns == ["id", "key", "pos"]
+    field = out.schema["pos"]
+    assert field.dataType == LongType() and field.nullable is False
 
 
 def test_global_row_number_leaves_no_cache_entry(spark):
@@ -2850,7 +2866,7 @@ def test_cross_group_overlap_matches_python(spark):
     got = {
         (r.group_a, r.group_b): (r.shingles_a, r.shingles_b, r.shared, r.jaccard)
         for r in dd.cross_group_overlap(
-            df, "doc_id", "text", "source", shingle_n=3, portable=True
+            df, "doc_id", "text", "source", portable=True
         ).collect()
     }
 
@@ -2964,7 +2980,7 @@ def test_minhash_calibration_identical_docs_and_error_bound(spark):
     ]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
     out = dd.minhash_estimate_calibration(
-        df, "doc_id", "text", shingle_n=2, num_hashes=64, bands=32,
+        df, "doc_id", "text", num_hashes=64, bands=32,
     )
     got = {(r.id1, r.id2): r for r in out.collect()}
     twin = got[(1, 2)]
@@ -3620,7 +3636,7 @@ def test_choose_srp_config_replays_selection_rule(spark):
     for target in (50, 1000):
         got = sim.choose_srp_config(
             df, "vec_id", "embedding", k=3, dim=16, dup_threshold=0.95,
-            target_recall_permille=target, configs=configs, seed=42,
+            target_recall_permille=target, configs=configs,
         ).collect()
         evidence = {(r.num_bits, r.multiprobe): (r.n_exact, r.hits, r.recall)
                     for r in got}
@@ -3754,7 +3770,7 @@ def test_hard_negative_recall_theorems(spark):
     ).filter(F.col("vec_id") < 120)
     out = {(r.num_bits, r.multiprobe): r for r in sim.hard_negative_recall(
         emb, "vec_id", "embedding", k=4, dim=64, dup_threshold=0.35,
-        configs=((2, False), (2, True), (3, True)), seed=42,
+        configs=((2, False), (2, True), (3, True)),
     ).collect()}
     assert set(out) == {(2, 0), (2, 1), (3, 1)}
     for r in out.values():

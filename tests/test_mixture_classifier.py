@@ -58,7 +58,7 @@ def test_classifier_integer_logit_and_empty_doc(spark):
     out = {
         r.doc_id: r
         for r in linear_quality_classifier(
-            text_features(docs, "doc_id", "text"), w, bias_mu=0, threshold_mu=0
+            text_features(docs, "doc_id", "text"), w, bias_mu=0
         ).collect()
     }
     # doc 1: uniq_pm=250, stop_pm=1000, len_cap=4, meanlen_milli=3000

@@ -4,9 +4,8 @@ check_oracle.py runs that locally)."""
 
 from __future__ import annotations
 
-import math
-from datetime import date, datetime
-from decimal import Decimal
+import os
+import sys
 
 import duckdb
 import pytest
@@ -16,6 +15,11 @@ from us_immigration_data_lake_spark.plans.typecheck import (
     canon_duck_type,
     canon_spark_type,
 )
+
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))), "scripts"))
+
+from check_oracle import normalize as _canon  # noqa: E402
 
 SF = "/root/testdata/sf0.001"
 TABLES = (
@@ -29,29 +33,6 @@ def duck():
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
     return con
-
-
-def _norm(v):
-    if v is None:
-        return "NULL"
-    if isinstance(v, float):
-        return "NaN" if math.isnan(v) else repr(v)
-    if isinstance(v, Decimal):
-        return repr(float(v))
-    if isinstance(v, datetime):
-        return v.strftime("%Y-%m-%d %H:%M:%S.%f")
-    if isinstance(v, date):
-        return v.isoformat()
-    if isinstance(v, (bytes, bytearray)):
-        return v.hex()
-    if isinstance(v, list):
-        return "[" + ",".join(_norm(x) for x in v) + "]"
-    return str(v)
-
-
-def _canon(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted("|".join(_norm(r[i]) for i in order) for r in rows)
 
 
 # The Spark side of the sweep runs CONCURRENTLY (r8 verdict ask #4:
@@ -148,7 +129,7 @@ def test_query_matches_oracle(name, spark, duck, prefetched):
 
 # --- declared-type parity (r5 verdict ask #2) ------------------------------
 # The driver's value hash is type-sensitive: DuckDB HUGEINT vs Spark BIGINT
-# hashed differently for q180 despite identical values, while _norm above
+# hashed differently for q180 despite identical values, while _canon above
 # stringifies and cannot see the drift.  This gate compares the *declared*
 # result types of both engines (Spark: lazy schema; DuckDB: planner types —
 # neither side executes), canonicalized into families that are

@@ -307,7 +307,7 @@ def test_update_embedding_increment_stages(spark):
     ref_df = spark.createDataFrame(ref_rows, "vec_id long, embedding array<double>")
 
     final, st = update_embedding_increment(
-        new_df, ref_df, "vec_id", "embedding", threshold=0.9, dim=dim,
+        new_df, ref_df, threshold=0.9, dim=dim,
         num_bits=4,
     )
     assert (st.new_vectors, st.after_dim_gate) == (5, 4)  # 9 gated out

@@ -317,10 +317,10 @@ def test_union_agg_shapes_runtime_cardinality(spark):
     # q142: kmv_union's distinct over the unioned hash sets, keyed
     # (group, __h)
     sk_a = kmv_hashes(li.filter(F.col("l_returnflag") == "A"),
-                      ["l_linestatus"], "l_partkey", k=64)
+                      ["l_linestatus"], "l_partkey")
     sk_b = kmv_hashes(li.filter(F.col("l_returnflag") == "R"),
-                      ["l_linestatus"], "l_partkey", k=64)
-    assert _n_dup_groups(kmv_union(sk_a, sk_b, ["l_linestatus"], k=64),
+                      ["l_linestatus"], "l_partkey")
+    assert _n_dup_groups(kmv_union(sk_a, sk_b, ["l_linestatus"]),
                          ["l_linestatus", "__h"]) == 0
 
     # q156: hll_merge over two register frames, keyed (group, __j)

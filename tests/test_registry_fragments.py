@@ -8,8 +8,11 @@ registered function tunes before the body runs), a hand-rolled SRP
 (``_materialized`` is the one), the recursive-closure SQL outside
 ``_closure_sql``, or a hand-written reference-side bucket cap
 (``ROW_NUMBER() OVER (PARTITION BY <keys> ORDER BY <id>) ... WHERE
-rn <= {cap}``) outside ``_capped_cross_candidates_sql``. A planted source shows the scan going red; a Spark
-test shows that a registered ``fn`` tunes a foreign session."""
+rn <= {cap}``) outside ``_capped_cross_candidates_sql``, or the
+training oracles' hashed-token bucket CTE outside ``_hashed_fx_sql``
+or their naive-Bayes log-weight chain outside ``_nb_model_sql``. A
+planted source shows the scan going red; a Spark test shows that a
+registered ``fn`` tunes a foreign session."""
 
 from __future__ import annotations
 
@@ -25,7 +28,7 @@ QUERIES_PY = os.path.join(
 # the shared builders: the only places their own fragments may appear
 SHARED = {
     "_closure_sql", "_srp_bucket_sql", "_materialized",
-    "_capped_cross_candidates_sql",
+    "_capped_cross_candidates_sql", "_hashed_fx_sql", "_nb_model_sql",
 }
 CLOSURE_STEP = "FROM reach r JOIN"
 # the cap keeps each bucket's smallest ids: a plain-id ordered
@@ -35,6 +38,10 @@ CAP_COPY = re.compile(
     r"ROW_NUMBER\(\)\s+OVER\s+\(PARTITION BY [\w, ]+?\s+ORDER BY \w+\)"
     r"\s+AS rn\s+FROM [^()]*\)\s*WHERE rn <= \{\}"
 )
+# a token's md5 bucket (the hashed-feature CTE) and the Laplace-smoothed
+# NB log-weight (the model chain), each formatted against a bucket count
+HASHED_FX_COPY = re.compile(r"substr\(md5\(t\), 1, 15\)\)::BIGINT % \{\}")
+NB_CHAIN_COPY = re.compile(r"ln\(\(c_kb \+ 1\.0\) / \(tot_k \+ \{\}\)\)")
 
 
 def _is_register(dec: ast.expr) -> bool:
@@ -107,6 +114,11 @@ def scan(source: str) -> list[str]:
             and CAP_COPY.search(_sql_text(node))
         ):
             out.append(f"{where}:{node.lineno}: bucket cap SQL")
+        elif isinstance(node, ast.JoinedStr) and where not in SHARED:
+            if HASHED_FX_COPY.search(_sql_text(node)):
+                out.append(f"{where}:{node.lineno}: hashed-token SQL")
+            if NB_CHAIN_COPY.search(_sql_text(node)):
+                out.append(f"{where}:{node.lineno}: naive-Bayes SQL")
     return out
 
 
@@ -143,6 +155,24 @@ def _q_planted_cap_oracle_sql(cap):
     )"""
 
 
+def _q_planted_nb_oracle_sql(b):
+    return f"""fx AS (
+      SELECT doc_id, ('0x' || substr(md5(t), 1, 15))::BIGINT % {b} AS b
+      FROM tok
+    ), w AS (
+      SELECT k, b, ROUND(ln((c_kb + 1.0) / (tot_k + {b})) * 1e6) AS w
+      FROM kb JOIN ktot USING (k)
+    )"""
+
+
+def _hashed_fx_sql(b):
+    return f"SELECT ('0x' || substr(md5(t), 1, 15))::BIGINT % {b} AS b"
+
+
+def _nb_model_sql(b):
+    return f"SELECT ln((c_kb + 1.0) / (tot_k + {b})) AS w"
+
+
 def _closure_sql(*pairs):
     return "SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src"
 
@@ -158,11 +188,12 @@ def test_scan_goes_red_on_planted_copies():
     found = scan(_PLANTED)
     assert [v.split(": ", 1)[1] for v in found] == [
         "_tune in body", "import re", "def dot_expr", "closure SQL",
-        "bucket cap SQL",
+        "bucket cap SQL", "hashed-token SQL", "naive-Bayes SQL",
     ], found
     # the shared builders' own fragments are allowed
     assert not any(
-        v.startswith(("_closure_sql:", "_capped_cross_candidates_sql:"))
+        v.startswith(("_closure_sql:", "_capped_cross_candidates_sql:",
+                      "_hashed_fx_sql:", "_nb_model_sql:"))
         for v in found
     )
 

@@ -47,7 +47,7 @@ def test_mad_outliers_flags_only_the_spike(spark):
     # values 10..18 tightly packed plus one 1000 spike
     rows = [("g", v, i) for i, v in enumerate([10, 11, 12, 13, 14, 15, 16, 17, 18, 1000])]
     df = spark.createDataFrame(rows, ["g", "v", "k"])
-    out = mad_outlier_stats(df, ["g"], "v", ["k"], n_sigmas=3).collect()[0]
+    out = mad_outlier_stats(df, ["g"], "v", ["k"]).collect()[0]
     # median of 10..18,1000 (10 values) = (14+15)/2 → median2 = 29
     assert out.median2 == 29
     assert out.n == 10
@@ -59,7 +59,7 @@ def test_ewma_head_renormalizes_and_converges(spark):
     # including the heads where fewer lags exist (renormalization).
     rows = [(1, i, 700) for i in range(6)]
     df = spark.createDataFrame(rows, ["u", "t", "v"])
-    out = ewma_smooth(df, ["u"], ["t"], "v", alpha=0.5, k=4).collect()
+    out = ewma_smooth(df, ["u"], ["t"], "v").collect()
     assert all(r.ewma_e6 == 700_000_000 for r in out)
 
 

@@ -153,14 +153,14 @@ def test_skyline_duplicates_survive_and_matches_bruteforce(spark):
 def test_bloom_no_false_negatives_and_determinism(spark):
     build = spark.range(0, 500).select(F.col("id").alias("k"))
     probe = spark.range(0, 2000).select(F.col("id").alias("k"))
-    bits = bloom_build_bits(build, "k", num_hashes=5, num_bits=4096)
-    out1 = bloom_probe(bits, probe, "k", num_hashes=5, num_bits=4096)
+    bits = bloom_build_bits(build, "k", num_bits=4096)
+    out1 = bloom_probe(bits, probe, "k", num_bits=4096)
     members_missed = out1.filter((F.col("k") < 500) & ~F.col("might_match"))
     assert members_missed.count() == 0
     # deterministic across rebuilds (md5 positions, no RNG)
     out2 = bloom_probe(
-        bloom_build_bits(build, "k", num_hashes=5, num_bits=4096),
-        probe, "k", num_hashes=5, num_bits=4096,
+        bloom_build_bits(build, "k", num_bits=4096),
+        probe, "k", num_bits=4096,
     )
     assert sorted(map(tuple, out1.collect())) == sorted(
         map(tuple, out2.collect())

@@ -12,7 +12,7 @@ from us_immigration_data_lake_spark.operators.sketches import kmv_distinct
 def test_kmv_below_k_is_exact(spark):
     # 5 distinct values with k=64 → sketch must report the exact count
     df = spark.createDataFrame([("g", v % 5) for v in range(50)], ["g", "v"])
-    out = kmv_distinct(df, ["g"], "v", k=64).collect()[0]
+    out = kmv_distinct(df, ["g"], "v").collect()[0]
     assert out.est_distinct == 5
     assert out.kth_hash is None
 
@@ -20,7 +20,7 @@ def test_kmv_below_k_is_exact(spark):
 def test_kmv_ignores_nulls(spark):
     rows = [("g", v) for v in [1, 2, 3]] + [("g", None)] * 4
     df = spark.createDataFrame(rows, "g string, v int")
-    out = kmv_distinct(df, ["g"], "v", k=64).collect()[0]
+    out = kmv_distinct(df, ["g"], "v").collect()[0]
     assert out.est_distinct == 3  # NULLs carry no distinct meaning
 
 
@@ -29,7 +29,7 @@ def test_kmv_estimate_within_relative_error(spark):
     # ≈ 13%; assert a generous 3-sigma band (the estimator is exact
     # arithmetic, so this bound is stable for a fixed hash function).
     df = spark.createDataFrame([(1, v) for v in range(2000)], ["g", "v"])
-    out = kmv_distinct(df, ["g"], "v", k=64).collect()[0]
+    out = kmv_distinct(df, ["g"], "v").collect()[0]
     assert 1200 <= out.est_distinct <= 2800
 
 

@@ -35,7 +35,7 @@ def test_compact_parquet_reduces_files(spark, tmp_path):
     df.repartition(40).write.parquet(out)
     n_before = len([f for f in os.listdir(out) if f.endswith(".parquet")])
     assert n_before >= 40
-    compact_parquet(spark, out, target_file_mb=256)
+    compact_parquet(spark, out)
     n_after = len([f for f in os.listdir(out) if f.endswith(".parquet")])
     assert n_after < n_before
     assert spark.read.parquet(out).count() == 10000
@@ -182,7 +182,7 @@ def test_write_table_csv_roundtrips_through_reference_reader(spark, tmp_path):
     path = write_table(df, str(tmp_path), "t", fmt="csv")
     # the `;` dialect the reference ingests must read its own output
     # back (quoting protects embedded separators)
-    back = read_csv(spark, path, sep=";", header=True, infer_schema=True)
+    back = read_csv(spark, path, sep=";", infer_schema=True)
     assert sorted(map(tuple, back.collect())) == sorted(map(tuple, df.collect()))
 
 

@@ -179,7 +179,7 @@ def test_embedding_increment_releases_srp_signatures_per_scope(quiet):
     for _ in range(3):
         with storage.scope() as s:
             final, _st = update_embedding_increment(
-                new_df, ref_df, "vec_id", "embedding", threshold=0.9,
+                new_df, ref_df, threshold=0.9,
                 dim=8, num_bits=4,
             )
             # the cross-stage signature checkpoints moved here: final

@@ -36,7 +36,7 @@ def _run(spark, src_dir, state_dir, ckpt_dir, name):
         .parquet(f"{src_dir}/f*")
     )
     countmin_stream(
-        stream, "k", state_dir, ckpt_dir, name=name, depth=4, width=W
+        stream, "k", state_dir, ckpt_dir, name=name, width=W
     )
 
 
@@ -66,7 +66,7 @@ def test_folded_cells_equal_single_pass(spark, folded_run):
     src, state = folded_run
     folded = _cells(read_latest_state(spark, state))
     all_rows = spark.read.schema("k bigint").parquet(f"{src}/f*")
-    direct = _cells(countmin_build(all_rows, "k", depth=4, width=W))
+    direct = _cells(countmin_build(all_rows, "k", width=W))
     assert folded == direct
 
 
@@ -76,7 +76,7 @@ def test_folded_estimates_never_undercount(spark, folded_run):
     keys = spark.createDataFrame([(k,) for k in [1, 2, 3, 4, 5]], ["k"])
     est = {
         r.k: r.est_count
-        for r in countmin_query(sketch, keys, "k", depth=4, width=W).collect()
+        for r in countmin_query(sketch, keys, "k", width=W).collect()
     }
     truth = {1: 5, 2: 3, 3: 3, 4: 1, 5: 1}
     for k, t in truth.items():
@@ -108,7 +108,7 @@ def test_vacuum_keeps_fold_correct(spark, tmp_path):
     assert removed == [0, 1]  # three batches → v=0,1 superseded
     # live state unchanged by the vacuum
     all_rows = spark.read.schema("k bigint").parquet(f"{src}/f*")
-    direct = _cells(countmin_build(all_rows, "k", depth=4, width=W))
+    direct = _cells(countmin_build(all_rows, "k", width=W))
     assert _cells(read_latest_state(spark, state)) == direct
     # and a NEW batch still folds from the retained version
     spark.createDataFrame([(1,)], ["k"]).coalesce(1).write.parquet(
@@ -118,7 +118,7 @@ def test_vacuum_keeps_fold_correct(spark, tmp_path):
     est = countmin_query(
         read_latest_state(spark, state),
         spark.createDataFrame([(1,)], ["k"]),
-        "k", depth=4, width=W,
+        "k", width=W,
     ).collect()[0]
     assert est.est_count >= 6  # 5 before + 1 new
 

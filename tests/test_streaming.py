@@ -20,7 +20,7 @@ SF = "/root/testdata/sf0.001"
 
 def test_tumbling_matches_batch(spark):
     stream = read_event_stream(spark, SF)
-    got = run_to_memory(tumbling_agg(stream, "1 hour"), "t_tumble")
+    got = run_to_memory(tumbling_agg(stream), "t_tumble")
     batch = (
         load_events(spark, SF)
         .groupBy(
@@ -37,7 +37,7 @@ def test_tumbling_matches_batch(spark):
 
 def test_session_windows_merge_and_count(spark):
     stream = read_event_stream(spark, SF)
-    got = run_to_memory(session_agg(stream, "10 minutes"), "t_sessions")
+    got = run_to_memory(session_agg(stream), "t_sessions")
     rows = got.collect()
     total_events = load_events(spark, SF).count()
     assert sum(r.n_events for r in rows) == total_events  # partition of events
@@ -71,7 +71,7 @@ def test_stream_stream_interval_join_matches_batch(spark):
 
     stream = read_event_stream(spark, SF)
     got = run_to_memory(
-        purchase_view_interval_join(stream, "30 minutes"), "t_ssj", mode="append"
+        purchase_view_interval_join(stream), "t_ssj", mode="append"
     )
     ev = load_events(spark, SF)
     p = ev.filter(F.col("event_type") == "purchase").select(
@@ -334,7 +334,7 @@ def test_windowed_agg_state_survives_restart(spark, tmp_path):
             spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
         )
         q = (
-            tumbling_agg_append(stream, "1 hour", watermark="1 hour")
+            tumbling_agg_append(stream)
             .writeStream.format("parquet")
             .option("path", sink)
             .option("checkpointLocation", ckpt)

@@ -43,18 +43,16 @@ def recode_via_broadcast_map(
     col: str,
     mapping: dict,
     spark: SparkSession | None = None,
-    out_col: str | None = None,
 ) -> DataFrame:
     """Value rewrite via broadcast-joined mapping table — the scale-path
     form of ``recode``: the mapping ships once per executor instead of
     inlining into every task's codegen."""
     spark = spark or df.sparkSession
-    out_col = out_col or col
     from us_immigration_data_lake_spark.operators.storage import local_frame
 
     map_df = local_frame(spark, list(mapping.items()), ["__rk", "__rv"])
     joined = df.join(F.broadcast(map_df), df[col] == map_df["__rk"], "left")
-    return joined.withColumn(out_col, F.coalesce("__rv", col)).drop("__rk", "__rv")
+    return joined.withColumn(col, F.coalesce("__rv", col)).drop("__rk", "__rv")
 
 
 def coalesce_fallback(primary: Column | str, fallback: Column | str) -> Column:

@@ -12,8 +12,8 @@ inside whole-stage codegen and costs zero Python round-trips.
 
 Null conventions: the reference's U1 and U4 disagree (U4 maps the falsy
 value 0.0 → NULL; U1 maps 0.0 → '1960-01-01'). We standardize on U1's
-arithmetic behavior (0 = the epoch) and document the divergence; pass
-``zero_as_null=True`` for U4 semantics.
+arithmetic behavior (0 = the epoch) and document the divergence;
+``sas_to_date(col, zero_as_null=True)`` gives U4 semantics.
 """
 
 from __future__ import annotations
@@ -33,9 +33,9 @@ def sas_to_date(col: Column | str, zero_as_null: bool = False) -> Column:
     return d
 
 
-def sas_to_iso_string(col: Column | str, zero_as_null: bool = False) -> Column:
+def sas_to_iso_string(col: Column | str) -> Column:
     """SAS day-count → 'yyyy-MM-dd' string (U1's exact output shape)."""
-    return F.date_format(sas_to_date(col, zero_as_null), "yyyy-MM-dd")
+    return F.date_format(sas_to_date(col), "yyyy-MM-dd")
 
 
 def date_diff_days(end: Column | str, start: Column | str) -> Column:
@@ -48,7 +48,7 @@ def date_diff_days(end: Column | str, start: Column | str) -> Column:
     return F.datediff(F.to_date(e), F.to_date(s))
 
 
-def date_parts(col: Column | str, prefix: str = "") -> dict[str, Column]:
+def date_parts(col: Column | str) -> dict[str, Column]:
     """The date-part bundle from the ARRIVALDATE build (etl.py:296-300):
     day, month, year, day-of-week, week-of-year.
 
@@ -58,11 +58,11 @@ def date_parts(col: Column | str, prefix: str = "") -> dict[str, Column]:
     """
     c = F.to_date(F.col(col) if isinstance(col, str) else col)
     return {
-        f"{prefix}day": F.dayofmonth(c),
-        f"{prefix}month": F.month(c),
-        f"{prefix}year": F.year(c),
-        f"{prefix}day_of_week": F.dayofweek(c),
-        f"{prefix}weekofyear": F.weekofyear(c),
+        "day": F.dayofmonth(c),
+        "month": F.month(c),
+        "year": F.year(c),
+        "day_of_week": F.dayofweek(c),
+        "weekofyear": F.weekofyear(c),
     }
 
 

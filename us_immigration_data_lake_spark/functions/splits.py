@@ -31,17 +31,11 @@ def hash_split_bucket(
     return F.conv(F.substring(h, digit_offset, 4), 16, 10).cast("long") % buckets
 
 
-def split_label(
-    id_col: Column | str, train_pct: int = 80, buckets: int = 100
-) -> Column:
-    return F.when(
-        hash_split_bucket(id_col, buckets) < train_pct, "train"
-    ).otherwise("test")
+def split_label(id_col: Column | str, train_pct: int = 80) -> Column:
+    return F.when(hash_split_bucket(id_col) < train_pct, "train").otherwise("test")
 
 
-def cluster_split_label(
-    df, pairs, id_col: str, train_pct: int = 80, max_iter: int = 20
-):
+def cluster_split_label(df, pairs, id_col: str):
     """Leakage-safe train/test split: the split is assigned at
     NEAR-DUP CLUSTER granularity, not per document — two documents
     that are near-duplicates of each other can never straddle the
@@ -53,13 +47,13 @@ def cluster_split_label(
     Returns (id, cluster, split).
 
     Scale: the CC pass is the q43 machinery (edge-count-driven
-    iterations, bounded by max_iter); the split itself is one md5 per
+    iterations, at most 20); the split itself is one md5 per
     row — no extra shuffle beyond CC's own."""
     from us_immigration_data_lake_spark.operators.dedup import dedup_survivors
 
-    surv = dedup_survivors(df, pairs, id_col, max_iter=max_iter)
+    surv = dedup_survivors(df, pairs, id_col)
     return surv.select(
         id_col,
         "cluster",
-        split_label(F.col("cluster"), train_pct).alias("split"),
+        split_label(F.col("cluster")).alias("split"),
     )

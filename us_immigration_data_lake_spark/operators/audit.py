@@ -70,9 +70,7 @@ def referential_audit(
     return out
 
 
-def profile_table(
-    df: DataFrame, cols: list[str], approx: bool = False
-) -> DataFrame:
+def profile_table(df: DataFrame, cols: list[str]) -> DataFrame:
     """Single-pass per-column profile.
 
     Returns (column STRING, n_rows BIGINT, n_nulls BIGINT,
@@ -80,16 +78,11 @@ def profile_table(
     computed in the column's native type (numeric order, not
     lexicographic) and cast to string afterwards for a uniform shape.
     """
-    n_distinct = (
-        (lambda c: F.approx_count_distinct(c))
-        if approx
-        else (lambda c: F.count_distinct(F.col(c)))
-    )
     aggs = [F.count(F.lit(1)).alias("__n")]
     for c in cols:
         aggs += [
             F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(f"__nulls_{c}"),
-            n_distinct(c).cast("long").alias(f"__dist_{c}"),
+            F.count_distinct(F.col(c)).cast("long").alias(f"__dist_{c}"),
             F.min(c).cast("string").alias(f"__min_{c}"),
             F.max(c).cast("string").alias(f"__max_{c}"),
         ]

@@ -248,7 +248,7 @@ def _png_filter_candidates(cur: np.ndarray, prev: np.ndarray, ch: int):
 
 
 def encode_png(
-    pixels: np.ndarray, level: int = 6, filter_strategy: str = "adaptive"
+    pixels: np.ndarray, filter_strategy: str = "adaptive"
 ) -> bytes:
     """uint8 (h, w) or (h, w, {1,2,3,4}) → PNG bytes.
 
@@ -304,7 +304,7 @@ def encode_png(
     return (
         PNG_SIG
         + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(raw, level))
+        + chunk(b"IDAT", zlib.compress(raw, 6))
         + chunk(b"IEND", b"")
     )
 

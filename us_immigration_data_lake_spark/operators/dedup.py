@@ -911,14 +911,10 @@ def _cc_local_labels(rows) -> list[tuple]:
     return sorted((x, find(x)) for x in parent)
 
 
-def connected_components(
-    pairs: DataFrame,
-    id_cols: tuple[str, str] = ("id1", "id2"),
-    max_iter: int = 20,
-) -> DataFrame:
+def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     """Duplicate clustering: connected components over the near-dup
-    pair graph. Returns (id, cluster) where cluster = smallest id
-    reachable.
+    pair graph of (id1, id2) rows. Returns (id, cluster) where
+    cluster = smallest id reachable.
 
     Scale ladder (r16): the one-direction edge set is materialized
     once (eager localCheckpoint — pairs compute exactly once on every
@@ -975,13 +971,11 @@ def connected_components(
     # labels are released on return; the labels returned move to the
     # caller's scope
     with storage.scope() as s:
-        return s.hand_off(_components(pairs, id_cols, max_iter))
+        return s.hand_off(_components(pairs, max_iter))
 
 
-def _components(
-    pairs: DataFrame, id_cols: tuple[str, str], max_iter: int
-) -> DataFrame:
-    a, b = id_cols
+def _components(pairs: DataFrame, max_iter: int) -> DataFrame:
+    a, b = "id1", "id2"
     # the ONE-direction edge set is what materializes: checkpointing
     # the symmetric union would evaluate the pairs plan once per
     # branch. The union below is lazy (its schema carries the widened
@@ -1082,12 +1076,11 @@ def dedup_survivors(
     df: DataFrame,
     pairs: DataFrame,
     id_col: str,
-    max_iter: int = 20,
 ) -> DataFrame:
     """Keep-one-per-cluster dedup decision: every doc gets its cluster
     (docs in no pair form singleton clusters) and a keep flag — the
     smallest id in each cluster survives, the LLM-corpus convention."""
-    comps = connected_components(pairs, max_iter=max_iter)
+    comps = connected_components(pairs)
     out = (
         df.select(F.col(id_col).alias("id"))
         .join(comps, on="id", how="left")
@@ -1104,7 +1097,6 @@ def dedup_survivors_by(
     pairs: DataFrame,
     id_col: str,
     score,
-    max_iter: int = 20,
 ) -> DataFrame:
     """Keep-BEST-per-cluster dedup decision: like ``dedup_survivors``
     (smallest id wins) but the survivor is the cluster member with the
@@ -1120,7 +1112,7 @@ def dedup_survivors_by(
     same key (clusters are corpus-cardinality — singletons included —
     so the survivor frame shuffles, never broadcasts). No window sort
     over the corpus."""
-    comps = connected_components(pairs, max_iter=max_iter)
+    comps = connected_components(pairs)
     labeled = (
         df.select(F.col(id_col).alias("id"), score.alias("__score"))
         .join(comps, on="id", how="left")
@@ -1150,10 +1142,9 @@ def contaminated_docs(
     benchmark: DataFrame,
     id_col: str,
     text_col: str,
-    n: int = 5,
 ) -> DataFrame:
     """Benchmark decontamination: corpus documents sharing ≥1 word
-    n-gram with any benchmark document (the n-gram-overlap test used
+    5-gram with any benchmark document (the n-gram-overlap test used
     to scrub eval sets out of training corpora; n=5 is a conventional
     choice — long enough that shared grams mean real overlap).
 
@@ -1168,11 +1159,11 @@ def contaminated_docs(
     (corpus shingles) x 1, not a cross blowup on repeated grams.
     """
     c_sh = (
-        shingles(corpus, id_col, text_col, n=n)
+        shingles(corpus, id_col, text_col, n=5)
         .select(id_col, F.explode("shingles").alias("shingle"))
     )
     b_sh = (
-        shingles(benchmark, id_col, text_col, n=n)
+        shingles(benchmark, id_col, text_col, n=5)
         .select(F.explode("shingles").alias("shingle"))
         .distinct()
     )
@@ -1498,7 +1489,6 @@ def joint_near_dup_survivors(
     num_hashes: int = 64,
     bands: int = 16,
     num_bits: int = 8,
-    seed: int = 42,
     max_bucket_size: int = 1000,
     portable: bool = False,
 ) -> DataFrame:
@@ -1547,7 +1537,7 @@ def joint_near_dup_survivors(
     def _sem_pairs() -> DataFrame:
         return srp_near_dup_frames(
             df, id_col, vec_col, cosine_threshold, dim,
-            num_bits=num_bits, seed=seed,
+            num_bits=num_bits,
             max_bucket_size=max_bucket_size, recover_oversized=True,
         )["pairs"].select("id1", "id2")
 
@@ -1692,7 +1682,6 @@ def remove_repeated_substrings(
     text_col: str,
     k: int = 50,
     portable: bool = False,
-    min_count: int = 2,
 ) -> DataFrame:
     """ExactSubstr dedup applied: every input row with its cleaned text
     (tokens inside repeated spans deleted; the canonical occurrence of
@@ -1706,7 +1695,7 @@ def remove_repeated_substrings(
     array (per-row HOF, no token-level shuffle — only the spans frame
     shuffles, which is span-cardinality, not token-cardinality)."""
     spans = repeated_substring_spans(
-        df, id_col, text_col, k=k, portable=portable, min_count=min_count
+        df, id_col, text_col, k=k, portable=portable
     )
     per_doc = spans.groupBy(id_col).agg(
         F.collect_list(
@@ -2088,7 +2077,6 @@ def cross_group_overlap(
     id_col: str,
     text_col: str,
     group_col: str,
-    shingle_n: int = 3,
     portable: bool = False,
 ) -> DataFrame:
     """Pairwise SHINGLE-OVERLAP matrix between document groups
@@ -2115,7 +2103,7 @@ def cross_group_overlap(
     sets; output is groups² rows — driver-trivial. Jaccard divides
     exact bigints once (oracle rule 1)."""
     sh = shingles(
-        df.filter(F.col(text_col).isNotNull()), id_col, text_col, shingle_n,
+        df.filter(F.col(text_col).isNotNull()), id_col, text_col,
         carry_cols=(group_col,),
     )
     per_sh = (
@@ -2175,7 +2163,6 @@ def minhash_estimate_calibration(
     id_col: str,
     text_col: str,
     *,
-    shingle_n: int = 2,
     num_hashes: int = 24,
     bands: int = 6,
     portable: bool = False,
@@ -2202,7 +2189,7 @@ def minhash_estimate_calibration(
     two hash-joins and zero extra shuffle stages beyond q20's own.
     Like ann_recall_at_k this is an OFFLINE calibration run over a
     restricted slice, not the serving path."""
-    sh = shingles(df, id_col, text_col, n=shingle_n)
+    sh = shingles(df, id_col, text_col, n=2)
     hs = hashed_shingle_sets(sh, id_col, portable)
     # cached: the signature chain (the md5-heavy stage in portable
     # mode) is scanned by the band side, BOTH pair-join sides, and the

@@ -133,8 +133,8 @@ def _lzw_encode(min_code_size: int, indices: np.ndarray) -> bytes:
 _INTERLACE_PASSES = ((0, 8), (4, 8), (2, 4), (1, 2))
 
 
-def decode_gif(content: bytes, frame_index: int = 0) -> np.ndarray:
-    """GIF bytes → uint8 RGB array (h, w, 3) of the selected frame."""
+def decode_gif(content: bytes) -> np.ndarray:
+    """GIF bytes → uint8 RGB array (h, w, 3) of the first frame."""
     if content[:6] not in GIF_SIGS:
         raise ValueError("not a GIF payload")
     sw, sh, flags, _bg, _ar = struct.unpack("<HHBBB", content[6:13])
@@ -144,7 +144,6 @@ def decode_gif(content: bytes, frame_index: int = 0) -> np.ndarray:
         n = 2 << (flags & 0x07)
         gct = np.frombuffer(content[pos : pos + 3 * n], dtype=np.uint8).reshape(n, 3)
         pos += 3 * n
-    frames_seen = 0
     while pos < len(content):
         b = content[pos]
         if b == 0x3B:  # trailer
@@ -174,9 +173,6 @@ def decode_gif(content: bytes, frame_index: int = 0) -> np.ndarray:
             chunks += content[pos + 1 : pos + 1 + ln]
             pos += 1 + ln
         pos += 1
-        if frames_seen != frame_index:
-            frames_seen += 1
-            continue
         if lct is None:
             raise ValueError("GIF frame has no color table")
         idx = _lzw_decode(min_code_size, bytes(chunks), w * h)
@@ -190,7 +186,7 @@ def decode_gif(content: bytes, frame_index: int = 0) -> np.ndarray:
                     src += 1
             idx = ordered.reshape(-1)
         return lct[idx].reshape(h, w, 3)
-    raise ValueError(f"GIF has no frame {frame_index}")
+    raise ValueError("GIF has no frame")
 
 
 def encode_gif(pixels: np.ndarray) -> bytes:

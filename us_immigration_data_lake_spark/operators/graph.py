@@ -49,20 +49,16 @@ def canonical_edges(
     return e.select("a", "b")
 
 
-def triangle_count(
-    edges: DataFrame,
-    src: str = "a",
-    dst: str = "b",
-) -> DataFrame:
-    """Per-node triangle participation over a canonical (src<dst,
-    distinct) edge list: (node, n_triangles). Nodes in no triangle
-    emit nothing.
+def triangle_count(edges: DataFrame) -> DataFrame:
+    """Per-node triangle participation over a canonical (a<b,
+    distinct) edge list of (a, b) rows: (node, n_triangles). Nodes in
+    no triangle emit nothing.
 
     Wedges (a,b)+(b,c) with a<b<c close into triangles via one
     membership join on (a,c); each triangle contributes exactly one
     (a,b,c) row, then explodes to its three corners for the count.
     """
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    e = edges.select("a", "b")
     wedge = e.alias("x").join(
         e.select(
             F.col("a").alias("b"), F.col("b").alias("c")
@@ -83,23 +79,17 @@ def triangle_count(
     )
 
 
-def pagerank_quantized(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    weight: str = "n",
-    iterations: int = 3,
-    damping_permille: int = 850,
-    scale: int = 1_000_000,
-) -> DataFrame:
-    """Weighted PageRank with micro-unit INTEGER quantization: ranks
-    live as bigint micro-ranks and every iteration is exact integer
-    arithmetic, so the fixpoint path is bit-identical in any engine
-    (double summation order never enters).
+def pagerank_quantized(edges: DataFrame) -> DataFrame:
+    """Weighted PageRank over (src, dst, n) edges with micro-unit
+    INTEGER quantization: ranks live as bigint micro-ranks and every
+    iteration is exact integer arithmetic, so the fixpoint path is
+    bit-identical in any engine (double summation order never enters).
 
     Per iteration (integer ops only):
         contrib_e = (rank[src] * w_e) div out[src]        -- floor div
         rank'[v]  = (1-d)·scale/N + (d · Σ contrib_e(v)) div 1000
+
+    with d = 850 permille, scale = 10^6 and 3 iterations.
 
     Dangling nodes (no outgoing edges) keep only the teleport term —
     a declared semantic (their mass exits the system), matching the
@@ -107,14 +97,14 @@ def pagerank_quantized(
 
     Scale: each iteration is ONE equi-join of the rank vector onto the
     edge list (shuffle on src) + ONE groupBy dst — the standard
-    distributed PageRank plan; with d iterations that is 2d shuffles,
+    distributed PageRank plan; each iteration adds 2 shuffles,
     all on node ids, never materialized on the driver. The iteration
     count is fixed (plan-unrolled), which is how a 100 TB run bounds
     the job DAG; convergence-tested variants re-run the same job.
     """
     e_all = edges.select(
-        F.col(src).alias("__s"), F.col(dst).alias("__d"),
-        F.col(weight).cast("long").alias("__w"),
+        F.col("src").alias("__s"), F.col("dst").alias("__d"),
+        F.col("n").cast("long").alias("__w"),
     )
     nodes = (
         e_all.select(F.col("__s").alias("node"))
@@ -130,9 +120,10 @@ def pagerank_quantized(
     n_nodes = nodes.count()  # scalar only — the one driver value needed
     if n_nodes == 0:
         raise ValueError("pagerank_quantized: empty edge list — no nodes")
-    teleport = ((1000 - damping_permille) * scale) // (1000 * n_nodes)
+    scale = 1_000_000
+    teleport = ((1000 - 850) * scale) // (1000 * n_nodes)
     rank = nodes.withColumn("rank", F.lit(scale // n_nodes).cast("long"))
-    for _ in range(iterations):
+    for _ in range(3):
         contrib = (
             e.join(rank.withColumnRenamed("node", "__s"), "__s")
             .select(
@@ -148,9 +139,7 @@ def pagerank_quantized(
                 "node",
                 (
                     F.lit(teleport)
-                    + F.expr(
-                        f"({damping_permille} * coalesce(sc, 0L)) div 1000"
-                    )
+                    + F.expr("(850 * coalesce(sc, 0L)) div 1000")
                 ).cast("long").alias("rank"),
             )
         )

@@ -448,13 +448,11 @@ FINGERPRINT_SCHEMA = StructType([
 def audio_fingerprints(
     media: DataFrame,
     frame: int = 512,
-    hop: int = 256,
-    peaks_per_frame: int = 3,
     fanout: int = 5,
 ) -> DataFrame:
     """Constellation-map audio fingerprints (the Shazam scheme, Wang
-    ISMIR 2003): per STFT frame keep the strongest spectral peaks,
-    pair each anchor peak with peaks in the next ``fanout`` frames,
+    ISMIR 2003): per STFT frame (hop 256) keep the 3 strongest spectral
+    peaks, pair each anchor peak with peaks in the next ``fanout`` frames,
     and hash (f_anchor, f_target, dt) into one BIGINT. Matching
     audio shares many hashes at a CONSISTENT time offset; noise and
     re-encoding perturb magnitudes but not peak locations.
@@ -496,17 +494,15 @@ def audio_fingerprints(
                     .reshape(len(samples), -1)
                     .mean(axis=1)
                 )
-                n_frames = max(0, (len(x) - frame) // hop + 1)
+                n_frames = max(0, (len(x) - frame) // 256 + 1)
                 peak_list = []
                 for t in range(n_frames):
-                    seg = x[t * hop : t * hop + frame]
+                    seg = x[t * 256 : t * 256 + frame]
                     mag = np.abs(np.fft.rfft(seg * win))
                     mag[0] = 0.0  # DC is loudness, not pitch
                     # top-k via argpartition (O(n)), then order the k
                     # descending with the index tiebreak stable
-                    cand = np.argpartition(mag, -peaks_per_frame)[
-                        -peaks_per_frame:
-                    ]
+                    cand = np.argpartition(mag, -3)[-3:]
                     ordered = sorted(
                         (int(b) for b in cand), key=lambda b: (-mag[b], b)
                     )

@@ -100,11 +100,10 @@ def ewma_smooth(
     partition_cols: list[str],
     order_cols: list[str],
     value_col: str,
-    alpha: float = 0.5,
-    k: int = 4,
 ) -> DataFrame:
-    """Finite-impulse EWMA: smoothed_t = Σ_j w_j·x_{t-j} / Σ_j w_j over
-    the lags that exist (series heads renormalize over present terms).
+    """Finite-impulse EWMA (alpha 0.5, 4 lags): smoothed_t =
+    Σ_j w_j·x_{t-j} / Σ_j w_j over the lags that exist (series heads
+    renormalize over present terms).
 
     ``value_col`` must be integer-valued; each lag term is an exact
     integer, the weighted sum is a FIXED left-to-right chain of
@@ -112,12 +111,12 @@ def ewma_smooth(
     any engine that evaluates the same expression text. ``order_cols``
     must end in a unique key (rule 6).
 
-    Scale: one window pass (single shuffle on partition_cols); the k
+    Scale: one window pass (single shuffle on partition_cols); the
     lag() calls share one sort — Spark evaluates them in the same
-    window frame, not k passes.
+    window frame, not one pass per lag.
     """
     w = Window.partitionBy(*partition_cols).orderBy(*order_cols)
-    weights = ewma_weights(alpha, k)
+    weights = ewma_weights(0.5, 4)
     v = F.col(value_col).cast("long")
     num: Column | None = None
     den: Column | None = None
@@ -180,10 +179,9 @@ def mad_outlier_stats(
     group_cols: list[str],
     value_col: str,
     tie_cols: list[str],
-    n_sigmas: int = 3,
 ) -> DataFrame:
     """Robust per-group outlier screen: flag rows with
-    |v − median| > n_sigmas · MAD, all in exact integer arithmetic.
+    |v − median| > 3 · MAD, all in exact integer arithmetic.
 
     Doubled-unit trick: med2 = 2·median (bigint); per-row deviation
     dev2 = |2v − med2| (bigint); mad4 = 2·median(dev2) = 4·MAD
@@ -217,7 +215,7 @@ def mad_outlier_stats(
             F.first("median2").alias("median2"),
             F.first("mad4").alias("mad4"),
             F.sum(
-                (F.lit(2) * F.col("dev2") > F.lit(n_sigmas) * F.col("mad4")).cast(
+                (F.lit(2) * F.col("dev2") > F.lit(3) * F.col("mad4")).cast(
                     "long"
                 )
             )

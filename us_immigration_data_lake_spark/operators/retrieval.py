@@ -21,17 +21,16 @@ def rrf_fuse(
     rankings: Sequence[DataFrame],
     id_col: str,
     rank_col: str,
-    k0: int = 60,
     k: int | None = None,
 ) -> DataFrame:
     """Reciprocal Rank Fusion (Cormack, Clarke & Büttcher, SIGIR 2009
     — public): fuse N per-system rankings into one list scored
 
-        rrf(d) = Σ_systems 1 / (k0 + rank_s(d))
+        rrf(d) = Σ_systems 1 / (60 + rank_s(d))
 
-    k0=60 is the paper's constant (damps the head so one system's #1
+    60 is the paper's constant (damps the head so one system's #1
     can't dominate two systems' #3s). Exact-integer form (oracle rule
-    1): each reciprocal integer-izes as ``1_000_000 div (k0 + rank)``
+    1): each reciprocal integer-izes as ``1_000_000 div (60 + rank)``
     — BIGINT floor division, bit-identical in any engine — and the
     per-document sum is exact integer arithmetic, order-free. Ties
     break on the id.
@@ -59,7 +58,7 @@ def rrf_fuse(
         un.groupBy(id_col)
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_systems"),
-            F.sum(F.expr(f"CAST(1000000 div ({int(k0)} + __rank) AS BIGINT)"))
+            F.sum(F.expr("CAST(1000000 div (60 + __rank) AS BIGINT)"))
             .cast("long")
             .alias("rrf_micro"),
         )

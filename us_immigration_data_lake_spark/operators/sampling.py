@@ -82,19 +82,16 @@ def stratified_sample(
     stratum_col: str,
     id_col: str,
     rates_pct: dict[str, int],
-    default_pct: int = 100,
 ) -> DataFrame:
     """Keep ``rates_pct[stratum]`` percent of each stratum's rows,
-    chosen deterministically by id hash (``default_pct`` for strata
-    not listed).  Rates are integer percents so the predicate is
+    chosen deterministically by id hash (all rows of strata not
+    listed).  Rates are integer percents so the predicate is
     exact — no float thresholds.
     """
     for stratum, pct in rates_pct.items():
         if not 0 <= pct <= 100:
             raise ValueError(f"rate for {stratum!r} must be 0..100, got {pct}")
-    if not 0 <= default_pct <= 100:
-        raise ValueError(f"default_pct must be 0..100, got {default_pct}")
-    rate = F.lit(default_pct)
+    rate = F.lit(100)
     for stratum, pct in sorted(rates_pct.items()):
         rate = F.when(F.col(stratum_col) == stratum, F.lit(pct)).otherwise(rate)
     return df.filter(sample_bucket(id_col) < rate)
@@ -183,10 +180,10 @@ def token_budget_fill(
 
 def _hashed_gram_buckets(
     df: DataFrame, id_col: str, text_col: str, num_buckets: int,
-    bigrams: bool, portable: bool,
+    portable: bool,
 ) -> DataFrame:
     """(id, bucket, c_db): per-document counts of hashed n-gram feature
-    buckets — unigrams plus (optionally) word bigrams, hashed into
+    buckets — unigrams plus word bigrams, hashed into
     ``num_buckets`` buckets. Gram building is per-row array arithmetic
     (the dedup.shingles layout); the wide stages are one spread of the
     input (below) and the (id, bucket) groupBy, which
@@ -204,19 +201,17 @@ def _hashed_gram_buckets(
 
     df = spread_by_id(df, id_col)
     tok = tokens(F.lower(F.col(text_col)))
-    grams = tok
-    if bigrams:
-        bi = F.zip_with(
-            tok, F.slice(tok, 2, F.size(tok)),
-            lambda x, y: F.concat_ws(" ", x, y),
-        )
-        # only size>=2 docs contribute bigrams: the zip_with tail pads
-        # with null and concat_ws would silently degrade the pad slot
-        # to a duplicated unigram
-        bi = F.when(
-            F.size(tok) >= 2, F.slice(bi, 1, F.size(tok) - 1)
-        ).otherwise(F.array().cast("array<string>"))
-        grams = F.concat(tok, bi)
+    bi = F.zip_with(
+        tok, F.slice(tok, 2, F.size(tok)),
+        lambda x, y: F.concat_ws(" ", x, y),
+    )
+    # only size>=2 docs contribute bigrams: the zip_with tail pads
+    # with null and concat_ws would silently degrade the pad slot
+    # to a duplicated unigram
+    bi = F.when(
+        F.size(tok) >= 2, F.slice(bi, 1, F.size(tok) - 1)
+    ).otherwise(F.array().cast("array<string>"))
+    grams = F.concat(tok, bi)
     g = df.select(F.col(id_col), F.explode(grams).alias("gram"))
     h = md5_long(F.col("gram")) if portable else F.xxhash64(F.col("gram"))
     return (
@@ -232,7 +227,6 @@ def dsir_logratio(
     id_col: str,
     text_col: str,
     num_buckets: int = 10_000,
-    bigrams: bool = True,
     portable: bool = False,
 ) -> DataFrame:
     """Per-document DSIR importance log-weight of every ``df`` row
@@ -277,13 +271,13 @@ def dsir_logratio(
     # the materialized rows. The tiny censuses get the same treatment
     # (each feeds its broadcast AND its total-count broadcast).
     doc_counts = storage.cache(
-        _hashed_gram_buckets(df, id_col, text_col, b, bigrams, portable)
+        _hashed_gram_buckets(df, id_col, text_col, b, portable)
     )
     raw_census = storage.cache(doc_counts.groupBy("bucket").agg(
         F.sum("c_db").cast("long").alias("cr")
     ))
     tgt_census = storage.cache(
-        _hashed_gram_buckets(target, id_col, text_col, b, bigrams, portable)
+        _hashed_gram_buckets(target, id_col, text_col, b, portable)
         .groupBy("bucket")
         .agg(F.sum("c_db").cast("long").alias("ct"))
     )
@@ -324,7 +318,6 @@ def dsir_select(
     text_col: str,
     k: int,
     num_buckets: int = 10_000,
-    bigrams: bool = True,
     temperature_milli: int = 1000,
     portable: bool = False,
 ) -> DataFrame:
@@ -346,7 +339,7 @@ def dsir_select(
         raise ValueError(f"temperature_milli must be > 0, got {t}")
     lw = dsir_logratio(
         df, target, id_col, text_col, num_buckets=num_buckets,
-        bigrams=bigrams, portable=portable,
+        portable=portable,
     )
     gumbel_micro = F.round(
         -F.log(-F.log(hash_uniform(F.col(id_col), digit_offset=21))) * 1e6
@@ -483,8 +476,7 @@ def epoch_shuffle_order(
 
 
 def per_group_cap(
-    df: DataFrame, group_col: str, id_col: str, cap: int,
-    rank_col: str = "cap_rank",
+    df: DataFrame, group_col: str, id_col: str, cap: int
 ) -> DataFrame:
     """Keep at most ``cap`` rows per group, selected by DETERMINISTIC
     hash order — the per-domain/per-source document cap a crawl
@@ -495,7 +487,7 @@ def per_group_cap(
     the scan touched first and changes under repartition), and (b)
     reproducible across engines, runs, and retries — the same contract
     as this module's rate-based ``sample_bucket``, for count-based
-    caps. The kept rows carry their 1-based ``rank_col`` so downstream
+    caps. The kept rows carry their 1-based ``cap_rank`` so downstream
     stages can tighten the cap WITHOUT rescanning (filter rank <= c').
 
     Scale: one hash shuffle on ``group_col`` + a per-group sort. The
@@ -519,20 +511,20 @@ def per_group_cap(
     w = Window.partitionBy(group_col).orderBy("_cap_key", id_col)
     return (
         df.withColumn("_cap_key", key)
-        .withColumn(rank_col, F.row_number().over(w).cast("long"))
-        .filter(F.col(rank_col) <= cap)
+        .withColumn("cap_rank", F.row_number().over(w).cast("long"))
+        .filter(F.col("cap_rank") <= cap)
         .drop("_cap_key")
     )
 
 
-def quality_bin_expr(
-    score_col: str, n_bins: int, lo: float, hi: float
-) -> Column:
+def quality_bin_expr(score_col: str, n_bins: int) -> Column:
     """The fixed-width bin assignment shared by curriculum_order and
     training_order_pipeline — ONE expression definition so the
     composed pipeline can never drift from the standalone operator:
-    floor((score - lo) / width), clamped into [0, n_bins-1] (q96/
-    q213's idiom; the top edge lands in the last bin)."""
+    floor((score - lo) / width) on the fixed [lo, hi) = [0, 1) axis,
+    clamped into [0, n_bins-1] (q96/q213's idiom; the top edge lands
+    in the last bin)."""
+    lo, hi = 0.0, 1.0
     width = (hi - lo) / n_bins
     raw = F.floor((F.col(score_col) - F.lit(lo)) / F.lit(width)).cast("long")
     return F.least(F.greatest(raw, F.lit(0)), F.lit(int(n_bins - 1)))
@@ -544,8 +536,6 @@ def curriculum_order(
     score_col: str,
     *,
     n_bins: int = 4,
-    lo: float = 0.0,
-    hi: float = 1.0,
     epoch: int = 0,
 ) -> DataFrame:
     """Curriculum data ordering: fixed-width quality bins + a
@@ -556,7 +546,7 @@ def curriculum_order(
     pure function of (epoch, id, score), so any engine or resumed job
     reproduces them and resume = a (bin, pos) filter.
 
-    Bins use the FIXED [lo, hi) axis (q96/q213's idiom — n_bins
+    Bins use the FIXED [0, 1) axis (q96/q213's idiom — n_bins
     equal widths, top edge clamped into the last bin), NOT ntile:
     ntile needs a global sort and re-draws every bin boundary when one
     document is added; fixed edges are stable across corpus versions,
@@ -573,7 +563,7 @@ def curriculum_order(
 
     from us_immigration_data_lake_spark.functions.hashing import md5_long
 
-    bin_ = quality_bin_expr(score_col, n_bins, lo, hi)
+    bin_ = quality_bin_expr(score_col, n_bins)
     key = md5_long(
         F.concat_ws(
             "|",
@@ -750,8 +740,6 @@ def training_order_pipeline(
     cap: int,
     alpha: float,
     n_bins: int = 4,
-    lo: float = 0.0,
-    hi: float = 1.0,
     epoch: int = 0,
 ) -> DataFrame:
     """The reading-order pipeline a training run actually executes
@@ -801,7 +789,7 @@ def training_order_pipeline(
     )
     weights, binned = _training_order_stages(
         capped, id_col, group_col, score_col, size_col,
-        alpha=alpha, n_bins=n_bins, lo=lo, hi=hi,
+        alpha=alpha, n_bins=n_bins,
     )
     return mixture_interleave_order(
         binned, id_col, group_col, weights,
@@ -818,8 +806,6 @@ def _training_order_stages(
     *,
     alpha: float,
     n_bins: int,
-    lo: float,
-    hi: float,
 ) -> tuple[DataFrame, DataFrame]:
     """The EPOCH-INVARIANT prefix of the training-order pipeline
     after the cap (policy-on-capped → quality bins), shared by the
@@ -831,7 +817,7 @@ def _training_order_stages(
     )
     binned = capped.select(
         F.col(id_col), F.col(group_col),
-        quality_bin_expr(score_col, n_bins, lo, hi).alias("quality_bin"),
+        quality_bin_expr(score_col, n_bins).alias("quality_bin"),
     )
     return weights, binned
 
@@ -847,9 +833,6 @@ def training_order_epochs(
     alpha: float,
     epochs: int,
     n_bins: int = 4,
-    lo: float = 0.0,
-    hi: float = 1.0,
-    start_epoch: int = 0,
 ) -> DataFrame:
     """MULTI-EPOCH training order (r12 verdict ask #5): real runs
     consume E epochs of the same capped corpus, each epoch a fresh
@@ -898,11 +881,11 @@ def training_order_epochs(
     ))
     weights, binned = _training_order_stages(
         capped, id_col, group_col, score_col, size_col,
-        alpha=alpha, n_bins=n_bins, lo=lo, hi=hi,
+        alpha=alpha, n_bins=n_bins,
     )
     binned = storage.checkpoint(binned)
     out = None
-    for e in range(start_epoch, start_epoch + epochs):
+    for e in range(epochs):
         part = mixture_interleave_order(
             binned, id_col, group_col, weights,
             epoch=e, stage_col="quality_bin",

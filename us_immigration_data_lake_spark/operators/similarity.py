@@ -322,8 +322,6 @@ def recommended_num_bits(
     n_rows: int,
     *,
     target_occupancy: int = 8,
-    min_bits: int = 4,
-    max_bits: int = 24,
 ) -> int:
     """The SRP plane-count rule as code (r12 verdict ask #4): pick
     ``num_bits`` so expected bucket occupancy ``n_rows / 2**num_bits``
@@ -350,10 +348,10 @@ def recommended_num_bits(
     Recall per pair falls as (1 − θ/π)**bits — at corpus scale run
     wider signatures or multiple independent tables (the MinHash
     banding analog) and let q221's calibration loop price the trade
-    before deployment. ``min_bits=4`` floors tiny corpora (16 buckets
-    keeps the self-join off near-cross-join shapes); ``max_bits=24``
-    caps the literal-plane expression size (bits·dim terms must stay
-    inside JVM codegen limits).
+    before deployment. The clamp's floor of 4 bits covers tiny corpora
+    (16 buckets keeps the self-join off near-cross-join shapes); its
+    ceiling of 24 bits caps the literal-plane expression size (bits·dim
+    terms must stay inside JVM codegen limits).
 
     Operators accept ``num_bits=None`` → this rule applied to a
     ``count()`` of their corpus side — one eager aggregation job at
@@ -361,9 +359,9 @@ def recommended_num_bits(
     import math
 
     if n_rows <= 0:
-        return min_bits
+        return 4
     bits = round(math.log2(max(n_rows, 1) / target_occupancy))
-    return max(min_bits, min(max_bits, int(bits)))
+    return max(4, min(24, int(bits)))
 
 
 def _best_cells(vec: Column, centroids: list[list[float]], n: int) -> Column:
@@ -387,13 +385,12 @@ def train_ivf_centroids(
     vec_col: str,
     k: int,
     iters: int = 5,
-    seed: int = 42,
 ) -> list[list[float]]:
     """Lloyd's k-means over the embedding column — trains the cell
     centroids that ``ivf_knn`` takes as input, in-engine.
 
     Seeding is a deterministic uniform sample: the k vectors whose
-    ``md5(seed || id)`` sorts lowest (one TakeOrderedAndProject job, no
+    ``md5('42' || id)`` sorts lowest (one TakeOrderedAndProject job, no
     RNG state, same k rows on any cluster layout). Each Lloyd pass
     assigns every vector to its nearest current centroid (literal
     arrays — the same expression ivf_knn uses) and recomputes per-cell
@@ -413,7 +410,7 @@ def train_ivf_centroids(
     seed_rows = (
         base.withColumn(
             "_r",
-            F.md5(F.concat_ws("|", F.lit(str(seed)), F.col("_id").cast("string"))),
+            F.md5(F.concat_ws("|", F.lit("42"), F.col("_id").cast("string"))),
         )
         .orderBy("_r")
         .limit(k)
@@ -851,7 +848,6 @@ def srp_ref_index_frames(
     vec_col: str,
     dim: int,
     num_bits: int | None = 8,
-    seed: int = 42,
     max_bucket_size: int = 1000,
     num_tables: int = 1,
 ) -> dict[str, DataFrame | int]:
@@ -912,7 +908,7 @@ def srp_ref_index_frames(
     if num_bits is None:
         num_bits = recommended_num_bits(ref_df.count())
     sig_ref = storage.checkpoint(_srp_sig(
-        ref_df, id_col, vec_col, dim, num_bits, seed, num_tables
+        ref_df, id_col, vec_col, dim, num_bits, 42, num_tables
     ))
     band, keys = _srp_tables(sig_ref, num_tables, "__id")
     capped, oversized = capped_bucket_members(
@@ -939,7 +935,6 @@ def cross_srp_pairs_indexed(
     threshold: float,
     dim: int,
     num_bits: int = 8,
-    seed: int = 42,
     num_tables: int = 1,
 ) -> DataFrame:
     """Cross-corpus SEMANTIC near-dup pairs of a NEW batch (or STREAM —
@@ -963,7 +958,7 @@ def cross_srp_pairs_indexed(
     watermark-bounded dedup state (the text twin's q195 pattern), not
     free — one table + multiprobe keeps the zero-state property if
     that matters more than recall."""
-    sig = _srp_sig(new_df, id_col, vec_col, dim, num_bits, seed, num_tables)
+    sig = _srp_sig(new_df, id_col, vec_col, dim, num_bits, 42, num_tables)
     new, keys = _srp_tables(
         sig, num_tables, F.col("__id").alias("id_new"),
         F.col("__v").alias("v1"), F.col("__n").alias("n1"),
@@ -989,10 +984,7 @@ def semantic_dedup(
     threshold: float,
     dim: int,
     num_bits: int = 8,
-    seed: int = 42,
-    max_iter: int = 20,
     max_bucket_size: int | None = 1000,
-    recover_oversized: bool = True,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication decision over an
     embedding column: SRP-bucketed near-dup pairs →
@@ -1017,17 +1009,14 @@ def semantic_dedup(
 
     if max_bucket_size is None:
         pairs = srp_bucket_near_dup_pairs(
-            df, id_col, vec_col, threshold, dim, num_bits=num_bits, seed=seed
+            df, id_col, vec_col, threshold, dim, num_bits=num_bits
         )
     else:
         pairs = srp_near_dup_frames(
             df, id_col, vec_col, threshold, dim, num_bits=num_bits,
-            seed=seed, max_bucket_size=max_bucket_size,
-            recover_oversized=recover_oversized,
+            max_bucket_size=max_bucket_size, recover_oversized=True,
         )["pairs"]
-    return dedup_survivors(
-        df, pairs.select("id1", "id2"), id_col, max_iter=max_iter
-    )
+    return dedup_survivors(df, pairs.select("id1", "id2"), id_col)
 
 
 # ---------------------------------------------------------------------------
@@ -1132,14 +1121,13 @@ def pq_train_codebooks(
     n_sub: int,
     k_codes: int,
     iters: int = 5,
-    seed: int = 42,
 ) -> list[list[list[float]]]:
     """In-engine PQ training: independent Lloyd k-means per subspace
     over the SLICED vectors, all subspaces in ONE pass per iteration
     (the subspace id rides the exploded rows, so iteration cost is one
     scan + one (n_sub·k·sub_dim)-row shuffle regardless of n_sub).
     Seeding mirrors train_ivf_centroids: per subspace, the k vectors
-    with the lowest md5(seed || sub || id) — deterministic on any
+    with the lowest md5('42' || sub || id) — deterministic on any
     cluster layout. Empty cells keep their previous centroid."""
     first = corpus.select(_as_double(vec_col).alias("v")).first()
     if first is None:
@@ -1171,7 +1159,7 @@ def pq_train_codebooks(
         _W.partitionBy("s").orderBy(
             F.md5(
                 F.concat_ws(
-                    "|", F.lit(str(seed)), F.col("s").cast("string"),
+                    "|", F.lit("42"), F.col("s").cast("string"),
                     F.col("_id").cast("string"),
                 )
             )
@@ -1331,7 +1319,6 @@ def ann_recall_at_k(
     k: int,
     dim: int,
     num_bits: int = 12,
-    seed: int = 42,
     multiprobe: bool = False,
     num_tables: int = 1,
 ) -> DataFrame:
@@ -1351,7 +1338,7 @@ def ann_recall_at_k(
     exact = cosine_knn(corpus, queries, id_col, vec_col, k=k, dim=dim)
     approx = srp_lsh_knn(
         corpus, queries, id_col, vec_col, k=k, dim=dim,
-        num_bits=num_bits, seed=seed, multiprobe=multiprobe,
+        num_bits=num_bits, multiprobe=multiprobe,
         num_tables=num_tables,
     )
     e = exact.select("query_id", "neighbor_id")
@@ -1611,7 +1598,6 @@ def hard_negative_recall(
     dup_threshold: float,
     configs: tuple[tuple[int, bool], ...] = ((2, False), (2, True),
                                              (4, True), (6, True)),
-    seed: int = 42,
 ) -> DataFrame:
     """NEGATIVE recall of the indexed hard-negative miner against the
     all-pairs ground truth — q221's calibration idiom applied to
@@ -1656,7 +1642,7 @@ def hard_negative_recall(
     for bits, mp in configs:
         idx = hard_negatives_indexed(
             df, id_col, vec_col, clusters, k=k, dim=dim, num_bits=bits,
-            seed=seed, multiprobe=mp,
+            multiprobe=mp,
         )
         marked = e.join(
             idx.select("query_id", "neighbor_id").withColumn(
@@ -1692,7 +1678,6 @@ def choose_srp_config(
     target_recall_permille: int,
     configs: tuple[tuple[int, bool], ...] = ((2, False), (2, True),
                                              (4, True), (6, True)),
-    seed: int = 42,
 ) -> DataFrame:
     """The q236 deployment rule AS CODE: run hard_negative_recall over
     the candidate ladder and mark the CHEAPEST config whose negative
@@ -1728,7 +1713,7 @@ def choose_srp_config(
         )
     ladder = hard_negative_recall(
         df, id_col, vec_col, k=k, dim=dim, dup_threshold=dup_threshold,
-        configs=configs, seed=seed,
+        configs=configs,
     )
     cost_key = (F.lit(2) * F.col("num_bits")
                 + (F.lit(1) - F.col("multiprobe"))).cast("long")

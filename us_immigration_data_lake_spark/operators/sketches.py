@@ -32,6 +32,14 @@ from pyspark.sql import functions as F
 
 from us_immigration_data_lake_spark.functions.hashing import md5_long
 
+# One size per sketch family: a state built at one size and merged or
+# read at another would be silently wrong, so every build, merge and
+# estimate of a family reads the same constant.
+BLOOM_NUM_HASHES = 5
+KMV_K = 64
+COUNTMIN_DEPTH = 4
+HLL_LOG2M = 6
+
 
 def _bit_pos(key: Column, seed: int, num_bits: int) -> Column:
     """Portable bit position: md5_long('<seed>|<key>') % num_bits.
@@ -45,12 +53,12 @@ def _bit_pos(key: Column, seed: int, num_bits: int) -> Column:
 
 
 def bloom_build_bits(
-    build: DataFrame, key: str, num_hashes: int = 5, num_bits: int = 200_000
+    build: DataFrame, key: str, num_bits: int = 200_000
 ) -> DataFrame:
     """The filter: distinct bit positions set by the build keys.
-    One explode (×num_hashes) + distinct; ≤ num_bits rows."""
+    One explode (×BLOOM_NUM_HASHES) + distinct; ≤ num_bits rows."""
     positions = F.array(
-        *[_bit_pos(F.col(key), i, num_bits) for i in range(num_hashes)]
+        *[_bit_pos(F.col(key), i, num_bits) for i in range(BLOOM_NUM_HASHES)]
     )
     # NULL keys carry no membership meaning and would diverge from the
     # documented DuckDB replay (concat_ws skips NULLs, || propagates
@@ -66,19 +74,18 @@ def bloom_probe(
     bits: DataFrame,
     probe: DataFrame,
     probe_key: str,
-    num_hashes: int = 5,
     num_bits: int = 200_000,
 ) -> DataFrame:
     """Probe keys against a built bit set: (probe_key, might_match
     BOOLEAN). might_match is true iff ALL the key's positions are set
     — guaranteed true for every key the filter was built from.
 
-    Plan: explode probe ×num_hashes, one BROADCAST equi-join against
+    Plan: explode probe ×BLOOM_NUM_HASHES, one BROADCAST equi-join against
     the bit set, groupBy probe key with a partial-agged min(hit) —
     the probe side never shuffles more than its exploded keys.
     """
     positions = F.array(
-        *[_bit_pos(F.col(probe_key), i, num_bits) for i in range(num_hashes)]
+        *[_bit_pos(F.col(probe_key), i, num_bits) for i in range(BLOOM_NUM_HASHES)]
     )
     exploded = probe.filter(F.col(probe_key).isNotNull()).select(
         F.col(probe_key), F.explode(positions).alias("__bit")
@@ -97,7 +104,6 @@ def bloom_contract(
     build_key: str,
     probe_key: str,
     max_fp_rate: float = 0.05,
-    num_hashes: int = 5,
     num_bits: int = 200_000,
 ) -> DataFrame:
     """One-row exact summary of Bloom membership vs true membership.
@@ -113,11 +119,11 @@ def bloom_contract(
     key, so duplicate probe rows must not inflate one side of the
     member/non-member split (they would, via the truth-join fan-out).
     """
-    bits = bloom_build_bits(build, build_key, num_hashes, num_bits)
+    bits = bloom_build_bits(build, build_key, num_bits)
     probe_keys = probe.select(probe_key).filter(
         F.col(probe_key).isNotNull()
     ).distinct()
-    tagged = bloom_probe(bits, probe_keys, probe_key, num_hashes, num_bits)
+    tagged = bloom_probe(bits, probe_keys, probe_key, num_bits)
     truth = probe_keys.join(
         build.select(F.col(build_key).alias(probe_key)).distinct(),
         on=probe_key,
@@ -143,10 +149,8 @@ def bloom_contract(
     )
 
 
-def _k_smallest(
-    hashes: DataFrame, group_cols: list[str], k: int
-) -> DataFrame:
-    """Per group, the k smallest ``__h`` rows, with their rank kept as
+def _k_smallest(hashes: DataFrame, group_cols: list[str]) -> DataFrame:
+    """Per group, the KMV_K smallest ``__h`` rows, with their rank kept as
     ``__rn``. The single definition of the KMV rank-k step (shared by
     build, state extraction, and merge): the rank filter compiles to
     Spark's WindowGroupLimit pushdown, so each partition keeps only
@@ -155,7 +159,7 @@ def _k_smallest(
 
     w = Window.partitionBy(*group_cols).orderBy("__h")
     return hashes.withColumn("__rn", F.row_number().over(w)).filter(
-        F.col("__rn") <= k
+        F.col("__rn") <= KMV_K
     )
 
 
@@ -163,7 +167,6 @@ def kmv_distinct(
     df: DataFrame,
     group_cols: list[str],
     value_col: str,
-    k: int = 64,
 ) -> DataFrame:
     """K-minimum-values distinct-count sketch, PORTABLE: built on
     md5_long so an external engine replays the estimate bit-for-bit
@@ -197,12 +200,12 @@ def kmv_distinct(
         .select(*group_cols, h.alias("__h"))
         .distinct()
     )
-    kept = _k_smallest(distinct_hashes, group_cols, k)
+    kept = _k_smallest(distinct_hashes, group_cols)
     return (
         kept.groupBy(*group_cols)
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_kept"),
-            F.max(F.when(F.col("__rn") == k, F.col("__h"))).alias("kth_hash"),
+            F.max(F.when(F.col("__rn") == KMV_K, F.col("__h"))).alias("kth_hash"),
         )
         .select(
             *group_cols,
@@ -210,7 +213,7 @@ def kmv_distinct(
             F.when(F.col("kth_hash").isNull(), F.col("n_kept"))
             .otherwise(
                 F.expr(
-                    f"CAST((CAST({k - 1} AS DECIMAL(38,0)) * "
+                    f"CAST((CAST({KMV_K - 1} AS DECIMAL(38,0)) * "
                     f"CAST({m} AS DECIMAL(38,0))) div kth_hash AS BIGINT)"
                 )
             )
@@ -220,9 +223,7 @@ def kmv_distinct(
     )
 
 
-def kmv_hashes(
-    df: DataFrame, group_cols: list[str], value_col: str, k: int = 64
-) -> DataFrame:
+def kmv_hashes(df: DataFrame, group_cols: list[str], value_col: str) -> DataFrame:
     """The KMV sketch's mergeable STATE: per group, the k smallest
     distinct md5_long hashes as (group_cols..., __h) rows. Same
     WindowGroupLimit-partial plan as kmv_distinct; NULL values are
@@ -235,19 +236,19 @@ def kmv_hashes(
         .select(*group_cols, h.alias("__h"))
         .distinct()
     )
-    return _k_smallest(distinct_hashes, group_cols, k).drop("__rn")
+    return _k_smallest(distinct_hashes, group_cols).drop("__rn")
 
 
-def kmv_union(sk_a: DataFrame, sk_b: DataFrame, group_cols: list[str], k: int = 64) -> DataFrame:
+def kmv_union(sk_a: DataFrame, sk_b: DataFrame, group_cols: list[str]) -> DataFrame:
     """Merge two KMV states: union the hash sets, re-take the k
     smallest per group — the closure property that makes KMV a
     distributed sketch (states merge associatively, like Spark's own
     partial aggregates)."""
     merged = sk_a.unionByName(sk_b).distinct()
-    return _k_smallest(merged, group_cols, k).drop("__rn")
+    return _k_smallest(merged, group_cols).drop("__rn")
 
 
-def kmv_estimate(sk: DataFrame, group_cols: list[str], k: int = 64) -> DataFrame:
+def kmv_estimate(sk: DataFrame, group_cols: list[str]) -> DataFrame:
     """Distinct-count estimate from a KMV state (exact below k — same
     estimator as kmv_distinct)."""
     from us_immigration_data_lake_spark.functions.hashing import MD5_LONG_BITS
@@ -259,10 +260,10 @@ def kmv_estimate(sk: DataFrame, group_cols: list[str], k: int = 64) -> DataFrame
     )
     return agg.select(
         *group_cols,
-        F.when(F.col("n_kept") < k, F.col("n_kept"))
+        F.when(F.col("n_kept") < KMV_K, F.col("n_kept"))
         .otherwise(
             F.expr(
-                f"CAST((CAST({k - 1} AS DECIMAL(38,0)) * "
+                f"CAST((CAST({KMV_K - 1} AS DECIMAL(38,0)) * "
                 f"CAST({m} AS DECIMAL(38,0))) div max_h AS BIGINT)"
             )
         )
@@ -271,9 +272,7 @@ def kmv_estimate(sk: DataFrame, group_cols: list[str], k: int = 64) -> DataFrame
     )
 
 
-def kmv_jaccard(
-    sk_a: DataFrame, sk_b: DataFrame, group_cols: list[str], k: int = 64
-) -> DataFrame:
+def kmv_jaccard(sk_a: DataFrame, sk_b: DataFrame, group_cols: list[str]) -> DataFrame:
     """Jaccard similarity estimate between two keyed sets from their
     KMV states alone (no rescan of the data): with M = the k smallest
     hashes of A∪B, estimate J = |M ∩ A ∩ B| / |M| — the standard
@@ -282,7 +281,7 @@ def kmv_jaccard(
     Returns group_cols + n_union_kept, n_both, jaccard_permille
     (integer permille — exact arithmetic end to end).
     """
-    union_k = kmv_union(sk_a, sk_b, group_cols, k)
+    union_k = kmv_union(sk_a, sk_b, group_cols)
     in_a = union_k.join(sk_a, [*group_cols, "__h"], "left_semi")
     both = in_a.join(sk_b, [*group_cols, "__h"], "left_semi")
     n_union = union_k.groupBy(*group_cols).agg(
@@ -307,7 +306,6 @@ def kmv_jaccard(
 def countmin_build(
     df: DataFrame,
     key_col: str,
-    depth: int = 4,
     width: int = 2048,
     weight_col: str | None = None,
 ) -> DataFrame:
@@ -349,7 +347,7 @@ def countmin_build(
                 F.lit(r).alias("__row"),
                 _bit_pos(F.col(key_col), r, width).alias("__bucket"),
             )
-            for r in range(depth)
+            for r in range(COUNTMIN_DEPTH)
         ]
     )
     return (
@@ -364,7 +362,6 @@ def countmin_query(
     sketch: DataFrame,
     keys: DataFrame,
     key_col: str,
-    depth: int = 4,
     width: int = 2048,
 ) -> DataFrame:
     """Point-frequency estimates: per key, MIN over its depth cells
@@ -376,7 +373,7 @@ def countmin_query(
                 F.lit(r).alias("__row"),
                 _bit_pos(F.col(key_col), r, width).alias("__bucket"),
             )
-            for r in range(depth)
+            for r in range(COUNTMIN_DEPTH)
         ]
     )
     exploded = keys.filter(F.col(key_col).isNotNull()).select(
@@ -403,8 +400,9 @@ def countmin_query(
 # α_m constants from Flajolet, Fusy, Gandouet, Meunier (2007),
 # "HyperLogLog: the analysis of a near-optimal cardinality estimation
 # algorithm" (AofA), scaled to exact parts-per-million so the bias
-# correction never involves a float: α16=0.673, α32=0.697, α64=0.709.
-HLL_ALPHA_PPM = {4: 673000, 5: 697000, 6: 709000}
+# correction never involves a float: α64=0.709 for the m = 2^HLL_LOG2M
+# = 64 registers.
+_HLL_ALPHA_PPM = 709000
 
 
 def hll_bitlen_sql(col: str, bits: int) -> str:
@@ -419,11 +417,9 @@ def hll_bitlen_sql(col: str, bits: int) -> str:
     return f"CASE {whens} ELSE 0 END"
 
 
-def hll_registers(
-    df: DataFrame, group_cols: list[str], value_col: str, log2m: int = 6
-) -> DataFrame:
+def hll_registers(df: DataFrame, group_cols: list[str], value_col: str) -> DataFrame:
     """HLL state: per group, (register id j, max leading-zero rank).
-    j = top log2m bits of the 60-bit portable hash, rho = position of
+    j = top HLL_LOG2M bits of the 60-bit portable hash, rho = position of
     the highest set bit in the remaining w bits counted from the top
     (w=0 → wbits+1). Only HIT registers materialize — at most m rows
     per group — and the groupBy(max) is partial-aggregated map-side,
@@ -435,9 +431,7 @@ def hll_registers(
         md5_long,
     )
 
-    if log2m not in HLL_ALPHA_PPM:
-        raise ValueError(f"log2m must be one of {sorted(HLL_ALPHA_PPM)}")
-    wbits = MD5_LONG_BITS - log2m
+    wbits = MD5_LONG_BITS - HLL_LOG2M
     h = md5_long(F.col(value_col).cast("string"))
     rows = (
         df.filter(F.col(value_col).isNotNull())
@@ -469,9 +463,7 @@ def hll_merge(
     )
 
 
-def hll_estimate(
-    regs: DataFrame, group_cols: list[str], log2m: int = 6
-) -> DataFrame:
+def hll_estimate(regs: DataFrame, group_cols: list[str]) -> DataFrame:
     """Cardinality estimate from an HLL state, exact-integer: the
     harmonic sum Z = Σ 2^-rho_j is scaled by 2^(wbits+1) so every
     term (and the m-n implicit zero registers' 2^0 terms) is a plain
@@ -481,10 +473,10 @@ def hll_estimate(
     n < 2.5m should use kmv_distinct, which is exact there."""
     from us_immigration_data_lake_spark.functions.hashing import MD5_LONG_BITS
 
-    m = 1 << log2m
-    wbits = MD5_LONG_BITS - log2m
+    m = 1 << HLL_LOG2M
+    wbits = MD5_LONG_BITS - HLL_LOG2M
     scale = 1 << (wbits + 1)
-    alpha_ppm = HLL_ALPHA_PPM[log2m]
+    alpha_ppm = _HLL_ALPHA_PPM
     agg = regs.groupBy(*group_cols).agg(
         F.count(F.lit(1)).cast("long").alias("__n"),
         F.sum(F.expr(f"shiftright(CAST({scale} AS BIGINT), max_rho)"))

@@ -201,11 +201,16 @@ def global_row_number(
     Ranks are identical to the single-partition formulation, at
     cluster parallelism; the only global structure is the range
     exchange any distributed sort pays.
+
+    The rank column is non-nullable, as ``row_number`` is: the window
+    SUM under it is nullable in the schema, so a ``coalesce`` with 0
+    (never taken — every row counts itself) restores the contract.
     """
     ones = df.withColumn("__one", F.lit(1).cast("long"))
     return (
         global_cumsum(ones, order_by, ["__one"], num_partitions)
         .drop("__one")
+        .withColumn("__one_cum", F.coalesce("__one_cum", F.lit(0).cast("long")))
         .withColumnRenamed("__one_cum", rank_col)
     )
 

@@ -97,7 +97,7 @@ def _hilbert_xy2d_numpy(order: int, x, y):
     return d
 
 
-def hilbert_key(x_col: str, y_col: str, bits: int = 10):
+def hilbert_key(x_col: str, y_col: str):
     """2-D Hilbert clustering key — strictly better neighbor locality
     than Morton (no Z-shaped jumps between quadrant seams), at the
     cost of not being expressible in closed-form column arithmetic:
@@ -107,7 +107,7 @@ def hilbert_key(x_col: str, y_col: str, bits: int = 10):
     the sanctioned escape hatch here — key generation happens once per
     WRITE, not in the query hot path.
 
-    Inputs must already be range-reduced to [0, 2**bits).
+    Inputs must already be range-reduced to [0, 2**10).
     """
     # NOTE: ``pd`` must be a MODULE-level import — pandas_udf resolves
     # the PEP-563 string annotations via get_type_hints against the
@@ -116,7 +116,7 @@ def hilbert_key(x_col: str, y_col: str, bits: int = 10):
 
     @pandas_udf("long")
     def _h(x: pd.Series, y: pd.Series) -> pd.Series:
-        d = _hilbert_xy2d_numpy(bits, x.to_numpy(), y.to_numpy())
+        d = _hilbert_xy2d_numpy(10, x.to_numpy(), y.to_numpy())
         return pd.Series(d)
 
     return _h(F.col(x_col), F.col(y_col))

@@ -279,8 +279,6 @@ class EmbeddingIncrementStats:
 def update_embedding_increment(
     new_emb: DataFrame,
     ref_emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.35,
     dim: int = 64,
     num_bits: int = 8,
@@ -289,8 +287,8 @@ def update_embedding_increment(
 ) -> tuple[DataFrame, EmbeddingIncrementStats]:
     """The EMBEDDING-side incremental corpus update — the semantic twin
     of ``update_corpus_increment`` (this week's embedding batch vs the
-    curated reference), composing the cross-corpus SRP machinery into
-    the production stage order:
+    curated reference, both (vec_id, embedding) frames), composing the
+    cross-corpus SRP machinery into the production stage order:
 
     1. DIMENSION gate: vectors whose width is not ``dim`` are dropped
        (a malformed vector would silently score nonsense cosines — the
@@ -308,6 +306,7 @@ def update_embedding_increment(
     is one action on a cached frame; caches release before return)."""
     from us_immigration_data_lake_spark.operators import similarity as sim
 
+    id_col, vec_col = "vec_id", "embedding"
     with storage.scope() as s:
         gated = storage.cache(new_emb.filter(F.size(F.col(vec_col)) == dim))
 
@@ -329,7 +328,6 @@ def update_embedding_increment(
             sim.semantic_dedup(
                 surv_cross, id_col, vec_col, threshold=threshold, dim=dim,
                 num_bits=num_bits, max_bucket_size=within_bucket_cap,
-                recover_oversized=True,
             )
             .filter(F.col("keep"))
             .select(id_col)

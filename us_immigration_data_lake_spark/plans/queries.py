@@ -22,7 +22,8 @@ Oracle-parity design rules (learned constraints, applied everywhere):
 7. An oracle that replays an engine chain composes the shared fragment
    builders (_TOKENS_SQL, _jaccard_sql, _srp_bucket_sql,
    _capped_candidates_sql, _capped_cross_candidates_sql, _closure_sql,
-   _keep_sql, _materialized, the MinHash prefix/verify pair, ...) and
+   _keep_sql, _hashed_fx_sql, _nb_model_sql, _materialized, the MinHash
+   prefix/verify pair, ...) and
    never copies their SQL; copies drift. tests/test_registry_fragments.py scans for copies.
 """
 
@@ -275,6 +276,58 @@ def _closure_sql(*pairs: str) -> str:
     ), labels AS MATERIALIZED (
       SELECT src AS id, LEAST(src, MIN(dst)) AS cluster
       FROM reach GROUP BY src
+    )"""
+
+
+def _hashed_fx_sql(b: int, bias: bool) -> str:
+    """The shared hashed-token CTEs of the training oracles: ``base``
+    (doc_id, toks) over the non-NULL documents and ``fx`` (doc_id, b,
+    cnt), each document's token counts in ``b`` md5 buckets — the
+    DuckDB twin of operators/training.py's hashed features. ``bias``
+    adds the (doc_id, -1, 1) intercept row the GD trainers fit."""
+    bias_row = (
+        """
+      UNION ALL
+      SELECT doc_id, CAST(-1 AS BIGINT), CAST(1 AS BIGINT) FROM base"""
+        if bias else ""
+    )
+    return f"""base AS MATERIALIZED (
+      SELECT doc_id,
+             {_TOKENS_SQL} AS toks
+      FROM documents WHERE text IS NOT NULL
+    ), fx AS MATERIALIZED (
+      SELECT doc_id, b, CAST(COUNT(*) AS BIGINT) AS cnt FROM (
+        SELECT doc_id,
+               ('0x' || substr(md5(t), 1, 15))::BIGINT % {b} AS b
+        FROM (SELECT doc_id, unnest(toks) AS t FROM base)
+      ) GROUP BY doc_id, b{bias_row}
+    )"""
+
+
+def _nb_model_sql(b: int) -> str:
+    """The shared multinomial naive-Bayes model CTEs over ``fx`` and a
+    ``lab`` (doc_id, y) training-label CTE: per-class bucket counts
+    ``kb``, class token totals ``ktot``, class sizes ``nk``/``nn``,
+    Laplace-smoothed log-weights ``w`` and the per-class prior and
+    unseen-bucket default ``cls``, all in micronats."""
+    return f"""kb AS MATERIALIZED (
+      SELECT l.y AS k, f.b, SUM(f.cnt) AS c_kb
+      FROM fx f JOIN lab l USING (doc_id) GROUP BY l.y, f.b
+    ), ktot AS (SELECT k, SUM(c_kb) AS tot_k FROM kb GROUP BY k
+    ), nk AS (SELECT y AS k, COUNT(*) AS n_k FROM lab GROUP BY y
+    ), nn AS (SELECT COUNT(*) AS n_all FROM lab
+    ), w AS MATERIALIZED (
+      SELECT kb.k, kb.b,
+             CAST(ROUND(ln((c_kb + 1.0) / (tot_k + {b})) * 1e6) AS BIGINT)
+               AS w_micro
+      FROM kb JOIN ktot USING (k)
+    ), cls AS MATERIALIZED (
+      SELECT nk.k,
+             CAST(ROUND(ln(n_k * 1.0 / n.n_all) * 1e6) AS BIGINT)
+               AS prior_micro,
+             CAST(ROUND(ln(1.0 / (COALESCE(tot_k, 0) + {b})) * 1e6) AS BIGINT)
+               AS default_micro
+      FROM nk LEFT JOIN ktot USING (k), nn n
     )"""
 
 
@@ -1368,7 +1421,7 @@ def _sink_name(base: str) -> str:
 )
 def q26_stream_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = read_event_stream(spark, sf_dir)
-    return run_to_memory(tumbling_agg(stream, "1 hour"), _sink_name("q26_hourly"))
+    return run_to_memory(tumbling_agg(stream), _sink_name("q26_hourly"))
 
 
 # ---------------------------------------------------------------------------
@@ -1406,7 +1459,7 @@ def q26_stream_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q27_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = read_event_stream(spark, sf_dir)
-    return run_to_memory(session_agg(stream, "10 minutes"), _sink_name("q27_sessions"))
+    return run_to_memory(session_agg(stream), _sink_name("q27_sessions"))
 
 
 # ---------------------------------------------------------------------------
@@ -1952,7 +2005,7 @@ def q41_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") < 100)
         & (F.length(normalized_text(F.col("text"))) >= 11)
     )
-    return ts_ops.winnow_fingerprints(docs, "doc_id", "text", k=8, window=4)
+    return ts_ops.winnow_fingerprints(docs, "doc_id", "text")
 
 
 # ---------------------------------------------------------------------------
@@ -1986,7 +2039,7 @@ from us_immigration_data_lake_spark.streaming.windows import (  # noqa: E402
 )
 def q42_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = read_event_stream(spark, sf_dir)
-    joined = purchase_view_interval_join(stream, "30 minutes")
+    joined = purchase_view_interval_join(stream)
     return run_to_memory(joined, _sink_name("q42_ssj"), mode="append")
 
 
@@ -2544,7 +2597,7 @@ def q55_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q56_stream_append_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = read_event_stream(spark, sf_dir)
     return run_to_memory(
-        tumbling_agg_append(stream, "1 hour", "1 hour"),
+        tumbling_agg_append(stream),
         _sink_name("q56_append"),
         mode="append",
     )
@@ -2680,7 +2733,7 @@ def q57_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q58_bm25_multiterm(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     return ts_ops.bm25_multiterm_topk(
-        docs, "doc_id", "text", terms=("vector", "merge", "filter"), k=20
+        docs, "doc_id", "text", terms=("vector", "merge", "filter")
     )
 
 
@@ -2978,7 +3031,7 @@ def q64_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % 50 == 0)
     corpus = docs.filter(F.col("doc_id") % 50 != 0)
-    return dedup_ops.contaminated_docs(corpus, bench, "doc_id", "text", n=5)
+    return dedup_ops.contaminated_docs(corpus, bench, "doc_id", "text")
 
 
 # ---------------------------------------------------------------------------
@@ -4719,7 +4772,6 @@ def q102_bloom_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_custkey",
         "c_custkey",
         max_fp_rate=0.35,
-        num_hashes=5,
         num_bits=4096,
     )
 
@@ -5081,7 +5133,7 @@ def q108_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     stream = read_event_stream(spark, sf_dir)
-    joined = purchase_view_interval_join(stream, "30 minutes", how="leftOuter")
+    joined = purchase_view_interval_join(stream, how="leftOuter")
     return run_to_memory(joined, _sink_name("q108_outer"), mode="append")
 
 
@@ -5451,7 +5503,7 @@ def q115_ewma_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", "ts", _cents(F.col("value")).alias("v")
     )
     out = ewma_smooth(
-        ev, ["user_id"], ["ts", "event_id"], "v", alpha=0.5, k=4
+        ev, ["user_id"], ["ts", "event_id"], "v"
     )
     return out.select("event_id", "user_id", "v", "ewma_e6")
 
@@ -5522,7 +5574,7 @@ def q116_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey", "l_linenumber",
     )
     out = mad_outlier_stats(
-        s, ["l_returnflag"], "v", ["l_orderkey", "l_linenumber"], n_sigmas=3
+        s, ["l_returnflag"], "v", ["l_orderkey", "l_linenumber"]
     )
     return out.select("l_returnflag", "n", "median2", "mad4", "n_outliers")
 
@@ -5872,7 +5924,7 @@ def q122_pagerank_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("prev_type").alias("src"), F.col("event_type").alias("dst"))
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
     )
-    return pagerank_quantized(edges, "src", "dst", "n", iterations=3).select(
+    return pagerank_quantized(edges).select(
         "node", "rank"
     )
 
@@ -6123,12 +6175,11 @@ def q126_bloom_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
     supplier = _t(spark, sf_dir, "supplier").filter(F.col("s_nationkey") == 3)
     dim = supplier.select("s_suppkey", "s_name")
-    bits = bloom_build_bits(dim, "s_suppkey", num_hashes=5, num_bits=50_000)
+    bits = bloom_build_bits(dim, "s_suppkey", num_bits=50_000)
     admitted = bloom_probe(
         bits,
         li.select(F.col("l_suppkey")).distinct(),
         "l_suppkey",
-        num_hashes=5,
         num_bits=50_000,
     ).filter(F.col("might_match")).select("l_suppkey")
     pruned = li.join(F.broadcast(admitted), "l_suppkey", "left_semi")
@@ -6348,7 +6399,7 @@ def q130_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     from us_immigration_data_lake_spark.operators.sketches import kmv_distinct
 
     li = _t(spark, sf_dir, "lineitem")
-    sk = kmv_distinct(li, ["l_returnflag"], "l_partkey", k=64)
+    sk = kmv_distinct(li, ["l_returnflag"], "l_partkey")
     exact = li.groupBy("l_returnflag").agg(
         F.countDistinct("l_partkey").cast("long").alias("exact_distinct")
     )
@@ -6898,13 +6949,13 @@ def q141_countmin_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     li = _t(spark, sf_dir, "lineitem")
-    sketch = countmin_build(li, "l_partkey", depth=4, width=2048)
+    sketch = countmin_build(li, "l_partkey", width=2048)
     probe = (
         li.select("l_partkey")
         .filter((F.col("l_partkey") % 97) == 0)
         .distinct()
     )
-    est = countmin_query(sketch, probe, "l_partkey", depth=4, width=2048)
+    est = countmin_query(sketch, probe, "l_partkey", width=2048)
     exact = (
         li.filter(F.col("l_partkey").isNotNull())
         .groupBy("l_partkey")
@@ -7011,12 +7062,12 @@ def q142_kmv_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = _t(spark, sf_dir, "lineitem")
     sk_a = kmv_hashes(
-        li.filter(F.col("l_returnflag") == "A"), ["l_linestatus"], "l_partkey", k=64
+        li.filter(F.col("l_returnflag") == "A"), ["l_linestatus"], "l_partkey"
     )
     sk_b = kmv_hashes(
-        li.filter(F.col("l_returnflag") == "R"), ["l_linestatus"], "l_partkey", k=64
+        li.filter(F.col("l_returnflag") == "R"), ["l_linestatus"], "l_partkey"
     )
-    est = kmv_jaccard(sk_a, sk_b, ["l_linestatus"], k=64)
+    est = kmv_jaccard(sk_a, sk_b, ["l_linestatus"])
     a_keys = (
         li.filter((F.col("l_returnflag") == "A") & F.col("l_partkey").isNotNull())
         .select("l_linestatus", F.col("l_partkey").alias("pk"))
@@ -7314,9 +7365,9 @@ def q147_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     threshold = 45
     li = _t(spark, sf_dir, "lineitem")
-    sketch = countmin_build(li, "l_partkey", depth=4, width=65536)
+    sketch = countmin_build(li, "l_partkey", width=65536)
     keys = li.select("l_partkey").filter(F.col("l_partkey").isNotNull()).distinct()
-    cand = countmin_query(sketch, keys, "l_partkey", depth=4, width=65536).filter(
+    cand = countmin_query(sketch, keys, "l_partkey", width=65536).filter(
         F.col("est_count") >= threshold
     )
     return (
@@ -8220,7 +8271,7 @@ def q160_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select("doc_id", "lang"), "doc_id"
     )
     scored = ts_ops.linear_quality_classifier(
-        feats, _Q160_W, _Q160_BIAS, threshold_mu=0
+        feats, _Q160_W, _Q160_BIAS
     )
     return scored.groupBy("lang").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
@@ -8394,7 +8445,7 @@ def q162_stream_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("user_id")
         .distinct()
     )
-    est = countmin_query(sketch, probe, "user_id", depth=4, width=2048)
+    est = countmin_query(sketch, probe, "user_id", width=2048)
     exact = (
         ev.filter(F.col("user_id").isNotNull())
         .groupBy("user_id")
@@ -9032,8 +9083,8 @@ def q170_cm_join_size(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = _t(spark, sf_dir, "lineitem")
     orders = _t(spark, sf_dir, "orders")
-    sk_a = countmin_build(li, "l_orderkey", depth=4, width=2048)
-    sk_b = countmin_build(orders, "o_orderkey", depth=4, width=2048)
+    sk_a = countmin_build(li, "l_orderkey", width=2048)
+    sk_b = countmin_build(orders, "o_orderkey", width=2048)
     est = countmin_inner_product(sk_a, sk_b, depth=4)
     exact = li.join(
         orders, F.col("l_orderkey") == F.col("o_orderkey")
@@ -10317,7 +10368,7 @@ def q187_semantic_dedup_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sim_ops.semantic_dedup(
         emb, "vec_id", "embedding", threshold=_Q181_TAU,
         dim=EMBEDDING_DIM, num_bits=_Q187_BITS,
-        max_bucket_size=_Q187_CAP, recover_oversized=True,
+        max_bucket_size=_Q187_CAP,
     )
 
 
@@ -10375,7 +10426,7 @@ def q188_joint_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         joined, "doc_id", "text", "embedding", dim=EMBEDDING_DIM,
         jaccard_threshold=0.055, cosine_threshold=_Q181_TAU,
         shingle_n=2, num_hashes=_Q55_HASHES, bands=_Q55_BANDS,
-        num_bits=_Q187_BITS, seed=42, max_bucket_size=_Q182_CAP,
+        num_bits=_Q187_BITS, max_bucket_size=_Q182_CAP,
         portable=True,
     )
 
@@ -10754,12 +10805,12 @@ def q193_rrf_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     emb = _t(spark, sf_dir, "embeddings")
     lex = ts_ops.bm25_multiterm_topk(
-        docs, "doc_id", "text", terms=("vector", "merge", "filter"), k=20
+        docs, "doc_id", "text", terms=("vector", "merge", "filter")
     ).select("doc_id", "rnk")
     sem = sim_ops.cosine_knn(
         emb, emb.filter(F.col("vec_id") == 0), "vec_id", "embedding", k=20
     ).select(F.col("neighbor_id").alias("doc_id"), F.col("rn").alias("rnk"))
-    return rrf_fuse([lex, sem], "doc_id", "rnk", k0=60, k=10)
+    return rrf_fuse([lex, sem], "doc_id", "rnk", k=10)
 
 
 # ---------------------------------------------------------------------------
@@ -11493,24 +11544,12 @@ _Q203_B, _Q203_ROUNDS = 512, 8
 def _q203_oracle_sql() -> str:
     b, rounds = _Q203_B, _Q203_ROUNDS
     sql = f"""
-    WITH base AS MATERIALIZED (
-      SELECT doc_id,
-             {_TOKENS_SQL} AS toks
-      FROM documents WHERE text IS NOT NULL
-    ), lab AS MATERIALIZED (
+    WITH {_hashed_fx_sql(b, bias=True)}, lab AS MATERIALIZED (
       SELECT doc_id,
              CASE WHEN len(list_filter(toks, t -> t = 'hash'))
                      > len(list_filter(toks, t -> t = 'join'))
                   THEN 1 ELSE 0 END AS y
       FROM base
-    ), fx AS MATERIALIZED (
-      SELECT doc_id, b, CAST(COUNT(*) AS BIGINT) AS cnt FROM (
-        SELECT doc_id,
-               ('0x' || substr(md5(t), 1, 15))::BIGINT % {b} AS b
-        FROM (SELECT doc_id, unnest(toks) AS t FROM base)
-      ) GROUP BY doc_id, b
-      UNION ALL
-      SELECT doc_id, CAST(-1 AS BIGINT), CAST(1 AS BIGINT) FROM base
     ), nn AS MATERIALIZED (SELECT COUNT(*) AS n FROM base
     ), w0 AS MATERIALIZED (
       SELECT CAST(NULL AS BIGINT) AS b, CAST(NULL AS BIGINT) AS w
@@ -11651,23 +11690,11 @@ _Q205_LANG_CASE = (
 def _q205_oracle_sql() -> str:
     b, rounds, k = _Q205_B, _Q205_ROUNDS, _Q205_K
     sql = f"""
-    WITH base AS MATERIALIZED (
-      SELECT doc_id,
-             {_TOKENS_SQL} AS toks
-      FROM documents WHERE text IS NOT NULL
-    ), lab AS MATERIALIZED (
+    WITH {_hashed_fx_sql(b, bias=True)}, lab AS MATERIALIZED (
       SELECT doc_id, CAST({_Q205_LANG_CASE} AS BIGINT) AS y
       FROM documents WHERE text IS NOT NULL AND lang IS NOT NULL
     ), cls AS MATERIALIZED (
       SELECT CAST(unnest(generate_series(0, {k - 1})) AS BIGINT) AS k
-    ), fx AS MATERIALIZED (
-      SELECT doc_id, b, CAST(COUNT(*) AS BIGINT) AS cnt FROM (
-        SELECT doc_id,
-               ('0x' || substr(md5(t), 1, 15))::BIGINT % {b} AS b
-        FROM (SELECT doc_id, unnest(toks) AS t FROM base)
-      ) GROUP BY doc_id, b
-      UNION ALL
-      SELECT doc_id, CAST(-1 AS BIGINT), CAST(1 AS BIGINT) FROM base
     ), nn AS MATERIALIZED (SELECT COUNT(*) AS n FROM lab
     ), w0 AS MATERIALIZED (
       SELECT CAST(NULL AS BIGINT) AS k, CAST(NULL AS BIGINT) AS b,
@@ -11741,38 +11768,10 @@ _Q206_B = 256
 def _q206_oracle_sql() -> str:
     b = _Q206_B
     return f"""
-    WITH base AS MATERIALIZED (
-      SELECT doc_id,
-             {_TOKENS_SQL} AS toks
-      FROM documents WHERE text IS NOT NULL
-    ), lab AS MATERIALIZED (
-      SELECT doc_id, CAST({_Q205_LANG_CASE} AS BIGINT) AS k
+    WITH {_hashed_fx_sql(b, bias=False)}, lab AS MATERIALIZED (
+      SELECT doc_id, CAST({_Q205_LANG_CASE} AS BIGINT) AS y
       FROM documents WHERE text IS NOT NULL AND lang IS NOT NULL
-    ), fx AS MATERIALIZED (
-      SELECT doc_id, b, CAST(COUNT(*) AS BIGINT) AS cnt FROM (
-        SELECT doc_id,
-               ('0x' || substr(md5(t), 1, 15))::BIGINT % {b} AS b
-        FROM (SELECT doc_id, unnest(toks) AS t FROM base)
-      ) GROUP BY doc_id, b
-    ), kb AS MATERIALIZED (
-      SELECT l.k, f.b, SUM(f.cnt) AS c_kb
-      FROM fx f JOIN lab l USING (doc_id) GROUP BY l.k, f.b
-    ), ktot AS (SELECT k, SUM(c_kb) AS tot_k FROM kb GROUP BY k
-    ), nk AS (SELECT k, COUNT(*) AS n_k FROM lab GROUP BY k
-    ), nn AS (SELECT COUNT(*) AS n_all FROM lab
-    ), w AS MATERIALIZED (
-      SELECT kb.k, kb.b,
-             CAST(ROUND(ln((c_kb + 1.0) / (tot_k + {b})) * 1e6) AS BIGINT)
-               AS w_micro
-      FROM kb JOIN ktot USING (k)
-    ), cls AS MATERIALIZED (
-      SELECT nk.k,
-             CAST(ROUND(ln(n_k * 1.0 / n.n_all) * 1e6) AS BIGINT)
-               AS prior_micro,
-             CAST(ROUND(ln(1.0 / (COALESCE(tot_k, 0) + {b})) * 1e6) AS BIGINT)
-               AS default_micro
-      FROM nk LEFT JOIN ktot USING (k), nn n
-    ), tsum AS (
+    ), {_nb_model_sql(b)}, tsum AS (
       SELECT base.doc_id, COALESCE(SUM(fx.cnt), 0) AS t_d
       FROM base LEFT JOIN fx USING (doc_id) GROUP BY base.doc_id
     ), sobs AS (
@@ -12069,39 +12068,11 @@ def q209_bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q210_oracle_sql() -> str:
     b = _Q206_B
     return f"""
-    WITH base AS MATERIALIZED (
-      SELECT doc_id,
-             {_TOKENS_SQL} AS toks
-      FROM documents WHERE text IS NOT NULL
-    ), lab AS MATERIALIZED (
+    WITH {_hashed_fx_sql(b, bias=False)}, lab AS MATERIALIZED (
       SELECT doc_id, CAST({_Q205_LANG_CASE} AS BIGINT) AS y
       FROM documents
       WHERE text IS NOT NULL AND lang IS NOT NULL AND doc_id % 2 = 0
-    ), fx AS MATERIALIZED (
-      SELECT doc_id, b, CAST(COUNT(*) AS BIGINT) AS cnt FROM (
-        SELECT doc_id,
-               ('0x' || substr(md5(t), 1, 15))::BIGINT % {b} AS b
-        FROM (SELECT doc_id, unnest(toks) AS t FROM base)
-      ) GROUP BY doc_id, b
-    ), kb AS MATERIALIZED (
-      SELECT l.y AS k, f.b, SUM(f.cnt) AS c_kb
-      FROM fx f JOIN lab l USING (doc_id) GROUP BY l.y, f.b
-    ), ktot AS (SELECT k, SUM(c_kb) AS tot_k FROM kb GROUP BY k
-    ), nk AS (SELECT y AS k, COUNT(*) AS n_k FROM lab GROUP BY y
-    ), nn AS (SELECT COUNT(*) AS n_all FROM lab
-    ), w AS MATERIALIZED (
-      SELECT kb.k, kb.b,
-             CAST(ROUND(ln((c_kb + 1.0) / (tot_k + {b})) * 1e6) AS BIGINT)
-               AS w_micro
-      FROM kb JOIN ktot USING (k)
-    ), cls AS MATERIALIZED (
-      SELECT nk.k,
-             CAST(ROUND(ln(n_k * 1.0 / n.n_all) * 1e6) AS BIGINT)
-               AS prior_micro,
-             CAST(ROUND(ln(1.0 / (COALESCE(tot_k, 0) + {b})) * 1e6) AS BIGINT)
-               AS default_micro
-      FROM nk LEFT JOIN ktot USING (k), nn n
-    ), tsum AS (
+    ), {_nb_model_sql(b)}, tsum AS (
       SELECT base.doc_id, COALESCE(SUM(fx.cnt), 0) AS t_d
       FROM base LEFT JOIN fx USING (doc_id)
       WHERE base.doc_id % 2 = 1 GROUP BY base.doc_id
@@ -12211,7 +12182,7 @@ def _q211_oracle_sql() -> str:
 def q211_cross_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     return dedup_ops.cross_group_overlap(
-        docs, "doc_id", "text", "source", shingle_n=3, portable=True
+        docs, "doc_id", "text", "source", portable=True
     )
 
 
@@ -12396,8 +12367,7 @@ def q214_embedding_increment(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     final, _stats = update_embedding_increment(
         emb.filter(F.col("vec_id") % 2 == 1),
-        emb.filter(F.col("vec_id") % 2 == 0),
-        "vec_id", "embedding", threshold=_Q181_TAU, dim=EMBEDDING_DIM,
+        emb.filter(F.col("vec_id") % 2 == 0), threshold=_Q181_TAU, dim=EMBEDDING_DIM,
         num_bits=_Q187_BITS, cross_bucket_cap=_Q192_CAP,
         within_bucket_cap=_Q187_CAP,
     )
@@ -12428,39 +12398,11 @@ def _q215_scored_cte(label_case: str) -> str:
     scored head is class 0 and y is the (lang = 'en') truth."""
     b = _Q206_B
     return f"""
-    WITH base AS MATERIALIZED (
-      SELECT doc_id,
-             {_TOKENS_SQL} AS toks
-      FROM documents WHERE text IS NOT NULL
-    ), lab AS MATERIALIZED (
+    WITH {_hashed_fx_sql(b, bias=False)}, lab AS MATERIALIZED (
       SELECT doc_id, CAST({label_case} AS BIGINT) AS y
       FROM documents
       WHERE text IS NOT NULL AND lang IS NOT NULL AND doc_id % 2 = 0
-    ), fx AS MATERIALIZED (
-      SELECT doc_id, b, CAST(COUNT(*) AS BIGINT) AS cnt FROM (
-        SELECT doc_id,
-               ('0x' || substr(md5(t), 1, 15))::BIGINT % {b} AS b
-        FROM (SELECT doc_id, unnest(toks) AS t FROM base)
-      ) GROUP BY doc_id, b
-    ), kb AS MATERIALIZED (
-      SELECT l.y AS k, f.b, SUM(f.cnt) AS c_kb
-      FROM fx f JOIN lab l USING (doc_id) GROUP BY l.y, f.b
-    ), ktot AS (SELECT k, SUM(c_kb) AS tot_k FROM kb GROUP BY k
-    ), nk AS (SELECT y AS k, COUNT(*) AS n_k FROM lab GROUP BY y
-    ), nn AS (SELECT COUNT(*) AS n_all FROM lab
-    ), w AS MATERIALIZED (
-      SELECT kb.k, kb.b,
-             CAST(ROUND(ln((c_kb + 1.0) / (tot_k + {b})) * 1e6) AS BIGINT)
-               AS w_micro
-      FROM kb JOIN ktot USING (k)
-    ), cls AS MATERIALIZED (
-      SELECT nk.k,
-             CAST(ROUND(ln(n_k * 1.0 / n.n_all) * 1e6) AS BIGINT)
-               AS prior_micro,
-             CAST(ROUND(ln(1.0 / (COALESCE(tot_k, 0) + {b})) * 1e6) AS BIGINT)
-               AS default_micro
-      FROM nk LEFT JOIN ktot USING (k), nn n
-    ), tsum AS (
+    ), {_nb_model_sql(b)}, tsum AS (
       SELECT base.doc_id, COALESCE(SUM(fx.cnt), 0) AS t_d
       FROM base LEFT JOIN fx USING (doc_id)
       WHERE base.doc_id % 2 = 1 GROUP BY base.doc_id
@@ -12637,39 +12579,11 @@ def _q217_oracle_sql() -> str:
     b = _Q206_B
     lo, w, nb = _Q217_LO, _Q217_W, _Q217_B
     return f"""
-    WITH base AS MATERIALIZED (
-      SELECT doc_id,
-             {_TOKENS_SQL} AS toks
-      FROM documents WHERE text IS NOT NULL
-    ), lab AS MATERIALIZED (
+    WITH {_hashed_fx_sql(b, bias=False)}, lab AS MATERIALIZED (
       SELECT doc_id, CAST({_Q217_LABEL_CASE} AS BIGINT) AS y
       FROM documents
       WHERE text IS NOT NULL AND lang IS NOT NULL AND doc_id % 2 = 0
-    ), fx AS MATERIALIZED (
-      SELECT doc_id, b, CAST(COUNT(*) AS BIGINT) AS cnt FROM (
-        SELECT doc_id,
-               ('0x' || substr(md5(t), 1, 15))::BIGINT % {b} AS b
-        FROM (SELECT doc_id, unnest(toks) AS t FROM base)
-      ) GROUP BY doc_id, b
-    ), kb AS MATERIALIZED (
-      SELECT l.y AS k, f.b, SUM(f.cnt) AS c_kb
-      FROM fx f JOIN lab l USING (doc_id) GROUP BY l.y, f.b
-    ), ktot AS (SELECT k, SUM(c_kb) AS tot_k FROM kb GROUP BY k
-    ), nk AS (SELECT y AS k, COUNT(*) AS n_k FROM lab GROUP BY y
-    ), nn AS (SELECT COUNT(*) AS n_all FROM lab
-    ), w AS MATERIALIZED (
-      SELECT kb.k, kb.b,
-             CAST(ROUND(ln((c_kb + 1.0) / (tot_k + {b})) * 1e6) AS BIGINT)
-               AS w_micro
-      FROM kb JOIN ktot USING (k)
-    ), cls AS MATERIALIZED (
-      SELECT nk.k,
-             CAST(ROUND(ln(n_k * 1.0 / n.n_all) * 1e6) AS BIGINT)
-               AS prior_micro,
-             CAST(ROUND(ln(1.0 / (COALESCE(tot_k, 0) + {b})) * 1e6) AS BIGINT)
-               AS default_micro
-      FROM nk LEFT JOIN ktot USING (k), nn n
-    ), tsum AS (
+    ), {_nb_model_sql(b)}, tsum AS (
       SELECT base.doc_id, COALESCE(SUM(fx.cnt), 0) AS t_d
       FROM base LEFT JOIN fx USING (doc_id)
       WHERE base.doc_id % 2 = 1 GROUP BY base.doc_id
@@ -12869,39 +12783,11 @@ def q218_stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q219_oracle_sql() -> str:
     b = _Q206_B
     return f"""
-    WITH base AS MATERIALIZED (
-      SELECT doc_id,
-             {_TOKENS_SQL} AS toks
-      FROM documents WHERE text IS NOT NULL
-    ), lab AS MATERIALIZED (
-      SELECT doc_id, CAST({_Q205_LANG_CASE} AS BIGINT) AS k
+    WITH {_hashed_fx_sql(b, bias=False)}, lab AS MATERIALIZED (
+      SELECT doc_id, CAST({_Q205_LANG_CASE} AS BIGINT) AS y
       FROM documents
       WHERE text IS NOT NULL AND lang IS NOT NULL AND doc_id % 2 = 0
-    ), fx AS MATERIALIZED (
-      SELECT doc_id, b, CAST(COUNT(*) AS BIGINT) AS cnt FROM (
-        SELECT doc_id,
-               ('0x' || substr(md5(t), 1, 15))::BIGINT % {b} AS b
-        FROM (SELECT doc_id, unnest(toks) AS t FROM base)
-      ) GROUP BY doc_id, b
-    ), kb AS MATERIALIZED (
-      SELECT l.k, f.b, SUM(f.cnt) AS c_kb
-      FROM fx f JOIN lab l USING (doc_id) GROUP BY l.k, f.b
-    ), ktot AS (SELECT k, SUM(c_kb) AS tot_k FROM kb GROUP BY k
-    ), nk AS (SELECT k, COUNT(*) AS n_k FROM lab GROUP BY k
-    ), nn AS (SELECT COUNT(*) AS n_all FROM lab
-    ), w AS MATERIALIZED (
-      SELECT kb.k, kb.b,
-             CAST(ROUND(ln((c_kb + 1.0) / (tot_k + {b})) * 1e6) AS BIGINT)
-               AS w_micro
-      FROM kb JOIN ktot USING (k)
-    ), cls AS MATERIALIZED (
-      SELECT nk.k,
-             CAST(ROUND(ln(n_k * 1.0 / n.n_all) * 1e6) AS BIGINT)
-               AS prior_micro,
-             CAST(ROUND(ln(1.0 / (COALESCE(tot_k, 0) + {b})) * 1e6) AS BIGINT)
-               AS default_micro
-      FROM nk LEFT JOIN ktot USING (k), nn n
-    ), tsum AS (
+    ), {_nb_model_sql(b)}, tsum AS (
       SELECT base.doc_id, COALESCE(SUM(fx.cnt), 0) AS t_d
       FROM base LEFT JOIN fx USING (doc_id)
       WHERE base.doc_id % 2 = 1 GROUP BY base.doc_id
@@ -13128,7 +13014,7 @@ def q221_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < _Q221_NQ)
     return sim_ops.ann_recall_at_k(
         emb, queries, "vec_id", "embedding", k=_Q221_K, dim=EMBEDDING_DIM,
-        num_bits=_Q221_BITS, seed=42,
+        num_bits=_Q221_BITS,
     )
 
 
@@ -13170,7 +13056,7 @@ def q222_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = dedup_ops.shingles(docs, "doc_id", "text", n=2)
     pairs = dedup_ops.postings_jaccard_pairs(sh, "doc_id", min_jaccard=0.08)
     return cluster_split_label(
-        docs, pairs.select("id1", "id2"), "doc_id", train_pct=80
+        docs, pairs.select("id1", "id2"), "doc_id"
     )
 
 
@@ -13230,7 +13116,7 @@ def _q223_oracle_sql() -> str:
 def q223_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 1000)
     return dedup_ops.minhash_estimate_calibration(
-        docs, "doc_id", "text", shingle_n=2, num_hashes=_Q20_HASHES,
+        docs, "doc_id", "text", num_hashes=_Q20_HASHES,
         bands=_Q20_BANDS, portable=True, max_bucket_size=2**31,
     )
 
@@ -14199,7 +14085,7 @@ def q236_hard_negative_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") < _Q236_N)
     return sim_ops.hard_negative_recall(
         emb, "vec_id", "embedding", k=_Q236_K, dim=EMBEDDING_DIM,
-        dup_threshold=_Q236_THR, configs=_Q236_CONFIGS, seed=42,
+        dup_threshold=_Q236_THR, configs=_Q236_CONFIGS,
     )
 
 
@@ -14322,7 +14208,7 @@ def q238_srp_config_choice(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sim_ops.choose_srp_config(
         emb, "vec_id", "embedding", k=_Q236_K, dim=EMBEDDING_DIM,
         dup_threshold=_Q236_THR, target_recall_permille=_Q238_TARGET_PERMILLE,
-        configs=_Q236_CONFIGS, seed=42,
+        configs=_Q236_CONFIGS,
     )
 
 
@@ -14443,12 +14329,11 @@ def q240_cross_multi_table_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ref_df = emb.filter(F.col("vec_id") % 2 == 0)
     frames = sim_ops.srp_ref_index_frames(
         ref_df, "vec_id", "embedding", dim=EMBEDDING_DIM,
-        num_bits=_Q239_BITS, num_tables=_Q239_TABLES, seed=42,
+        num_bits=_Q239_BITS, num_tables=_Q239_TABLES,
         max_bucket_size=1_000_000,
     )
     return sim_ops.cross_srp_pairs_indexed(
         new_df, frames["index"], "vec_id", "embedding",
         threshold=_Q181_TAU, dim=EMBEDDING_DIM,
         num_bits=frames["num_bits"], num_tables=frames["num_tables"],
-        seed=42,
     )

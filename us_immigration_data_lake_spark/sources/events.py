@@ -35,19 +35,19 @@ def enable_nanos_as_long(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
 
-def event_ts_column(dtype: DataType, col: str = "ts") -> Column:
+def event_ts_column(dtype: DataType) -> Column:
     """Expression normalizing a raw ``ts`` column of physical type
     ``dtype`` to a session-tz TIMESTAMP."""
     if isinstance(dtype, LongType):
         # raw epoch-nanos (nanosAsLong read) → micros, exact int division
-        return F.timestamp_micros(F.expr(f"{col} div 1000"))
+        return F.timestamp_micros(F.expr("ts div 1000"))
     if isinstance(dtype, TimestampNTZType):
         # value-preserving under the engine's pinned UTC session tz
-        return F.col(col).cast("timestamp")
+        return F.col("ts").cast("timestamp")
     if isinstance(dtype, TimestampType):
-        return F.col(col)
+        return F.col("ts")
     raise TypeError(
-        f"events.{col} has unsupported physical type {dtype.simpleString()}; "
+        f"events.ts has unsupported physical type {dtype.simpleString()}; "
         "expected int64 epoch-nanos, timestamp_ntz, or timestamp"
     )
 
@@ -62,10 +62,10 @@ def events_file_schema(spark: SparkSession, path: str) -> StructType:
     return parquet_schema(spark, path)
 
 
-def normalize_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:
-    """Replace ``col`` with its session-tz TIMESTAMP normalization,
+def normalize_event_ts(df: DataFrame) -> DataFrame:
+    """Replace ``ts`` with its session-tz TIMESTAMP normalization,
     whatever the physical encoding was."""
-    return df.withColumn(col, event_ts_column(df.schema[col].dataType, col))
+    return df.withColumn("ts", event_ts_column(df.schema["ts"].dataType))
 
 
 def load_events(spark: SparkSession, path: str) -> DataFrame:

@@ -5,11 +5,11 @@ Generalizes the reference's scans (SURVEY.md §2.1 S1-S5):
   demographics; etl.py:352,381 read with inferSchema).
 - Parquet (etl.py:235,276).
 
-Design rule for 100 TB: always pass an explicit schema. ``inferSchema``
-costs an extra scan of the data before the real job starts, and a
-schema drift silently changes types mid-pipeline. We accept an explicit
-``StructType`` (or DDL string) and only fall back to inference when the
-caller asks for it.
+Design rule for 100 TB: ``inferSchema`` costs an extra scan of the
+data before the real job starts, and a schema drift silently changes
+types mid-pipeline, so ``read_csv`` infers only when the caller asks
+for it and the quarantine reader takes an explicit ``StructType`` (or
+DDL string).
 """
 
 from __future__ import annotations
@@ -24,47 +24,30 @@ from us_immigration_data_lake_spark.operators import storage
 def read_csv(
     spark: SparkSession,
     path: str,
-    schema: StructType | str | None = None,
     sep: str = ",",
-    header: bool = True,
     infer_schema: bool = False,
     **options: str,
 ) -> DataFrame:
-    reader = spark.read.options(header=header, sep=sep, **options)
-    if schema is not None:
-        reader = reader.schema(schema)
-    elif infer_schema:
+    reader = spark.read.options(header=True, sep=sep, **options)
+    if infer_schema:
         reader = reader.option("inferSchema", "true")
     return reader.csv(path)
 
 
-def read_parquet(
-    spark: SparkSession,
-    path: str,
-    schema: StructType | str | None = None,
-    columns: list[str] | None = None,
-) -> DataFrame:
-    """Parquet scan; optional projection so column pruning reaches the
-    reader even when the caller keeps the full DataFrame around."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    df = reader.parquet(path)
-    if columns:
-        df = df.select(*columns)
-    return df
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """Parquet scan with the footer schema."""
+    return spark.read.parquet(path)
 
 
 def read_csv_with_quarantine(
     spark: SparkSession,
     path: str,
     schema: StructType | str,
-    sep: str = ",",
-    header: bool = True,
-    corrupt_col: str = "_corrupt_record",
     **options: str,
 ) -> tuple[DataFrame, DataFrame]:
-    """PERMISSIVE CSV read that splits clean rows from quarantined ones.
+    """PERMISSIVE read of a headed, comma-separated CSV that splits
+    clean rows from quarantined ones (the raw line in
+    ``_corrupt_record``).
 
     At lake scale a malformed row must never kill a 10-hour job
     (FAILFAST) or silently vanish (DROPMALFORMED): it lands in a
@@ -73,13 +56,14 @@ def read_csv_with_quarantine(
     """
     from pyspark.sql.types import StringType, StructField, StructType as ST
 
+    corrupt_col = "_corrupt_record"
     base = schema if not isinstance(schema, str) else None
     if base is None:
-        df0 = spark.read.options(header=header, sep=sep).schema(schema).csv(path)
+        df0 = spark.read.options(header=True, sep=",").schema(schema).csv(path)
         base = df0.schema
     full = ST([*base.fields, StructField(corrupt_col, StringType(), True)])
     df = storage.cache(  # one scan serves both filters
-        spark.read.options(header=header, sep=sep, mode="PERMISSIVE",
+        spark.read.options(header=True, sep=",", mode="PERMISSIVE",
                            columnNameOfCorruptRecord=corrupt_col, **options)
         .schema(full)
         .csv(path)
@@ -89,11 +73,7 @@ def read_csv_with_quarantine(
     return clean, quarantined
 
 
-def read_parquet_evolved(
-    spark: SparkSession,
-    path: str,
-    columns: list[str] | None = None,
-) -> DataFrame:
+def read_parquet_evolved(spark: SparkSession, path: str) -> DataFrame:
     """Parquet scan across SCHEMA-EVOLVED file generations
     (``mergeSchema=true``): columns added by later writes surface as
     NULL in older files' rows, so a table that grew columns over time
@@ -109,10 +89,7 @@ def read_parquet_evolved(
     fail the merge loudly rather than silently coercing — retype via
     an explicit projection instead.
     """
-    df = spark.read.option("mergeSchema", "true").parquet(path)
-    if columns:
-        df = df.select(*columns)
-    return df
+    return spark.read.option("mergeSchema", "true").parquet(path)
 
 
 def read_parquet_stream(spark, path_glob: str):

@@ -111,15 +111,15 @@ def write_sas7bdat(
     path: str,
     df: pd.DataFrame,
     dataset_name: str = "FIXTURE",
-    page_size: int = 8192,
 ) -> None:
     """Render ``df`` as an uncompressed U64 little-endian sas7bdat file.
 
     Supported dtypes: numeric (stored as float64), datetime64
     (DATETIME seconds), ``datetime.date`` objects (DATE days), and
     strings (fixed-width, UTF-8, space-padded; NaN -> blank, which SAS
-    and readers both treat as missing).
+    and readers both treat as missing). Pages are 8192 bytes.
     """
+    page_size = 8192
     cols = [_classify(df[c]) for c in df.columns]
     # SAS row packing: doubles first (8-byte aligned), strings after.
     offset = 0
@@ -137,7 +137,7 @@ def write_sas7bdat(
     rows_per_page = (page_size - _PAGE_BIT_OFFSET - 8) // max(row_length, 1)
     if rows_per_page < 1:
         raise ValueError(
-            f"row_length {row_length} does not fit page_size {page_size}"
+            f"row_length {row_length} does not fit a {page_size}-byte page"
         )
 
     # ---- column text block (names + format names), referenced by
@@ -228,8 +228,8 @@ def write_sas7bdat(
     need = sum(len(s) for s in subheaders)
     if ptr_base + _SUBHEADER_PTR_LEN * len(subheaders) + need > page_size:
         raise ValueError(
-            f"metadata ({need} bytes, {ncols} columns) exceeds page_size "
-            f"{page_size}; raise page_size"
+            f"metadata ({need} bytes, {ncols} columns) exceeds the "
+            f"{page_size}-byte page"
         )
     for i, sub in enumerate(subheaders):
         body -= len(sub)

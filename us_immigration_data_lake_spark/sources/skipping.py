@@ -103,20 +103,16 @@ def read_pruned(
     spark: SparkSession,
     stats: DataFrame,
     predicates: list[RangePredicate],
-    files: list[str] | None = None,
 ) -> DataFrame | None:
     """Read only the files the stats cannot rule out; None when every
     file is pruned (the caller's empty-result fast path).
 
     ``stats`` is a DataFrame and therefore LAZY: each prune collects
     it, re-running the stats scan unless the caller persisted it. A
-    caller that already ran ``prune_files`` should pass that result as
-    ``files`` (skipping the recompute); a caller pruning many
-    predicates against one table should ``storage.cache(stats)`` — in
-    production the stats live as a written table (the manifest role),
-    where neither applies."""
-    if files is None:
-        files = prune_files(stats, predicates)
+    caller pruning many predicates against one table should
+    ``storage.cache(stats)`` — in production the stats live as a
+    written table (the manifest role), where that does not apply."""
+    files = prune_files(stats, predicates)
     if not files:
         return None
     return spark.read.parquet(*files)

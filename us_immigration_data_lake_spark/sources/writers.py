@@ -22,18 +22,13 @@ import posixpath
 from pyspark.sql import DataFrame
 
 
-def compact_parquet(
-    spark,
-    path: str,
-    target_file_mb: int = 256,
-    compression: str = "snappy",
-) -> int:
-    """Rewrite a parquet dataset into ~target-sized files.
+def compact_parquet(spark, path: str) -> int:
+    """Rewrite a parquet dataset into ~256 MB snappy files.
 
     The small-files problem (a streaming sink or over-parallel write
     leaving thousands of KB-sized objects) degrades every later scan:
     per-file open cost, footer reads, and scheduler overhead dominate.
-    Compaction = read → repartition to ceil(bytes/target) → swap.
+    Compaction = read → repartition to ceil(bytes/256 MB) → swap.
     Returns the new file-partition count.
 
     LOCAL FILESYSTEM ONLY (same-device renames): the swap is
@@ -57,12 +52,12 @@ def compact_parquet(
     jvm_path = spark._jvm.org.apache.hadoop.fs.Path(path)
     fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())
     total_bytes = fs.getContentSummary(jvm_path).getLength()
-    n = max(1, math.ceil(total_bytes / (target_file_mb * 1024 * 1024)))
+    n = max(1, math.ceil(total_bytes / (256 * 1024 * 1024)))
     token = uuid.uuid4().hex[:8]
     tmp = f"{path.rstrip('/')}__compact_{token}"
     backup = f"{path.rstrip('/')}__old_{token}"
     df.repartition(n).write.mode("overwrite").option(
-        "compression", compression
+        "compression", "snappy"
     ).parquet(tmp)
     os.rename(path, backup)
     try:

@@ -103,7 +103,6 @@ def stream_cross_srp_near_dup_pairs(
     threshold: float,
     dim: int,
     num_bits: int = 8,
-    seed: int = 42,
     max_bucket_size: int = 1000,
 ) -> DataFrame:
     """Verified (id_new, id_ref, cosine_sim) SEMANTIC near-dup pairs of
@@ -130,10 +129,10 @@ def stream_cross_srp_near_dup_pairs(
 
     # static side: materialize once, reused every micro-batch
     frames = srp_ref_index_frames(
-        ref_df, id_col, vec_col, dim, num_bits=num_bits, seed=seed,
+        ref_df, id_col, vec_col, dim, num_bits=num_bits,
         max_bucket_size=max_bucket_size,
     )
     return cross_srp_pairs_indexed(
         new_stream, storage.cache(frames["index"]), id_col, vec_col,
-        threshold, dim, num_bits=frames["num_bits"], seed=seed,
+        threshold, dim, num_bits=frames["num_bits"],
     )

@@ -43,7 +43,6 @@ def exactly_once_parquet_batches(
     stream_df: DataFrame,
     target_dir: str,
     checkpoint_dir: str,
-    name: str = "parquet_batches",
 ) -> None:
     """Replay-safe parquet sink via foreachBatch: every micro-batch
     lands in its own ``batch_id=N`` partition under dynamic partition
@@ -69,7 +68,7 @@ def exactly_once_parquet_batches(
             .parquet(target_dir)
         )
 
-    run_foreach_batch(stream_df, _write, checkpoint_dir, name)
+    run_foreach_batch(stream_df, _write, checkpoint_dir, "parquet_batches")
 
 
 def incremental_agg_stream(
@@ -103,15 +102,35 @@ def incremental_agg_stream(
         merge_states,
     )
 
+    _versioned_fold(
+        stream_df, state_dir, checkpoint_dir, name,
+        lambda batch_df: agg_state(batch_df, keys, sums),
+        lambda prev, delta: merge_states(prev, delta, keys),
+    )
+
+
+def _versioned_fold(
+    stream_df: DataFrame,
+    state_dir: str,
+    checkpoint_dir: str,
+    name: str,
+    build: Callable[[DataFrame], DataFrame],
+    merge: Callable[[DataFrame, DataFrame], DataFrame],
+) -> None:
+    """The fold sinks' one versioned-state step: per micro-batch,
+    ``build`` the batch's delta state, ``merge`` it into the largest
+    version below ``batch_id`` (if any) and overwrite
+    ``state_dir/v=<batch_id>`` with the result."""
+
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        delta = agg_state(batch_df, keys, sums)
+        delta = build(batch_df)
         prev_versions = [
             v for v in _list_versions(spark, state_dir) if v < batch_id
         ]
         if prev_versions:
             prev = spark.read.parquet(f"{state_dir}/v={max(prev_versions)}")
-            merged = merge_states(prev, delta, keys)
+            merged = merge(prev, delta)
         else:
             merged = delta
         merged.write.mode("overwrite").parquet(f"{state_dir}/v={batch_id}")
@@ -159,7 +178,6 @@ def hll_distinct_stream(
     state_dir: str,
     checkpoint_dir: str,
     name: str = "hll_distinct",
-    log2m: int = 6,
 ) -> None:
     """Streaming distinct-count via mergeable HyperLogLog state: each
     micro-batch's registers (operators/sketches.py:hll_registers) are
@@ -183,20 +201,11 @@ def hll_distinct_stream(
         hll_registers,
     )
 
-    def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        delta = hll_registers(batch_df, group_cols, value_col, log2m)
-        prev_versions = [
-            v for v in _list_versions(spark, state_dir) if v < batch_id
-        ]
-        if prev_versions:
-            prev = spark.read.parquet(f"{state_dir}/v={max(prev_versions)}")
-            merged = hll_merge(prev, delta, group_cols)
-        else:
-            merged = delta
-        merged.write.mode("overwrite").parquet(f"{state_dir}/v={batch_id}")
-
-    run_foreach_batch(stream_df, _fold, checkpoint_dir, name)
+    _versioned_fold(
+        stream_df, state_dir, checkpoint_dir, name,
+        lambda batch_df: hll_registers(batch_df, group_cols, value_col),
+        lambda prev, delta: hll_merge(prev, delta, group_cols),
+    )
 
 
 def countmin_stream(
@@ -205,7 +214,6 @@ def countmin_stream(
     state_dir: str,
     checkpoint_dir: str,
     name: str = "countmin",
-    depth: int = 4,
     width: int = 2048,
 ) -> None:
     """Streaming frequency sketch: each micro-batch's count-min cells
@@ -223,24 +231,15 @@ def countmin_stream(
     """
     from us_immigration_data_lake_spark.operators.sketches import countmin_build
 
-    def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        delta = countmin_build(batch_df, key_col, depth=depth, width=width)
-        prev_versions = [
-            v for v in _list_versions(spark, state_dir) if v < batch_id
-        ]
-        if prev_versions:
-            prev = spark.read.parquet(f"{state_dir}/v={max(prev_versions)}")
-            merged = (
-                prev.unionByName(delta)
-                .groupBy("__row", "__bucket")
-                .agg(F.sum("__count").cast("long").alias("__count"))
-            )
-        else:
-            merged = delta
-        merged.write.mode("overwrite").parquet(f"{state_dir}/v={batch_id}")
-
-    run_foreach_batch(stream_df, _fold, checkpoint_dir, name)
+    _versioned_fold(
+        stream_df, state_dir, checkpoint_dir, name,
+        lambda batch_df: countmin_build(batch_df, key_col, width=width),
+        lambda prev, delta: (
+            prev.unionByName(delta)
+            .groupBy("__row", "__bucket")
+            .agg(F.sum("__count").cast("long").alias("__count"))
+        ),
+    )
 
 
 def vacuum_state(spark, state_dir: str, keep_last: int = 2) -> list[int]:
@@ -299,19 +298,10 @@ def histogram_stream(
         histogram_merge,
     )
 
-    def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        delta = histogram_build(
+    _versioned_fold(
+        stream_df, state_dir, checkpoint_dir, name,
+        lambda batch_df: histogram_build(
             batch_df, group_cols, value_col, lo, width, nbins
-        )
-        prev_versions = [
-            v for v in _list_versions(spark, state_dir) if v < batch_id
-        ]
-        if prev_versions:
-            prev = spark.read.parquet(f"{state_dir}/v={max(prev_versions)}")
-            merged = histogram_merge(prev, delta, group_cols)
-        else:
-            merged = delta
-        merged.write.mode("overwrite").parquet(f"{state_dir}/v={batch_id}")
-
-    run_foreach_batch(stream_df, _fold, checkpoint_dir, name)
+        ),
+        lambda prev, delta: histogram_merge(prev, delta, group_cols),
+    )

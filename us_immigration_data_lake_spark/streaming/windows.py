@@ -51,11 +51,11 @@ EVENTS_SCHEMA = StructType([
 ])
 
 
-def tumbling_agg(stream: DataFrame, duration: str = "1 hour") -> DataFrame:
-    """Tumbling-window counts/sums per event type; value integer-ized
-    per row (oracle rule 1, plans/queries.py)."""
+def tumbling_agg(stream: DataFrame) -> DataFrame:
+    """1-hour tumbling-window counts/sums per event type; value
+    integer-ized per row (oracle rule 1, plans/queries.py)."""
     return (
-        stream.groupBy(F.window("ts", duration).alias("w"), "event_type")
+        stream.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(F.round(F.col("value") * 100).cast("long")).alias("value_c"),
@@ -69,10 +69,9 @@ def tumbling_agg(stream: DataFrame, duration: str = "1 hour") -> DataFrame:
     )
 
 
-def tumbling_agg_append(
-    stream: DataFrame, duration: str = "1 hour", watermark: str = "1 hour"
-) -> DataFrame:
-    """Watermarked tumbling agg for APPEND output — the mode you run at
+def tumbling_agg_append(stream: DataFrame) -> DataFrame:
+    """Watermarked (1 hour) tumbling agg over 1-hour windows for APPEND
+    output — the mode you run at
     scale: each window is emitted exactly once when the watermark
     passes its end, and its state is dropped (complete mode instead
     rematerializes every window on every trigger and holds all state
@@ -80,14 +79,13 @@ def tumbling_agg_append(
     batch-equivalent subset of windows with
     window.end <= max(event time) - watermark; q56 oracle-checks
     exactly that subset."""
-    return tumbling_agg(stream.withWatermark("ts", watermark), duration)
+    return tumbling_agg(stream.withWatermark("ts", "1 hour"))
 
 
 def stream_dedup(
     stream: DataFrame,
     keys: list[str],
     watermark: str = "1 hour",
-    ts_col: str = "ts",
 ) -> DataFrame:
     """Streaming exact deduplication: emit each key's FIRST-seen row,
     with state bounded by the watermark (``dropDuplicatesWithinWatermark``
@@ -109,7 +107,7 @@ def stream_dedup(
     source's event-time span so no state is evicted mid-run (q73 does
     exactly this)."""
     return (
-        stream.withWatermark(ts_col, watermark)
+        stream.withWatermark("ts", watermark)
         .dropDuplicatesWithinWatermark(keys)
         .select(*keys)
     )
@@ -138,11 +136,12 @@ def stream_static_enrich(
     )
 
 
-def session_agg(stream: DataFrame, gap: str = "10 minutes") -> DataFrame:
+def session_agg(stream: DataFrame) -> DataFrame:
     """Session windows per user: a session extends while consecutive
-    events are < gap apart; exported as exact epoch-micros bigints."""
+    events are < 10 minutes apart; exported as exact epoch-micros
+    bigints."""
     return (
-        stream.groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        stream.groupBy(F.session_window("ts", "10 minutes").alias("w"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             "user_id",
@@ -169,11 +168,9 @@ def run_to_memory(
     return stream_df.sparkSession.table(name)
 
 
-def purchase_view_interval_join(
-    stream, lookback: str = "30 minutes", how: str = "inner"
-):
+def purchase_view_interval_join(stream, how: str = "inner"):
     """Stream-stream interval join: each purchase matched to the same
-    user's view events within [purchase - lookback, purchase].
+    user's view events within [purchase - 30 minutes, purchase].
 
     Both sides carry watermarks so the join state is bounded: a view
     older than the watermark minus the interval can never match a
@@ -219,7 +216,7 @@ def purchase_view_interval_join(
     joined = purchases.join(
         views,
         F.expr(
-            f"p_user = v_user AND v_ts >= p_ts - interval {lookback} "
+            "p_user = v_user AND v_ts >= p_ts - interval 30 minutes "
             "AND v_ts <= p_ts"
         ),
         how,
@@ -238,7 +235,6 @@ def incremental_ingest(
     source_glob: str,
     target_dir: str,
     checkpoint_dir: str,
-    schema=None,
     max_files_per_trigger: int | None = None,
 ):
     """Checkpointed incremental file ingestion: each availableNow run
@@ -248,9 +244,8 @@ def incremental_ingest(
     100 TB). Returns the number of input rows processed this run.
     """
     enable_nanos_as_long(spark)
-    if schema is None:
-        # footer-only metadata read of the source — no data scan
-        schema = events_file_schema(spark, source_glob)
+    # footer-only metadata read of the source — no data scan
+    schema = events_file_schema(spark, source_glob)
     files_before = _committed_sink_files(spark, target_dir)
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
